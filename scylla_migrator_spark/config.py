@@ -72,11 +72,6 @@ def validate_identifier(name: str) -> str:
     return name
 
 
-def escape_spark_identifier(name: str) -> str:
-    """Backtick-escape a column name for Spark SQL (SchemaResolver.scala:31-38)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 # JDBC driver properties that trigger driver-side file reads / arbitrary
 # class loading / multi-statement execution — classic connector attack
 # vectors the reference blocklists (config/SourceSettings.scala:586-911)

@@ -10,7 +10,6 @@ a single scan+project+filter+write stage with no shuffle.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -21,11 +20,6 @@ from scylla_migrator_spark.sources.parquet import read_parquet
 from scylla_migrator_spark.sinks.parquet import write_parquet
 from scylla_migrator_spark.sinks.scylla_fixture import write_scylla_fixture
 from scylla_migrator_spark import schema as S
-
-
-@dataclass
-class MigrationResult:
-    frame: DataFrame
 
 
 def read_source(spark: SparkSession, config: MigratorConfig) -> DataFrame:

@@ -15213,7 +15213,7 @@ def embedding_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     watches before trusting ANN or SemDedup downstream: healthy spaces
     put random-pair mass near 0 with modest positive shift; anisotropic
     collapse (all-pairs mass piling toward 1.0) silently breaks
-    cosine-threshold dedup and recall\@k alike. Random pairs are
+    cosine-threshold dedup and recall@k alike. Random pairs are
     DERANDOMIZED: vectors land in 64 md5 buckets, rank inside a bucket by
     (md5, id), consecutive ranks pair — reproducible in SQL, no RNG.
 

@@ -185,6 +185,16 @@ def apply_repair_writetime(
     )
 
 
+def _count_kinds(failures: DataFrame) -> dict[str, int]:
+    """Failure counts per kind of an exploded ``f`` struct column."""
+    return {
+        r["kind"]: r["cnt"]
+        for r in failures.groupBy(F.col("f.kind").alias("kind"))
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+
+
 def validate(
     source: DataFrame,
     target: DataFrame,
@@ -202,14 +212,26 @@ def validate(
     failing = diff.filter(F.size(FAILURES_COL) > 0)
     failing = failing.persist()
     try:
-        counts = {
-            r["kind"]: r["cnt"]
-            for r in failing.select(F.explode(FAILURES_COL).alias("f"))
-            .select(F.col("f.kind").alias("kind"))
-            .groupBy("kind")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
+        failures = failing.select(F.explode(FAILURES_COL).alias("f"))
+        if not v.hash_columns:
+            counts = _count_kinds(failures)
+        else:
+            # a digest mismatch only says SOME hashed column differs: count
+            # the unhashed columns' failures here and let the refinement
+            # probe report the hashed ones with their own tolerances
+            counts = _count_kinds(failures.filter(F.col("f.column") != CONTENT_HASH_COL))
+            pk = resolve_columns(source.columns, primary_key)
+            hashed = resolve_columns(source.columns, v.hash_columns)
+            mismatched = failing.filter(
+                F.exists(FAILURES_COL, lambda f: f["column"] == CONTENT_HASH_COL)
+            ).select(*[F.col(SRC + k).alias(k) for k in pk])
+            refined = refine_hash_mismatches(
+                source, target, mismatched, pk, v, set_columns
+            ).select(F.explode(FAILURES_COL).alias("f"))
+            for kind, n in _count_kinds(
+                refined.filter(F.col("f.column").isin(*hashed))
+            ).items():
+                counts[kind] = counts.get(kind, 0) + n
         sample = failing.limit(v.failures_to_fetch).collect()
     finally:
         failing.unpersist()

@@ -37,6 +37,21 @@ def write_parquet(
     writer.parquet(path)
 
 
+def swap_generation(staged: str, path: str) -> None:
+    """Promote the completely written directory ``staged`` to ``path``: the
+    current generation (if any) is renamed aside, ``staged`` is renamed into
+    place, then the old generation is deleted. Each rename is atomic, so
+    ``path`` never holds a mix of generations; a crash between the two
+    renames leaves ``path`` absent and the new generation complete at
+    ``staged``. A previous crash's leftover old generation is removed first."""
+    old = f"{path}__old_gen"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(path):
+        os.replace(path, old)
+    os.replace(staged, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _compact_flat(spark, path: str, target_file_bytes: int) -> dict:
     files_before = 0
     total = 0
@@ -54,10 +69,7 @@ def _compact_flat(spark, path: str, target_file_bytes: int) -> dict:
     src_parts = df.rdd.getNumPartitions()
     out = df.coalesce(min(n_out, max(src_parts, 1)))
     out.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_generation(tmp, path)
     files_after = sum(
         1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
     )

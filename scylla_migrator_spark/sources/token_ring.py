@@ -139,10 +139,6 @@ def serialize_pk_bigint(v: int) -> bytes:
     return struct.pack(">q", v)
 
 
-def serialize_pk_int(v: int) -> bytes:
-    return struct.pack(">i", v)
-
-
 def serialize_pk_text(v: str) -> bytes:
     return v.encode("utf-8")
 

@@ -14,21 +14,60 @@ Reference parity (§2.12, writers/DynamoStreamReplication.scala:42-164):
 
 The target here is the parquet fixture store; the merge is expressed as a
 unionByName + max_by-per-key compaction (same plan a Delta MERGE compiles
-to for a full-overwrite fixture). Per-op counters (put/delete accumulators,
-DynamoStreamReplication.scala:50-51) are collected per batch via one
-aggregation and exposed through ``metrics``.
+to for a full-overwrite fixture). Each micro-batch makes one pass over
+state plus batch and writes the compacted state ONCE:
+
+* generation swap: the new state is written to ``<target>.staging`` and
+  promoted by ``sinks.parquet.swap_generation`` (old generation renamed
+  aside, staging renamed into place, old deleted);
+* recovery rule: the state is the target if it exists, else a COMPLETED
+  staging dir (``_SUCCESS`` present) — a crash between the two renames
+  loses nothing, and the next batch first finishes the interrupted swap.
+  A staging dir without ``_SUCCESS`` is a torn write and is ignored; an
+  existing state that cannot be read raises instead of being replaced;
+* the schema of the state this replicator last wrote is pinned for the
+  next read, so only a fresh replicator (a restart) infers it from the
+  parquet footers.
+
+Per-op counters (put/delete accumulators,
+DynamoStreamReplication.scala:50-51) ride the compaction write through
+``df.observe`` (``count_if`` per op) and are exposed through ``metrics``;
+a batch carrying an op outside INSERT/MODIFY/REMOVE, or whose observation
+the optimizer pruned, is counted by a separate aggregation instead.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from scylla_migrator_spark.sinks.parquet import swap_generation
 
 OP_COL = "op"
+OPS = ("INSERT", "MODIFY", "REMOVE")
 SEQ_COLS = ("ts", "event_id")  # version ordering: newest wins
+_OTHER = "__other_ops"
+
+
+def _op_counts_observed(obs: Observation) -> dict | None:
+    """The observed per-op counts, or None when the write's plan lost the
+    CollectMetrics node (AQE empty-relation pruning completes the
+    observation with an empty row, see ``curate.CurationResult.counts``).
+    The observation completes on the listener bus just after the write
+    returns, hence the short poll."""
+    jo = obs._jo
+    fut = jo.future()
+    deadline = time.monotonic() + 10.0
+    while not fut.isCompleted() and time.monotonic() < deadline:
+        time.sleep(0.001)
+    if not fut.isCompleted() or jo.getRow().size() == 0:
+        return None
+    return obs.get
 
 
 @dataclass
@@ -41,16 +80,33 @@ class CdcReplicator:
     allow_schema_drift: bool = False
     metrics: list[dict] = field(default_factory=list)
 
+    # schema of the generation this replicator last wrote; None = infer
+    _schema: StructType | None = field(default=None, init=False, repr=False)
+
+    @property
+    def _staging(self) -> str:
+        return self.target_path + ".staging"
+
+    def _staging_complete(self) -> bool:
+        return os.path.exists(os.path.join(self._staging, "_SUCCESS"))
+
     def _read_state(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.exists(self.target_path):
-            return None
-        try:
-            return spark.read.parquet(self.target_path)
-        except Exception:
-            return None
+        """The newest complete generation: the target, else a completed
+        staging dir (a swap interrupted between its renames), else None."""
+        path = self.target_path
+        if not os.path.exists(path):
+            if not self._staging_complete():
+                return None
+            path = self._staging
+        reader = spark.read if self._schema is None else spark.read.schema(self._schema)
+        return reader.parquet(path)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        if not os.path.exists(self.target_path) and self._staging_complete():
+            # finish the swap a crash interrupted: the next write reuses
+            # the staging dir, so its generation must be promoted first
+            swap_generation(self._staging, self.target_path)
         state = self._read_state(spark)
         drift_added: list[str] = []
         if self.allow_schema_drift and state is not None:
@@ -87,21 +143,19 @@ class CdcReplicator:
             cols = [*self.key_cols, *SEQ_COLS, OP_COL, *self.value_cols]
             batch = batch.select(*cols)
 
-        # per-op accumulator counts (K7) in one pass
-        counts = {
-            r[OP_COL]: r["cnt"]
-            for r in batch.groupBy(OP_COL).agg(F.count("*").alias("cnt")).collect()
-        }
-        entry = {"batch_id": batch_id, **counts}
-        if drift_added:
-            entry["drift_added"] = drift_added
-        self.metrics.append(entry)
-
+        # per-op accumulator counts (K7), observed on the compaction write
+        op = F.col(OP_COL)
+        obs = Observation(f"cdc_ops_{batch_id}")
+        observed = batch.observe(
+            obs,
+            *[F.count_if(op == o).alias(o) for o in OPS],
+            F.count_if(~F.coalesce(op.isin(*OPS), F.lit(False))).alias(_OTHER),
+        )
         merged = (
-            batch
+            observed
             if state is None
             else state.unionByName(
-                batch, allowMissingColumns=self.allow_schema_drift
+                observed, allowMissingColumns=self.allow_schema_drift
             )
         )
 
@@ -116,10 +170,22 @@ class CdcReplicator:
         # late-arriving older event cannot resurrect a deleted key; they are
         # filtered out of the user-facing view by current()
         compact = merged.groupBy(*self.key_cols).agg(*pick).select(*self.key_cols, "r.*")
-        tmp = self.target_path + ".staging"
-        compact.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.target_path)
+        compact.write.mode("overwrite").parquet(self._staging)
+        swap_generation(self._staging, self.target_path)
+        self._schema = compact.schema
+
+        seen = _op_counts_observed(obs)
+        if seen is not None and not seen[_OTHER]:
+            counts = {o: seen[o] for o in OPS if seen[o]}
+        else:
+            counts = {
+                r[OP_COL]: r["cnt"]
+                for r in batch.groupBy(OP_COL).agg(F.count("*").alias("cnt")).collect()
+            }
+        entry = {"batch_id": batch_id, **counts}
+        if drift_added:
+            entry["drift_added"] = drift_added
+        self.metrics.append(entry)
 
     def current(self, spark: SparkSession) -> DataFrame:
         """The live target view: tombstoned keys excluded."""

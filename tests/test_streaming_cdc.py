@@ -398,3 +398,150 @@ def test_components_serving_rewrites_only_moved_buckets(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+_CDC_SCHEMA = "user_id long, ts long, event_id long, op string, value double"
+
+
+def _cdc_batches(spark):
+    return [
+        spark.createDataFrame(rows, _CDC_SCHEMA)
+        for rows in (
+            [(1, 100, 1, "INSERT", 1.0), (2, 100, 2, "INSERT", 2.0), (3, 100, 3, "INSERT", 3.0)],
+            [(1, 200, 4, "MODIFY", 1.5), (2, 200, 5, "REMOVE", None), (4, 200, 6, "INSERT", 4.0)],
+            [(3, 300, 7, "MODIFY", 3.5), (2, 150, 8, "MODIFY", 9.9), (5, 300, 9, "INSERT", 5.0)],
+        )
+    ]
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_crash_between_swap_renames_loses_nothing(spark, tmp_path, monkeypatch):
+    """A crash after the old generation is moved aside but before staging
+    is renamed into place leaves no target; a fresh replicator must resume
+    from the completed staging dir and end where an uninterrupted run
+    ends."""
+    import os
+
+    import pytest
+
+    batches = _cdc_batches(spark)
+    ref = CdcReplicator(str(tmp_path / "ref"), ["user_id"], ["value"])
+    for i, b in enumerate(batches):
+        ref.apply_batch(b, i)
+    want = _rows(ref.current(spark))
+
+    target = str(tmp_path / "crashed")
+    rep = CdcReplicator(target, ["user_id"], ["value"])
+    rep.apply_batch(batches[0], 0)
+    real_replace, calls = os.replace, []
+
+    def flaky_replace(src, dst):
+        calls.append((src, dst))
+        if len(calls) == 2:
+            raise OSError("injected crash between the generation renames")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", flaky_replace)
+    with pytest.raises(OSError, match="injected"):
+        rep.apply_batch(batches[1], 1)
+    monkeypatch.undo()
+    assert not os.path.exists(target)
+    assert os.path.exists(os.path.join(target + ".staging", "_SUCCESS"))
+    # the completed staging dir is the state while the swap is unfinished
+    assert _rows(rep.current(spark)) == _rows(
+        spark.read.parquet(target + ".staging").filter(F.col("op") != "REMOVE").drop("op")
+    )
+
+    resumed = CdcReplicator(target, ["user_id"], ["value"])
+    resumed.apply_batch(batches[2], 2)
+    assert _rows(resumed.current(spark)) == want
+    assert sorted(os.listdir(tmp_path)) == ["crashed", "ref"]
+
+
+def test_torn_staging_write_is_ignored(spark, tmp_path):
+    """A staging dir without _SUCCESS (a crash during the write) holds no
+    committed generation: with no target yet, the replicator starts from
+    nothing."""
+    target = tmp_path / "torn"
+    staging = tmp_path / "torn.staging"
+    staging.mkdir()
+    (staging / "part-00000.parquet").write_bytes(b"PAR1 half-written")
+    rep = CdcReplicator(str(target), ["user_id"], ["value"])
+    rep.apply_batch(_cdc_batches(spark)[0], 0)
+    assert sorted(r["user_id"] for r in rep.current(spark).collect()) == [1, 2, 3]
+    assert not staging.exists()
+
+
+def test_empty_batch_records_no_counts(spark, tmp_path):
+    rep = CdcReplicator(str(tmp_path / "empty"), ["user_id"], ["value"])
+    rep.apply_batch(_cdc_batches(spark)[0], 0)
+    before = _rows(rep.current(spark))
+    rep.apply_batch(spark.createDataFrame([], _CDC_SCHEMA), 1)
+    assert rep.metrics == [{"batch_id": 0, "INSERT": 3}, {"batch_id": 1}]
+    assert _rows(rep.current(spark)) == before
+
+
+def test_op_counts_observed_and_unknown_op_recounted(spark, tmp_path):
+    """Op counts ride the state write; a batch with an op outside
+    INSERT/MODIFY/REMOVE (or a null op) is counted by the separate
+    aggregation, so no count is lost and keys match the ops present."""
+    rep = CdcReplicator(str(tmp_path / "ops"), ["user_id"], ["value"])
+    b0, b1, _ = _cdc_batches(spark)
+    rep.apply_batch(b0, 0)
+    rep.apply_batch(b1, 1)
+    odd = spark.createDataFrame(
+        [(6, 400, 10, "UPSERT", 6.0), (7, 400, 11, None, 7.0), (1, 400, 12, "MODIFY", 1.7)],
+        _CDC_SCHEMA,
+    )
+    rep.apply_batch(odd, 2)
+    assert rep.metrics == [
+        {"batch_id": 0, "INSERT": 3},
+        {"batch_id": 1, "MODIFY": 1, "REMOVE": 1, "INSERT": 1},
+        {"batch_id": 2, "UPSERT": 1, None: 1, "MODIFY": 1},
+    ]
+
+
+def test_second_drain_reads_pinned_schema(spark, tmp_path):
+    """After a drain the replicator reads its state with the schema it
+    wrote (no footer inference); a second drain of the same log through
+    that pinned read is a no-op and matches an inferred read."""
+    src = str(tmp_path / "log")
+    for i, b in enumerate(_cdc_batches(spark)):
+        b.write.mode("append").parquet(src)
+    target = str(tmp_path / "pinned")
+    rep = CdcReplicator(target, ["user_id"], ["value"])
+
+    def drain(ckpt):
+        stream = (
+            spark.readStream.schema(_CDC_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+        )
+        rep.attach(stream, checkpoint=str(tmp_path / ckpt)).awaitTermination(120)
+
+    drain("ckpt1")
+    assert rep._schema is not None
+    first = _rows(rep.current(spark))
+    drain("ckpt2")
+    assert _rows(rep.current(spark)) == first
+    inferred = spark.read.parquet(target)
+    assert [f.name for f in inferred.schema] == [f.name for f in rep._schema]
+    assert _rows(inferred.filter(F.col("op") != "REMOVE").drop("op")) == first
+
+
+def test_unreadable_state_raises(spark, tmp_path):
+    """An existing state that cannot be read must fail the batch, not be
+    silently replaced by it."""
+    import os
+
+    import pytest
+
+    target = tmp_path / "corrupt"
+    target.mkdir()
+    (target / "part-00000.parquet").write_bytes(b"not a parquet file")
+    rep = CdcReplicator(str(target), ["user_id"], ["value"])
+    with pytest.raises(Exception):
+        rep.apply_batch(_cdc_batches(spark)[0], 0)
+    assert os.listdir(target) == ["part-00000.parquet"]
+    assert rep.metrics == []

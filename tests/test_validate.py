@@ -190,3 +190,13 @@ def test_invalid_repair_strategy_rejected():
         Validation(repair_writetime_strategy="bogus")
     with _pytest.raises(ConfigError):
         Validation(repair_writetime_strategy="config")  # missing value
+
+
+def test_hash_validation_counts_match_direct_compare(spark):
+    """With hash_columns set, digest mismatches go through the refinement
+    probe: a float change inside the tolerance (id=1) is not a failure,
+    and every kind is counted as the direct compare counts it."""
+    src, tgt = _pair(spark)
+    direct = validate(src, tgt, ["id"], Validation())
+    hashed = validate(src, tgt, ["id"], Validation(hash_columns=["s", "d"]))
+    assert hashed.counts_by_kind == direct.counts_by_kind
