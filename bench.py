@@ -409,50 +409,47 @@ def main() -> None:
     from pyspark.sql import DataFrame as _DF
 
     def _run_stage_builders(tag: str) -> None:
-        # builders run per dependency WAVE with a small thread pool (guide
-        # §2.6: independent Spark jobs back-fill each other's stragglers —
-        # a stage build's tail tasks leave most cores idle otherwise).
-        # Builders within a wave share no staged inputs; each wave starts
-        # only after the previous one published.
-        def run_one(warm, builder):
+        # every registered stage, wave by wave in the order derived from
+        # the stages' declared inputs (Q._stage_waves), on a small thread
+        # pool (guide §2.6: independent Spark jobs back-fill each other's
+        # stragglers). Stages of one wave read only stages of earlier
+        # waves, which have published by the time the wave starts. Each
+        # stage's jobs run under a job group named after the stage, set in
+        # the thread that builds it (local properties are per thread).
+        sc = spark.sparkContext
+
+        def run_one(st):
+            sc.setJobGroup(st.name, f"{tag}: {st.name}")
             try:
-                out = builder(spark, sf_dir)
+                out = st(spark, sf_dir)
                 if isinstance(out, _DF):
                     out.count()
             except Exception as exc:  # noqa: BLE001 - failure surfaces in the owning scenario
-                print(f"BENCHMARK_WARNING | {tag}={warm} err={exc!r:.200}", file=sys.stderr)
+                print(f"BENCHMARK_WARNING | {tag}={st.name} err={exc!r:.200}", file=sys.stderr)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setJobDescription(None)
 
-        for wave in Q._stage_builder_waves():
-            if len(wave) == 1:
-                run_one(*wave[0])
-                continue
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                for _ in pool.map(lambda nb: run_one(*nb), wave):
-                    pass
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            for wave in Q._stage_waves():
+                list(pool.map(run_one, wave))
 
-    # stage_build_cold (r11 verdict task #6): rebuild EVERY build-once
-    # compute stage from scratch into a throwaway root and time it, so the
-    # full cross-run staging cost is a printed number on every run instead
-    # of an untimed warm-up. Rebuilds are transitive (a leg that reads
-    # another stage rebuilds it under the same throwaway root, once).
-    # Excluded by design: fixture-layout shims (symlink dirs / pre-split
-    # halves — data rearrangement keyed on the fixture alone, no computed
-    # values) and per-run scenario outputs, which are timed inside their
-    # scenarios. The row is summed into the total like any other addition.
+    # stage_build_cold: rebuild EVERY registered stage from scratch into a
+    # throwaway root and time it, so the full cross-run staging cost is a
+    # printed number on every run instead of an untimed warm-up. Per-run
+    # scenario outputs are excluded; they are timed inside their scenarios.
     import shutil
     import tempfile
 
     cold_root = tempfile.mkdtemp(prefix="sgs_cold_stages_")
     os.environ["SGS_STAGE_ROOT"] = cold_root
     try:
-        spark.sparkContext.setJobDescription("stage_build_cold")
         t0 = time.perf_counter()
         _run_stage_builders("stage_cold")
         timings["stage_build_cold"] = round(time.perf_counter() - t0, 3)
     finally:
         os.environ.pop("SGS_STAGE_ROOT", None)
         shutil.rmtree(cold_root, ignore_errors=True)
-        spark.sparkContext.setJobDescription(None)
 
     # stage pre-warm (default root): the pair/star/state stages embody the
     # documented decomposition (pair DETECTION writes intermediate tables
@@ -695,7 +692,7 @@ def main() -> None:
         # f67663c) — the mode is micro-batch trigger scheduling, r5's 2.00
         # was the favorable mode, not a plan that later regressed
         "notes": {
-            "stage_build_cold": "r12 (r11 verdict task #6): one timed row rebuilds EVERY build-once compute stage (Q._stage_builders()) from scratch under a throwaway $SGS_STAGE_ROOT, transitively, so the full cross-run staging cost is a printed number each run. Reported in `queries` and as stage_build_cold_sec but EXCLUDED from `value`: it measures one-off artifact builds whose warm reads the per-scenario rows already time, and folding minutes of build into the headline would break every cross-round total comparison. Fixture-layout shims (symlink dirs, pre-split halves - data rearrangement only) and per-run scenario outputs are excluded; they are either trivial or timed inside their scenarios.",
+            "stage_build_cold": "one timed row rebuilds EVERY registered stage (Q.STAGES: computed intermediates, trained artifacts, stream replay halves, symlink dirs and layouts) from scratch under a throwaway $SGS_STAGE_ROOT, in the dependency waves derived from the stages' declared inputs, each stage's jobs under a job group named after it. Reported in `queries` and as stage_build_cold_sec but EXCLUDED from `value`: it measures one-off artifact builds whose warm reads the per-scenario rows already time. Per-run scenario outputs are excluded; they are timed inside their scenarios.",
             "canary_tpch_q3_end": "r12 (r11 verdict task #2): a fixed reference row re-measured at the END of every run (min-of-2, summed into the total like any addition) so box drift between sessions is machine-detectable - identical code measured 405-494s across four r11-era sessions; tpch_q3's warm band is 0.86-1.46s on a healthy box.",
             "dup_graph_k_core": "r10 verdict task #5 note (scaling story): the peel is a FIXED 4 synchronous rounds (oracle replays them CTE-for-CTE); each round costs one degree aggregation plus two semi-joins carrying 8-byte ids over the SURVIVING edge list, which shrinks monotonically, so total work is bounded by rounds x initial edges - linear in the pair-graph size, no quadratic term, and the round count does not grow with the corpus (a deeper peel needs more rounds only if k-core depth grows, a property of duplication structure, not scale). The 10x duplication curve ratio (0.417 in SCALE_CURVE.json) reflects the fixed per-round scheduling floor at fixture scale: 4 rounds of ~4 small jobs dominate wall-clock, so 10x the edges costs ~2.4x, converging to scan-bound as edges grow. Bounded-variant escape hatch: callers needing a convergence-driven peel can stop when a round deletes nothing (the surviving-edge signature is already materialized per round).",
             "stream_tws_user_totals": "bimodal trigger scheduling; code unchanged since r4 (see bench.py)",

@@ -85,7 +85,7 @@ def connected_components(
                 [T.StructField("id", vt), T.StructField("comp", vt)]
             )
             return spark.createDataFrame(
-                [(v, labels.get(v, v)) for v in sorted(verts)], schema
+                [(v, labels.get(v, v)) for v in verts], schema
             )
     # pre-partition the (static) edge side on the join key once: every
     # round's join then reuses this layout and only the (small) labels side

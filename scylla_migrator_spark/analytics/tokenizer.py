@@ -707,11 +707,14 @@ def _em_round_local(
                     p = probs.get(piece)
                     if p is not None:
                         g = c * al[j] * p * be[j + k] / al[n]
-                        if not math.isfinite(g):
-                            continue  # NaN/Inf -> null on the cast -> dropped
+                        if not math.isfinite(g) or abs(g) >= lim:
+                            # NaN/Inf, or a decimal(18,9) overflow: null on
+                            # the cast -> dropped. Checked before quantize,
+                            # which raises InvalidOperation for |g| >= 1e19.
+                            continue
                         d = Decimal(g).quantize(q, rounding=ROUND_HALF_UP)
                         if abs(d) >= lim:
-                            continue  # decimal(18,9) overflow -> null -> dropped
+                            continue  # rounded up to 10^9: overflow -> dropped
                         ec[piece] = ec.get(piece, Decimal(0)) + d
     tot = float(sum(ec.values(), Decimal(0)))
     return {p: float(v) / tot for p, v in ec.items()}

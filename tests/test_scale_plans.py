@@ -1434,3 +1434,19 @@ def test_blocked_generator_guards(spark):
     # would leave bits 32..59 permanently zero)
     wide = simhash_fingerprints(docs, "text", "doc_id", bits=60, hash_hex=15)
     assert wide.collect()[0]["sh"] > (1 << 32)
+
+
+def test_recall_rows_broadcast_the_staged_exact_side(spark, sf_dir):
+    """The *_recall_at_k rows intersect an approximate top-10 with the
+    10-row staged exact top-10, broadcast into the probe: the plans of the
+    lsh/ivf/int8/mrl rows hold one Exchange, that broadcast (the formatted
+    plan names each node twice: in the tree and in its detail section)."""
+    for name in (
+        "lsh_recall_at_k",
+        "ivf_recall_at_k",
+        "int8_recall_at_k",
+        "mrl_truncation_recall_at_k",
+    ):
+        plan = plan_of(Q.QUERIES[name](spark, sf_dir))
+        assert plan.count("Exchange") == 2, (name, plan)
+        assert plan.count("BroadcastExchange") == 2, (name, plan)

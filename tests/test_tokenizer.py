@@ -754,13 +754,17 @@ def test_em_round_local_degenerate_lattice_matches_distributed(spark):
 def test_em_round_local_decimal_overflow_contribution_dropped(spark):
     """A per-edge expected count >= 1e9 overflows the distributed
     decimal(18,9) cast (null -> dropped from the sum); the local path
-    must drop it too instead of keeping the full-precision Decimal."""
+    must drop it too instead of keeping the full-precision Decimal — also
+    at g >= 1e19, where Decimal.quantize itself would raise."""
     probs = {"a": 0.5, "b": 0.5}
-    wl = [("a", 2_000_000_000), ("b", 4)]  # g("a") = 2e9 -> overflow
-    local = TOK._em_round_local(wl, probs, 3)
-    words = spark.createDataFrame(wl, "word string, cnt long")
-    dist = {
-        r["piece"]: r["p"]
-        for r in TOK.unigram_em_round(words, TOK._probs_df(spark, probs), 3).collect()
-    }
-    assert local == {p: v for p, v in dist.items() if v is not None}
+    for wl, cnt_type in (
+        ([("a", 2_000_000_000), ("b", 4)], "long"),  # g("a") = 2e9 -> overflow
+        ([("a", 2e19), ("b", 4.0)], "double"),  # g("a") = 2e19
+    ):
+        local = TOK._em_round_local(wl, probs, 3)
+        words = spark.createDataFrame(wl, f"word string, cnt {cnt_type}")
+        dist = {
+            r["piece"]: r["p"]
+            for r in TOK.unigram_em_round(words, TOK._probs_df(spark, probs), 3).collect()
+        }
+        assert local == {p: v for p, v in dist.items() if v is not None}
