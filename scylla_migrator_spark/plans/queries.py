@@ -14,6 +14,7 @@ from __future__ import annotations
 import graphlib
 import hashlib
 import inspect
+import itertools
 import json
 import os
 import threading
@@ -354,6 +355,310 @@ def _stage_waves() -> list[list[_Stage]]:
         waves.append(wave)
         ts.done(*wave)
     return waves
+
+
+# ===========================================================================
+# Oracle SQL builders: the DuckDB shapes several oracles share, spelled once
+# ===========================================================================
+
+# Whitespace tokens of a row's `text` (the tokenization TXT.* replays).
+_TOKENS = r"regexp_split_to_array(trim(text), '\s+')"
+
+
+def _trigrams(pad: bool) -> str:
+    """Word-trigram shingles of `text` as a list; ``pad`` keeps a doc
+    shorter than 3 tokens as one shingle (callers that don't pad filter
+    such docs out)."""
+    n = f"greatest(len({_TOKENS}) - 2, 1)" if pad else f"len({_TOKENS}) - 2"
+    return f"""list_transform(
+               generate_series(1, {n}),
+               i -> array_to_string(list_slice({_TOKENS}, i, i + 2), ' ')
+             )"""
+
+
+def _md5_hashes(tokens: str, hex_width: int = 8) -> str:
+    """Each token's md5 prefix of ``hex_width`` hex digits as a BIGINT."""
+    return f"""list_transform({tokens},
+                            w -> CAST('0x' || substr(md5(w), 1, {hex_width}) AS BIGINT))"""
+
+
+def _simhash_fold(bits: int) -> str:
+    """Majority-bit fold of the token hashes `hs` into a ``bits``-bit SimHash."""
+    return f"""list_sum(list_transform(generate_series(0, {bits - 1}),
+          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
+                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT"""
+
+
+def _simhash_cte(bits: int = 32, rel: str = "documents", source: bool = True) -> str:
+    """`h` (token hashes `hs`) and `fp` (fingerprint `sh`) per doc_id of
+    ``rel``, carrying `source` when asked. The hash width is
+    D.simhash_fingerprints' rule: (bits + 3) // 4 hex digits."""
+    keys = "doc_id, source" if source else "doc_id"
+    return f"""h AS (
+      SELECT {keys},
+             {_md5_hashes(_TOKENS, (bits + 3) // 4)} AS hs
+      FROM {rel}),
+    fp AS (
+      SELECT {keys},
+        {_simhash_fold(bits)} AS sh
+      FROM h)"""
+
+
+def _hamming_join(h: int, *group: str, rel: str = "fp") -> str:
+    """FROM/WHERE of the ``rel a JOIN rel b`` pairs (a.doc_id < b.doc_id,
+    equal on every ``group`` column) whose `sh` fingerprints differ in at
+    most ``h`` bits."""
+    on = "".join(f"a.{c} = b.{c} AND " for c in group)
+    return f"""FROM {rel} a JOIN {rel} b ON {on}a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.sh, b.sh)) <= {h}"""
+
+
+def _dup_pairs_cte(bits: int, name: str, rel: str = "documents") -> str:
+    """The near-dup pair graph of ``rel``: the `h`/`fp` SimHash CTEs and
+    ``name``(id_a, id_b), the same-source doc pairs whose ``bits``-bit
+    fingerprints are within Hamming distance 8."""
+    return f"""{_simhash_cte(bits, rel)},
+    {name} AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      {_hamming_join(8, "source")})"""
+
+
+def _closure_cte(pairs: str, edges: str = "edges") -> str:
+    """Transitive closure of the (id_a, id_b) CTE ``pairs``: undirected
+    ``edges`` (s, d), `verts` and `reach(v, u)`; min(u) per v is v's
+    component label (the min doc_id of its component)."""
+    return f"""{edges} AS (SELECT id_a AS s, id_b AS d FROM {pairs}
+              UNION SELECT id_b, id_a FROM {pairs}),
+    verts AS (SELECT DISTINCT s AS v FROM {edges}),
+    reach(v, u) AS (
+      SELECT v, v FROM verts
+      UNION
+      SELECT r.v, e.d FROM reach r JOIN {edges} e ON r.u = e.s)"""
+
+
+# The pairs CTE `pairs` closed into clusters: each paired doc, its
+# canonical keeper (min doc_id) and its cluster's size.
+_CLUSTERS_SQL = f"""{_closure_cte("pairs", "e2")},
+    comp AS (SELECT v AS doc_id, min(u)::BIGINT AS canonical_id
+             FROM reach GROUP BY v)
+    SELECT c.doc_id, c.canonical_id, s.cluster_size
+    FROM comp c JOIN (
+      SELECT canonical_id, count(*)::BIGINT AS cluster_size
+      FROM comp GROUP BY canonical_id) s
+    ON c.canonical_id = s.canonical_id
+    """
+
+
+def _minhash_sig_cte(rel: str = "documents", num_hashes: int = 16) -> str:
+    """Per doc of ``rel``: word-trigram shingles `shd(doc_id, g)` (a doc
+    under 3 tokens is one shingle), their md5 hashes and the MinHash
+    signature `sig(doc_id, m0..)` under the affine family
+    h_i(x) = (x * (2i+1) + 7919 * (i+1)) mod 4294967311 (text.AFFINE_COEFFS)."""
+    mins = ", ".join(
+        f"min((h*{2 * i + 1} + {7919 * (i + 1)}) % 4294967311) AS m{i}"
+        for i in range(num_hashes)
+    )
+    return f"""toks AS (SELECT doc_id, {_TOKENS} AS t
+                  FROM {rel}),
+    sh AS (
+      SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+             ELSE list_transform(generate_series(1, len(t) - 2),
+                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END AS gs
+      FROM toks),
+    shd AS (SELECT DISTINCT doc_id, g FROM sh, UNNEST(gs) AS u(g)),
+    h AS (SELECT doc_id, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) AS h FROM shd),
+    sig AS (SELECT doc_id,
+           {mins}
+      FROM h GROUP BY doc_id)"""
+
+
+# The signature's 4 bands of 4 hashes: `bands(doc_id, band_id, bh)`.
+_MINHASH_BANDS_CTE = """bands AS (
+      SELECT doc_id, 0 AS band_id, [m0,m1,m2,m3] AS bh FROM sig
+      UNION ALL SELECT doc_id, 1 AS band_id, [m4,m5,m6,m7] AS bh FROM sig
+      UNION ALL SELECT doc_id, 2 AS band_id, [m8,m9,m10,m11] AS bh FROM sig
+      UNION ALL SELECT doc_id, 3 AS band_id, [m12,m13,m14,m15] AS bh FROM sig)"""
+
+
+# The image replay of _image_dhash_fp: each doc's first 61 bytes as the
+# synthetic 16x16 image `h(doc_id, hx, nb)` (empty payloads excluded) and
+# its nearest-neighbour 8x8 gray grid `g(doc_id, y, x, gray)`.
+_DHASH_GRID_CTE = """h AS (
+      SELECT doc_id, hex(encode(substr(text, 1, 61))) AS hx,
+             octet_length(encode(substr(text, 1, 61))) AS nb
+      FROM documents
+      WHERE octet_length(encode(substr(text, 1, 61))) > 0),
+    g AS (
+      SELECT doc_id, ys.y AS y, xs.x AS x,
+        (CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x) % nb) + 1, 2) AS INT)
+       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 1) % nb) + 1, 2) AS INT)
+       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 2) % nb) + 1, 2) AS INT)) // 3 AS gray
+      FROM h
+      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
+      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS x) xs)"""
+
+# The grid's 56-bit dHash `dh(doc_id, sh)` (bit y*7+x set where
+# gray(x, y) < gray(x+1, y)) and its 8 bands of 7 bits
+# `bands(doc_id, sh, band_id, band_val)`.
+_DHASH_BANDS_CTE = _DHASH_GRID_CTE + """,
+    dh AS (
+      SELECT l.doc_id,
+             CAST(sum(CASE WHEN l.gray < r.gray
+                           THEN 1::BIGINT << (l.y * 7 + l.x)
+                           ELSE 0::BIGINT END) AS BIGINT) AS sh
+      FROM g l JOIN g r ON l.doc_id = r.doc_id AND l.y = r.y AND r.x = l.x + 1
+      GROUP BY l.doc_id),
+    bands AS (
+      SELECT doc_id, sh, bs.b AS band_id, (sh >> (7 * bs.b)) & 127 AS band_val
+      FROM dh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) bs)"""
+
+
+# Each doc's bigrams scored under the corpus's interpolated Kneser-Ney
+# bigram LM (discount 0.75, text.kn_doc_nll): `scored(doc_id, nll)`, the
+# -ln P_KN(w2|w1) terms truncated to DECIMAL(18,9).
+_KN_NLL_CTE = f"""toks AS (
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
+    bg AS (
+      SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+      FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
+    c2 AS MATERIALIZED (
+      SELECT w1, w2, count(*)::BIGINT AS c FROM bg GROUP BY w1, w2),
+    pre AS (SELECT w1, sum(c)::BIGINT AS cp, count(*)::BIGINT AS n_fwd
+            FROM c2 GROUP BY w1),
+    cont AS (SELECT w2, count(*)::BIGINT AS n_bwd FROM c2 GROUP BY w2),
+    nb AS (SELECT count(*)::BIGINT AS nbig FROM c2),
+    scored AS (
+      SELECT doc_id,
+             CAST(-ln((c - CAST(0.75 AS DOUBLE)) / cp
+                      + CAST(0.75 AS DOUBLE) * n_fwd / cp * n_bwd / nbig)
+                  AS DECIMAL(18,9)) AS nll
+      FROM bg JOIN c2 USING (w1, w2) JOIN pre USING (w1) JOIN cont USING (w2), nb)"""
+
+
+# Per event type: daily event counts `daily(event_type, day_idx, y)` and
+# their day order `seq(event_type, y, rn)`.
+_DAILY_SEQ_CTE = """daily AS (
+      SELECT event_type, epoch_ns(ts) // 86400000000000 AS day_idx,
+             count(*)::BIGINT AS y
+      FROM events GROUP BY 1, 2),
+    seq AS (
+      SELECT event_type, y,
+             row_number() OVER (PARTITION BY event_type ORDER BY day_idx) AS rn
+      FROM daily)"""
+
+
+# Per event type, the 64-register HyperLogLog of its distinct user_ids:
+# md5 hashes `h(event_type, hv)`, the registers `reg(event_type, bucket, r)`
+# and the exact integer harmonic sum `s(event_type, s_int, v)` (2^27-scaled;
+# v = empty registers).
+_HLL_CTE = """h AS (
+      SELECT DISTINCT event_type,
+             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS hv
+      FROM events),
+    b AS (
+      SELECT event_type, (hv % 64)::BIGINT AS bucket,
+             CASE WHEN hv // 64 = 0 THEN 27
+                  ELSE 27 - length(bin((hv // 64)::BIGINT)) END AS rho
+      FROM h),
+    reg AS (SELECT event_type, bucket, max(rho)::BIGINT AS r FROM b GROUP BY 1, 2),
+    s AS (
+      SELECT event_type,
+             (sum(1::BIGINT << (27 - r))
+              + (64 - count(*)) * 134217728)::BIGINT AS s_int,
+             (64 - count(*))::BIGINT AS v
+      FROM reg GROUP BY 1)"""
+
+
+def _signed_bow_fold(dim: int) -> str:
+    """Signed feature hashing of the token hashes `hs` into ``dim``
+    buckets: bucket h % dim, sign from the next hash bit."""
+    return f"""list_transform(generate_series(0, {dim - 1}),
+               j -> CAST(coalesce(list_sum(list_transform(hs,
+                      h -> CASE WHEN h % {dim} = j
+                           THEN (CASE WHEN (h // {dim}) % 2 = 0 THEN 1 ELSE -1 END)
+                           ELSE 0 END)), 0) AS BIGINT))"""
+
+
+def _hashed_emb_cte(dim: int) -> str:
+    """Shared oracle CTEs for the signed feature-hashing embedding: token
+    md5 hashes -> bucket h % dim, sign from the next hash bit, INTEGER
+    sums (exactly replayable — no float order to pin)."""
+    return f"""
+    WITH toks AS (
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
+    h AS (SELECT doc_id,
+                 {_md5_hashes("t")} AS hs
+          FROM toks),
+    emb AS (
+      SELECT doc_id,
+             {_signed_bow_fold(dim)} AS v
+      FROM h)"""
+
+
+# The query text 'spark join window' embedded like the documents: `qe.qv`.
+_QUERY_TOKENS = r"regexp_split_to_array('spark join window', '\s+')"
+_QUERY_EMB_CTE = f"""qh AS (SELECT {_md5_hashes(_QUERY_TOKENS)} AS hs),
+    qe AS (SELECT {_signed_bow_fold(16)} AS qv
+           FROM qh)"""
+
+
+def _bm25_dense_tops_cte(limit: int) -> str:
+    """The two rankings of the query 'spark join window' the hybrid
+    retrieval oracles fuse or grade, each its top ``limit``: BM25
+    `bmtop(doc_id, bm25)` (Lucene idf, k1 = 1.2, b = 0.75, per-term
+    scores truncated to DECIMAL(18,9)) and the hashed-embedding cosine
+    `dtop(doc_id, cos)`."""
+    return _hashed_emb_cte(16) + f""",
+    lens AS (
+      SELECT doc_id, len({_TOKENS}) AS dl
+      FROM documents),
+    sc AS (SELECT count(*)::BIGINT AS n, sum(dl) / count(*) AS avgdl FROM lens),
+    tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf FROM
+             (SELECT doc_id, unnest({_TOKENS}) AS w
+              FROM documents)
+           WHERE w IN ('spark', 'join', 'window') GROUP BY doc_id, w),
+    dfq AS (SELECT w, count(*)::BIGINT AS df FROM tf GROUP BY w),
+    bmsc AS (
+      SELECT tf.doc_id,
+             CAST(ln(1.0 + (sc.n - dfq.df + 0.5) / (dfq.df + 0.5))
+                  * tf.tf * 2.2
+                  / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * lens.dl / sc.avgdl))
+                  AS DECIMAL(18,9)) AS ts
+      FROM tf JOIN dfq USING (w) JOIN lens USING (doc_id), sc),
+    bmtop AS (
+      SELECT doc_id, round(CAST(sum(ts) AS DOUBLE), 6) AS bm25
+      FROM bmsc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT {limit}),
+    {_QUERY_EMB_CTE},
+    dtop AS (
+      SELECT doc_id,
+             round(list_cosine_similarity(CAST(emb.v AS DOUBLE[]),
+                                          CAST(qe.qv AS DOUBLE[])), 6) AS cos
+      FROM emb, qe ORDER BY cos DESC, doc_id LIMIT {limit})"""
+
+
+def _union_keys_cte(bits: int, blocks: int, max_hamming: int) -> str:
+    """The Manku block-union keys `keys(source, cid, key_val)` of the
+    DISTINCT (source, SimHash) units `dfp`. The geometry `cmb` is built
+    here, apart from dedup.union_key_geometry, so the oracle checks the
+    engine's: widths base+1 for the first bits % blocks blocks, combo ids
+    in itertools.combinations order, key packed as val_i * 2^w_j + val_j."""
+    base_w, rem = divmod(bits, blocks)
+    widths = [base_w + 1 if i < rem else base_w for i in range(blocks)]
+    offsets = [sum(widths[:i]) for i in range(blocks)]
+    combos = itertools.combinations(range(blocks), blocks - max_hamming)
+    rows = ", ".join(
+        f"({cid}, {offsets[i]}, {widths[i]}, {offsets[j]}, {widths[j]})"
+        for cid, (i, j) in enumerate(combos)
+    )
+    return f"""
+    WITH {_simhash_cte(bits)},
+    dfp AS (SELECT DISTINCT source, sh FROM fp),
+    cmb AS (SELECT * FROM (VALUES {rows}) t(cid, oi, wi, oj, wj)),
+    keys AS (
+      SELECT d.source, c.cid,
+             (((d.sh >> c.oi) & ((1::BIGINT << c.wi) - 1)) * (1::BIGINT << c.wj)
+              + ((d.sh >> c.oj) & ((1::BIGINT << c.wj) - 1)))::BIGINT AS key_val
+      FROM dfp d CROSS JOIN cmb c)"""
 
 
 # ===========================================================================
@@ -1395,9 +1700,9 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "text_quality",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t, text FROM documents)
+      SELECT doc_id, {_TOKENS} AS t, text FROM documents)
     SELECT doc_id,
       length(text) AS n_chars_computed,
       len(t) AS n_tokens,
@@ -1445,9 +1750,9 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "doc_fingerprint",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents)
+      SELECT doc_id, {_TOKENS} AS t FROM documents)
     SELECT doc_id,
       CASE WHEN len(t) < 3
            THEN CAST('0x' || substr(md5(array_to_string(t, ' ')), 1, 8) AS BIGINT)
@@ -1460,26 +1765,6 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = TXT.fingerprint(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", "fingerprint")
-
-
-def _hashed_emb_cte(dim: int) -> str:
-    """Shared oracle CTEs for the signed feature-hashing embedding: token
-    md5 hashes -> bucket h % dim, sign from the next hash bit, INTEGER
-    sums (exactly replayable — no float order to pin)."""
-    return rf"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    h AS (SELECT doc_id,
-                 list_transform(t, w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-          FROM toks),
-    emb AS (
-      SELECT doc_id,
-             list_transform(generate_series(0, {dim - 1}),
-               j -> CAST(coalesce(list_sum(list_transform(hs,
-                      h -> CASE WHEN h % {dim} = j
-                           THEN (CASE WHEN (h // {dim}) % 2 = 0 THEN 1 ELSE -1 END)
-                           ELSE 0 END)), 0) AS BIGINT)) AS v
-      FROM h)"""
 
 
 @_register(
@@ -1552,19 +1837,7 @@ def levenshtein_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.edit_distance_pairs(keys, q=4, k_max=3, max_key_freq=None)
 
 
-@_register(
-    "levenshtein_capped_pairs",
-    """
-    WITH k AS (
-      SELECT doc_id, source, lower(substr(text, 1, 32)) AS key
-      FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           levenshtein(a.key, b.key)::INT AS dist
-    FROM k a JOIN k b
-      ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE levenshtein(a.key, b.key) <= 3
-    """,
-)
+@_register("levenshtein_capped_pairs", ORACLES["levenshtein_near_pairs"])
 def levenshtein_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """levenshtein_near_pairs with the STOP-GRAM cap engaged — the
     production form of the q-gram count filter whose absence the uncapped
@@ -1938,9 +2211,9 @@ def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "repetition_filter",
     # Documents with < 2 tokens have no bigram and are excluded on both sides.
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     g AS (
       SELECT doc_id, len(t) AS n_tokens,
              unnest(list_transform(generate_series(1, len(t) - 1),
@@ -2020,13 +2293,10 @@ def train_val_test_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ngram_jaccard_block_pairs",
-    """
+    f"""
     WITH sh AS (
       SELECT doc_id, source,
-             list_distinct(list_transform(
-               generate_series(1, greatest(len(regexp_split_to_array(trim(text), '\\s+')) - 2, 1)),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'), i, i + 2), ' ')
-             )) AS s
+             list_distinct({_trigrams(True)}) AS s
       FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            round(len(list_intersect(a.s, b.s))
@@ -2045,15 +2315,12 @@ def ngram_jaccard_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ngram_novelty_score",
-    r"""
+    f"""
     WITH sh AS (
       SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(regexp_split_to_array(trim(text), '\s+')) - 2),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), i, i + 2), ' ')
-             )) AS s
+             list_distinct({_trigrams(False)}) AS s
       FROM documents
-      WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+      WHERE len({_TOKENS}) >= 3),
     g AS (SELECT doc_id, unnest(s) AS gram FROM sh),
     dfc AS (SELECT gram, count(*)::BIGINT AS dfc FROM g GROUP BY gram)
     SELECT g.doc_id,
@@ -2487,9 +2754,9 @@ def containment_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "winnowing_fingerprint_pairs",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS t
+      SELECT doc_id, source, {_TOKENS} AS t
       FROM documents),
     sh AS (
       SELECT doc_id, source,
@@ -2531,15 +2798,15 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "overlap_coefficient_pairs",
-    r"""
+    f"""
     WITH sh AS (
       SELECT doc_id, source,
              list_distinct(CASE
-               WHEN len(regexp_split_to_array(trim(text), '\s+')) < 3
-               THEN [array_to_string(regexp_split_to_array(trim(text), '\s+'), ' ')]
+               WHEN len({_TOKENS}) < 3
+               THEN [array_to_string({_TOKENS}, ' ')]
                ELSE list_transform(
-                 generate_series(1, len(regexp_split_to_array(trim(text), '\s+')) - 2),
-                 i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), i, i + 2), ' '))
+                 generate_series(1, len({_TOKENS}) - 2),
+                 i -> array_to_string(list_slice({_TOKENS}, i, i + 2), ' '))
              END) AS s
       FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -2574,13 +2841,10 @@ def overlap_coefficient_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Oracle replays the stop-shingle prune: shingles with per-block document
     # frequency > 2 are removed BEFORE pairing, and both set sizes recount
     # retained shingles only (consistent Jaccard over the pruned universe).
-    """
+    f"""
     WITH sh AS (
       SELECT doc_id, source,
-             list_distinct(list_transform(
-               generate_series(1, greatest(len(regexp_split_to_array(trim(text), '\\s+')) - 2, 1)),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'), i, i + 2), ' ')
-             )) AS s
+             list_distinct({_trigrams(True)}) AS s
       FROM documents),
     ex AS (SELECT doc_id, source, unnest(s) AS g FROM sh),
     keep AS (SELECT source, g FROM ex GROUP BY source, g HAVING count(*) <= 2),
@@ -2609,16 +2873,10 @@ def ngram_jaccard_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "simhash_docs",
-    """
+    f"""
     WITH h AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents)
-    SELECT doc_id,
-      list_sum(list_transform(generate_series(0, 31),
-        b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                  THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS simhash
+      SELECT doc_id, {_md5_hashes(_TOKENS)} AS hs FROM documents)
+    SELECT doc_id, {_simhash_fold(32)} AS simhash
     FROM h
     """,
 )
@@ -2731,9 +2989,9 @@ def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "skipgram_cooccurrence_pmi",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT {_TOKENS} AS t FROM documents),
     prs AS (
       SELECT t[i] AS w1, t[i + o] AS w2
       FROM toks, unnest(generate_series(1, 3)) AS g(o),
@@ -2808,40 +3066,8 @@ def _rrf_hybrid_sql() -> str:
     the dense side; the query embedding is the same md5 math applied to
     the literal query text."""
     return (
-        _hashed_emb_cte(16)
-        + r""",
-    lens AS (
-      SELECT doc_id, len(regexp_split_to_array(trim(text), '\s+')) AS dl
-      FROM documents),
-    sc AS (SELECT count(*)::BIGINT AS n, sum(dl) / count(*) AS avgdl FROM lens),
-    tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf FROM
-             (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-           WHERE w IN ('spark', 'join', 'window') GROUP BY doc_id, w),
-    dfq AS (SELECT w, count(*)::BIGINT AS df FROM tf GROUP BY w),
-    bmsc AS (
-      SELECT tf.doc_id,
-             CAST(ln(1.0 + (sc.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                  * tf.tf * 2.2
-                  / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * lens.dl / sc.avgdl))
-                  AS DECIMAL(18,9)) AS ts
-      FROM tf JOIN dfq USING (w) JOIN lens USING (doc_id), sc),
-    bmtop AS (
-      SELECT doc_id, round(CAST(sum(ts) AS DOUBLE), 6) AS bm25
-      FROM bmsc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 30),
-    qh AS (SELECT list_transform(regexp_split_to_array('spark join window', '\s+'),
-                                 w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs),
-    qe AS (SELECT list_transform(generate_series(0, 15),
-             j -> CAST(coalesce(list_sum(list_transform(hs,
-                    h -> CASE WHEN h % 16 = j
-                         THEN (CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END)
-                         ELSE 0 END)), 0) AS BIGINT)) AS qv
-           FROM qh),
-    dtop AS (
-      SELECT doc_id,
-             round(list_cosine_similarity(CAST(emb.v AS DOUBLE[]),
-                                          CAST(qe.qv AS DOUBLE[])), 6) AS cos
-      FROM emb, qe ORDER BY cos DESC, doc_id LIMIT 30),
+        _bm25_dense_tops_cte(30)
+        + """,
     r1 AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r FROM bmtop),
     r2 AS (SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS r FROM dtop),
     f AS (SELECT coalesce(r1.doc_id, r2.doc_id) AS doc_id, r1.r AS ra, r2.r AS rb
@@ -3252,39 +3478,9 @@ def sorted_status_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "minhash_lsh_pairs",
-    r"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-                  FROM documents),
-    sh AS (
-      SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-             ELSE list_transform(generate_series(1, len(t) - 2),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END AS gs
-      FROM toks),
-    shd AS (SELECT DISTINCT doc_id, g FROM sh, UNNEST(gs) AS u(g)),
-    h AS (SELECT doc_id, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) AS h FROM shd),
-    sig AS (SELECT doc_id,
-           min((h*1 + 7919) % 4294967311) AS m0,
-           min((h*3 + 15838) % 4294967311) AS m1,
-           min((h*5 + 23757) % 4294967311) AS m2,
-           min((h*7 + 31676) % 4294967311) AS m3,
-           min((h*9 + 39595) % 4294967311) AS m4,
-           min((h*11 + 47514) % 4294967311) AS m5,
-           min((h*13 + 55433) % 4294967311) AS m6,
-           min((h*15 + 63352) % 4294967311) AS m7,
-           min((h*17 + 71271) % 4294967311) AS m8,
-           min((h*19 + 79190) % 4294967311) AS m9,
-           min((h*21 + 87109) % 4294967311) AS m10,
-           min((h*23 + 95028) % 4294967311) AS m11,
-           min((h*25 + 102947) % 4294967311) AS m12,
-           min((h*27 + 110866) % 4294967311) AS m13,
-           min((h*29 + 118785) % 4294967311) AS m14,
-           min((h*31 + 126704) % 4294967311) AS m15
-      FROM h GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, 0 AS band_id, [m0,m1,m2,m3] AS bh FROM sig
-      UNION ALL SELECT doc_id, 1 AS band_id, [m4,m5,m6,m7] AS bh FROM sig
-      UNION ALL SELECT doc_id, 2 AS band_id, [m8,m9,m10,m11] AS bh FROM sig
-      UNION ALL SELECT doc_id, 3 AS band_id, [m12,m13,m14,m15] AS bh FROM sig)
+    f"""
+    WITH {_minhash_sig_cte()},
+    {_MINHASH_BANDS_CTE}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b
       ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -3345,22 +3541,11 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "simhash_hamming_pairs",
-    """
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h)
+    f"""
+    WITH {_simhash_cte()}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.sh, b.sh))::INT AS hamming
-    FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sh, b.sh)) <= 8
+    {_hamming_join(8, "source")}
     """,
 )
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3381,18 +3566,8 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "simhash_banded_pairs",
-    """
-    WITH h AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
+    f"""
+    WITH {_simhash_cte(source=False)},
     banded AS (
       SELECT doc_id, sh, gs.b AS band_id, (sh >> (gs.b * 8)) & 255 AS band_val
       FROM fp CROSS JOIN generate_series(0, 3) AS gs(b)),
@@ -3421,22 +3596,11 @@ def simhash_banded_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WIDE fingerprints (60-bit: 15-hex md5 token hashes, BIGINT-positive
     # in both engines) with the same hamming<=8 threshold; oracle = the
     # unblocked all-pairs popcount, lossless vs the Manku block-union join.
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h)
+    f"""
+    WITH {_simhash_cte(60)}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.sh, b.sh))::INT AS hamming
-    FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sh, b.sh)) <= 8
+    {_hamming_join(8, "source")}
     """,
 )
 def simhash_wide_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3463,44 +3627,9 @@ def simhash_wide_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hot_union_sql(bits: int = 32, blocks: int = 10, max_hamming: int = 8, cap: int = 8) -> str:
     """Oracle for simhash_blocked_hot_keys: replay the Manku block-union
-    key exploder over DISTINCT (source, fingerprint) units with the SAME
-    block geometry as dedup._block_union_keys (widths base+1 for the
-    first bits%blocks blocks, combo ids in itertools.combinations order,
-    key packed as val_i * 2^w_j + val_j), then the frequency histogram
-    HAVING > cap. The geometry table is generated by this Python builder
-    so engine and oracle cannot drift."""
-    from itertools import combinations as _combos
-
-    base_w, rem = divmod(bits, blocks)
-    widths = [base_w + 1 if i < rem else base_w for i in range(blocks)]
-    offsets = []
-    off = 0
-    for w in widths:
-        offsets.append(off)
-        off += w
-    rows = ", ".join(
-        f"({cid}, {offsets[i]}, {widths[i]}, {offsets[j]}, {widths[j]})"
-        for cid, (i, j) in enumerate(_combos(range(blocks), blocks - max_hamming))
-    )
-    return rf"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, {bits - 1}),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    dfp AS (SELECT DISTINCT source, sh FROM fp),
-    cmb AS (SELECT * FROM (VALUES {rows}) t(cid, oi, wi, oj, wj)),
-    keys AS (
-      SELECT d.source, c.cid,
-             (((d.sh >> c.oi) & ((1::BIGINT << c.wi) - 1)) * (1::BIGINT << c.wj)
-              + ((d.sh >> c.oj) & ((1::BIGINT << c.wj) - 1)))::BIGINT AS key_val
-      FROM dfp d CROSS JOIN cmb c)
+    key exploder (_union_keys_cte), then the frequency histogram
+    HAVING > cap."""
+    return f"""{_union_keys_cte(bits, blocks, max_hamming)}
     SELECT source, cid::INT AS combo_id, key_val,
            count(*)::BIGINT AS n_fingerprints
     FROM keys GROUP BY 1, 2, 3 HAVING count(*) > {cap}
@@ -3510,39 +3639,8 @@ def _hot_union_sql(bits: int = 32, blocks: int = 10, max_hamming: int = 8, cap: 
 def _blocked_budget_sql(bits: int = 32, blocks: int = 10, max_hamming: int = 8) -> str:
     """Oracle for simhash_blocked_candidate_budget: per-combo candidate
     counts from the bucket histogram (sum n*(n-1)/2 over buckets) — the
-    same builder-generated geometry as _hot_union_sql."""
-    from itertools import combinations as _combos
-
-    base_w, rem = divmod(bits, blocks)
-    widths = [base_w + 1 if i < rem else base_w for i in range(blocks)]
-    offsets = []
-    off = 0
-    for w in widths:
-        offsets.append(off)
-        off += w
-    rows = ", ".join(
-        f"({cid}, {offsets[i]}, {widths[i]}, {offsets[j]}, {widths[j]})"
-        for cid, (i, j) in enumerate(_combos(range(blocks), blocks - max_hamming))
-    )
-    return rf"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, {bits - 1}),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    dfp AS (SELECT DISTINCT source, sh FROM fp),
-    cmb AS (SELECT * FROM (VALUES {rows}) t(cid, oi, wi, oj, wj)),
-    keys AS (
-      SELECT d.source, c.cid,
-             (((d.sh >> c.oi) & ((1::BIGINT << c.wi) - 1)) * (1::BIGINT << c.wj)
-              + ((d.sh >> c.oj) & ((1::BIGINT << c.wj) - 1)))::BIGINT AS key_val
-      FROM dfp d CROSS JOIN cmb c),
+    same _union_keys_cte as _hot_union_sql."""
+    return f"""{_union_keys_cte(bits, blocks, max_hamming)},
     hist AS (
       SELECT cid, count(*)::BIGINT AS n
       FROM keys GROUP BY source, cid, key_val)
@@ -3800,30 +3898,9 @@ def _lsh_layout_stage(spark: SparkSession, sf_dir: str, out: str) -> None:
     SIM.write_lsh_bucketed(emb, out, dim=len(qv), planes=4)
 
 
-@_register(
-    "lsh_ann_bucketed_topk",
-    # same result set as lsh_ann_topk — the bucketed layout is a physical
-    # optimization (partition-pruned probe), not a semantic change
-    """
-    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT v AS qv FROM base WHERE vec_id = 0),
-    planes AS (
-      SELECT p, list_transform(generate_series(0, 63),
-               j -> (CAST('0x' || substr(md5(p || ':' || j), 1, 8) AS BIGINT)
-                     / 4294967295.0) * 2.0 - 1.0) AS coeffs
-      FROM generate_series(0, 3) AS g(p)),
-    sides AS (
-      SELECT b.vec_id,
-             sum(CASE WHEN list_dot_product(b.v, pl.coeffs) >= 0
-                      THEN (1 << (3 - pl.p)) ELSE 0 END) AS bkt
-      FROM base b CROSS JOIN planes pl GROUP BY b.vec_id),
-    qb AS (SELECT bkt AS qbkt FROM sides WHERE vec_id = 0)
-    SELECT b.vec_id, round(list_cosine_similarity(b.v, q.qv), 6) AS cos
-    FROM base b JOIN sides s ON b.vec_id = s.vec_id, q, qb
-    WHERE s.bkt = qb.qbkt
-    ORDER BY cos DESC, b.vec_id LIMIT 10
-    """,
-)
+# same result set as lsh_ann_topk — the bucketed layout is a physical
+# optimization (partition-pruned probe), not a semantic change
+@_register("lsh_ann_bucketed_topk", ORACLES["lsh_ann_topk"])
 def lsh_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The amortized-layout LSH path: materialize the corpus partitioned by
     bucket id once (write_lsh_bucketed), then probe with a partition filter
@@ -5792,29 +5869,10 @@ def _simhash_star_edges_staged(spark: SparkSession, sf_dir: str, out: str) -> No
 
 @_register(
     "dedup_components",
-    r"""
+    f"""
     WITH RECURSIVE
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s)
+    {_dup_pairs_cte(60, "pairs")},
+    {_closure_cte("pairs")}
     SELECT v AS doc_id, min(u)::BIGINT AS component FROM reach GROUP BY v
     """,
 )
@@ -5834,22 +5892,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dup_graph_degree_distribution",
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+    f"""
+    WITH {_dup_pairs_cte(32, "prs")},
     deg AS (
       SELECT v, count(*)::BIGINT AS d FROM (
         SELECT id_a AS v FROM prs UNION ALL SELECT id_b FROM prs) t
@@ -5894,22 +5938,8 @@ def dup_graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @_register(
     "dup_graph_triangles",
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+    f"""
+    WITH {_dup_pairs_cte(32, "prs")},
     tri AS (
       SELECT count(*)::BIGINT AS n_triangles
       FROM prs p1 JOIN prs p2 ON p1.id_b = p2.id_a
@@ -5975,9 +6005,9 @@ def dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "lexical_diversity",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     tc AS (
       SELECT doc_id, w, count(*)::BIGINT AS c
       FROM (SELECT doc_id, unnest(t) AS w FROM toks) x
@@ -6017,22 +6047,8 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dup_graph_pagerank",
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+    f"""
+    WITH {_dup_pairs_cte(32, "prs")},
     edges AS (SELECT id_a AS s, id_b AS d FROM prs
               UNION ALL SELECT id_b, id_a FROM prs),
     deg AS (SELECT s AS v, count(*)::BIGINT AS dg FROM edges GROUP BY s),
@@ -6628,13 +6644,10 @@ def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "benchmark_decontam",
-    """
+    f"""
     WITH sh AS (
       SELECT doc_id, source,
-             list_distinct(list_transform(
-               generate_series(1, greatest(len(regexp_split_to_array(trim(text), '\\s+')) - 2, 1)),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\\s+'), i, i + 2), ' ')
-             )) AS s
+             list_distinct({_trigrams(True)}) AS s
       FROM documents),
     bg AS (SELECT DISTINCT g FROM sh, unnest(s) AS u(g) WHERE source = 'src0'),
     cg AS (SELECT doc_id, g FROM sh, unnest(s) AS u(g) WHERE source <> 'src0')
@@ -6802,29 +6815,10 @@ def scd2_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "near_dedup_corpus",
-    r"""
+    f"""
     WITH RECURSIVE
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s),
+    {_dup_pairs_cte(60, "pairs")},
+    {_closure_cte("pairs")},
     comp AS (SELECT v AS doc_id, min(u) AS component FROM reach GROUP BY v),
     dropped AS (SELECT doc_id FROM comp WHERE doc_id <> component)
     SELECT d.source, count(*) AS n_docs,
@@ -7386,29 +7380,10 @@ def sharded_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dedup_keep_best",
-    r"""
+    f"""
     WITH RECURSIVE
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM prs UNION SELECT id_b, id_a FROM prs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s),
+    {_dup_pairs_cte(60, "prs")},
+    {_closure_cte("prs")},
     comp AS (SELECT v AS doc_id, min(u) AS component FROM reach GROUP BY v),
     full_assign AS (
       SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component, d.n_chars
@@ -7638,27 +7613,7 @@ def point_in_time_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "stream_scd2_history",
-    """
-    WITH ordered AS (
-      SELECT user_id, event_type, epoch_us(ts)::BIGINT AS t, event_id,
-             lag(event_type) OVER w AS prev
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-    changes AS (
-      SELECT user_id, event_type, t, event_id FROM ordered
-      WHERE prev IS NULL OR prev <> event_type),
-    hist AS (
-      SELECT user_id, event_type, t AS valid_from_us,
-             lead(t) OVER (PARTITION BY user_id ORDER BY t, event_id) AS valid_to_us
-      FROM changes)
-    SELECT user_id, event_type, valid_from_us,
-           coalesce(valid_to_us, -1) AS valid_to_us,
-           (valid_to_us IS NULL) AS is_current
-    FROM hist
-    """,
-)
+@_register("stream_scd2_history", ORACLES["scd2_event_history"])
 def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTALLY-maintained SCD2 (streaming/scd_cdc.py): the change
     feed arrives as TWO micro-batches split at the median event time —
@@ -7943,9 +7898,9 @@ def bpe_segment_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "substring_dup_fraction",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     wins AS (
       SELECT doc_id,
         CASE WHEN len(t) < 8
@@ -8009,9 +7964,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "longest_dup_run",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     wins AS (
       SELECT doc_id, i AS pos,
         CASE WHEN len(t) < 8
@@ -8040,9 +7995,9 @@ def longest_dup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "bigram_entropy_scores",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     grams AS (
       SELECT doc_id,
         CASE WHEN len(t) < 2 THEN array_to_string(t, ' ')
@@ -8146,9 +8101,9 @@ def multimodal_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "bigram_nll_score",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     bg AS (
       SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
       FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
@@ -8173,9 +8128,9 @@ def bigram_nll_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "collocation_pmi_pairs",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     bg AS (
       SELECT t[i] AS w1, t[i + 1] AS w2
       FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
@@ -8287,9 +8242,9 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "intra_doc_dup_windows",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     wins AS (
       SELECT doc_id,
         CASE WHEN len(t) < 8
@@ -8347,12 +8302,12 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "curation_pipeline_report",
-    """
+    f"""
     WITH s0 AS (SELECT doc_id, text, lang FROM documents),
     s1 AS (SELECT * FROM s0
-           WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 20),
+           WHERE len({_TOKENS}) >= 20),
     s2 AS (SELECT * FROM s1 WHERE lang IN ('en', 'es')),
-    toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM s2),
+    toks AS (SELECT doc_id, {_TOKENS} AS t FROM s2),
     bg AS (SELECT doc_id, len(t) AS n, t[i] || ' ' || t[i + 1] AS gram
            FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
     cnt AS (SELECT doc_id, n, gram, count(*) AS c FROM bg GROUP BY doc_id, n, gram),
@@ -8436,29 +8391,12 @@ def _stream_near_dedup_sql(min_tokens: int = 5, num_hashes: int = 16) -> str:
     the distinct signature set of the filtered corpus. Signature constants
     replay text.py's shared affine family, like the minhash_lsh_pairs
     oracle."""
-    from scylla_migrator_spark.analytics.text import AFFINE_COEFFS, AFFINE_P
-
-    mins = ",\n           ".join(
-        f"min((h*{a} + {b}) % {AFFINE_P}) AS m{i}"
-        for i, (a, b) in enumerate(AFFINE_COEFFS[:num_hashes])
-    )
     cols = ", ".join(f"m{i}" for i in range(num_hashes))
-    return rf"""
+    return f"""
     WITH filt AS (
       SELECT doc_id, text FROM documents
-      WHERE len(regexp_split_to_array(trim(text), '\s+')) >= {min_tokens}),
-    toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-             FROM filt),
-    sh AS (
-      SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-             ELSE list_transform(generate_series(1, len(t) - 2),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END AS gs
-      FROM toks),
-    shd AS (SELECT DISTINCT doc_id, g FROM sh, UNNEST(gs) AS u(g)),
-    h AS (SELECT doc_id, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) AS h FROM shd),
-    sig AS (SELECT doc_id,
-           {mins}
-      FROM h GROUP BY doc_id)
+      WHERE len({_TOKENS}) >= {min_tokens}),
+    {_minhash_sig_cte("filt", num_hashes)}
     SELECT DISTINCT substr(sha256(concat_ws(',', {cols})), 1, 16) AS sig16
     FROM sig
     """
@@ -8555,39 +8493,9 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "cross_corpus_lsh_pairs",
-    r"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-                  FROM documents),
-    sh AS (
-      SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-             ELSE list_transform(generate_series(1, len(t) - 2),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END AS gs
-      FROM toks),
-    shd AS (SELECT DISTINCT doc_id, g FROM sh, UNNEST(gs) AS u(g)),
-    h AS (SELECT doc_id, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) AS h FROM shd),
-    sig AS (SELECT doc_id,
-           min((h*1 + 7919) % 4294967311) AS m0,
-           min((h*3 + 15838) % 4294967311) AS m1,
-           min((h*5 + 23757) % 4294967311) AS m2,
-           min((h*7 + 31676) % 4294967311) AS m3,
-           min((h*9 + 39595) % 4294967311) AS m4,
-           min((h*11 + 47514) % 4294967311) AS m5,
-           min((h*13 + 55433) % 4294967311) AS m6,
-           min((h*15 + 63352) % 4294967311) AS m7,
-           min((h*17 + 71271) % 4294967311) AS m8,
-           min((h*19 + 79190) % 4294967311) AS m9,
-           min((h*21 + 87109) % 4294967311) AS m10,
-           min((h*23 + 95028) % 4294967311) AS m11,
-           min((h*25 + 102947) % 4294967311) AS m12,
-           min((h*27 + 110866) % 4294967311) AS m13,
-           min((h*29 + 118785) % 4294967311) AS m14,
-           min((h*31 + 126704) % 4294967311) AS m15
-      FROM h GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, 0 AS band_id, [m0,m1,m2,m3] AS bh FROM sig
-      UNION ALL SELECT doc_id, 1 AS band_id, [m4,m5,m6,m7] AS bh FROM sig
-      UNION ALL SELECT doc_id, 2 AS band_id, [m8,m9,m10,m11] AS bh FROM sig
-      UNION ALL SELECT doc_id, 3 AS band_id, [m12,m13,m14,m15] AS bh FROM sig)
+    f"""
+    WITH {_minhash_sig_cte()},
+    {_MINHASH_BANDS_CTE}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b
       ON a.band_id = b.band_id AND a.bh = b.bh
@@ -8774,41 +8682,11 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "minhash_jaccard_estimates",
-    r"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-                  FROM documents),
-    sh AS (
-      SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-             ELSE list_transform(generate_series(1, len(t) - 2),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END AS gs
-      FROM toks),
-    shd AS (SELECT DISTINCT doc_id, g FROM sh, UNNEST(gs) AS u(g)),
-    h AS (SELECT doc_id, CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) AS h FROM shd),
-    sig AS (SELECT doc_id,
-           min((h*1 + 7919) % 4294967311) AS m0,
-           min((h*3 + 15838) % 4294967311) AS m1,
-           min((h*5 + 23757) % 4294967311) AS m2,
-           min((h*7 + 31676) % 4294967311) AS m3,
-           min((h*9 + 39595) % 4294967311) AS m4,
-           min((h*11 + 47514) % 4294967311) AS m5,
-           min((h*13 + 55433) % 4294967311) AS m6,
-           min((h*15 + 63352) % 4294967311) AS m7,
-           min((h*17 + 71271) % 4294967311) AS m8,
-           min((h*19 + 79190) % 4294967311) AS m9,
-           min((h*21 + 87109) % 4294967311) AS m10,
-           min((h*23 + 95028) % 4294967311) AS m11,
-           min((h*25 + 102947) % 4294967311) AS m12,
-           min((h*27 + 110866) % 4294967311) AS m13,
-           min((h*29 + 118785) % 4294967311) AS m14,
-           min((h*31 + 126704) % 4294967311) AS m15
-      FROM h GROUP BY doc_id),
+    f"""
+    WITH {_minhash_sig_cte()},
     sigl AS (SELECT doc_id, [m0,m1,m2,m3,m4,m5,m6,m7,m8,m9,m10,m11,m12,m13,m14,m15] AS s
              FROM sig),
-    bands AS (
-      SELECT doc_id, 0 AS band_id, [m0,m1,m2,m3] AS bh FROM sig
-      UNION ALL SELECT doc_id, 1 AS band_id, [m4,m5,m6,m7] AS bh FROM sig
-      UNION ALL SELECT doc_id, 2 AS band_id, [m8,m9,m10,m11] AS bh FROM sig
-      UNION ALL SELECT doc_id, 3 AS band_id, [m12,m13,m14,m15] AS bh FROM sig),
+    {_MINHASH_BANDS_CTE},
     pairs AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b
@@ -8836,13 +8714,12 @@ def minhash_jaccard_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays signatures, banding, estimate, and exact overlap.
 
     The pair table is referenced by BOTH readouts (estimate join + exact
-    shingle verify) and deliberately stays LAZY: same-session A/B (r10)
+    shingle verify) and deliberately stays LAZY: a same-session A/B
     measured the lazy shape at 4.1-4.6 s steady vs 5.8-6.8 s for an
     eager-checkpoint variant — the generator's persisted projection plus
     exchange reuse already dedupe the shared subtree inside one job,
     while a checkpoint serializes it into its own job and cuts the
-    downstream joins off from the cached exchanges. The r9 6.0 s reading
-    was cache/ordering noise on top of a ~4.5 s steady state."""
+    downstream joins off from the cached exchanges."""
     docs = _fan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     pairs = D.minhash_lsh_candidates(docs, "text", "doc_id", 16, 4)
     sigs = D.minhash_signatures(docs, "text", "doc_id", 16)
@@ -9286,21 +9163,10 @@ def linear_count_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the tie-break and the hamming<=8 pair predicate cannot silently
 # diverge between oracles (mirrors analytics/components.py::
 # label_propagation by contract).
-_SIMHASH_EDGES_CTES = r"""WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
+_SIMHASH_EDGES_CTES = f"""WITH {_simhash_cte()},
     prs AS MATERIALIZED (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+      {_hamming_join(8, "source")}),
     edges AS (SELECT id_a AS s, id_b AS d FROM prs
               UNION ALL SELECT id_b, id_a FROM prs)"""
 
@@ -10218,9 +10084,9 @@ def linear_probe_training(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "segment_dedup_reconstruct",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     sized AS (
       SELECT doc_id, t,
              greatest(CAST(ceil(len(t) / 16.0) AS BIGINT), 1) AS nseg
@@ -10326,29 +10192,10 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "leakage_free_split",
-    r"""
+    f"""
     WITH RECURSIVE
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s),
+    {_dup_pairs_cte(60, "pairs")},
+    {_closure_cte("pairs")},
     comp AS (SELECT v AS doc_id, min(u) AS component FROM reach GROUP BY v),
     g AS (
       SELECT d.doc_id, coalesce(c.component, d.doc_id) AS gk
@@ -10561,9 +10408,9 @@ def good_turing_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kneser_ney_bigram_lm",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT {_TOKENS} AS t FROM documents),
     bg AS (
       SELECT t[i] AS w1, t[i + 1] AS w2
       FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
@@ -10597,9 +10444,9 @@ def kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kneser_ney_trigram_lm",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT {_TOKENS} AS t FROM documents),
     tg AS (
       SELECT t[i] AS w1, t[i + 1] AS w2, t[i + 2] AS w3
       FROM toks, unnest(generate_series(1, len(t) - 2)) AS u(i)),
@@ -10641,9 +10488,9 @@ def kneser_ney_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kn_doc_nll_score",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     bg AS (
       SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
       FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
@@ -10705,9 +10552,9 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kn3_doc_nll_score",
-    r"""
+    f"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
+      SELECT doc_id, {_TOKENS} AS t FROM documents),
     tg AS (
       SELECT doc_id, t[i] AS w1, t[i + 1] AS w2, t[i + 2] AS w3
       FROM toks, unnest(generate_series(1, len(t) - 2)) AS u(i)),
@@ -10749,24 +10596,8 @@ def kn3_doc_nll_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kn_perplexity_gate",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    bg AS (
-      SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-      FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
-    c2 AS MATERIALIZED (
-      SELECT w1, w2, count(*)::BIGINT AS c FROM bg GROUP BY w1, w2),
-    pre AS (SELECT w1, sum(c)::BIGINT AS cp, count(*)::BIGINT AS n_fwd
-            FROM c2 GROUP BY w1),
-    cont AS (SELECT w2, count(*)::BIGINT AS n_bwd FROM c2 GROUP BY w2),
-    nb AS (SELECT count(*)::BIGINT AS nbig FROM c2),
-    scored AS (
-      SELECT doc_id,
-             CAST(-ln((c - CAST(0.75 AS DOUBLE)) / cp
-                      + CAST(0.75 AS DOUBLE) * n_fwd / cp * n_bwd / nbig)
-                  AS DECIMAL(18,9)) AS nll
-      FROM bg JOIN c2 USING (w1, w2) JOIN pre USING (w1) JOIN cont USING (w2), nb),
+    f"""
+    WITH {_KN_NLL_CTE},
     agg AS (
       SELECT doc_id, round(CAST(sum(nll) AS DOUBLE) / count(*), 6) AS avg_kn_nll
       FROM scored GROUP BY doc_id)
@@ -10798,24 +10629,8 @@ def kn_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ccnet_perplexity_buckets",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    bg AS (
-      SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-      FROM toks, unnest(generate_series(1, len(t) - 1)) AS u(i)),
-    c2 AS MATERIALIZED (
-      SELECT w1, w2, count(*)::BIGINT AS c FROM bg GROUP BY w1, w2),
-    pre AS (SELECT w1, sum(c)::BIGINT AS cp, count(*)::BIGINT AS n_fwd
-            FROM c2 GROUP BY w1),
-    cont AS (SELECT w2, count(*)::BIGINT AS n_bwd FROM c2 GROUP BY w2),
-    nb AS (SELECT count(*)::BIGINT AS nbig FROM c2),
-    scored AS (
-      SELECT doc_id,
-             CAST(-ln((c - CAST(0.75 AS DOUBLE)) / cp
-                      + CAST(0.75 AS DOUBLE) * n_fwd / cp * n_bwd / nbig)
-                  AS DECIMAL(18,9)) AS nll
-      FROM bg JOIN c2 USING (w1, w2) JOIN pre USING (w1) JOIN cont USING (w2), nb),
+    f"""
+    WITH {_KN_NLL_CTE},
     agg AS MATERIALIZED (
       SELECT doc_id, round(CAST(sum(nll) AS DOUBLE) / count(*), 6) AS avg_kn_nll
       FROM scored GROUP BY doc_id),
@@ -11102,36 +10917,11 @@ def pq_adc_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiled byte offset 96y+6x), integer grayscale (r+g+b)//3, a 56-bit
     # dHash (bit y*7+x set where gray(x,y) < gray(x+1,y)), the SAME
     # 8-band Hamming-LSH blocking, and the exact popcount verify.
-    """
-    WITH h AS (
-      SELECT doc_id, hex(encode(substr(text, 1, 61))) AS hx,
-             octet_length(encode(substr(text, 1, 61))) AS nb
-      FROM documents
-      WHERE octet_length(encode(substr(text, 1, 61))) > 0),
-    g AS (
-      SELECT doc_id, ys.y AS y, xs.x AS x,
-        (CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 1) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 2) % nb) + 1, 2) AS INT)) // 3 AS gray
-      FROM h
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS x) xs),
-    dh AS (
-      SELECT l.doc_id,
-             CAST(sum(CASE WHEN l.gray < r.gray
-                           THEN 1::BIGINT << (l.y * 7 + l.x)
-                           ELSE 0::BIGINT END) AS BIGINT) AS sh
-      FROM g l JOIN g r ON l.doc_id = r.doc_id AND l.y = r.y AND r.x = l.x + 1
-      GROUP BY l.doc_id),
-    bands AS (
-      SELECT doc_id, sh, bs.b AS band_id, (sh >> (7 * bs.b)) & 127 AS band_val
-      FROM dh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) bs)
+    f"""
+    WITH {_DHASH_BANDS_CTE}
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band_id = b.band_id AND a.band_val = b.band_val
-     AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sh, b.sh)) <= 4
+    {_hamming_join(4, "band_id", "band_val", rel="bands")}
     """,
 )
 def image_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11531,40 +11321,8 @@ def _ndcg_sql(k: int = 10) -> str:
     sum."""
     w_case, idcg = _ndcg_discount_sql(k)
     return (
-        _hashed_emb_cte(16)
-        + rf""",
-    lens AS (
-      SELECT doc_id, len(regexp_split_to_array(trim(text), '\s+')) AS dl
-      FROM documents),
-    sc AS (SELECT count(*)::BIGINT AS n, sum(dl) / count(*) AS avgdl FROM lens),
-    tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf FROM
-             (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-           WHERE w IN ('spark', 'join', 'window') GROUP BY doc_id, w),
-    dfq AS (SELECT w, count(*)::BIGINT AS df FROM tf GROUP BY w),
-    bmsc AS (
-      SELECT tf.doc_id,
-             CAST(ln(1.0 + (sc.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                  * tf.tf * 2.2
-                  / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * lens.dl / sc.avgdl))
-                  AS DECIMAL(18,9)) AS ts
-      FROM tf JOIN dfq USING (w) JOIN lens USING (doc_id), sc),
-    bmtop AS (
-      SELECT doc_id, round(CAST(sum(ts) AS DOUBLE), 6) AS bm25
-      FROM bmsc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT {k}),
-    qh AS (SELECT list_transform(regexp_split_to_array('spark join window', '\s+'),
-                                 w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs),
-    qe AS (SELECT list_transform(generate_series(0, 15),
-             j -> CAST(coalesce(list_sum(list_transform(hs,
-                    h -> CASE WHEN h % 16 = j
-                         THEN (CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END)
-                         ELSE 0 END)), 0) AS BIGINT)) AS qv
-           FROM qh),
-    dtop AS (
-      SELECT doc_id,
-             round(list_cosine_similarity(CAST(emb.v AS DOUBLE[]),
-                                          CAST(qe.qv AS DOUBLE[])), 6) AS cos
-      FROM emb, qe ORDER BY cos DESC, doc_id LIMIT {k}),
+        _bm25_dense_tops_cte(k)
+        + f""",
     br AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
            FROM bmtop),
     dr AS (SELECT doc_id,
@@ -11618,25 +11376,9 @@ def retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs = the full image_phash_dup_pairs replay (nested CTE), closed
     # into components by the same transitive-closure recursion the
     # dedup_components oracle uses; canonical keeper = min doc_id.
-    """
-    WITH RECURSIVE pairs AS ("""
-    + ORACLES["image_phash_dup_pairs"]
-    + """),
-    e2 AS (SELECT id_a AS s, id_b AS d FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM e2),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN e2 e ON r.u = e.s),
-    comp AS (SELECT v AS doc_id, min(u)::BIGINT AS canonical_id
-             FROM reach GROUP BY v)
-    SELECT c.doc_id, c.canonical_id, s.cluster_size
-    FROM comp c JOIN (
-      SELECT canonical_id, count(*)::BIGINT AS cluster_size
-      FROM comp GROUP BY canonical_id) s
-    ON c.canonical_id = s.canonical_id
-    """,
+    f"""
+    WITH RECURSIVE pairs AS ({ORACLES["image_phash_dup_pairs"]}),
+    {_CLUSTERS_SQL}""",
 )
 def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE dedup closed end to end: the dHash banded pairs
@@ -11651,7 +11393,7 @@ def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scylla_migrator_spark.analytics.components import connected_components
 
     # graph consumer -> star-contracted edges (identical closure, linear
-    # intra-group edges; r8 verdict task #3) over the SAME fingerprints,
+    # intra-group edges) over the SAME fingerprints,
     # read from the staged star-edge table (decode+detection cost visible
     # via image_phash_dup_pairs' own row)
     edges = _image_star_edges_staged(spark, sf_dir)
@@ -11716,20 +11458,8 @@ def _doc_payload_halves_stage(spark: SparkSession, sf_dir: str, out: str) -> Non
     "stream_image_phash_encode",
     # oracle = the batch dHash state: the stateless streaming encode of the
     # two replayed halves must equal the batch fingerprint table exactly
-    """
-    WITH h AS (
-      SELECT doc_id, hex(encode(substr(text, 1, 61))) AS hx,
-             octet_length(encode(substr(text, 1, 61))) AS nb
-      FROM documents
-      WHERE octet_length(encode(substr(text, 1, 61))) > 0),
-    g AS (
-      SELECT doc_id, ys.y AS y, xs.x AS x,
-        (CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 1) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 2) % nb) + 1, 2) AS INT)) // 3 AS gray
-      FROM h
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS x) xs)
+    f"""
+    WITH {_DHASH_GRID_CTE}
     SELECT l.doc_id AS asset_id,
            CAST(sum(CASE WHEN l.gray < r.gray
                          THEN 1::BIGINT << (l.y * 7 + l.x)
@@ -11854,7 +11584,7 @@ def pq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream, 29 frames of nb//29 samples each get an exact INTEGER
     # energy sum((b-128)^2), 28 gradient bits pack into the hash, and the
     # same 4-band Hamming-LSH blocking + popcount verify runs in SQL.
-    """
+    f"""
     WITH h AS (
       SELECT doc_id,
              hex(encode(substr(repeat(substr(text, 1, 61), 8), 1, 464))) AS hx,
@@ -11881,10 +11611,7 @@ def pq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM dh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) bs)
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band_id = b.band_id AND a.band_val = b.band_val
-     AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sh, b.sh)) <= 3
+    {_hamming_join(3, "band_id", "band_val", rel="bands")}
     """,
 )
 def audio_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11912,7 +11639,7 @@ def audio_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("payload"),
             F.lit(8000).cast("int").alias("rate"),
         )
-        # corpus-shaped guard (r7 ADVICE): payloads shorter than the frame
+        # corpus-shaped guard: payloads shorter than the frame
         # count can't fill one sample per frame — audio_energy_fingerprints
         # raises on them by contract, and the oracle's generate_series would
         # silently drop them; exclude them identically on BOTH engines
@@ -11933,15 +11660,8 @@ def _dense_top_sql(k: int = 10) -> str:
     'spark join window' — the grading ground truth the NDCG family shares."""
     return (
         _hashed_emb_cte(16)
-        + rf""",
-    qh AS (SELECT list_transform(regexp_split_to_array('spark join window', '\s+'),
-                                 w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs),
-    qe AS (SELECT list_transform(generate_series(0, 15),
-             j -> CAST(coalesce(list_sum(list_transform(hs,
-                    h -> CASE WHEN h % 16 = j
-                         THEN (CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END)
-                         ELSE 0 END)), 0) AS BIGINT)) AS qv
-           FROM qh)
+        + f""",
+    {_QUERY_EMB_CTE}
     SELECT doc_id,
            round(list_cosine_similarity(CAST(emb.v AS DOUBLE[]),
                                         CAST(qe.qv AS DOUBLE[])), 6) AS cos
@@ -12489,30 +12209,8 @@ def wordpiece_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "image_phash_hot_bands",
     # Oracle: the image dHash replay (same CTEs as image_phash_dup_pairs)
     # grouped by band bucket over DISTINCT fingerprints, HAVING > cap.
-    """
-    WITH h AS (
-      SELECT doc_id, hex(encode(substr(text, 1, 61))) AS hx,
-             octet_length(encode(substr(text, 1, 61))) AS nb
-      FROM documents
-      WHERE octet_length(encode(substr(text, 1, 61))) > 0),
-    g AS (
-      SELECT doc_id, ys.y AS y, xs.x AS x,
-        (CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 1) % nb) + 1, 2) AS INT)
-       + CAST('0x' || substring(hx, 2*((96*ys.y + 6*xs.x + 2) % nb) + 1, 2) AS INT)) // 3 AS gray
-      FROM h
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS x) xs),
-    dh AS (
-      SELECT l.doc_id,
-             CAST(sum(CASE WHEN l.gray < r.gray
-                           THEN 1::BIGINT << (l.y * 7 + l.x)
-                           ELSE 0::BIGINT END) AS BIGINT) AS sh
-      FROM g l JOIN g r ON l.doc_id = r.doc_id AND l.y = r.y AND r.x = l.x + 1
-      GROUP BY l.doc_id),
-    bands AS (
-      SELECT doc_id, sh, bs.b AS band_id, (sh >> (7 * bs.b)) & 127 AS band_val
-      FROM dh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) bs)
+    f"""
+    WITH {_DHASH_BANDS_CTE}
     SELECT band_id, band_val, count(DISTINCT sh)::BIGINT AS n_fingerprints
     FROM bands GROUP BY band_id, band_val
     HAVING count(DISTINCT sh) > 12
@@ -12876,29 +12574,10 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dedup_components closure aggregated to the distribution dedup
     # POLICY decisions read: how many clusters of each size (singletons =
     # docs in no near-dup pair, counted from the complement)
-    r"""
+    f"""
     WITH RECURSIVE
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s),
+    {_dup_pairs_cte(60, "pairs")},
+    {_closure_cte("pairs")},
     comp AS (SELECT v AS doc_id, min(u) AS component FROM reach GROUP BY v),
     sizes AS (SELECT component, count(*)::BIGINT AS cluster_size
               FROM comp GROUP BY component)
@@ -13158,25 +12837,9 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the video shingle-match pairs closed into components by the same
     # transitive-closure recursion image_dup_clusters uses; canonical
     # keeper = min doc_id, cluster_size for the drop policy
-    """
-    WITH RECURSIVE pairs AS ("""
-    + ORACLES["video_phash_dup_pairs"]
-    + """),
-    e2 AS (SELECT id_a AS s, id_b AS d FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM e2),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN e2 e ON r.u = e.s),
-    comp AS (SELECT v AS doc_id, min(u)::BIGINT AS canonical_id
-             FROM reach GROUP BY v)
-    SELECT c.doc_id, c.canonical_id, s.cluster_size
-    FROM comp c JOIN (
-      SELECT canonical_id, count(*)::BIGINT AS cluster_size
-      FROM comp GROUP BY canonical_id) s
-    ON c.canonical_id = s.canonical_id
-    """,
+    f"""
+    WITH RECURSIVE pairs AS ({ORACLES["video_phash_dup_pairs"]}),
+    {_CLUSTERS_SQL}""",
 )
 def video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VIDEO dedup closed end to end (the image_dup_clusters policy on the
@@ -13189,7 +12852,7 @@ def video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scylla_migrator_spark.analytics.components import connected_components
 
     # graph consumer -> star-contracted shingle-match edges (identical
-    # closure, linear intra-group edges; r8 verdict task #3) read from
+    # closure, linear intra-group edges) read from
     # the staged star-edge table (decode+detection cost visible via
     # video_phash_dup_pairs' own row)
     edges = _video_star_edges_staged(spark, sf_dir)
@@ -13358,30 +13021,11 @@ def _cc_state_staged(spark: SparkSession, sf_dir: str, out: str) -> None:
     "components_retract_rebalance",
     # full-corpus wide closure over the REMAINING documents — the
     # retraction path must reproduce it exactly, splits included
-    r"""
+    f"""
     WITH RECURSIVE
     live AS (SELECT * FROM documents WHERE doc_id % 17 <> 0),
-    h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM live),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    edges AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM edges),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN edges e ON r.u = e.s)
+    {_dup_pairs_cte(60, "pairs", "live")},
+    {_closure_cte("pairs")}
     SELECT v AS doc_id, min(u)::BIGINT AS component FROM reach GROUP BY v
     """,
 )
@@ -13411,8 +13055,8 @@ def components_retract_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hardlink the scratch copy: the staged parquet files are immutable
     # (maintenance swaps whole directories, never appends in place), so
     # the mutable working set costs O(#files) directory entries, not a
-    # byte copy — the timed body measures retraction work, not copytree
-    # (r10 verdict hygiene item). Cross-device fallback copies for real.
+    # byte copy — the timed body measures retraction work, not copytree.
+    # Cross-device fallback copies for real.
     def _link_tree(src: str, dst: str) -> None:
         try:
             shutil.copytree(src, dst, copy_function=os.link)
@@ -13609,15 +13253,8 @@ def shard_balance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r = (n*Sxy - Sx*Sy) / (sqrt(n*Sxx - Sx^2) * sqrt(n*Syy - Sy^2)).
     # counts are ints -> every S is exact; one double expression both
     # engines evaluate identically.
-    """
-    WITH daily AS (
-      SELECT event_type, epoch_ns(ts) // 86400000000000 AS day_idx,
-             count(*)::BIGINT AS y
-      FROM events GROUP BY 1, 2),
-    seq AS (
-      SELECT event_type, y,
-             row_number() OVER (PARTITION BY event_type ORDER BY day_idx) AS rn
-      FROM daily),
+    f"""
+    WITH {_DAILY_SEQ_CTE},
     lagged AS (
       SELECT a.event_type, a.y AS x, b.y AS z
       FROM seq a JOIN seq b
@@ -13701,7 +13338,7 @@ def daily_volume_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint — blank-page/boilerplate shape). Oracle = unblocked
     # all-pairs popcount (pigeonhole-lossless vs the banded join),
     # aggregated by hamming.
-    """
+    f"""
     WITH docs2 AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -13710,26 +13347,15 @@ def daily_volume_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1000000 + g.i, text
       FROM documents, UNNEST(generate_series(1, 200)) AS g(i)
       WHERE doc_id = 0),
-    h AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM docs2),
-    fp AS (
-      SELECT doc_id,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
+    {_simhash_cte(rel="docs2", source=False)},
     pr AS (
       SELECT bit_count(xor(a.sh, b.sh))::INT AS hamming
-      FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 3)
+      {_hamming_join(3)})
     SELECT hamming, count(*)::BIGINT AS n_pairs FROM pr GROUP BY hamming
     """,
 )
 def near_dup_under_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hot-bucket governance under ACTUAL skew, timed per round: the
+    """The hot-bucket governance under ACTUAL skew, bench-timed: the
     corpus is stressed with 30% re-uploads (every doc_id%10<3 duplicated
     once) plus ONE document duplicated 200x — the degenerate fingerprint
     (blank page / solid thumbnail / boilerplate) that collapses into a
@@ -13740,7 +13366,7 @@ def near_dup_under_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the UNBLOCKED all-pairs popcount (lossless by the
     pigeonhole bound), aggregated by hamming — so both the skew-safety
     AND the losslessness are certified on a corpus built to break naive
-    banding; the bench timing of this row is the per-round evidence the
+    banding; the bench timing of this row is the evidence the
     plan stays sub-quadratic."""
     base = _fan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     reups = base.filter(F.col("doc_id") % 10 < 3).select(
@@ -14354,23 +13980,8 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summation order exists. The merged column rebuilds the registers
     # from two event-parity halves (register-wise max) and must equal the
     # whole-table estimate — HLL's merge law as a hash-checked value.
-    """
-    WITH h AS (
-      SELECT DISTINCT event_type,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS hv
-      FROM events),
-    b AS (
-      SELECT event_type, (hv % 64)::BIGINT AS bucket,
-             CASE WHEN hv // 64 = 0 THEN 27
-                  ELSE 27 - length(bin((hv // 64)::BIGINT)) END AS rho
-      FROM h),
-    reg AS (SELECT event_type, bucket, max(rho)::BIGINT AS r FROM b GROUP BY 1, 2),
-    s AS (
-      SELECT event_type,
-             (sum(1::BIGINT << (27 - r))
-              + (64 - count(*)) * 134217728)::BIGINT AS s_int,
-             (64 - count(*))::BIGINT AS v
-      FROM reg GROUP BY 1),
+    f"""
+    WITH {_HLL_CTE},
     hh AS (
       SELECT DISTINCT event_id % 2 AS half, event_type,
              CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS hv
@@ -14491,22 +14102,8 @@ def hll_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-vertex triangle participation over the staged near-dup pair
     # graph: each a<b<c triangle found once by compact-forward enumeration
     # credits all three corners; local coefficient = 2*t / (deg*(deg-1)).
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+    f"""
+    WITH {_dup_pairs_cte(32, "prs")},
     tris AS (
       SELECT p1.id_a AS a, p1.id_b AS b, p2.id_b AS c
       FROM prs p1 JOIN prs p2 ON p1.id_b = p2.id_a
@@ -15248,15 +14845,8 @@ def tokenizer_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generalized by a 7-row lag dimension crossed onto the daily frame;
     # per-(type, lag) Pearson from exact integer sums, one identical
     # double expression both engines.
-    """
-    WITH daily AS (
-      SELECT event_type, epoch_ns(ts) // 86400000000000 AS day_idx,
-             count(*)::BIGINT AS y
-      FROM events GROUP BY 1, 2),
-    seq AS (
-      SELECT event_type, y,
-             row_number() OVER (PARTITION BY event_type ORDER BY day_idx) AS rn
-      FROM daily),
+    f"""
+    WITH {_DAILY_SEQ_CTE},
     lagged AS (
       SELECT a.event_type, l.lag, a.y AS x, b.y AS z
       FROM seq a
@@ -15632,23 +15222,8 @@ def gap_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the batch HLL oracle's single-sketch half: registers from the md5
     # hash, integer harmonic denominator, alpha_64 estimate + linear
     # counting branch — the stream must drain to exactly this.
-    """
-    WITH h AS (
-      SELECT DISTINCT event_type,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS hv
-      FROM events),
-    b AS (
-      SELECT event_type, (hv % 64)::BIGINT AS bucket,
-             CASE WHEN hv // 64 = 0 THEN 27
-                  ELSE 27 - length(bin((hv // 64)::BIGINT)) END AS rho
-      FROM h),
-    reg AS (SELECT event_type, bucket, max(rho)::BIGINT AS r FROM b GROUP BY 1, 2),
-    s AS (
-      SELECT event_type,
-             (sum(1::BIGINT << (27 - r))
-              + (64 - count(*)) * 134217728)::BIGINT AS s_int,
-             (64 - count(*))::BIGINT AS v
-      FROM reg GROUP BY 1)
+    f"""
+    WITH {_HLL_CTE}
     SELECT event_type, 64 AS m,
            round(CASE WHEN 0.709 * 4096 * 134217728 / s_int <= 160 AND v > 0
                       THEN 64 * ln(64.0 / v)
@@ -16928,15 +16503,12 @@ def label_separability_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-source exclusive-shingle fraction: distinct (source, 3-gram)
     # pairs -> source-df per gram -> fraction with df 1; grams cross the
     # df join as md5 digests on both engines.
-    r"""
+    f"""
     WITH sh AS (
       SELECT source,
-             list_distinct(list_transform(
-               generate_series(1, len(regexp_split_to_array(trim(text), '\s+')) - 2),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), i, i + 2), ' ')
-             )) AS s
+             list_distinct({_trigrams(False)}) AS s
       FROM documents
-      WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+      WHERE len({_TOKENS}) >= 3),
     g AS (SELECT DISTINCT source, md5(gram) AS h
           FROM (SELECT source, unnest(s) AS gram FROM sh)),
     sdf AS (SELECT h, count(*)::BIGINT AS ns FROM g GROUP BY h)
@@ -17127,16 +16699,13 @@ def transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ln-ln OLS over the 10 cumulative (tokens, vocab) growth points:
     # ln terms truncate to DECIMAL(18,9), moments cast to double
     # individually before one pinned arithmetic chain; K = exp(intercept).
-    r"""
+    f"""
     WITH mx AS (SELECT max(doc_id) AS m FROM documents),
     sh AS (
       SELECT doc_id,
-             list_transform(
-               generate_series(1, len(regexp_split_to_array(trim(text), '\s+')) - 2),
-               i -> array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), i, i + 2), ' ')
-             ) AS s
+             {_trigrams(False)} AS s
       FROM documents
-      WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 3),
+      WHERE len({_TOKENS}) >= 3),
     w AS (SELECT doc_id, unnest(s) AS word FROM sh),
     tok AS (
       SELECT CAST(doc_id * 10 // (m + 1) AS INT) AS bucket, count(*)::BIGINT AS tk
@@ -17458,22 +17027,8 @@ def cohens_d_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-edge endpoint degrees from one aggregate, the three edge sums
     # (jk, j+k, j^2+k^2) exact integers, one double chain (the standard
     # symmetric undirected form).
-    r"""
-    WITH h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    prs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
+    f"""
+    WITH {_dup_pairs_cte(32, "prs")},
     deg AS (
       SELECT v, count(*)::BIGINT AS d FROM (
         SELECT id_a AS v FROM prs UNION ALL SELECT id_b FROM prs) t
@@ -17761,15 +17316,8 @@ def spearman_length_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # autocorrelations; autocovariance terms (y_t - mu)(y_{t+k} - mu)
     # truncate to DECIMAL(24,6) pre-sum, r_k = S_k/S_0 as one double
     # division, the three DL levels unrolled identically on both engines.
-    """
-    WITH daily AS (
-      SELECT event_type, epoch_ns(ts) // 86400000000000 AS day_idx,
-             count(*)::BIGINT AS y
-      FROM events GROUP BY 1, 2),
-    seq AS (
-      SELECT event_type, y,
-             row_number() OVER (PARTITION BY event_type ORDER BY day_idx) AS rn
-      FROM daily),
+    f"""
+    WITH {_DAILY_SEQ_CTE},
     mu AS (
       SELECT event_type, CAST(sum(y) AS DOUBLE) / count(*) AS mu
       FROM daily GROUP BY 1),
@@ -18543,7 +18091,7 @@ def sprt_conversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # denser than the banded h<=3 twin; the full corpus would make this
     # certification row the slowest bench scenario without adding skew
     # coverage) + 20% re-uploads + doc 0 duplicated 200x
-    r"""
+    f"""
     WITH docs2 AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
       UNION ALL
@@ -18552,36 +18100,24 @@ def sprt_conversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1000000 + g.i, text
       FROM documents, UNNEST(generate_series(1, 200)) AS g(i)
       WHERE doc_id = 0),
-    h AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT)) AS hs
-      FROM docs2),
-    fp AS (
-      SELECT doc_id,
-        list_sum(list_transform(generate_series(0, 31),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
+    {_simhash_cte(rel="docs2", source=False)},
     pr AS (
       SELECT bit_count(xor(a.sh, b.sh))::INT AS hamming
-      FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8)
+      {_hamming_join(8)})
     SELECT hamming, count(*)::BIGINT AS n_pairs FROM pr GROUP BY hamming
     """,
 )
 def blocked_dup_under_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew certification for the Manku-blocked hamming<=8 generator —
-    the near_dup_under_duplication posture applied to THIS round's
+    the near_dup_under_duplication posture applied to the blocked
     candidate path: the corpus is stressed with 20% re-uploads plus one
     document duplicated 200x (the degenerate fingerprint), and
     simhash_blocked_pairs must emit EXACTLY the unblocked all-pairs
     popcount's pair multiset (lossless block-union keys; the 200-copy
     group collapses to ONE distinct fingerprint before the key join and
     its ~200^2/2 member pairs return arithmetically through the
-    expansion legs). Bench-timed every round, so the sub-quadratic
-    behavior under constructed skew is a per-round number, not a one-off
-    test. Exercises the ungrouped (corpus-wide) path of the generator
+    expansion legs). Bench-timed, so the sub-quadratic behavior under
+    constructed skew is a measured number, not a one-off test. Exercises the ungrouped (corpus-wide) path of the generator
     over a deterministic fifth of the corpus — ungrouped h<=8 semantics
     are ~20x denser than the banded twin's h<=3, and the stress
     construction, not corpus bulk, is what this row certifies."""
@@ -18609,37 +18145,9 @@ def blocked_dup_under_duplication(spark: SparkSession, sf_dir: str) -> DataFrame
     # the wide-fingerprint pair CTE closed into components by the same
     # transitive-closure recursion the image/video cluster oracles use;
     # canonical keeper = min doc_id, cluster_size for the drop policy.
-    r"""
-    WITH RECURSIVE h AS (
-      SELECT doc_id, source,
-             list_transform(regexp_split_to_array(trim(text), '\s+'),
-                            w -> CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)) AS hs
-      FROM documents),
-    fp AS (
-      SELECT doc_id, source,
-        list_sum(list_transform(generate_series(0, 59),
-          b -> CASE WHEN len(list_filter(hs, x -> (x & (1::BIGINT << b)) <> 0)) * 2 > len(hs)
-                    THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS sh
-      FROM h),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM fp a JOIN fp b ON a.source = b.source AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sh, b.sh)) <= 8),
-    e2 AS (SELECT id_a AS s, id_b AS d FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT s AS v FROM e2),
-    reach(v, u) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.v, e.d FROM reach r JOIN e2 e ON r.u = e.s),
-    comp AS (SELECT v AS doc_id, min(u)::BIGINT AS canonical_id
-             FROM reach GROUP BY v)
-    SELECT c.doc_id, c.canonical_id, s.cluster_size
-    FROM comp c JOIN (
-      SELECT canonical_id, count(*)::BIGINT AS cluster_size
-      FROM comp GROUP BY canonical_id) s
-    ON c.canonical_id = s.canonical_id
-    """,
+    f"""
+    WITH RECURSIVE {_dup_pairs_cte(60, "pairs")},
+    {_CLUSTERS_SQL}""",
 )
 def wide_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CORPUS-SCALE dedup pipeline end to end: 60-bit fingerprints
@@ -18647,7 +18155,7 @@ def wide_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB run wants), Manku-blocked star-contracted edges (~12-bit
     union keys, linear intra-group edges), connected components, and the
     keep-one-drop-rest readout (canonical keeper = min doc_id + cluster
-    size). This row composes the round's three scale pieces —
+    size). This row composes three scale pieces —
     simhash_wide_blocked_pairs' fingerprint width, emit="star"'s linear
     edges, and the iterative components fixpoint — into the one pipeline
     a production near-dedup actually ships; the oracle closes the wide

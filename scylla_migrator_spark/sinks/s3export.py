@@ -22,6 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark.sinks.parquet import swap_generation
 from scylla_migrator_spark.sources.s3export import MANIFEST_FILES, MANIFEST_SUMMARY
 
 
@@ -59,7 +60,5 @@ def write_s3_export(df: DataFrame, item_json_col: str, root: str) -> dict:
     except Exception:
         shutil.rmtree(tmp, ignore_errors=True)  # cleanup on failure (K6)
         raise
-    if os.path.exists(root):
-        shutil.rmtree(root)
-    os.rename(tmp, root)
+    swap_generation(tmp, root)
     return summary

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scylla_migrator_spark.analytics.sampling import shard_layout
+from scylla_migrator_spark.sinks.parquet import swap_generation
 
 MANIFEST_SHARDS = "manifest-shards.json"
 MANIFEST_SUMMARY = "manifest-summary.json"
@@ -112,9 +113,7 @@ def write_training_shards(
     except Exception:
         shutil.rmtree(tmp, ignore_errors=True)  # cleanup on failure (K6 posture)
         raise
-    if os.path.exists(root):
-        shutil.rmtree(root)
-    os.rename(tmp, root)
+    swap_generation(tmp, root)
     return summary
 
 

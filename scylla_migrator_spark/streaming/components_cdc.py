@@ -92,17 +92,9 @@ KEY_BUCKET_COL = "__kb"
 _GEOMETRY_FILE = "_geometry.json"
 
 
-# run a generation's independent parquet writes (keys append / serving
-# rewrite) concurrently; module-level so an A/B (or a deployment whose
-# scheduler penalizes concurrent jobs) can flip it
-PARALLEL_COMMIT_WRITES = True
-
-
 def _run_writes(*fns) -> None:
-    if not PARALLEL_COMMIT_WRITES or len(fns) == 1:
-        for f in fns:
-            f()
-        return
+    """Run a generation's independent parquet writes (keys append /
+    serving rewrite) concurrently."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(fns)) as ex:
@@ -272,11 +264,7 @@ def _execute_manifest(serving_path: str, man: dict) -> None:
     if man.get("applied_marker"):
         _write_applied(serving_path, man["applied_marker"])
     # cleanup: displaced generations + scratch dirs, then the manifest
-    parent = os.path.dirname(serving_path) or "."
-    base = os.path.basename(serving_path)
-    for e in os.listdir(parent):
-        if e.startswith(f"{base}__old_") or e.startswith(f"{base}__gen_"):
-            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
+    _sweep_generations(serving_path)
     for scratch in man.get("scratch", []):
         shutil.rmtree(scratch, ignore_errors=True)
     os.remove(_pending_path(serving_path))
@@ -293,6 +281,12 @@ def _recover_pending(serving_path: str) -> None:
             man = json.load(f)
         _execute_manifest(serving_path, man)
         return
+    _sweep_generations(serving_path)
+
+
+def _sweep_generations(serving_path: str) -> None:
+    """Remove the displaced (`__old_`) and scratch (`__gen_`) generation
+    dirs beside ``serving_path``."""
     parent = os.path.dirname(serving_path) or "."
     base = os.path.basename(serving_path)
     if os.path.isdir(parent):

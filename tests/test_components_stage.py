@@ -782,3 +782,71 @@ def test_driver_union_key_rows_match_spark(spark):
             for j, kv in block_union_key_rows(s, bits, blocks, h)
         }
         assert spark_keys == local_keys, (bits, blocks, h)
+
+
+def _bridged_family_batches(seed=29):
+    """71 (doc_id, source, sh) rows in 3 batches. Each of 8 families is
+    two near-dup clusters 12 bits apart (separate components) and one
+    bridge doc within 6 bits of both, which arrives in batch 2 and merges
+    the two clusters' components; 15 singletons spread over the
+    batches. Doc ids are shuffled so merges relabel existing docs."""
+    import random
+
+    rnd = random.Random(seed)
+    ids = list(range(1, 72))
+    rnd.shuffle(ids)
+    first, second, third = [], [], []
+    for g in range(8):
+        src = f"s{g % 2}"
+        a = rnd.getrandbits(32)
+        b = a ^ 0xFFF
+        members = [(x ^ (1 << k), src) for x in (a, b) for k in (20, 25, 30)]
+        first += members[:2] + members[3:5]
+        third += [members[2], members[5]]
+        second.append((a ^ 0x3F, src))
+    for i in range(15):
+        [first, second, third][i % 3].append((rnd.getrandbits(32), f"s{i % 2}"))
+    batches, n = [], 0
+    for batch in (first, second, third):
+        batches.append([(ids[n + i], src, sh) for i, (sh, src) in enumerate(batch)])
+        n += len(batch)
+    return batches
+
+
+def test_distributed_upsert_matches_local_path(spark, tmp_path, monkeypatch):
+    """Batches past LOCAL_BATCH_DOCS_CAP take the distributed upsert path
+    (probe, merge, journal and swap as Spark jobs). Its served table must
+    equal the local path's and the full recompute after every batch. The
+    first two batches merge with the driver-side union-find; the last,
+    past MAX_LOCAL_MERGE_EDGES, with the distributed fixpoint over labels
+    resolved through the journal the second batch's merges wrote."""
+    batches = _bridged_family_batches()
+    assert sum(map(len, batches)) == 71
+    local, dist = str(tmp_path / "local"), str(tmp_path / "dist")
+    resolved = []
+    real_resolve = CC._resolve_labels
+
+    def spy_resolve(anchor_labels, spark_, mp):
+        resolved.append(len(mp))
+        return real_resolve(anchor_labels, spark_, mp)
+
+    def table(serving):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(serving)
+            .select("id", "source", "sh", "comp", "paired").collect()
+        )
+
+    seen = []
+    for i, rows in enumerate(batches):
+        seen += rows
+        _upsert(spark, local, rows)
+        with monkeypatch.context() as m:
+            m.setattr(CC, "LOCAL_BATCH_DOCS_CAP", -1)
+            m.setattr(CC, "_local_upsert", None)  # must not be reached
+            m.setattr(CC, "_resolve_labels", spy_resolve)
+            if i == len(batches) - 1:
+                m.setattr(CC, "MAX_LOCAL_MERGE_EDGES", 0)
+            _upsert(spark, dist, rows)
+        assert table(dist) == table(local)
+        assert _served(spark, dist) == _full_labelling(spark, seen)
+    assert len(resolved) == 1 and resolved[0] > 0
