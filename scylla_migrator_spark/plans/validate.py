@@ -3,35 +3,45 @@ tolerances, failure sampling, extra/missing detection, repair, and
 hash-refinement.
 
 Reference parity (§2.11 + §3.2):
-* prefix src_/tgt_ + left_outer join on PK — MySQLToScyllaValidator.scala:792-811 (J3)
+* prefix src_/tgt_ + outer join on PK — MySQLToScyllaValidator.scala:792-811 (J3)
 * per-row failure production — :846-919 and RowComparisonFailure.scala:83-205 (V1)
 * extra-target rows via left_anti — validation/core/ExtraRowDetector.scala:8-31 (J4)
 * missing-row repair via left_anti + write — :953-983 (J5/V5)
 * content-hash compare + targeted refinement probe — :988-1097 (V4/J6)
 * bounded failure sampling — :150-212 (A5)
 
-Plan shape at scale: ONE shuffle on the PK for the main join (AQE picks SMJ /
-shuffled-hash; a small target side is auto-broadcast). The diff itself is a
-pure column expression (codegen). Extra/missing detection reuses key-only
-projections so the anti-join shuffles only PK bytes. With hash_columns set,
-wide payload columns are collapsed into one digest before the shuffle.
+Plan shape at scale: ONE full-outer shuffle on the PK (AQE picks SMJ or
+shuffled-hash). Each side carries a presence marker, so missing rows (no
+target side), extra rows (no source side) and differing rows all come out
+of that one join; the diff itself is a pure column expression (codegen).
+``validate`` caches the failing rows once and serves the counts, the sample
+and the repair input from that cache, so each input is read once. With
+hash_columns set, wide payload columns are collapsed into one digest before
+the shuffle and only digest-mismatched keys are re-read by the refinement
+probe.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from scylla_migrator_spark.config import Validation
 from scylla_migrator_spark.operators import comparators as C
 from scylla_migrator_spark.operators.content_hash import CONTENT_HASH_COL, add_content_hash
-from scylla_migrator_spark.schema import prefix_columns, resolve_columns
+from scylla_migrator_spark.plans.migrate import build_plan
+from scylla_migrator_spark.schema import WRITETIME_SUFFIX, prefix_columns, resolve_columns
 
 SRC = "src_"
 TGT = "tgt_"
 FAILURES_COL = "__failures"
+# presence markers: true where that side of the outer join has a row (a
+# null PK value cannot stand in for an absent side)
+SRC_PRESENT = "__src_present"
+TGT_PRESENT = "__tgt_present"
 
 
 @dataclass
@@ -72,8 +82,11 @@ def joined_diff(
     v: Validation,
     set_columns: set[str] | None = None,
 ) -> tuple[DataFrame, list[str]]:
-    """The core diff frame: src_/tgt_ prefixed left_outer join with a
-    ``__failures`` array<struct<column,kind>> column."""
+    """The core diff frame: src_/tgt_ prefixed full outer join on the PK
+    with the ``SRC_PRESENT``/``TGT_PRESENT`` markers and a ``__failures``
+    array<struct<column,kind>> column: ``MissingTargetRow`` without a
+    target side, ``ExtraTargetRow`` without a source side, else the
+    column diffs."""
     pk = resolve_columns(source.columns, primary_key)
 
     if v.hash_columns:
@@ -85,12 +98,14 @@ def joined_diff(
         source.schema, SRC, TGT, pk, v, tgt_schema=target.schema, set_columns=set_columns
     )
 
-    s = prefix_columns(source, SRC)
-    t = prefix_columns(target, TGT)
+    s = prefix_columns(source, SRC).withColumn(SRC_PRESENT, F.lit(True))
+    t = prefix_columns(target, TGT).withColumn(TGT_PRESENT, F.lit(True))
     cond = [s[SRC + k] == t[TGT + k] for k in pk]
-    joined = s.join(t, on=cond, how="left_outer")
+    joined = s.join(t, on=cond, how="full_outer")
 
-    missing = t[TGT + pk[0]].isNull()
+    def whole_row(kind: str) -> Column:
+        return F.array(F.struct(F.lit("").alias("column"), F.lit(kind).alias("kind")))
+
     entries = [
         F.when(
             ~comp.equal,
@@ -99,22 +114,26 @@ def joined_diff(
         for comp in comparisons
     ]
     diffs = F.filter(F.array(*entries), lambda x: x.isNotNull()) if entries else F.array()
-    failures = F.when(
-        missing,
-        F.array(F.struct(F.lit("").alias("column"), F.lit(C.MISSING_TARGET_ROW).alias("kind"))),
-    ).otherwise(diffs)
+    failures = (
+        F.when(F.col(TGT_PRESENT).isNull(), whole_row(C.MISSING_TARGET_ROW))
+        .when(F.col(SRC_PRESENT).isNull(), whole_row(C.EXTRA_TARGET_ROW))
+        .otherwise(diffs)
+    )
     return joined.withColumn(FAILURES_COL, failures), type_mismatches
 
 
 def extra_target_rows(source: DataFrame, target: DataFrame, primary_key: list[str]) -> DataFrame:
     """Rows only in the target: key-projected left_anti (ExtraRowDetector:8-31).
-    Key-only projections keep the shuffle narrow."""
+    Key-only projections keep the shuffle narrow. Serves the registry's J4
+    row; ``validate`` takes its extra rows from the ``joined_diff`` join."""
     pk = resolve_columns(source.columns, primary_key)
     return target.select(*pk).join(source.select(*pk).distinct(), on=pk, how="left_anti")
 
 
 def missing_source_rows(source: DataFrame, target: DataFrame, primary_key: list[str]) -> DataFrame:
-    """Full source rows absent from the target (repair input, J5)."""
+    """Full source rows absent from the target (repair input, J5). Serves
+    the registry's J5 row; ``validate`` takes its repair input from the
+    ``joined_diff`` join."""
     pk = resolve_columns(source.columns, primary_key)
     return source.join(target.select(*pk).distinct(), on=pk, how="left_anti")
 
@@ -162,14 +181,10 @@ def apply_repair_writetime(
 
     A column expression rewrite (single projection, stays in codegen); the
     non-writetime columns pass through untouched."""
-    from scylla_migrator_spark.schema import WRITETIME_SUFFIX
-
     if strategy == "source":
         return df
     if strategy == "coordinator":
-        import time as _time
-
-        stamp = now_us if now_us is not None else int(_time.time() * 1_000_000)
+        stamp = now_us if now_us is not None else int(time.time() * 1_000_000)
     elif strategy == "config":
         if value_us is None:
             raise ValueError("repair_writetime_strategy 'config' requires a value")
@@ -204,13 +219,13 @@ def validate(
     repair_writer=None,
 ) -> ValidationReport:
     """Run the full validation; optionally repair missing rows via
-    ``repair_writer(missing_df)`` when ``v.copy_missing_rows``."""
+    ``repair_writer(missing_df)`` when ``v.copy_missing_rows``. The repair
+    frame has the source's columns in the source's order."""
     v = v or Validation()
     schema_failures = schema_level_failures(source, target)
 
     diff, type_mismatches = joined_diff(source, target, primary_key, v, set_columns)
-    failing = diff.filter(F.size(FAILURES_COL) > 0)
-    failing = failing.persist()
+    failing = diff.filter(F.size(FAILURES_COL) > 0).persist()
     try:
         failures = failing.select(F.explode(FAILURES_COL).alias("f"))
         if not v.hash_columns:
@@ -232,27 +247,31 @@ def validate(
                 refined.filter(F.col("f.column").isin(*hashed))
             ).items():
                 counts[kind] = counts.get(kind, 0) + n
-        sample = failing.limit(v.failures_to_fetch).collect()
-    finally:
-        failing.unpersist()
+        sample = (
+            failing.filter(F.col(SRC_PRESENT).isNotNull())
+            .drop(SRC_PRESENT, TGT_PRESENT)
+            .limit(v.failures_to_fetch)
+            .collect()
+        )
 
-    extra = extra_target_rows(source, target, primary_key).count()
-    if extra:
-        counts[C.EXTRA_TARGET_ROW] = extra
-
-    repaired = 0
-    if v.copy_missing_rows and repair_writer is not None:
-        missing = missing_source_rows(source, target, primary_key).persist()
-        try:
-            repaired = missing.count()
+        repaired = 0
+        if v.copy_missing_rows and repair_writer is not None:
+            repaired = counts.get(C.MISSING_TARGET_ROW, 0)
             if repaired:
+                # the cached join keeps every shuffle partition; coalesce so
+                # the append writes no more files than there are cores
+                missing = (
+                    failing.filter(F.col(TGT_PRESENT).isNull())
+                    .select(*[F.col(SRC + c).alias(c) for c in source.columns])
+                    .coalesce(failing.sparkSession.sparkContext.defaultParallelism)
+                )
                 repair_writer(
                     apply_repair_writetime(
                         missing, v.repair_writetime_strategy, v.repair_writetime_value
                     )
                 )
-        finally:
-            missing.unpersist()
+    finally:
+        failing.unpersist()
 
     return ValidationReport(
         counts_by_kind=counts,
@@ -267,8 +286,6 @@ def run_validation(spark: SparkSession, config) -> ValidationReport:
     """Config-driven validation (Validator.main analog, Validator.scala:40-105):
     load source and target per the config, validate with the configured
     tolerances, optionally repair missing rows into the target."""
-    from scylla_migrator_spark.plans.migrate import build_plan
-
     # the EXACT frame migrate writes (shared _apply_transforms pipeline):
     # using read_source + renames here would falsely flag rows migrate
     # deliberately drops (null-PK filtering) as MISSING_TARGET_ROW and

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from scylla_migrator_spark.config import Validation
@@ -46,6 +47,11 @@ def test_validation_failure_taxonomy(spark):
     assert report.counts_by_kind[C.EXTRA_TARGET_ROW] == 1  # id=5
     assert C.DIFFERING_WRITETIMES not in report.counts_by_kind
     assert report.exit_code == 1
+    # the sample holds the failing rows that have a source side
+    assert sorted(r["src_id"] for r in report.sample_failures) == [2, 3, 4]
+    assert report.sample_failures[0].__fields__ == [
+        *("src_" + c for c in src.columns), *("tgt_" + c for c in tgt.columns), FAILURES_COL
+    ]
 
 
 def test_tolerances_respected(spark):
@@ -123,8 +129,13 @@ def test_repair_missing_rows(spark):
     assert [r["id"] for r in missing.collect()] == [4]
     captured = []
     v = Validation(copy_missing_rows=True)
-    report = validate(src, tgt, ["id"], v, repair_writer=lambda df: captured.append(df.count()))
-    assert report.repaired_rows == 1 and captured == [1]
+    report = validate(src, tgt, ["id"], v, repair_writer=captured.append)
+    assert report.repaired_rows == 1 and len(captured) == 1
+    # run_validation appends this frame to the target by position: exactly
+    # the source's columns, in the source's order, no prefix or marker
+    [repair] = captured
+    assert repair.columns == src.columns
+    assert repair.collect() == src.filter(F.col("id") == 4).collect()
 
 
 def test_schema_mismatch_reported_not_crash(spark):
@@ -200,3 +211,114 @@ def test_hash_validation_counts_match_direct_compare(spark):
     direct = validate(src, tgt, ["id"], Validation())
     hashed = validate(src, tgt, ["id"], Validation(hash_columns=["s", "d"]))
     assert hashed.counts_by_kind == direct.counts_by_kind
+
+
+def _semantics_case(spark, case):
+    """Source/target pairs whose keys are null or duplicated."""
+    if case == "null_target_pk":
+        src = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, s string")
+        tgt = spark.createDataFrame([(1, "a"), (2, "b"), (None, "z")], "id bigint, s string")
+        return src, tgt, ["id"]
+    if case == "null_source_pk":
+        src = spark.createDataFrame([(1, "a"), (None, "n")], "id bigint, s string")
+        tgt = spark.createDataFrame([(1, "a")], "id bigint, s string")
+        return src, tgt, ["id"]
+    if case == "composite_null_target_a":
+        schema = "a bigint, b bigint, s string"
+        src = spark.createDataFrame([(1, 1, "x"), (2, 2, "y")], schema)
+        tgt = spark.createDataFrame([(1, 1, "x"), (None, 2, "y")], schema)
+        return src, tgt, ["a", "b"]
+    assert case == "duplicate_target_key"
+    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id bigint, s string")
+    tgt = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, "B"), (4, "d"), (4, "d")], "id bigint, s string"
+    )
+    return src, tgt, ["id"]
+
+
+@pytest.mark.parametrize(
+    "case, counts, repaired",
+    [
+        # a target row whose PK is null matches nothing: it is extra, and
+        # no source row is reported missing because of it
+        ("null_target_pk", {C.EXTRA_TARGET_ROW: 1}, 0),
+        # a source row whose PK is null is missing and gets repaired
+        ("null_source_pk", {C.MISSING_TARGET_ROW: 1}, 1),
+        # (null, 2) on the target does not match (2, 2) on the source
+        ("composite_null_target_a", {C.MISSING_TARGET_ROW: 1, C.EXTRA_TARGET_ROW: 1}, 1),
+        # key 2 pairs with both target copies (one differs); key 4 is
+        # extra twice; key 3 is missing
+        (
+            "duplicate_target_key",
+            {C.DIFFERING_FIELD_VALUES: 1, C.EXTRA_TARGET_ROW: 2, C.MISSING_TARGET_ROW: 1},
+            1,
+        ),
+    ],
+)
+def test_null_and_duplicate_key_semantics(spark, case, counts, repaired):
+    src, tgt, pk = _semantics_case(spark, case)
+    written = []
+    report = validate(
+        src, tgt, pk, Validation(copy_missing_rows=True),
+        repair_writer=lambda df: written.append(df.collect()),
+    )
+    assert report.counts_by_kind == counts
+    assert report.repaired_rows == repaired
+    assert sum(len(rows) for rows in written) == repaired
+
+
+def test_validation_reads_each_input_once(spark, tmp_path):
+    """run_validation with copyMissingRows reads each input once: the
+    missing, extra and differing rows come from one join, and the repair
+    appends at most defaultParallelism files."""
+    import glob
+
+    from scylla_migrator_spark.config import MigratorConfig
+    from scylla_migrator_spark.plans.validate import run_validation
+
+    n = 3000
+    src = spark.range(n).select(
+        F.col("id"), (F.col("id") % 7).cast("string").alias("s"), (F.col("id") * 0.5).alias("d")
+    )
+    tgt = (
+        src.filter(F.col("id") % 50 != 0)  # 60 missing
+        .withColumn("d", F.when(F.col("id") % 33 == 0, F.col("d") + 1).otherwise(F.col("d")))
+        .unionByName(spark.range(n, n + 20).select(  # 20 extra
+            F.col("id"), F.lit("x").alias("s"), F.lit(0.0).alias("d")))
+    )
+    src_path, tgt_path = str(tmp_path / "src"), str(tmp_path / "tgt")
+    src.repartition(3).write.parquet(src_path)
+    tgt.repartition(3).write.parquet(tgt_path)
+    n_src = spark.read.parquet(src_path).count()
+    n_tgt = spark.read.parquet(tgt_path).count()
+    files_before = len(glob.glob(f"{tgt_path}/*.parquet"))
+    cfg = MigratorConfig.from_dict({
+        "source": {"type": "parquet", "path": src_path},
+        "target": {"type": "parquet", "path": tgt_path},
+        "primaryKey": ["id"],
+        "validation": {"copyMissingRows": True},
+    })
+
+    sc = spark.sparkContext
+    group = "validation-one-pass"
+    sc.setJobGroup(group, "run_validation")
+    try:
+        report = run_validation(spark, cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    assert report.counts_by_kind == {
+        C.MISSING_TARGET_ROW: 60, C.EXTRA_TARGET_ROW: 20, C.DIFFERING_FIELD_VALUES: 89,
+    }
+    assert report.repaired_rows == 60
+    store = sc._jsc.sc().statusStore()
+    stages = {
+        sid
+        for jid in sc.statusTracker().getJobIdsForGroup(group)
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    }
+    read = sum(store.lastStageAttempt(sid).inputRecords() for sid in stages)
+    assert read <= 1.05 * (n_src + n_tgt), (read, n_src, n_tgt)
+    added = len(glob.glob(f"{tgt_path}/*.parquet")) - files_before
+    assert 1 <= added <= sc.defaultParallelism
