@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
 
 from scylla_migrator_spark.config import MigratorConfig
 from scylla_migrator_spark.operators.filters import apply_where, auto_null_pk_filtering, drop_null_pk_rows
@@ -133,6 +134,37 @@ def _apply_transforms(df: DataFrame, config: MigratorConfig) -> DataFrame:
     return df
 
 
+def _read_written(
+    reader: DataFrameReader,
+    path: str,
+    schemas: list[StructType],
+    *,
+    replaced: bool,
+    partition_by: list[str] | None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """The lazy re-read of the parquet target ``path`` that the caller has
+    just written, ``schemas`` being the schema of each of its writes.
+
+    A schema-less parquet read runs a one-task Spark job to infer the schema
+    from a footer. When the read sees exactly what this call wrote -- the
+    target was ``replaced`` (nothing of an earlier write is left in it), the
+    layout is flat (with ``partition_by`` the partition columns come from
+    the directory names), the schema is not merged and every write had the
+    one schema -- that schema is handed to the reader instead and no job
+    runs. Otherwise (append or ``ignore`` mode, a resumed run, a
+    hive-partitioned or evolved layout) the schema is inferred."""
+    if (
+        replaced
+        and schemas
+        and all(s == schemas[0] for s in schemas)
+        and not partition_by
+        and not merge_schema
+    ):
+        reader = reader.schema(schemas[0])
+    return reader.parquet(path)
+
+
 def build_plan(spark: SparkSession, config: MigratorConfig) -> DataFrame:
     """The lazy migration DataFrame (no action executed)."""
     return _apply_transforms(read_source(spark, config), config)
@@ -178,6 +210,7 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
             partition_by=tgt.partition_by,
             repartition_columns=tgt.repartition_columns,
         )
+        written = out.schema
     elif tgt.type == "scylla-fixture":
         if tgt.exploded_timestamp_write and S.has_timestamp_companions(df.columns):
             # per-row TTL/WRITETIME path (K2): explode by (ttl, writetime)
@@ -188,7 +221,7 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
             )
 
             df = explode_by_timestamp_groups(df, config.primary_key)
-        write_scylla_fixture(
+        written = write_scylla_fixture(
             df,
             tgt.path,
             primary_key=config.primary_key,
@@ -220,7 +253,13 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
         return read_s3_export(spark, tgt.path)
     else:
         raise ValueError(f"unsupported target type {tgt.type!r}")
-    return spark.read.parquet(tgt.path)
+    return _read_written(
+        spark.read,
+        tgt.path,
+        [written],
+        replaced=tgt.mode == "overwrite",
+        partition_by=tgt.partition_by,
+    )
 
 
 def migrate_resumable(
@@ -300,6 +339,10 @@ def migrate_resumable(
         import shutil
 
         shutil.rmtree(tgt.path)
+    # a fresh start (no chunk of an earlier run committed) into an absent or
+    # just wiped target: every chunk the final read sees is one this run writes
+    replaced = fresh_start and not os.path.exists(tgt.path)
+    written: list[StructType] = []
 
     with PeriodicDumper(mgr, interval, install_signal_handler=True) as dumper:
         for i in range(0, len(todo), files_per_chunk):
@@ -319,6 +362,7 @@ def migrate_resumable(
             df = _normalize_file_frame(reader.parquet(*chunk), src)
             df = _apply_transforms(apply_where(df, src.where), config)
             out = S.add_meta_prefix(df) if S.has_timestamp_companions(df.columns) else df
+            written.append(out.schema)
             if atomic_chunks:
                 staging = os.path.join(tgt.path, f".staging-{chunk_id}")
                 _wp(
@@ -352,5 +396,12 @@ def migrate_resumable(
         # the union schema would come from whichever dir lists first
         final = final.option("mergeSchema", True)
     if atomic_chunks:
-        return final.option("recursiveFileLookup", "true").parquet(tgt.path)
-    return final.parquet(tgt.path)
+        final = final.option("recursiveFileLookup", "true")
+    return _read_written(
+        final,
+        tgt.path,
+        written,
+        replaced=replaced,
+        partition_by=tgt.partition_by,
+        merge_schema=src.merge_schema,
+    )

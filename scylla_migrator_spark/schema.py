@@ -106,14 +106,18 @@ def _widen_value(col: Column, dt: T.DataType) -> Column:
 def widen_timestamps(df: DataFrame) -> DataFrame:
     """Apply the widening recursively to every column that (transitively)
     contains a timestamp; pure column expressions, stays in codegen
-    (reference value conversion Cassandra.scala:210-229)."""
-    out = []
-    for f in df.schema.fields:
-        if widen_timestamp_type(f.dataType) != f.dataType:
-            out.append(_widen_value(F.col(f.name), f.dataType).alias(f.name))
-        else:
-            out.append(F.col(f.name))
-    return df.select(*out)
+    (reference value conversion Cassandra.scala:210-229). A frame with no
+    timestamp anywhere is returned as it is: no projection is added."""
+    fields = df.schema.fields
+    widen = [widen_timestamp_type(f.dataType) != f.dataType for f in fields]
+    if not any(widen):
+        return df
+    return df.select(
+        *[
+            _widen_value(F.col(f.name), f.dataType).alias(f.name) if w else F.col(f.name)
+            for f, w in zip(fields, widen)
+        ]
+    )
 
 
 # --------------------------------------------------------------------------

@@ -8,6 +8,17 @@ setting is the one we would ship on a 1000-executor cluster:
 * shuffle partitions sized to cores locally; on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant as long as it is
   *high enough* (we set ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``)
+* PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). While it is on,
+  every ``Column`` method and ``functions.col`` call looks up the active
+  session, reads a conf, sets and clears a JVM origin over py4j and walks the
+  Python stack, only so that a runtime error can name the Python line that
+  built the failing expression: about 35 py4j round trips for
+  ``F.col("a").cast("int").alias("b")`` instead of 5, paid on every plan
+  construction and so once per migrate chunk. With it off, runtime errors
+  keep their error class, SQLSTATE and SQL context and lose only that
+  Python call site. It is a static conf: it takes effect only in the session
+  this factory creates.
 """
 
 from __future__ import annotations
@@ -72,6 +83,8 @@ def get_spark(app_name: str = "scylla-migrator-spark", cpus: int | None = None) 
         # resilience posture mirrored from the reference (Migrator.scala:22-23)
         .config("spark.task.maxFailures", "4")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        # no Python call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

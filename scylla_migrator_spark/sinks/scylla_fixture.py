@@ -55,7 +55,9 @@ def write_scylla_fixture(
     ttl: int | None = None,
     writetime_us: int | None = None,
     strip_zeros: bool = False,
-) -> None:
+) -> T.StructType:
+    """Write ``df`` to the fixture table at ``path``; returns the schema of
+    the frame written, so that a re-read need not infer it."""
     if primary_key:
         df = drop_null_pk_rows(df, primary_key)
     if strip_zeros:
@@ -65,3 +67,4 @@ def write_scylla_fixture(
     if writetime_us is not None:
         df = df.withColumn(ROW_WRITETIME, F.lit(writetime_us).cast("long"))
     df.write.mode(mode).parquet(path)
+    return df.schema

@@ -268,3 +268,110 @@ def test_compact_parquet_preserves_partitioned_layout(spark, tmp_path):
     upsert_parquet(g, path, ["k"], n_buckets=7)  # pinned 4 wins
     rows = {r["k"]: r["total"] for r in spark.read.parquet(path).collect() if r["k"] == 3}
     assert rows[3] == 999
+
+
+def _stamped_source(spark, path: str) -> None:
+    """A ``cql-fixture`` table: per-cell TTL/WRITETIME companions, a
+    timestamp to widen and a decimal with trailing zeros, in two files."""
+    import datetime as dt
+    from decimal import Decimal
+
+    spark.createDataFrame(
+        [
+            ("p1", 1, "av", 100, 1_000, Decimal("1.500"), 100, 1_000, dt.datetime(2024, 1, 2), 100, 1_000),
+            ("p2", 1, "av2", 200, 2_000, Decimal("2.000"), 100, 1_000, None, None, None),
+            ("p3", 2, "av3", None, None, Decimal("3.250"), 300, 3_000, dt.datetime(2023, 5, 6), 300, 3_000),
+            ("p4", 3, None, None, None, None, None, None, dt.datetime(2022, 7, 8), None, 4_000),
+        ],
+        "pk string, ck int, a string, a_ttl int, a_writetime long, "
+        "d decimal(10,3), d_ttl int, d_writetime long, ts timestamp, ts_ttl int, ts_writetime long",
+    ).repartition(2).write.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "preserve, target",
+    [
+        (False, {"type": "parquet"}),
+        (True, {"type": "parquet"}),  # companions written as __meta_*
+        (
+            True,
+            {
+                "type": "scylla-fixture",
+                "explodedTimestampWrite": True,
+                "ttl": 3600,
+                "writetime_us": 1_700_000_000_000_000,
+                "stripTrailingZerosForDecimals": True,
+            },
+        ),
+    ],
+    ids=["parquet", "parquet_meta_companions", "scylla_fixture_exploded"],
+)
+def test_overwrite_reread_matches_fresh_read(spark, tmp_path, assert_as_fresh_read, preserve, target):
+    """The frame migrate() returns after an overwrite has the schema and
+    rows of a fresh read of the target."""
+    src, out_path = str(tmp_path / "src"), str(tmp_path / "out")
+    _stamped_source(spark, src)
+    cfg = MigratorConfig.from_dict(
+        {
+            "source": {"type": "cql-fixture", "path": src, "preserveTimestamps": preserve},
+            "target": {**target, "path": out_path},
+            "primaryKey": ["pk", "ck"],
+        }
+    )
+    out = migrate(spark, cfg)
+    if preserve and target["type"] == "parquet":
+        assert "__meta_a_ttl" in out.columns
+    assert_as_fresh_read(out, out_path)
+
+
+@pytest.mark.parametrize("layout", ["append", "partition_by"])
+def test_reread_infers_when_target_is_not_only_this_write(
+    spark, tmp_path, write_jobs, assert_as_fresh_read, layout
+):
+    """An append re-read sees the earlier rows too, and a partitionBy layout
+    takes its partition column from the directory names: both re-reads
+    infer the schema (a job runs after the write) and match a fresh read."""
+    src, out_path = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.range(0, 40).selectExpr("id", "id % 3 AS grp", "cast(id AS string) AS v").write.parquet(src)
+    target = {"type": "parquet", "path": out_path}
+    if layout == "append":
+        spark.range(100, 110).selectExpr("id", "id % 3 AS grp", "'old' AS v").write.parquet(out_path)
+        target["mode"] = "append"
+    else:
+        target["partitionBy"] = ["grp"]
+    cfg = MigratorConfig.from_dict(
+        {"source": {"type": "parquet", "path": src}, "target": target, "primaryKey": ["id"]}
+    )
+    with write_jobs:
+        out = migrate(spark, cfg)
+        assert write_jobs.after_last_write() >= 1
+    assert out.count() == (50 if layout == "append" else 40)
+    assert_as_fresh_read(out, out_path)
+
+
+def test_reread_runs_no_job_after_write(spark, tmp_path, write_jobs):
+    """migrate() and a fresh migrate_resumable re-read what they just wrote
+    with its written schema: no footer job runs between the last write and
+    the return."""
+    from scylla_migrator_spark.plans.migrate import migrate_resumable
+
+    src = str(tmp_path / "src")
+    spark.range(0, 200).selectExpr("id", "id * 2 AS v").repartition(4).write.parquet(src)
+    for resumable in (False, True):
+        out_path = str(tmp_path / f"out_{resumable}")
+        cfg = MigratorConfig.from_dict(
+            {
+                "source": {"type": "parquet", "path": src},
+                "target": {"type": "parquet", "path": out_path},
+                "primaryKey": ["id"],
+                "savepoints": {"path": str(tmp_path / f"sp_{resumable}"), "intervalSeconds": 3600},
+            }
+        )
+        with write_jobs:
+            out = (
+                migrate_resumable(spark, cfg, files_per_chunk=2)
+                if resumable
+                else migrate(spark, cfg)
+            )
+            assert write_jobs.after_last_write() == 0, f"resumable={resumable}"
+        assert out.count() == 200

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from scylla_migrator_spark.savepoints import SavepointsManager, _decode_name, diff_token_ranges
 
 
@@ -177,3 +179,72 @@ def test_migrate_resumable_chunk_committed_but_savepoint_lagging(spark, sf_dir, 
     out = migrate_resumable(spark, cfg, files_per_chunk=2)
     assert out.count() == n_src
     assert out.select("o_orderkey").distinct().count() == n_src
+
+
+def _resumable_cfg(src: str, tmp_path, source: dict | None = None, target: dict | None = None):
+    from scylla_migrator_spark.config import MigratorConfig
+
+    return MigratorConfig.from_dict(
+        {
+            "source": {"type": "parquet", "path": src, **(source or {})},
+            "target": {"type": "parquet", "path": str(tmp_path / "out"), **(target or {})},
+            "primaryKey": ["id"],
+            "savepoints": {"path": str(tmp_path / "sp"), "intervalSeconds": 3600},
+        }
+    )
+
+
+@pytest.mark.parametrize("companions", [False, True], ids=["plain", "meta_companions"])
+def test_fresh_resumable_reread_matches_fresh_read(spark, tmp_path, assert_as_fresh_read, companions):
+    """A fresh chunked run returns the schema and rows of a fresh read of
+    its target, with and without __meta_ companions."""
+    from scylla_migrator_spark.plans.migrate import migrate_resumable
+
+    src = str(tmp_path / "src")
+    cols = ["id", "id * 2 AS v"]
+    if companions:
+        cols += ["cast(id AS int) AS v_ttl", "id * 1000 AS v_writetime"]
+    spark.range(0, 120).selectExpr(*cols).repartition(4).write.parquet(src)
+    cfg = _resumable_cfg(src, tmp_path, source={"type": "cql-fixture", "preserveTimestamps": True})
+    out = migrate_resumable(spark, cfg, files_per_chunk=2)
+    assert ("__meta_v_ttl" in out.columns) == companions
+    assert out.count() == 120
+    # chunks commit as subdirectories: a fresh read looks through them
+    assert_as_fresh_read(out, cfg.target.path, recursiveFileLookup="true")
+
+
+@pytest.mark.parametrize("case", ["resumed", "merge_schema", "partition_by"])
+def test_resumable_reread_infers_outside_a_fresh_flat_run(
+    spark, tmp_path, write_jobs, assert_as_fresh_read, case
+):
+    """A resumed run (chunks committed before the kill), an evolved source
+    read with mergeSchema and a partitionBy layout: the final read infers
+    the schema (a job runs after the last write) and matches a fresh read."""
+    from scylla_migrator_spark.plans.migrate import migrate_resumable
+
+    src = str(tmp_path / "src")
+    base = spark.range(0, 80).selectExpr("id", "id % 3 AS grp")
+    source, target, options = {}, {}, {"recursiveFileLookup": "true"}
+    if case == "merge_schema":
+        # files written before column `extra` existed, then files with it
+        base.filter("id < 40").repartition(2).write.parquet(src)
+        base.filter("id >= 40").selectExpr("*", "id * 10 AS extra").repartition(2).write.mode(
+            "append"
+        ).parquet(src)
+        source = {"mergeSchema": True}
+        options["mergeSchema"] = "true"
+    else:
+        base.repartition(4).write.parquet(src)
+    if case == "partition_by":
+        # chunks append in place under the partition directories
+        target, options = {"partitionBy": ["grp"]}, {}
+    cfg = _resumable_cfg(src, tmp_path, source=source, target=target)
+    if case == "resumed":
+        migrate_resumable(spark, cfg, files_per_chunk=2, stop_after_chunks=1)
+    with write_jobs:
+        out = migrate_resumable(spark, cfg, files_per_chunk=2)
+        assert write_jobs.after_last_write() >= 1
+    assert out.count() == 80
+    if case == "merge_schema":
+        assert out.filter("extra IS NULL").count() == 40
+    assert_as_fresh_read(out, cfg.target.path, **options)

@@ -30,6 +30,21 @@ def test_widen_timestamps_recursive(spark):
     assert row["mp"]["k"] == int(dt.datetime(2021, 6, 1, tzinfo=dt.timezone.utc).timestamp() * 1000)
 
 
+def test_widen_timestamps_returns_input_when_nothing_widens(spark):
+    plain = spark.createDataFrame([(1, "a", [2])], "id bigint, v string, arr array<int>")
+    assert S.widen_timestamps(plain) is plain
+    stamped = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 2)), (2, None)], "id bigint, ts timestamp"
+    )
+    out = S.widen_timestamps(stamped)
+    assert out is not stamped
+    assert out.dtypes == [("id", "bigint"), ("ts", "bigint")]
+    assert [r["ts"] for r in out.orderBy("id").collect()] == [
+        int(dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc).timestamp() * 1000),
+        None,
+    ]
+
+
 def test_case_insensitive_resolution():
     cols = ["Foo", "BAR", "baz"]
     assert S.resolve_column(cols, "foo") == "Foo"
