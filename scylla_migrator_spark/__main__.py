@@ -12,7 +12,10 @@ is non-empty (Validator.scala:67-104); expect exits 1 when any declared
 expectation fails (the JSON report is printed either way). The rendered (secret-redacted) config
 is logged before execution (MigratorConfig.scala:134-153 posture).
 ``compact`` is the maintenance entry point for accreted small files
-(sinks/parquet.py::compact_parquet — atomic generation swap).
+(sinks/parquet.py::compact_parquet). ``migrate`` with savepoints, and then
+``validate``'s repair and ``compact``, commit the target through
+``pathio.commit``: a crash leaves the old or the new generation readable;
+one writer per table at a time.
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ a single scan+project+filter+write stage with no shuffle.
 from __future__ import annotations
 
 import os
+import posixpath
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
@@ -17,6 +18,7 @@ from pyspark.sql.types import StructType
 from scylla_migrator_spark.config import MigratorConfig
 from scylla_migrator_spark.operators.filters import apply_where, auto_null_pk_filtering, drop_null_pk_rows
 from scylla_migrator_spark.operators.renames import apply_renames
+from scylla_migrator_spark.pathio import commit, for_path, generation, live_names, live_paths
 from scylla_migrator_spark.sources.parquet import read_parquet
 from scylla_migrator_spark.sinks.parquet import write_parquet
 from scylla_migrator_spark.sinks.scylla_fixture import write_scylla_fixture
@@ -69,8 +71,6 @@ def read_source(spark: SparkSession, config: MigratorConfig) -> DataFrame:
         # the TrimHorizon analog). Schema comes from a batch probe of the
         # same path; a single-file path is staged into a directory because
         # the file streaming source lists directories.
-        import os
-
         import hashlib
 
         path = src.path
@@ -136,24 +136,20 @@ def _apply_transforms(df: DataFrame, config: MigratorConfig) -> DataFrame:
 
 def _read_written(
     reader: DataFrameReader,
-    path: str,
+    paths: list[str],
     schemas: list[StructType],
     *,
     replaced: bool,
     partition_by: list[str] | None,
     merge_schema: bool = False,
 ) -> DataFrame:
-    """The lazy re-read of the parquet target ``path`` that the caller has
-    just written, ``schemas`` being the schema of each of its writes.
-
-    A schema-less parquet read runs a one-task Spark job to infer the schema
-    from a footer. When the read sees exactly what this call wrote -- the
-    target was ``replaced`` (nothing of an earlier write is left in it), the
-    layout is flat (with ``partition_by`` the partition columns come from
-    the directory names), the schema is not merged and every write had the
-    one schema -- that schema is handed to the reader instead and no job
-    runs. Otherwise (append or ``ignore`` mode, a resumed run, a
-    hive-partitioned or evolved layout) the schema is inferred."""
+    """The lazy re-read of the parquet target ``paths`` the caller just
+    wrote, ``schemas`` being the schema of each of its writes. When the read
+    sees exactly that -- the target was ``replaced``, the layout is flat, the
+    schema is not merged and every write had one schema -- that schema is
+    handed to the reader, so no one-task footer job runs. Otherwise (append
+    or ``ignore`` mode, a resumed run, a hive-partitioned or evolved layout)
+    the schema is inferred."""
     if (
         replaced
         and schemas
@@ -162,7 +158,7 @@ def _read_written(
         and not merge_schema
     ):
         reader = reader.schema(schemas[0])
-    return reader.parquet(path)
+    return reader.parquet(*paths)
 
 
 def build_plan(spark: SparkSession, config: MigratorConfig) -> DataFrame:
@@ -178,13 +174,12 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
         # streaming migration (T1/T5): drain the stream into the target with
         # the availableNow trigger; the Structured Streaming checkpoint IS
         # the savepoint (restart resumes from the last committed batch)
-        import shutil
         import tempfile
 
         if tgt.type != "parquet":
             raise ValueError("stream source currently targets parquet sinks")
-        if tgt.mode == "overwrite" and os.path.exists(tgt.path):
-            shutil.rmtree(tgt.path)
+        if tgt.mode == "overwrite":
+            for_path(tgt.path).delete(tgt.path)
         checkpoint = (
             config.savepoints.path
             if config.savepoints and config.savepoints.path
@@ -255,7 +250,7 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
         raise ValueError(f"unsupported target type {tgt.type!r}")
     return _read_written(
         spark.read,
-        tgt.path,
+        [tgt.path],
         [written],
         replaced=tgt.mode == "overwrite",
         partition_by=tgt.partition_by,
@@ -277,30 +272,26 @@ def migrate_resumable(
     transformed (renames / where / null-PK drop), and committed to the
     target, then recorded AND DUMPED. Commit protocol by layout:
 
-    * default (no partitionBy): EXACTLY-ONCE under hard kill. Each chunk is
-      fully written to a staging dir, then atomically renamed to
-      ``<target>/chunk-<sha(files)>`` — the directory's existence IS the
-      commit record. On resume, a chunk whose dir already exists (written
-      but killed before the savepoint dump) is recognized and recorded, not
-      re-run: no duplicates, no loss, regardless of where the kill landed.
-      (Chunk grouping is deterministic — sorted file list — so the resumed
-      run reproduces the crashed run's chunk boundaries.)
-    * hive-partitioned targets (partitionBy): chunk subdirs would break the
-      partition-directory layout, so chunks append in place; the savepoint
-      is dumped immediately after each append, leaving only a millisecond
-      window where a kill re-appends one chunk (at-least-once).
+    * default (no partitionBy): EXACTLY-ONCE under hard kill, on any
+      ``pathio`` scheme, one run per target at a time. Each chunk is written
+      to ``<target>/chunk-<sha(files)>``, added to the target's commit
+      record (``pathio.commit``), then dumped. On resume a chunk the record
+      names (killed before its dump) is recorded, not re-run; a ``chunk-*``
+      directory it does not name is a torn write and is overwritten. (The
+      sorted file list makes a resumed run reproduce the chunks.)
+    * hive-partitioned targets (partitionBy): chunks append in place (chunk
+      subdirs would break the partition layout), each dumped right after its
+      append: a kill in that window re-appends one chunk (at-least-once).
 
-    The per-chunk dump is a tiny atomic YAML write, negligible next to the
-    chunk's Spark job; the `PeriodicDumper` additionally serves SIGUSR2
-    on-demand dumps and the terminal dump. Restart with the same config
-    resumes from the last savepoint: completed files are pruned from the
-    work list BEFORE planning (partition pruning, not runtime filtering).
+    The `PeriodicDumper` also serves SIGUSR2 and the terminal dump. A
+    restart resumes from the last savepoint: completed files are pruned
+    BEFORE planning. Without ``mergeSchema`` the first chunk's inferred
+    source schema is pinned for the others: a run pays one footer job.
 
-    ``stop_after_chunks`` simulates an interruption for tests.
-    Unit-of-work granularity is the FILE (the reference's token range /
-    segment analogs); at 100 TB pick files_per_chunk so one chunk is a few
-    executor-minutes — small enough to bound re-work on crash, large enough
-    to amortize job-submission overhead."""
+    ``stop_after_chunks`` simulates an interruption for tests. The unit of
+    work is the FILE (the reference's token range / segment); at 100 TB pick
+    files_per_chunk so a chunk is a few executor-minutes (bounded re-work on
+    crash, amortized job submission)."""
     from scylla_migrator_spark.savepoints import PeriodicDumper, SavepointsManager
     from scylla_migrator_spark.sinks.parquet import write_parquet as _wp
     from scylla_migrator_spark.sources.parquet import list_parquet_files
@@ -315,7 +306,6 @@ def migrate_resumable(
         raise ValueError("migrate_resumable requires savepoints.path")
     interval = config.savepoints.interval_seconds if config.savepoints else 300
 
-    import glob as _glob
     import hashlib
 
     mgr = SavepointsManager.resume(sp_dir)
@@ -328,51 +318,59 @@ def migrate_resumable(
     mgr.config = {**config.rendered(), "__files_per_chunk": files_per_chunk}
     done = set(mgr.skip_files) | set(src.skip_files)
     all_files = list_parquet_files(src.path)
-    todo = [f for f in all_files if f not in done and os.path.basename(f) not in done]
+    todo = [f for f in all_files if f not in done and posixpath.basename(f) not in done]
     atomic_chunks = not tgt.partition_by
-    committed_dirs = set(_glob.glob(os.path.join(tgt.path, "chunk-*"))) if atomic_chunks else set()
+    io = for_path(tgt.path)
+    live = live_names(tgt.path) if atomic_chunks else None
     # "fresh start" must also see no committed chunks: a kill after chunk 1's
-    # atomic commit but before ANY dump leaves an empty savepoint dir — the
+    # commit but before ANY dump leaves an empty savepoint dir — the
     # committed chunk is recognized below, not deleted and re-run
-    fresh_start = not mgr.skip_files and not committed_dirs
-    if fresh_start and todo and tgt.mode == "overwrite" and os.path.exists(tgt.path):
-        import shutil
-
-        shutil.rmtree(tgt.path)
+    fresh_start = not mgr.skip_files and not live
+    if fresh_start and todo and tgt.mode == "overwrite":
+        io.delete(tgt.path)
     # a fresh start (no chunk of an earlier run committed) into an absent or
     # just wiped target: every chunk the final read sees is one this run writes
-    replaced = fresh_start and not os.path.exists(tgt.path)
+    replaced = fresh_start and not io.exists(tgt.path)
+    if atomic_chunks and todo and live is None:
+        if io.exists(tgt.path):  # a commit would sweep its data
+            raise ValueError(f"target {tgt.path} holds data but no commit record")
+        commit(tgt.path, [])  # so a torn first chunk lies under a record
+    live = list(live or [])
     written: list[StructType] = []
+    source_schema: StructType | None = None
 
     with PeriodicDumper(mgr, interval, install_signal_handler=True) as dumper:
         for i in range(0, len(todo), files_per_chunk):
             if stop_after_chunks is not None and i // files_per_chunk >= stop_after_chunks:
                 break
             chunk = todo[i : i + files_per_chunk]
-            chunk_id = hashlib.sha256("|".join(chunk).encode()).hexdigest()[:16]
-            chunk_dir = os.path.join(tgt.path, f"chunk-{chunk_id}")
-            if atomic_chunks and os.path.exists(chunk_dir):
-                # written by a previous run killed before its savepoint dump
+            name = "chunk-" + hashlib.sha256("|".join(chunk).encode()).hexdigest()[:16]
+            if atomic_chunks and name in live:
+                # committed by a previous run killed before its savepoint dump
                 mgr.complete_files(chunk)
                 dumper.dump_now()
                 continue
             reader = spark.read
             if src.merge_schema:
                 reader = reader.option("mergeSchema", True)
-            df = _normalize_file_frame(reader.parquet(*chunk), src)
+            elif source_schema is not None:
+                reader = reader.schema(source_schema)
+            raw = reader.parquet(*chunk)
+            source_schema = raw.schema
+            df = _normalize_file_frame(raw, src)
             df = _apply_transforms(apply_where(df, src.where), config)
             out = S.add_meta_prefix(df) if S.has_timestamp_companions(df.columns) else df
             written.append(out.schema)
             if atomic_chunks:
-                staging = os.path.join(tgt.path, f".staging-{chunk_id}")
-                _wp(
-                    out,
-                    staging,
-                    mode="overwrite",
-                    compression=tgt.compression,
-                    repartition_columns=tgt.repartition_columns,
-                )
-                os.replace(staging, chunk_dir)  # atomic commit
+                with generation(tgt.path, name, keep=live) as path:
+                    _wp(
+                        out,
+                        path,
+                        mode="overwrite",
+                        compression=tgt.compression,
+                        repartition_columns=tgt.repartition_columns,
+                    )
+                live.append(name)
             else:
                 _wp(
                     out,
@@ -386,7 +384,7 @@ def migrate_resumable(
             # dump IMMEDIATELY: the on-disk savepoint must never lag the
             # committed chunks, or a hard kill re-processes the gap on resume
             dumper.dump_now()
-    if not os.path.exists(tgt.path):
+    if not io.exists(tgt.path):
         raise ValueError(
             f"nothing to migrate: no pending files under {src.path} and no existing target"
         )
@@ -395,11 +393,9 @@ def migrate_resumable(
         # chunk dirs can carry evolved (differing) schemas; without merging,
         # the union schema would come from whichever dir lists first
         final = final.option("mergeSchema", True)
-    if atomic_chunks:
-        final = final.option("recursiveFileLookup", "true")
     return _read_written(
         final,
-        tgt.path,
+        live_paths(tgt.path),
         written,
         replaced=replaced,
         partition_by=tgt.partition_by,

@@ -145,8 +145,6 @@ def _staged_rows(df: DataFrame) -> int | None:
     if path is None:
         return None
     try:
-        import os
-
         import pyarrow.parquet as pq
 
         return sum(
@@ -4048,8 +4046,6 @@ def s3export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     export source, decode, and project the original columns. The manifest
     per-file counts are the A6 per-partition-count surface. The fan-out also
     parallelizes the gzip encode across data files (one per partition)."""
-    import os
-
     from scylla_migrator_spark.functions.ddb_variant import key_field, parse_item
     from scylla_migrator_spark.sinks.s3export import write_s3_export
     from scylla_migrator_spark.sources.s3export import read_s3_export
@@ -6269,7 +6265,6 @@ def stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch upserts them into the serving table. The final table must
     equal the batch rollup exactly — decimal sums make the check
     batch-split-independent."""
-    import os
     import shutil
     import tempfile
 
@@ -7209,7 +7204,6 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index grows (ivf_topk_partitioned). Returns the ingested layout's
     (vec_id, centroid_id); the oracle replays training + assignment in
     SQL, so ingest == batch build exactly."""
-    import os
     import shutil
 
     centroids = _kmeans_centroids_staged(spark, sf_dir)
@@ -7714,8 +7708,6 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is this table's first row). The corpus collapses to the distinct-word
     frequency table before any pair work — the compression that makes BPE
     training tractable at corpus scale (analytics/tokenizer.py)."""
-    from scylla_migrator_spark.analytics import tokenizer as TOK
-
     words = TOK.word_frequency_table(_fan(_t(spark, sf_dir, "documents")))
     return TOK.top_pairs(words, 20)
 
@@ -7831,8 +7823,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check; the pure-Python reference pin in
     tests/test_tokenizer.py remains as a second, engine-independent
     witness."""
-    from scylla_migrator_spark.analytics import tokenizer as TOK
-
     return TOK.train_bpe_df(_fan(_t(spark, sf_dir, "documents")), 8)
 
 
@@ -10952,8 +10942,6 @@ def _image_dhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``emit="star"`` mode): synth PPM -> Arrow NN-resize -> 56-bit dHash,
     localCheckpoint-materialized so the banded SELF-join never re-runs the
     pixel pipeline per side (and at 100 TB never re-decodes the corpus)."""
-    from scylla_migrator_spark.analytics import multimodal as MM
-
     docs = _fan(
         _t(spark, sf_dir, "documents").select(
             "doc_id",
@@ -11229,8 +11217,6 @@ def unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncate to DECIMAL(18,9) pre-sum so the aggregate is shuffle-order
     independent. The oracle replays seeding, both EM rounds (recursive-CTE
     lattice DPs with pinned k=1,2,3 term order), and the renormalizations."""
-    from scylla_migrator_spark.analytics import tokenizer as TOK
-
     probs = TOK.train_unigram(_fan(_t(spark, sf_dir, "documents")), rounds=2)
     return (
         probs.orderBy(F.desc("p"), F.asc("piece"))
@@ -11539,8 +11525,6 @@ def unigram_prune_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint, not a filtered view — the oracle splices the prune CTEs
     between the shared EM-round replays and re-runs the full
     forward-backward on the pruned vocabulary."""
-    from scylla_migrator_spark.analytics import tokenizer as TOK
-
     probs = TOK.train_unigram_pruned(
         _fan(_t(spark, sf_dir, "documents")),
         rounds_before=2,
@@ -11628,8 +11612,6 @@ def audio_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     energies are exact integers, so the whole pipeline replays in SQL
     with zero float pinning. 100 TB shape: PCM stays inside one Arrow
     stage, the pair join shuffles 8-byte hashes."""
-    from scylla_migrator_spark.analytics import multimodal as MM
-
     docs = _fan(
         _t(spark, sf_dir, "documents").select(
             "doc_id",
@@ -11844,8 +11826,6 @@ def weighted_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratified_eval_sample (unweighted): quality/length-proportional AND
     source-balanced in one pass. Derandomized md5 uniform -> the draw
     replays in SQL; the only window partitions by source."""
-    from scylla_migrator_spark.analytics import sampling as SAMP
-
     docs = _fan(_t(spark, sf_dir, "documents").select("source", "doc_id", "text"))
     w = docs.select(
         "source", "doc_id", F.size(TXT.tokens(F.col("text"))).alias("n_tokens")
@@ -11936,8 +11916,6 @@ def _video_frame_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth MP4 -> REAL ISO-BMFF parse -> one frame per second -> per-frame
     16x16 PPM -> NN resize -> 56-bit dHash, localCheckpoint-materialized
     so pair machinery never re-decodes frames."""
-    from scylla_migrator_spark.analytics import multimodal as MM
-
     docs = _fan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     vids = docs.select(
         "doc_id",
@@ -12037,8 +12015,7 @@ def shuffle_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver. This query writes the layout, reads BACK the shard parquet
     AND the manifest, and returns both count sets per shard — proving
     write/manifest/read consistency inside the correctness gate."""
-    import os
-
+    from scylla_migrator_spark.pathio import live_paths
     from scylla_migrator_spark.sinks.training_manifest import (
         read_shard_manifest,
         write_training_shards,
@@ -12055,7 +12032,7 @@ def shuffle_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert summary["rowCount"] > 0
     _, entries = read_shard_manifest(root)
-    written = spark.read.parquet(os.path.join(root, "data"))
+    written = spark.read.parquet(os.path.join(live_paths(root)[0], "data"))
     file_agg = written.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("n_tokens")
     )
@@ -12097,8 +12074,6 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass to the word-frequency table, then vocab-sized rounds
     (pair counts + symbol counts + a 1-row argmax collect + the greedy
     merge fold in codegen). Oracle replays all 8 rounds CTE-for-CTE."""
-    from scylla_migrator_spark.analytics import tokenizer as TOK
-
     return TOK.train_wordpiece_df(_fan(_t(spark, sf_dir, "documents")), 8)
 
 
@@ -13042,7 +13017,6 @@ def components_retract_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash manifest). The pre-delete state is staged (it EXISTS in
     production) and copied to scratch, so the row measures what a
     retraction batch actually costs."""
-    import os
     import shutil
     import tempfile
 
@@ -13164,7 +13138,6 @@ def components_stage_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected to every member, comp0s current, journal empty). Both
     operations were pytest-only before this row; the driver's oracle now
     hashes them."""
-    import os
     import shutil
     import tempfile
 

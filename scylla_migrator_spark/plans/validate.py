@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from scylla_migrator_spark.config import Validation
 from scylla_migrator_spark.operators import comparators as C
 from scylla_migrator_spark.operators.content_hash import CONTENT_HASH_COL, add_content_hash
+from scylla_migrator_spark.pathio import generation, live_names, live_paths
 from scylla_migrator_spark.plans.migrate import build_plan
 from scylla_migrator_spark.schema import WRITETIME_SUFFIX, prefix_columns, resolve_columns
 
@@ -291,10 +292,15 @@ def run_validation(spark: SparkSession, config) -> ValidationReport:
     # deliberately drops (null-PK filtering) as MISSING_TARGET_ROW and
     # mis-handle DynamoDB item frames whose renames are map-key renames
     source = build_plan(spark, config)
-    target = spark.read.parquet(config.target.path)
+    target = spark.read.parquet(*live_paths(config.target.path))
 
     def repair(missing: DataFrame) -> None:
-        missing.write.mode("append").parquet(config.target.path)
+        live = live_names(config.target.path)
+        if live is None:
+            missing.write.mode("append").parquet(config.target.path)
+        else:  # a committed table: the repair is one more live generation
+            with generation(config.target.path, keep=live) as gen:
+                missing.write.parquet(gen)
 
     return validate(
         source,

@@ -20,6 +20,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from scylla_migrator_spark.pathio import generation, live_names, live_paths
+
 
 def write_parquet(
     df: DataFrame,
@@ -38,12 +40,11 @@ def write_parquet(
 
 
 def swap_generation(staged: str, path: str) -> None:
-    """Promote the completely written directory ``staged`` to ``path``: the
-    current generation (if any) is renamed aside, ``staged`` is renamed into
-    place, then the old generation is deleted. Each rename is atomic, so
-    ``path`` never holds a mix of generations; a crash between the two
-    renames leaves ``path`` absent and the new generation complete at
-    ``staged``. A previous crash's leftover old generation is removed first."""
+    """Promote the written directory ``staged`` to the plain or partition
+    directory ``path`` (``compact_parquet`` only): the current generation is
+    renamed aside, ``staged`` into place, then the old one deleted (and a
+    previous crash's leftover first). Each rename is atomic, so ``path``
+    never holds a mix of generations."""
     old = f"{path}__old_gen"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(path):
@@ -52,27 +53,29 @@ def swap_generation(staged: str, path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _parquet_stats(paths: list[str]) -> tuple[int, int]:
+    """(parquet file count, bytes) under the local directories ``paths``."""
+    walk = [(d, f) for p in paths for d, _, files in os.walk(p) for f in files]
+    sizes = [os.path.getsize(os.path.join(d, f)) for d, f in walk if f.endswith(".parquet")]
+    return len(sizes), sum(sizes)
+
+
 def _compact_flat(spark, path: str, target_file_bytes: int) -> dict:
-    files_before = 0
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                files_before += 1
-                total += os.path.getsize(os.path.join(root, f))
+    recorded = live_names(path) is not None
+    files_before, total = _parquet_stats(live_paths(path))
     n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    # coalesce, not repartition: compaction must not pay a full shuffle —
-    # it only merges existing partitions (row order within files changes,
-    # row SET does not)
-    src_parts = df.rdd.getNumPartitions()
-    out = df.coalesce(min(n_out, max(src_parts, 1)))
-    out.write.mode("overwrite").parquet(tmp)
-    swap_generation(tmp, path)
-    files_after = sum(
-        1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    )
+    df = spark.read.parquet(*live_paths(path))
+    # coalesce, not repartition: no full shuffle, only existing partitions
+    # merge (row order within files changes, the row SET does not)
+    out = df.coalesce(min(n_out, max(df.rdd.getNumPartitions(), 1)))
+    if recorded:
+        with generation(path) as gen:
+            out.write.parquet(gen)
+    else:
+        tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
+        out.write.mode("overwrite").parquet(tmp)
+        swap_generation(tmp, path)
+    files_after, _ = _parquet_stats(live_paths(path))
     return {"files_before": files_before, "files_after": files_after, "bytes": total}
 
 
@@ -80,23 +83,19 @@ def compact_parquet(
     spark, path: str, target_file_bytes: int = 256 * 1024 * 1024
 ) -> dict:
     """Small-files compaction: rewrite a parquet dataset into
-    ceil(total_bytes / target_file_bytes) files, atomically (each new
-    generation staged to a side dir, then a directory swap — readers see
-    old or new, never a mix; a crash leaves the old generation intact).
+    ceil(total_bytes / target_file_bytes) files, atomically — a table with a
+    commit record gets one new committed generation, a plain one a
+    ``swap_generation``: readers see old or new, never a mix.
 
-    Hive-partitioned datasets (``col=value`` subdirectories — the upsert
-    serving tables, token-range targets, partitionBy layouts) are compacted
-    PER PARTITION DIRECTORY: each partition's files merge within it, the
-    directory structure, partition values and any ``_``-prefixed metadata
-    files (e.g. the upsert's bucket-pinning meta) survive untouched. A
-    whole-table read-and-rewrite here would flatten the partition column
-    into the data files and destroy the layout downstream readers prune on.
+    Hive-partitioned datasets (``col=value`` subdirectories: upsert serving
+    tables, token-range targets, partitionBy layouts) are compacted PER
+    PARTITION DIRECTORY, so the layout readers prune on, the partition
+    values and ``_``-prefixed metadata files (the upsert's bucket pin)
+    survive; a whole-table rewrite would flatten the partition column.
 
-    This is the maintenance op every long-running append/streaming sink
-    needs: micro-batches and chunked migrations accrete many small files,
-    and at 100 TB the file-open + footer-read overhead of millions of tiny
-    files dominates scan time. Sizing uses the dataset's ACTUAL on-disk
-    bytes (compressed). Returns {files_before, files_after, bytes}."""
+    Micro-batches and chunked migrations accrete small files, whose
+    open + footer cost dominates scans at 100 TB. Sizing uses the on-disk
+    (compressed) bytes. Returns {files_before, files_after, bytes}."""
     part_dirs = [
         e
         for e in os.listdir(path)

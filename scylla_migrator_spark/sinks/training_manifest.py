@@ -12,8 +12,9 @@ Manifest pattern mirrors the DynamoDB S3-export sink
 * ``manifest-shards.json``: one line per shard with file key, rowCount,
   tokenCount
 * ``manifest-summary.json``: totals + shard count + the shuffle salt
-* write to a ``.inprogress`` temp dir, promote atomically on success,
-  cleanup on failure
+* the layout is written into ``<root>/g-<uuid>/`` and committed as the
+  root's one live generation (``pathio.generation``); a failed write is
+  deleted. Readers start from ``pathio.live_paths(root)[0]``
 
 Scale shape: the shuffle is ``sampling.shard_layout`` — a salted md5 hash
 order, NO global sort (the leakage_free_split posture: one hash partition
@@ -25,14 +26,12 @@ touch the driver.
 from __future__ import annotations
 
 import json
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scylla_migrator_spark.analytics.sampling import shard_layout
-from scylla_migrator_spark.sinks.parquet import swap_generation
+from scylla_migrator_spark.pathio import for_path, generation, live_paths
 
 MANIFEST_SHARDS = "manifest-shards.json"
 MANIFEST_SUMMARY = "manifest-summary.json"
@@ -49,20 +48,16 @@ def write_training_shards(
     """Shuffle ``df`` deterministically into ``n_shards`` parquet shards
     under ``root`` and write the shard manifest. Returns the summary dict.
 
-    The layout is a pure function of (key, salt, n_shards): re-running on
-    the same rows — in ANY input order — produces byte-identical shard
-    membership and intra-shard positions, so a training job can be
-    re-provisioned without re-shuffling and two sites shard identically.
-    Each ``data/shard=K`` directory holds one file with rows in ``pos``
-    order (hash order, not a semantic sort — neighbors are random, which
-    is the point of the shuffle)."""
+    The layout is a pure function of (key, salt, n_shards): the same rows
+    in ANY input order give byte-identical shard membership and positions,
+    so a training job re-provisions without re-shuffling. Each
+    ``data/shard=K`` directory holds one file with rows in ``pos`` order
+    (hash order: neighbors are random, the point of the shuffle)."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    tmp = root + ".inprogress"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    data_dir = os.path.join(tmp, "data")
-    try:
+    io = for_path(root)
+    with generation(root) as export:
+        data_dir = io.join(export, "data")
         layout = shard_layout(df, key_col, n_shards, salt)
         (
             layout.repartition(n_shards, F.col("shard"))
@@ -83,10 +78,10 @@ def write_training_shards(
         entries = []
         for shard in range(n_shards):
             rows, tokens = stats.get(shard, (0, 0))
-            sdir = os.path.join(data_dir, f"shard={shard}")
+            sdir = io.join(data_dir, f"shard={shard}")
             files = sorted(
                 f
-                for f in (os.listdir(sdir) if os.path.isdir(sdir) else [])
+                for f in (io.list_file_names(sdir) if io.exists(sdir) else [])
                 if f.endswith(".parquet")
             )
             entries.append(
@@ -97,9 +92,8 @@ def write_training_shards(
                     "tokenCount": tokens,
                 }
             )
-        with open(os.path.join(tmp, MANIFEST_SHARDS), "w") as f:
-            for e in entries:
-                f.write(json.dumps(e, sort_keys=True) + "\n")
+        lines = "".join(json.dumps(e, sort_keys=True) + "\n" for e in entries)
+        io.write_utf8_atomically(io.join(export, MANIFEST_SHARDS), lines.encode("utf-8"))
         summary = {
             "nShards": n_shards,
             "rowCount": int(sum(r for r, _ in stats.values())),
@@ -108,19 +102,14 @@ def write_training_shards(
             "keyColumn": key_col,
             "manifestShardsKey": MANIFEST_SHARDS,
         }
-        with open(os.path.join(tmp, MANIFEST_SUMMARY), "w") as f:
-            json.dump(summary, f, sort_keys=True)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)  # cleanup on failure (K6 posture)
-        raise
-    swap_generation(tmp, root)
+        payload = json.dumps(summary, sort_keys=True).encode("utf-8")
+        io.write_utf8_atomically(io.join(export, MANIFEST_SUMMARY), payload)
     return summary
 
 
 def read_shard_manifest(root: str) -> tuple[dict, list[dict]]:
-    """Load (summary, per-shard entries) back from a written layout."""
-    with open(os.path.join(root, MANIFEST_SUMMARY)) as f:
-        summary = json.load(f)
-    with open(os.path.join(root, MANIFEST_SHARDS)) as f:
-        entries = [json.loads(line) for line in f if line.strip()]
-    return summary, entries
+    """Load (summary, per-shard entries) back from the live layout."""
+    io, export = for_path(root), live_paths(root)[0]
+    summary = json.loads(io.read_utf8(io.join(export, MANIFEST_SUMMARY)))
+    lines = io.read_utf8(io.join(export, MANIFEST_SHARDS)).splitlines()
+    return summary, [json.loads(line) for line in lines if line.strip()]

@@ -12,23 +12,24 @@ pruning is *partition pruning before planning*, not a runtime filter.
 
 from __future__ import annotations
 
-import os
+import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark.pathio import for_path, live_paths
+
 
 def list_parquet_files(path: str) -> list[str]:
     """Recursive discovery of .parquet data files, deterministic order
-    (Parquet.scala:148-170: ``inputFiles.distinct.sorted``)."""
-    if os.path.isfile(path):
-        return [path]
-    found: set[str] = set()
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            if name.endswith(".parquet") and not name.startswith(("_", ".")):
-                found.add(os.path.join(root, name))
-    return sorted(found)
+    (Parquet.scala:148-170: ``inputFiles.distinct.sorted``), through
+    ``pathio`` on any scheme; a committed table lists its live generations."""
+    io = for_path(path)
+    files = [f for root in live_paths(path) for f in io.list_files(root)]
+    if files == [path]:  # a single-file source
+        return files
+    names = ((f, posixpath.basename(f)) for f in files)
+    return sorted({f for f, n in names if n.endswith(".parquet") and not n.startswith(("_", "."))})
 
 
 def read_parquet(
@@ -52,8 +53,8 @@ def read_parquet(
     cost on a 100k-file table; enable it only for evolved tables."""
     files = list_parquet_files(path)
     if skip_files:
-        skip = set(skip_files) | {os.path.basename(s) for s in skip_files}
-        files = [f for f in files if f not in skip and os.path.basename(f) not in skip]
+        skip = set(skip_files) | {posixpath.basename(s) for s in skip_files}
+        files = [f for f in files if f not in skip and posixpath.basename(f) not in skip]
     if not files:
         raise FileNotFoundError(f"no parquet files to process under {path}")
     reader = spark.read

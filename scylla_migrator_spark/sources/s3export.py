@@ -9,6 +9,9 @@ Reference parity — readers/DynamoDBS3Export.scala:54-221 (manifest parsing
                                       {"dataFileS3Key": ..., "itemCount": n}
     <root>/data/*.json.gz             one {"Item": {attr: {tag: val}}} per line
 
+where ``<root>`` is the live export of a committed root (``pathio``), else
+the root itself; the files manifest is the one ``manifestFilesS3Key`` names.
+
 Manifest parsing happens on the driver (tiny); data files go through
 ``spark.read.text`` + ``from_json`` — fully distributed, pushdown-friendly.
 """
@@ -16,31 +19,30 @@ Manifest parsing happens on the driver (tiny); data files go through
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from scylla_migrator_spark.functions.ddb_variant import ITEM_SCHEMA
+from scylla_migrator_spark.pathio import for_path, live_paths
 
 MANIFEST_SUMMARY = "manifest-summary.json"
 MANIFEST_FILES = "manifest-files.json"
 
 
+def _read_key(root: str, key: str) -> str:
+    io = for_path(root)
+    return io.read_utf8(io.join(live_paths(root)[0], key))
+
+
 def read_manifest_summary(root: str) -> dict:
-    with open(os.path.join(root, MANIFEST_SUMMARY)) as f:
-        return json.load(f)
+    return json.loads(_read_key(root, MANIFEST_SUMMARY))
 
 
 def read_manifest_files(root: str) -> list[dict]:
-    entries = []
-    with open(os.path.join(root, MANIFEST_FILES)) as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                entries.append(json.loads(line))
-    return entries
+    key = read_manifest_summary(root).get("manifestFilesS3Key", MANIFEST_FILES)
+    return [json.loads(line) for line in _read_key(root, key).splitlines() if line.strip()]
 
 
 def read_s3_export(spark: SparkSession, root: str, skip_files: list[str] | None = None) -> DataFrame:
@@ -48,19 +50,15 @@ def read_s3_export(spark: SparkSession, root: str, skip_files: list[str] | None 
 
     ``skip_files`` = resume skip-set of dataFileS3Key values (S10/F5
     semantics applied to export data files)."""
-    summary = read_manifest_summary(root)
     files = read_manifest_files(root)
+    export, io = live_paths(root)[0], for_path(root)
     skip = set(skip_files or [])
     paths = [
-        os.path.join(root, e["dataFileS3Key"]) for e in files if e["dataFileS3Key"] not in skip
+        io.join(export, e["dataFileS3Key"]) for e in files if e["dataFileS3Key"] not in skip
     ]
     if not paths:
         raise FileNotFoundError(f"no data files to process in export {root}")
     raw = spark.read.text(paths)  # gzip inferred from .gz extension
     wrapper = T.StructType([T.StructField("Item", ITEM_SCHEMA)])
-    parsed = raw.select(F.from_json(F.col("value"), wrapper).getField("Item").alias("item"),
-                        F.col("value").alias("item_json"))
-    expected = summary.get("itemCount")
-    if expected is not None and not skip:
-        parsed = parsed.withColumn("__expected_total", F.lit(expected)).drop("__expected_total")
-    return parsed
+    return raw.select(F.from_json(F.col("value"), wrapper).getField("Item").alias("item"),
+                      F.col("value").alias("item_json"))

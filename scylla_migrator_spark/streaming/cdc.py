@@ -17,14 +17,13 @@ unionByName + max_by-per-key compaction (same plan a Delta MERGE compiles
 to for a full-overwrite fixture). Each micro-batch makes one pass over
 state plus batch and writes the compacted state ONCE:
 
-* generation swap: the new state is written to ``<target>.staging`` and
-  promoted by ``sinks.parquet.swap_generation`` (old generation renamed
-  aside, staging renamed into place, old deleted);
-* recovery rule: the state is the target if it exists, else a COMPLETED
-  staging dir (``_SUCCESS`` present) — a crash between the two renames
-  loses nothing, and the next batch first finishes the interrupted swap.
-  A staging dir without ``_SUCCESS`` is a torn write and is ignored; an
-  existing state that cannot be read raises instead of being replaced;
+* commit record (``pathio.generation``): the new state is written to a
+  fresh ``<target>/g-<uuid>`` directory and committed as the one live
+  generation. A crash at any step of the commit leaves the record naming
+  one complete generation, and the next batch's commit sweeps the rest. A
+  fresh target gets an empty record first, so a torn first generation is
+  never read; a target without a record reads as a plain parquet directory,
+  and one that cannot be read raises. One replicator per target at a time;
 * the schema of the state this replicator last wrote is pinned for the
   next read, so only a fresh replicator (a restart) infers it from the
   parquet footers.
@@ -38,7 +37,6 @@ the optimizer pruned, is counted by a separate aggregation instead.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -46,7 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from scylla_migrator_spark.sinks.parquet import swap_generation
+from scylla_migrator_spark.pathio import commit, for_path, generation, live_paths
 
 OP_COL = "op"
 OPS = ("INSERT", "MODIFY", "REMOVE")
@@ -83,30 +81,19 @@ class CdcReplicator:
     # schema of the generation this replicator last wrote; None = infer
     _schema: StructType | None = field(default=None, init=False, repr=False)
 
-    @property
-    def _staging(self) -> str:
-        return self.target_path + ".staging"
-
-    def _staging_complete(self) -> bool:
-        return os.path.exists(os.path.join(self._staging, "_SUCCESS"))
-
     def _read_state(self, spark: SparkSession) -> DataFrame | None:
-        """The newest complete generation: the target, else a completed
-        staging dir (a swap interrupted between its renames), else None."""
+        """The live generation of the state, or None before the first."""
         path = self.target_path
-        if not os.path.exists(path):
-            if not self._staging_complete():
-                return None
-            path = self._staging
+        paths = live_paths(path) if for_path(path).exists(path) else []
+        if not paths:
+            return None
         reader = spark.read if self._schema is None else spark.read.schema(self._schema)
-        return reader.parquet(path)
+        return reader.parquet(*paths)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if not os.path.exists(self.target_path) and self._staging_complete():
-            # finish the swap a crash interrupted: the next write reuses
-            # the staging dir, so its generation must be promoted first
-            swap_generation(self._staging, self.target_path)
+        if not for_path(self.target_path).exists(self.target_path):
+            commit(self.target_path, [])  # so a torn first generation is never read
         state = self._read_state(spark)
         drift_added: list[str] = []
         if self.allow_schema_drift and state is not None:
@@ -170,8 +157,8 @@ class CdcReplicator:
         # late-arriving older event cannot resurrect a deleted key; they are
         # filtered out of the user-facing view by current()
         compact = merged.groupBy(*self.key_cols).agg(*pick).select(*self.key_cols, "r.*")
-        compact.write.mode("overwrite").parquet(self._staging)
-        swap_generation(self._staging, self.target_path)
+        with generation(self.target_path) as gen:
+            compact.write.mode("overwrite").parquet(gen)
         self._schema = compact.schema
 
         seen = _op_counts_observed(obs)

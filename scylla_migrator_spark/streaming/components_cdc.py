@@ -71,6 +71,7 @@ from scylla_migrator_spark.analytics.components import (
     contracted_merge,
     minlabel_union_find,
 )
+from scylla_migrator_spark.pathio import for_path
 from scylla_migrator_spark.streaming.rollup import (
     BUCKET_COL,
     _bucket_expr,
@@ -112,28 +113,27 @@ def _applied_path(serving_path: str) -> str:
 
 
 def read_applied_marker(serving_path: str) -> dict | None:
-    """The last streaming batch the maintainers COMMITTED, written
-    atomically with the generation's manifest: ``{"batch_id": ...,
-    "steps": ["upsert", ...]}``. foreachBatch is at-least-once — a crash
-    after the generation commits but before the streaming checkpoint
-    commits replays the same batch, and replaying
-    ``components_upsert_batch`` would append its rows a second time. The
-    CDC drivers consult this marker and no-op steps a replayed batch
-    already applied (the manifest protocol makes a generation atomic;
-    the marker makes it idempotent per batch id)."""
+    """The last streaming batch the maintainers COMMITTED, written with the
+    generation's manifest: ``{"batch_id": ..., "steps": ["upsert", ...]}``.
+    foreachBatch is at-least-once: a crash between the generation's commit
+    and the checkpoint's replays the batch, and ``components_upsert_batch``
+    would append its rows twice. The CDC drivers no-op steps a replayed
+    batch already applied (the manifest makes a generation atomic; the
+    marker makes it idempotent per batch id)."""
     ap = _applied_path(serving_path)
-    if not os.path.exists(ap):
-        return None
-    with open(ap) as f:
-        return json.load(f)
+    return _read_json(ap) if os.path.exists(ap) else None
+
+
+def _read_json(path: str):
+    return json.loads(for_path(path).read_utf8(path))
+
+
+def _write_json(path: str, obj) -> None:
+    for_path(path).write_utf8_atomically(path, json.dumps(obj).encode("utf-8"))
 
 
 def _write_applied(serving_path: str, marker: dict) -> None:
-    ap = _applied_path(serving_path)
-    tmp = ap + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(marker, f)
-    os.replace(tmp, ap)
+    _write_json(_applied_path(serving_path), marker)
 
 
 def _check_geometry(
@@ -149,8 +149,7 @@ def _check_geometry(
     gp = os.path.join(keys_path, _GEOMETRY_FILE)
     if not os.path.exists(gp):
         return  # pre-geometry layout: pinned by the next committed batch
-    with open(gp) as f:
-        g = json.load(f)
+    g = _read_json(gp)
     ours = {"bits": bits, "blocks": blocks, "max_hamming": max_hamming}
     if g != ours:
         raise ValueError(
@@ -257,10 +256,7 @@ def _execute_manifest(serving_path: str, man: dict) -> None:
     if man.get("geometry") and os.path.isdir(keys_path):
         gp = os.path.join(keys_path, _GEOMETRY_FILE)
         if not os.path.exists(gp):
-            gt = gp + ".tmp"
-            with open(gt, "w") as f:
-                json.dump(man["geometry"], f)
-            os.replace(gt, gp)
+            _write_json(gp, man["geometry"])
     if man.get("applied_marker"):
         _write_applied(serving_path, man["applied_marker"])
     # cleanup: displaced generations + scratch dirs, then the manifest
@@ -277,9 +273,7 @@ def _recover_pending(serving_path: str) -> None:
     was written (those generations never started mutating state)."""
     pp = _pending_path(serving_path)
     if os.path.exists(pp):
-        with open(pp) as f:
-            man = json.load(f)
-        _execute_manifest(serving_path, man)
+        _execute_manifest(serving_path, _read_json(pp))
         return
     _sweep_generations(serving_path)
 
@@ -296,11 +290,7 @@ def _sweep_generations(serving_path: str) -> None:
 
 
 def _write_manifest(serving_path: str, man: dict) -> None:
-    pp = _pending_path(serving_path)
-    tmp = pp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, pp)
+    _write_json(_pending_path(serving_path), man)
 
 
 def _read_journal(spark: SparkSession, journal_path: str) -> dict[int, int]:

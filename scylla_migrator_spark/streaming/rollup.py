@@ -51,6 +51,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark.pathio import for_path
+
 BUCKET_COL = "__bucket"
 DEFAULT_BUCKETS = 16  # fixture scale; thousands at 100 TB
 _META_FILE = "_sgs_upsert_meta.json"  # leading "_": ignored by Spark listing
@@ -135,20 +137,16 @@ def _table_buckets(path: str, n_buckets: int) -> int:
     different modulus (which would mis-prune)."""
     meta = os.path.join(path, _META_FILE)
     if os.path.exists(meta):
-        with open(meta) as f:
-            return int(json.load(f)["n_buckets"])
+        return int(json.loads(for_path(meta).read_utf8(meta))["n_buckets"])
     return n_buckets
 
 
 def _write_meta(path: str, n_buckets: int) -> None:
     meta = os.path.join(path, _META_FILE)
     if not os.path.exists(meta):
-        # atomic tmp+rename: a crash mid-write must never leave a truncated
-        # meta file (a later _table_buckets would die on it before any merge)
-        tmp = meta + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": n_buckets}, f)
-        os.replace(tmp, meta)
+        # atomic: a truncated meta would kill every later _table_buckets
+        payload = json.dumps({"n_buckets": n_buckets}).encode("utf-8")
+        for_path(meta).write_utf8_atomically(meta, payload)
 
 
 def table_exists(path: str) -> bool:

@@ -102,6 +102,37 @@ def test_cli_migrate_resumable_selected(tmp_path):
     assert any(n.startswith("savepoint_") for n in os.listdir(tmp_path / "sp"))
 
 
+def test_cli_resumable_migrate_validate_compact_validate(tmp_path):
+    """The resumable loop's target (chunk generations named by a commit
+    record) validates clean, compacts into one committed generation, and
+    validates clean again."""
+    target = str(tmp_path / "out")
+    config = {
+        "source": {"type": "parquet", "path": "/root/testdata/sf0.001/orders.parquet"},
+        "target": {"type": "parquet", "path": target},
+        "primaryKey": ["o_orderkey"],
+        "savepoints": {"path": str(tmp_path / "sp"), "intervalSeconds": 3600},
+    }
+    mig = _run("migrate", config, tmp_path)
+    assert mig.returncode == 0, mig.stderr[-2000:]
+    assert json.loads(mig.stdout.strip().splitlines()[-1])["resumable"] is True
+    for step in ("validate", "compact", "validate"):
+        if step == "compact":
+            proc = subprocess.run(
+                [sys.executable, "-m", "scylla_migrator_spark", "compact", target, "8"],
+                capture_output=True, text=True, timeout=300,
+                env={**os.environ, "PYTHONPATH": REPO, "SPARK_GRAFT_CPUS": "8"},
+            )
+        else:
+            proc = _run(step, config, tmp_path)
+        assert proc.returncode == 0, (step, proc.stderr[-2000:])
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        if step == "validate":
+            assert out["counts_by_kind"] == {}, out
+    live = json.loads((tmp_path / "out" / "_live.json").read_text())["live"]
+    assert len(live) == 1 and live[0].startswith("g-")
+
+
 def test_cli_compact(spark, tmp_path):
     """compact subcommand: merges small files, prints JSON stats, exit 0
     (subprocess — the session lifecycle must not disturb the shared one)."""

@@ -822,6 +822,7 @@ def test_curation_shards_target_writes_manifest_layout(spark, tmp_path, sf_dir):
     import json
     import os
 
+    from scylla_migrator_spark.pathio import live_paths
     from scylla_migrator_spark.plans.curate import CurationConfig, run_curation
     from scylla_migrator_spark.sinks.training_manifest import read_shard_manifest
 
@@ -838,7 +839,7 @@ def test_curation_shards_target_writes_manifest_layout(spark, tmp_path, sf_dir):
     summary, entries = read_shard_manifest(root)
     assert summary["nShards"] == 4 and summary["rowCount"] == survivors
     assert sum(e["rowCount"] for e in entries) == survivors
-    written = spark.read.parquet(os.path.join(root, "data"))
+    written = spark.read.parquet(os.path.join(live_paths(root)[0], "data"))
     assert written.count() == survivors
     assert {"shard", "pos", "n_tokens"} <= set(written.columns)
     with open(os.path.join(root, "_curation_report.json")) as f:

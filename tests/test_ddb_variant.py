@@ -4,6 +4,7 @@ reference DdbValue / S3-export encoder-decoder test semantics)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -101,3 +102,28 @@ def test_resume_skip_files(spark, tmp_path):
         assert partial.count() < 2
     with pytest.raises(FileNotFoundError):
         read_s3_export(spark, root, skip_files=files)
+
+
+def test_s3_export_reader_follows_manifest_files_key(spark, tmp_path):
+    """The files manifest is the one the summary's ``manifestFilesS3Key``
+    names (readers/DynamoDBS3Export.scala:69-134), not a fixed name."""
+    from scylla_migrator_spark.pathio import live_paths
+
+    src = spark.createDataFrame(
+        [(DV.item_to_canonical_json(it),) for it in ITEMS], "item_json string"
+    )
+    root = str(tmp_path / "export")
+    write_s3_export(src, "item_json", root)
+    export = live_paths(root)[0]
+    os.rename(
+        os.path.join(export, "manifest-files.json"),
+        os.path.join(export, "manifest-files-renamed.json"),
+    )
+    summary_path = os.path.join(export, "manifest-summary.json")
+    with open(summary_path) as f:
+        summary = json.load(f)
+    summary["manifestFilesS3Key"] = "manifest-files-renamed.json"
+    with open(summary_path, "w") as f:
+        json.dump(summary, f)
+    assert sum(e["itemCount"] for e in read_manifest_files(root)) == 2
+    assert read_s3_export(spark, root).count() == 2

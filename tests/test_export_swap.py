@@ -1,16 +1,17 @@
 """Re-exporting over a previous export: the S3-export and training-shard
-sinks promote the new export with ``sinks.parquet.swap_generation``, so a
-crash while the previous export is being removed leaves ``root`` a
-complete export (every data file its manifests list is present and holds
-the listed rows)."""
+sinks write each export into a new generation directory under ``root`` and
+commit it with ``pathio.commit``, so a crash at any step of the commit
+leaves ``root`` a complete export (every data file its manifests list is
+present and holds the listed rows): the previous one, or the new one when
+only the sweep of the previous one was cut."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
+from scylla_migrator_spark import pathio
 from scylla_migrator_spark.functions import ddb_variant as DV
 from scylla_migrator_spark.sinks.s3export import write_s3_export
 from scylla_migrator_spark.sinks.training_manifest import (
@@ -24,25 +25,9 @@ from scylla_migrator_spark.sources.s3export import (
 )
 
 
-def _crash_while_removing(monkeypatch, root: str) -> None:
-    """Make removing the previous export (``root`` itself or a generation
-    renamed aside from it) delete one of its data files and then die."""
-    real_rmtree = shutil.rmtree
-
-    def rmtree(path, *args, **kwargs):
-        path = str(path)
-        if os.path.isdir(path) and (path == root or path.startswith(root + "__")):
-            data = sorted(
-                os.path.join(d, f)
-                for d, _, files in os.walk(os.path.join(path, "data"))
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-            os.remove(data[0])
-            raise OSError("crash while removing the previous export")
-        return real_rmtree(path, *args, **kwargs)
-
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
+def _exists(root: str, key: str) -> bool:
+    io = pathio.for_path(root)
+    return io.exists(io.join(pathio.live_paths(root)[0], key))
 
 
 def _s3_export(spark, root, n):
@@ -56,7 +41,7 @@ def _s3_export(spark, root, n):
 def _s3_export_rows(spark, root) -> int:
     entries = read_manifest_files(root)
     for e in entries:
-        assert os.path.exists(os.path.join(root, e["dataFileS3Key"])), e
+        assert _exists(root, e["dataFileS3Key"]), e
     n = read_s3_export(spark, root).count()
     assert n == read_manifest_summary(root)["itemCount"]
     assert n == sum(e["itemCount"] for e in entries)
@@ -72,8 +57,8 @@ def _shard_rows(spark, root) -> int:
     summary, entries = read_shard_manifest(root)
     for e in entries:
         for key in e["dataFileKeys"]:
-            assert os.path.exists(os.path.join(root, key)), key
-    n = spark.read.parquet(os.path.join(root, "data")).count()
+            assert _exists(root, key), key
+    n = spark.read.parquet(pathio.for_path(root).join(pathio.live_paths(root)[0], "data")).count()
     assert n == summary["rowCount"] == sum(e["rowCount"] for e in entries)
     return n
 
@@ -82,18 +67,20 @@ def _shard_rows(spark, root) -> int:
     "write, rows", [(_s3_export, _s3_export_rows), (_shards, _shard_rows)], ids=["s3export", "shards"]
 )
 def test_crash_removing_previous_export_leaves_complete_export(
-    spark, tmp_path, monkeypatch, write, rows
+    spark, tmp_path, table_path, crash_commit, write, rows
 ):
-    root = str(tmp_path / "export")
+    root = table_path(tmp_path / "export")
     write(spark, root, 40)
-    assert rows(spark, root) == 40
-    with monkeypatch.context() as m:
-        _crash_while_removing(m, root)
-        with pytest.raises(OSError, match="crash"):
+    live_rows = rows(spark, root)
+    assert live_rows == 40
+    for point in crash_commit.points:
+        with crash_commit(root, point):
             write(spark, root, 60)
-    # the new export is in place and whole; the half-removed previous one
-    # is out of the way and the next export sweeps it
-    assert rows(spark, root) == 60
+        # the previous export, or the new one when only the sweep was cut
+        live_rows = 60 if point == "sweep" else live_rows
+        assert rows(spark, root) == live_rows, point
+    # the next export sweeps everything the crashed ones left behind
     write(spark, root, 50)
     assert rows(spark, root) == 50
+    assert len([e for e in os.listdir(tmp_path / "export") if not e.startswith(("_", "."))]) == 1
     assert sorted(os.listdir(tmp_path)) == ["export"]

@@ -70,8 +70,8 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from scylla_migrator_spark.pathio import live_paths
     from scylla_migrator_spark.sinks.training_manifest import (
-        MANIFEST_SHARDS,
         MANIFEST_SUMMARY,
         read_shard_manifest,
         write_training_shards,
@@ -90,7 +90,7 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
     assert loaded == summary and len(entries) == 8
     total = 0
     for e in entries:
-        sdir = os.path.join(root, "data", f"shard={e['shard']}")
+        sdir = os.path.join(live_paths(root)[0], "data", f"shard={e['shard']}")
         rows = (
             spark.read.parquet(sdir).select("doc_id", "n_toks", "pos").collect()
             if e["rowCount"]
@@ -108,7 +108,7 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
     # the identical (doc_id -> shard, pos) layout
     first = {
         (r["doc_id"]): (r["shard"], r["pos"])
-        for r in spark.read.parquet(os.path.join(root, "data")).collect()
+        for r in spark.read.parquet(os.path.join(live_paths(root)[0], "data")).collect()
     }
     root2 = str(tmp_path / "shards2")
     write_training_shards(
@@ -120,12 +120,12 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
     )
     second = {
         (r["doc_id"]): (r["shard"], r["pos"])
-        for r in spark.read.parquet(os.path.join(root2, "data")).collect()
+        for r in spark.read.parquet(os.path.join(live_paths(root2)[0], "data")).collect()
     }
     assert first == second
     # manifests identical modulo parquet part-file UUIDs
-    with open(os.path.join(root, MANIFEST_SUMMARY)) as a, open(
-        os.path.join(root2, MANIFEST_SUMMARY)
+    with open(os.path.join(live_paths(root)[0], MANIFEST_SUMMARY)) as a, open(
+        os.path.join(live_paths(root2)[0], MANIFEST_SUMMARY)
     ) as b:
         assert a.read() == b.read()
     _, entries2 = read_shard_manifest(root2)
@@ -134,8 +134,8 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
     ]
     assert strip(entries) == strip(entries2)
 
-    # cleanup-on-failure: a bad token column aborts before promote and
-    # leaves neither the root nor the .inprogress temp behind
+    # cleanup-on-failure: a bad token column aborts before the commit and
+    # leaves no root behind
     root3 = str(tmp_path / "shards3")
     try:
         write_training_shards(
@@ -146,7 +146,7 @@ def test_write_training_shards_manifest_consistency(spark, tmp_path):
         raise
     except Exception:
         pass
-    assert not os.path.exists(root3) and not os.path.exists(root3 + ".inprogress")
+    assert not os.path.exists(root3)
 
 
 def test_write_training_shards_rejects_bad_shard_count(spark, tmp_path):

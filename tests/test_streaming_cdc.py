@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark.pathio import commit, live_paths
 from scylla_migrator_spark.plans.queries import cdc_last_state, cdc_op_column
 from scylla_migrator_spark.streaming.cdc import CdcReplicator
 
@@ -19,13 +20,13 @@ def _events_with_op(spark, sf_dir):
     )
 
 
-def test_stream_replay_matches_batch_state(spark, sf_dir, tmp_path):
+def test_stream_replay_matches_batch_state(spark, sf_dir, tmp_path, table_path):
     events = _events_with_op(spark, sf_dir)
     # replay the event log as a 4-file stream (micro-batch simulation)
-    stream_src = str(tmp_path / "stream_src")
+    stream_src = table_path(tmp_path / "stream_src")
     events.repartition(4).write.parquet(stream_src)
 
-    target = str(tmp_path / "cdc_target")
+    target = table_path(tmp_path / "cdc_target")
     rep = CdcReplicator(target_path=target, key_cols=["user_id"], value_cols=["value"])
     stream = spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 1).parquet(stream_src)
     q = rep.attach(stream, checkpoint=str(tmp_path / "ckpt"))
@@ -41,25 +42,25 @@ def test_stream_replay_matches_batch_state(spark, sf_dir, tmp_path):
     assert len(rep.metrics) >= 2
 
 
-def test_replay_is_idempotent(spark, sf_dir, tmp_path):
+def test_replay_is_idempotent(spark, sf_dir, tmp_path, table_path):
     events = _events_with_op(spark, sf_dir)
-    target = str(tmp_path / "cdc_target2")
+    target = table_path(tmp_path / "cdc_target2")
     rep = CdcReplicator(target_path=target, key_cols=["user_id"], value_cols=["value"])
     rep.apply_batch(events, 0)
-    first = spark.read.parquet(target).collect()
+    first = spark.read.parquet(*live_paths(target)).collect()
     rep.apply_batch(events, 1)  # at-least-once: same batch delivered twice
-    second = spark.read.parquet(target).collect()
+    second = spark.read.parquet(*live_paths(target)).collect()
     assert sorted(map(str, first)) == sorted(map(str, second))
 
 
-def test_remove_deletes_key(spark, tmp_path):
+def test_remove_deletes_key(spark, tmp_path, table_path):
     rows = [
         (1, 100, 1, "INSERT", 1.0),
         (1, 200, 2, "REMOVE", None),
         (2, 100, 3, "INSERT", 2.0),
     ]
     df = spark.createDataFrame(rows, "user_id bigint, ts bigint, event_id bigint, op string, value double")
-    target = str(tmp_path / "cdc_target3")
+    target = table_path(tmp_path / "cdc_target3")
     rep = CdcReplicator(target_path=target, key_cols=["user_id"], value_cols=["value"])
     rep.apply_batch(df, 0)
     assert [r["user_id"] for r in rep.current(spark).collect()] == [2]
@@ -237,13 +238,13 @@ def test_upsert_replay_is_idempotent(spark, tmp_path):
     assert (3, 333) in twice and (21, 210) in twice and len(twice) == 21
 
 
-def test_schema_drift_tolerant_upserts(spark, tmp_path):
+def test_schema_drift_tolerant_upserts(spark, tmp_path, table_path):
     """Alternator items are schemaless: batches may add attributes
     mid-stream or omit declared ones (a put replaces the WHOLE item).
     With allow_schema_drift the replicator widens state with nulls, a
     drift event is recorded, and newest-wins applies to the full row
     image."""
-    target = str(tmp_path / "cdc_drift")
+    target = table_path(tmp_path / "cdc_drift")
     rep = CdcReplicator(
         target_path=target,
         key_cols=["user_id"],
@@ -276,11 +277,11 @@ def test_schema_drift_tolerant_upserts(spark, tmp_path):
     assert "drift_added" not in rep.metrics[0]
 
 
-def test_schema_drift_rejected_when_disabled(spark, tmp_path):
+def test_schema_drift_rejected_when_disabled(spark, tmp_path, table_path):
     import pytest as _pytest
 
     rep = CdcReplicator(
-        target_path=str(tmp_path / "cdc_strict"),
+        target_path=table_path(tmp_path / "cdc_strict"),
         key_cols=["user_id"],
         value_cols=["value"],
     )
@@ -292,11 +293,11 @@ def test_schema_drift_rejected_when_disabled(spark, tmp_path):
         rep.apply_batch(bad, 0)
 
 
-def test_schema_drift_survives_replicator_restart(spark, tmp_path):
+def test_schema_drift_survives_replicator_restart(spark, tmp_path, table_path):
     """A RESTARTED replicator (fresh constructor, same target) must
     re-adopt drifted columns persisted in state — a later batch without
     the drifted attribute cannot erase it from every key."""
-    target = str(tmp_path / "cdc_drift_restart")
+    target = table_path(tmp_path / "cdc_drift_restart")
     rep1 = CdcReplicator(
         target_path=target, key_cols=["user_id"], value_cols=["value"],
         allow_schema_drift=True,
@@ -418,65 +419,56 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_crash_between_swap_renames_loses_nothing(spark, tmp_path, monkeypatch):
-    """A crash after the old generation is moved aside but before staging
-    is renamed into place leaves no target; a fresh replicator must resume
-    from the completed staging dir and end where an uninterrupted run
-    ends."""
+def test_crash_between_swap_renames_loses_nothing(spark, tmp_path, table_path, crash_commit):
+    """A crash at any step of a batch's commit (after the data write,
+    during the record write, during the sweep of the previous generation)
+    leaves the record naming one complete generation: the previous state,
+    or the new one when only the sweep was cut. A fresh replicator that
+    gets the batch again (at-least-once) ends where an uninterrupted run
+    ends, and its commit sweeps everything the record does not name."""
     import os
 
-    import pytest
-
     batches = _cdc_batches(spark)
-    ref = CdcReplicator(str(tmp_path / "ref"), ["user_id"], ["value"])
+    ref = CdcReplicator(table_path(tmp_path / "ref"), ["user_id"], ["value"])
+    states = []
     for i, b in enumerate(batches):
         ref.apply_batch(b, i)
-    want = _rows(ref.current(spark))
+        states.append(_rows(ref.current(spark)))
 
-    target = str(tmp_path / "crashed")
-    rep = CdcReplicator(target, ["user_id"], ["value"])
-    rep.apply_batch(batches[0], 0)
-    real_replace, calls = os.replace, []
+    for point in crash_commit.points:
+        target = table_path(tmp_path / point)
+        rep = CdcReplicator(target, ["user_id"], ["value"])
+        rep.apply_batch(batches[0], 0)
+        with crash_commit(target, point):
+            rep.apply_batch(batches[1], 1)
+        fresh = CdcReplicator(target, ["user_id"], ["value"])
+        assert _rows(fresh.current(spark)) == states[1 if point == "sweep" else 0], point
 
-    def flaky_replace(src, dst):
-        calls.append((src, dst))
-        if len(calls) == 2:
-            raise OSError("injected crash between the generation renames")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", flaky_replace)
-    with pytest.raises(OSError, match="injected"):
-        rep.apply_batch(batches[1], 1)
-    monkeypatch.undo()
-    assert not os.path.exists(target)
-    assert os.path.exists(os.path.join(target + ".staging", "_SUCCESS"))
-    # the completed staging dir is the state while the swap is unfinished
-    assert _rows(rep.current(spark)) == _rows(
-        spark.read.parquet(target + ".staging").filter(F.col("op") != "REMOVE").drop("op")
-    )
-
-    resumed = CdcReplicator(target, ["user_id"], ["value"])
-    resumed.apply_batch(batches[2], 2)
-    assert _rows(resumed.current(spark)) == want
-    assert sorted(os.listdir(tmp_path)) == ["crashed", "ref"]
+        for i in (1, 2):
+            fresh.apply_batch(batches[i], i)
+        assert _rows(fresh.current(spark)) == states[2], point
+        left = [e for e in os.listdir(tmp_path / point) if not e.startswith(("_", "."))]
+        assert [os.path.join(target, e) for e in left] == live_paths(target), point
+    assert sorted(os.listdir(tmp_path)) == sorted([*crash_commit.points, "ref"])
 
 
-def test_torn_staging_write_is_ignored(spark, tmp_path):
-    """A staging dir without _SUCCESS (a crash during the write) holds no
-    committed generation: with no target yet, the replicator starts from
-    nothing."""
+def test_torn_staging_write_is_ignored(spark, tmp_path, table_path):
+    """A generation directory the record does not name (a crash during the
+    first batch's write, after the fresh target's empty record) holds no
+    committed state: the replicator starts from nothing, and its commit
+    sweeps the torn directory."""
     target = tmp_path / "torn"
-    staging = tmp_path / "torn.staging"
-    staging.mkdir()
-    (staging / "part-00000.parquet").write_bytes(b"PAR1 half-written")
-    rep = CdcReplicator(str(target), ["user_id"], ["value"])
+    commit(table_path(target), [])
+    (target / "g-torn").mkdir()
+    (target / "g-torn" / "part-00000.parquet").write_bytes(b"PAR1 half-written")
+    rep = CdcReplicator(table_path(target), ["user_id"], ["value"])
     rep.apply_batch(_cdc_batches(spark)[0], 0)
     assert sorted(r["user_id"] for r in rep.current(spark).collect()) == [1, 2, 3]
-    assert not staging.exists()
+    assert not (target / "g-torn").exists()
 
 
-def test_empty_batch_records_no_counts(spark, tmp_path):
-    rep = CdcReplicator(str(tmp_path / "empty"), ["user_id"], ["value"])
+def test_empty_batch_records_no_counts(spark, tmp_path, table_path):
+    rep = CdcReplicator(table_path(tmp_path / "empty"), ["user_id"], ["value"])
     rep.apply_batch(_cdc_batches(spark)[0], 0)
     before = _rows(rep.current(spark))
     rep.apply_batch(spark.createDataFrame([], _CDC_SCHEMA), 1)
@@ -484,11 +476,11 @@ def test_empty_batch_records_no_counts(spark, tmp_path):
     assert _rows(rep.current(spark)) == before
 
 
-def test_op_counts_observed_and_unknown_op_recounted(spark, tmp_path):
+def test_op_counts_observed_and_unknown_op_recounted(spark, tmp_path, table_path):
     """Op counts ride the state write; a batch with an op outside
     INSERT/MODIFY/REMOVE (or a null op) is counted by the separate
     aggregation, so no count is lost and keys match the ops present."""
-    rep = CdcReplicator(str(tmp_path / "ops"), ["user_id"], ["value"])
+    rep = CdcReplicator(table_path(tmp_path / "ops"), ["user_id"], ["value"])
     b0, b1, _ = _cdc_batches(spark)
     rep.apply_batch(b0, 0)
     rep.apply_batch(b1, 1)
@@ -504,14 +496,14 @@ def test_op_counts_observed_and_unknown_op_recounted(spark, tmp_path):
     ]
 
 
-def test_second_drain_reads_pinned_schema(spark, tmp_path):
+def test_second_drain_reads_pinned_schema(spark, tmp_path, table_path):
     """After a drain the replicator reads its state with the schema it
     wrote (no footer inference); a second drain of the same log through
     that pinned read is a no-op and matches an inferred read."""
-    src = str(tmp_path / "log")
+    src = table_path(tmp_path / "log")
     for i, b in enumerate(_cdc_batches(spark)):
         b.write.mode("append").parquet(src)
-    target = str(tmp_path / "pinned")
+    target = table_path(tmp_path / "pinned")
     rep = CdcReplicator(target, ["user_id"], ["value"])
 
     def drain(ckpt):
@@ -525,12 +517,12 @@ def test_second_drain_reads_pinned_schema(spark, tmp_path):
     first = _rows(rep.current(spark))
     drain("ckpt2")
     assert _rows(rep.current(spark)) == first
-    inferred = spark.read.parquet(target)
+    inferred = spark.read.parquet(*live_paths(target))
     assert [f.name for f in inferred.schema] == [f.name for f in rep._schema]
     assert _rows(inferred.filter(F.col("op") != "REMOVE").drop("op")) == first
 
 
-def test_unreadable_state_raises(spark, tmp_path):
+def test_unreadable_state_raises(spark, tmp_path, table_path):
     """An existing state that cannot be read must fail the batch, not be
     silently replaced by it."""
     import os
@@ -540,7 +532,7 @@ def test_unreadable_state_raises(spark, tmp_path):
     target = tmp_path / "corrupt"
     target.mkdir()
     (target / "part-00000.parquet").write_bytes(b"not a parquet file")
-    rep = CdcReplicator(str(target), ["user_id"], ["value"])
+    rep = CdcReplicator(table_path(target), ["user_id"], ["value"])
     with pytest.raises(Exception):
         rep.apply_batch(_cdc_batches(spark)[0], 0)
     assert os.listdir(target) == ["part-00000.parquet"]

@@ -635,7 +635,6 @@ def run_pipelines(
             return int(s["rowCount"])
         finally:
             shutil.rmtree(root, ignore_errors=True)
-            shutil.rmtree(root + ".inprogress", ignore_errors=True)
 
     record("shuffle_shard_manifest", n_docs, shard_writer)
 
