@@ -49,10 +49,16 @@ the single writer).
 
 Scale notes: per batch the fixpoint runs on the CONTRACTED graph (batch
 edges + the component labels they touch), never the history; edge
-generation probes the staged union keys (dedup.simhash_staged_probe —
-broadcast batch keys, partition-pruned stage scan, batch-linear edges);
-and per-batch writes are proportional to touched components + new units.
-At 100 TB raise ``n_buckets``/``n_key_buckets`` so each directory stays a
+generation probes the staged union keys (partition-pruned to the key
+buckets the batch's keys hash into, batch-linear edges); and per-batch
+writes are proportional to touched components + new units. A batch of at
+most ``LOCAL_BATCH_DOCS_CAP`` documents is read with ONE bounded collect
+and computed in-process; while the partitions it touches are under
+``LOCAL_PARTITION_BYTES_CAP`` on disk, they are read and written with
+pyarrow, so the step schedules no other Spark job. Past either cap the
+same step runs distributed (dedup.simhash_staged_probe — broadcast batch
+keys against the pruned stage scan — and Spark bucket rewrites). At
+100 TB raise ``n_buckets``/``n_key_buckets`` so each directory stays a
 few GB.
 """
 
@@ -73,6 +79,7 @@ from scylla_migrator_spark.analytics.components import (
 )
 from scylla_migrator_spark.pathio import for_path
 from scylla_migrator_spark.streaming.rollup import (
+    _M64,
     BUCKET_COL,
     _bucket_expr,
     _table_buckets,
@@ -300,7 +307,9 @@ def _read_journal(spark: SparkSession, journal_path: str) -> dict[int, int]:
     in-process keyed by the journal's file listing: the streaming query
     is the SINGLE writer (module contract), so between this process's
     own appends/rewrites the listing is the identity of the content —
-    a micro-batch pays an fs listing, not a Spark job, to resolve."""
+    a micro-batch pays an fs listing, not a Spark job, to resolve. A
+    changed listing is read with pyarrow: the log is collected into a
+    driver dict either way, so a Spark read would only add a job."""
     if not os.path.isdir(journal_path):
         return {}
     parts = tuple(
@@ -320,10 +329,7 @@ def _read_journal(spark: SparkSession, journal_path: str) -> dict[int, int]:
     hit = cache.get(journal_path)
     if hit is not None and hit[0] == parts:
         return hit[1]
-    mp = {
-        r["old"]: r["new"]
-        for r in spark.read.parquet(journal_path).collect()
-    }
+    mp = dict(_read_parquet_dir(journal_path, ["old", "new"]))
     cache[journal_path] = (parts, mp)
     return mp
 
@@ -358,20 +364,26 @@ def _resolve_labels(
     )
 
 
-# small-batch LOCAL path: below this many batch documents the whole
-# generation (keys, edges, merge, journal, bucket math) is computed
-# in-process from ONE collect of the batch's fingerprints — a micro-batch
-# at 5 s cadence otherwise pays ~6 scheduled Spark jobs of pure fixed
-# cost (guide §1.2: fix the distributed algorithm first; here the
-# "algorithm" for a small batch is: don't distribute the batch-sized
-# half). Batches past the cap (e.g. a corpus-sized initial load) take the
-# distributed path unchanged. The collect is bounded by the cap
-# (~50 B/row), the same driver-boundedness argument as the existing
-# edge-take/union-find (MAX_LOCAL_MERGE_EDGES).
+# small-batch LOCAL path: up to this many batch documents the whole
+# generation (keys, probe, edges, merge, journal, bucket math) is computed
+# in-process from ONE bounded collect of the batch's fingerprints
+# (``limit(cap + 1)``: one more row than the cap tells an over-cap batch
+# apart without a separate count). Batches past the cap (e.g. a
+# corpus-sized initial load) take the distributed path unchanged. The
+# collect is bounded by the cap (~50 B/row), the same driver-boundedness
+# argument as the edge-take/union-find (MAX_LOCAL_MERGE_EDGES).
 LOCAL_BATCH_DOCS_CAP = 20_000
 # keys fan out C(blocks, blocks-h)x per unit; bound the driver-resident
 # key list independently of the doc cap
 LOCAL_BATCH_KEYS_CAP = 2_000_000
+# the on-disk byte gate of every in-process partition read: the touched
+# key partitions of an upsert's stage probe, the affected serving buckets
+# of its rewrite, a retraction's buckets and key partitions, and the whole
+# stage or serving table of compaction and rebuild. Under it the read is
+# a pyarrow read of the pruned partitions (actual bytes — the same signal
+# AQE plans on); past it (a mega-cluster, a GB-sized key partition) the
+# same step runs as Spark jobs.
+LOCAL_PARTITION_BYTES_CAP = 8 << 20
 
 _PA_TYPES = {"string": "string", "bigint": "int64", "int": "int32", "boolean": "bool_"}
 
@@ -410,11 +422,46 @@ def _write_bucketed_parquet(
         )
 
 
+def _local_grp_type(schema, id_col: str, source_col: str) -> str | None:
+    """The group column's type when a batch of ``schema`` fits the local
+    paths — the pyarrow writers and the driver-side hash twins assume a
+    long id, a long ``sh`` fingerprint and a group of a ``_PA_TYPES``
+    type — else None (the batch runs the distributed path)."""
+    fields = {f.name: f.dataType.simpleString() for f in schema.fields}
+    grp = fields.get(source_col)
+    if fields.get(id_col) != "bigint" or fields.get("sh") != "bigint":
+        return None
+    return grp if grp in _PA_TYPES else None
+
+
+def _hamming(a: int, b: int) -> int:
+    """Spark's ``bit_count(a ^ b)`` of two longs (two's complement)."""
+    return ((a ^ b) & _M64).bit_count()
+
+
+def _stage_scan_metrics(keys_path: str, kbs: list[int], metrics: dict) -> None:
+    """The stage probe's scan numbers from the directory listing and the
+    parquet footers — no Spark job: the rows and files under the probed
+    key partitions, and the files of the whole stage."""
+    import pyarrow.parquet as pq
+
+    scanned = [
+        f
+        for b in kbs
+        for f in _part_files(os.path.join(keys_path, f"{KEY_BUCKET_COL}={b}"))
+    ]
+    metrics["staged_rows_scanned"] = sum(
+        pq.read_metadata(f).num_rows for f in scanned
+    )
+    metrics["staged_files_scanned"] = len(scanned)
+    metrics["staged_files_total"] = len(_part_files(keys_path))
+
+
 def _local_upsert(
     spark: SparkSession,
-    fp_plan: DataFrame,
+    rows: list[tuple],
+    grp_type: str,
     have_state: bool,
-    staged: DataFrame | None,
     serving_path: str,
     keys_path: str,
     journal_path: str,
@@ -427,15 +474,19 @@ def _local_upsert(
     metrics: dict | None,
     applied_marker: dict | None,
 ) -> tuple[bool, list[int] | None]:
-    """In-process generation for a small batch: returns ``(handled,
-    result)`` — ``handled=False`` means a cap or type guard tripped and
-    the caller must run the distributed path instead. Semantics are
-    IDENTICAL to the distributed body (same edge families, same journal
-    resolution, same manifest protocol); the only difference is where
-    the batch-sized half of the work happens. Spark jobs per generation:
-    one batch collect + (with state) one pruned stage-probe join + one
-    pruned serving rewrite; the first generation writes entirely via
-    pyarrow."""
+    """In-process generation for a small batch of ``(id, source, sh)``
+    ``rows`` (already collected, of the types ``_local_grp_type``
+    admits): returns ``(handled, result)`` — ``handled=False`` means a
+    cap or null guard tripped before anything was written and the caller
+    must run the distributed path instead. Semantics are IDENTICAL to the
+    distributed body (same edge families, same journal resolution, same
+    manifest protocol); the only difference is where the batch-sized half
+    of the work happens. While the touched key partitions and the
+    affected serving buckets fit ``LOCAL_PARTITION_BYTES_CAP``, the stage
+    probe and the serving rewrite read them with pyarrow and the
+    generation schedules no Spark job; past the cap the probe is one
+    broadcast join over the pruned stage scan and the rewrite one pruned
+    Spark write, as at scale."""
     import time as _time
 
     from scylla_migrator_spark.analytics.dedup import (
@@ -452,17 +503,6 @@ def _local_upsert(
         _phases[name] = round(now - _last, 3)
         _last = now
 
-    # type guard: the pyarrow writers and the driver-side hash twins
-    # assume (long id, string-or-long group, long fingerprint)
-    fields = {f.name: f.dataType.simpleString() for f in fp_plan.schema.fields}
-    if (
-        fields.get("id") != "bigint"
-        or fields.get("sh") != "bigint"
-        or fields.get("source") not in _PA_TYPES
-    ):
-        return False, None
-    rows = [(r[0], r[1], r[2]) for r in fp_plan.collect()]
-    _mark("fingerprint")
     if any(g is None for _i, g, _s in rows):
         # SQL null-group semantics (null joins nothing) differ from
         # Python dict keys — preserve them via the distributed path
@@ -479,8 +519,14 @@ def _local_upsert(
     n_combos = len(union_key_geometry(bits, blocks, max_hamming)[2])
     if len(units) * n_combos > LOCAL_BATCH_KEYS_CAP:
         return False, None
-    unit_keys: dict[tuple, list[tuple[int, int]]] = {
-        u: block_union_key_rows(u[1], bits, blocks, max_hamming) for u in units
+    # each unit's (combo_id, key_val, key bucket), hashed once: the probe's
+    # partition list and the new units' key append both read it
+    unit_keys: dict[tuple, list[tuple[int, int, int]]] = {
+        u: [
+            (j, kv, bucket_of_combo_key(j, kv, n_key_buckets))
+            for j, kv in block_union_key_rows(u[1], bits, blocks, max_hamming)
+        ]
+        for u in units
     }
     journal_map = _read_journal(spark, journal_path)
 
@@ -489,32 +535,47 @@ def _local_upsert(
             c = journal_map[c]
         return c
 
-    # probe the persistent stage (broadcast batch keys, pruned scan) —
-    # the ONE distributed step a stateful batch cannot avoid
+    # probe the persistent stage with the batch's keys, pruned to the key
+    # partitions they hash into
     exact: dict[tuple, tuple[int, int]] = {}
     cand_sb: dict[tuple, dict[int, int]] = {}
     kbs: list[int] | None = None
     if have_state:
-        kbs = sorted(
-            {
-                bucket_of_combo_key(j, kv, n_key_buckets)
-                for keys in unit_keys.values()
-                for j, kv in keys
-            }
-        )
-        if units:
-            probe = spark.createDataFrame(
+        kbs = sorted({kb for keys in unit_keys.values() for _j, _kv, kb in keys})
+        kb_dirs = [os.path.join(keys_path, f"{KEY_BUCKET_COL}={b}") for b in kbs]
+        if not units:
+            matches = []
+        elif sum(_dir_bytes(d) for d in kb_dirs) <= LOCAL_PARTITION_BYTES_CAP:
+            # small partitions: match them in-process against the batch's
+            # keys — the broadcast join below, as a dict lookup
+            probe: dict[tuple, list[int]] = {}
+            for u, keys in unit_keys.items():
+                for j, kv, _kb in keys:
+                    probe.setdefault((u[0], j, kv), []).append(u[1])
+            matches = [
+                (g, psh, ssh, a, c0)
+                for d in kb_dirs
+                for g, j, kv, ssh, a, c0 in _read_parquet_dir(
+                    d, ["grp", "combo_id", "key_val", "sh", "anchor", "comp0"]
+                )
+                for psh in probe.get((g, j, kv), ())
+                if _hamming(psh, ssh) <= max_hamming
+            ]
+        else:
+            probe_df = spark.createDataFrame(
                 [
                     (u[0], j, kv, u[1])
                     for u, keys in unit_keys.items()
-                    for j, kv in keys
+                    for j, kv, _kb in keys
                 ],
-                schema=f"grp {fields['source']}, combo_id int, key_val bigint, sh bigint",
+                schema=f"grp {grp_type}, combo_id int, key_val bigint, sh bigint",
             )
-            st = staged.filter(F.col(KEY_BUCKET_COL).isin(kbs))
-            p, s = probe.alias("p"), st.alias("s")
+            st = spark.read.parquet(keys_path).filter(
+                F.col(KEY_BUCKET_COL).isin(kbs)
+            )
+            p, s = probe_df.alias("p"), st.alias("s")
             ham = F.bit_count(F.col("p.sh").bitwiseXOR(F.col("s.sh"))).cast("int")
-            m = (
+            matches = (
                 F.broadcast(p)
                 .join(
                     s,
@@ -525,21 +586,15 @@ def _local_upsert(
                     ],
                 )
                 .filter(ham <= max_hamming)
-                .select(
-                    F.col("p.grp").alias("g"),
-                    F.col("p.sh").alias("psh"),
-                    F.col("s.sh").alias("ssh"),
-                    "s.anchor",
-                    "s.comp0",
-                )
+                .select("p.grp", "p.sh", "s.sh", "s.anchor", "s.comp0")
                 .collect()
             )
-            for r in m:
-                u = (r["g"], r["psh"])
-                if r["psh"] == r["ssh"]:
-                    exact[u] = (r["anchor"], r["comp0"])
-                else:
-                    cand_sb.setdefault(u, {})[r["anchor"]] = r["comp0"]
+        for g, psh, ssh, a, c0 in matches:
+            u = (g, psh)
+            if psh == ssh:
+                exact[u] = (a, c0)
+            else:
+                cand_sb.setdefault(u, {})[a] = c0
     _mark("probe")
 
     anchor = {u: (exact[u][0] if u in exact else units[u]) for u in units}
@@ -565,7 +620,7 @@ def _local_upsert(
     # cross (batch x batch) among new units, via their own keys
     bykey: dict[tuple, list[tuple]] = {}
     for u in new_units:
-        for j, kv in unit_keys[u]:
+        for j, kv, _kb in unit_keys[u]:
             bykey.setdefault((u[0], j, kv), []).append(u)
     n_pairs = sum(len(v) * (len(v) - 1) // 2 for v in bykey.values())
     if n_pairs > MAX_LOCAL_MERGE_EDGES or len(edges) > MAX_LOCAL_MERGE_EDGES:
@@ -582,7 +637,7 @@ def _local_upsert(
                 if key in seen_bb:
                     continue
                 seen_bb.add(key)
-                if bin(ua[1] ^ ub[1]).count("1") <= max_hamming:
+                if _hamming(ua[1], ub[1]) <= max_hamming:
                     a, b = anchor[ua], anchor[ub]
                     edges.append((a, b) if a < b else (b, a))
     merged_map = minlabel_union_find(
@@ -608,12 +663,10 @@ def _local_upsert(
     for u in new_units:
         a = anchor[u]
         c0 = merged_map.get(a, a)
-        for j, kv in unit_keys[u]:
-            keys_by_bucket.setdefault(
-                bucket_of_combo_key(j, kv, n_key_buckets), []
-            ).append((u[0], j, kv, u[1], a, c0))
+        for j, kv, kb in unit_keys[u]:
+            keys_by_bucket.setdefault(kb, []).append((u[0], j, kv, u[1], a, c0))
     key_fields = [
-        _pa_field("grp", fields["source"]),
+        _pa_field("grp", grp_type),
         _pa_field("combo_id", "int"),
         _pa_field("key_val", "bigint"),
         _pa_field("sh", "bigint"),
@@ -648,19 +701,12 @@ def _local_upsert(
         metrics["n_edges"] = len(edges)
         metrics["n_merged"] = len(merged_map)
         metrics["local_batch"] = True
-        if staged is not None and kbs is not None:
-            scan = staged.filter(F.col(KEY_BUCKET_COL).isin(kbs))
-            metrics["staged_rows_scanned"] = scan.count()
-            metrics["staged_files_scanned"] = (
-                scan.select(F.input_file_name()).distinct().count()
-            )
-            metrics["staged_files_total"] = (
-                staged.select(F.input_file_name()).distinct().count()
-            )
+        if kbs is not None:
+            _stage_scan_metrics(keys_path, kbs, metrics)
 
     serving_fields = [
         _pa_field("id", "bigint"),
-        _pa_field("source", fields["source"]),
+        _pa_field("source", grp_type),
         _pa_field("sh", "bigint"),
         _pa_field("comp", "bigint"),
         _pa_field("paired", "boolean"),
@@ -707,7 +753,7 @@ def _local_upsert(
         aff_dirs = [
             os.path.join(serving_path, f"{BUCKET_COL}={b}") for b in affected
         ]
-        if sum(_dir_bytes(d) for d in aff_dirs) <= LOCAL_RETRACT_BYTES_CAP:
+        if sum(_dir_bytes(d) for d in aff_dirs) <= LOCAL_PARTITION_BYTES_CAP:
             # affected partitions small on disk: apply the remap/pair
             # flips in-process and write the generation with pyarrow
             by_bucket: dict[int, list[tuple]] = {}
@@ -740,7 +786,7 @@ def _local_upsert(
             ).withColumn("__touched", F.lit(True))
             batch_local_df = spark.createDataFrame(
                 batch_rows_local or [],
-                f"id bigint, source {fields['source']}, sh bigint, comp bigint, paired boolean",
+                f"id bigint, source {grp_type}, sh bigint, comp bigint, paired boolean",
             )
             rewritten = (
                 pruned.join(
@@ -833,9 +879,53 @@ def components_upsert_batch(
     ``metrics``, when a dict is passed, is filled with per-batch
     observability numbers the plan pins assert on (probe_kbs,
     staged_rows_scanned, n_edges, n_merged, affected_buckets)."""
+    return _upsert_batch(
+        _fp_frame(batch_df, text_col, id_col, source_col, bits), None,
+        serving_path, bits, max_hamming, n_buckets, n_key_buckets,
+        compact_journal_above, metrics, applied_marker,
+    )
+
+
+def _fp_frame(
+    batch_df: DataFrame, text_col: str, id_col: str, source_col: str, bits: int
+) -> DataFrame:
+    """An upsert batch's (id, source, sh) frame: its own ``sh`` column
+    when it carries one, else fingerprinted here."""
+    if "sh" not in batch_df.columns:
+        batch_df = D.simhash_fingerprints(
+            batch_df.select(id_col, source_col, text_col),
+            text_col,
+            id_col,
+            carry_cols=[source_col],
+            bits=bits,
+            hash_hex=(bits + 3) // 4,
+        )
+    return batch_df.select(
+        F.col(id_col).alias("id"), F.col(source_col).alias("source"), "sh"
+    )
+
+
+def _upsert_batch(
+    fp_plan: DataFrame,
+    rows: list[tuple] | None,
+    serving_path: str,
+    bits: int,
+    max_hamming: int,
+    n_buckets: int,
+    n_key_buckets: int,
+    compact_journal_above: int | None,
+    metrics: dict | None,
+    applied_marker: dict | None,
+) -> list[int] | None:
+    """``components_upsert_batch`` over the batch's (id, source, sh)
+    frame. ``rows`` is that batch already collected — at most
+    ``LOCAL_BATCH_DOCS_CAP`` rows of types ``_local_grp_type`` admits, as
+    the CDC driver's one read of a micro-batch gives them — or None, and
+    then one bounded collect reads it here. Only a batch past the cap, or
+    one the local path declines, runs ``fp_plan`` through Spark."""
     import time as _time
 
-    spark = batch_df.sparkSession
+    spark = fp_plan.sparkSession
     _phases: dict[str, float] = {}
     _last = _time.perf_counter()
 
@@ -855,7 +945,6 @@ def components_upsert_batch(
             f"bits={bits} admits at most {bits}"
         )
     have_state = os.path.isdir(serving_path)
-    staged = None
     if have_state:
         n_buckets = _table_buckets(serving_path, n_buckets)
         if not os.path.isdir(keys_path):
@@ -871,32 +960,23 @@ def components_upsert_batch(
             )
         n_key_buckets = _table_buckets(keys_path, n_key_buckets)
         _check_geometry(keys_path, bits, blocks, max_hamming)
-        staged = spark.read.parquet(keys_path)
-    if "sh" in batch_df.columns:
-        fp_plan = batch_df.select(
-            F.col(id_col).alias("id"), F.col(source_col).alias("source"), "sh"
-        )
-    else:
-        fp_plan = D.simhash_fingerprints(
-            batch_df.select(id_col, source_col, text_col),
-            text_col,
-            id_col,
-            carry_cols=[source_col],
-            bits=bits,
-            hash_hex=(bits + 3) // 4,
-        ).select(
-            F.col(id_col).alias("id"), F.col(source_col).alias("source"), "sh"
-        )
-    # small-batch local path: one narrow count decides; a batch under the
-    # cap runs the whole generation in-process (see _local_upsert)
-    if batch_df.count() <= LOCAL_BATCH_DOCS_CAP:
+    # small-batch local path: the type guard, then ONE bounded collect
+    # decides; a batch within the cap runs the whole generation
+    # in-process (see _local_upsert)
+    grp_type = _local_grp_type(fp_plan.schema, "id", "source")
+    if rows is None and grp_type is not None:
+        got = fp_plan.limit(LOCAL_BATCH_DOCS_CAP + 1).collect()
+        if len(got) <= LOCAL_BATCH_DOCS_CAP:
+            rows = [tuple(r) for r in got]
+    if rows is not None:
         handled, res = _local_upsert(
-            spark, fp_plan, have_state, staged, serving_path, keys_path,
+            spark, rows, grp_type, have_state, serving_path, keys_path,
             journal_path, bits, blocks, max_hamming, n_buckets,
             n_key_buckets, compact_journal_above, metrics, applied_marker,
         )
         if handled:
             return res
+    staged = spark.read.parquet(keys_path) if have_state else None
     fp_b = fp_plan.localCheckpoint(eager=True)
     _mark("fingerprint")
     if not have_state and fp_b.isEmpty():
@@ -1086,18 +1166,8 @@ def components_upsert_batch(
         metrics["probe_kbs"] = pr.probe_kbs
         metrics["n_edges"] = edges.count()
         metrics["n_merged"] = merged.count()
-        if staged is not None and pr.probe_kbs is not None:
-            scan = staged.filter(F.col(KEY_BUCKET_COL).isin(pr.probe_kbs))
-            metrics["staged_rows_scanned"] = scan.count()
-            # input_file_name over the PRUNED read counts the files the
-            # scan actually touches (inputFiles() would report the whole
-            # relation, ignoring partition pruning)
-            metrics["staged_files_scanned"] = (
-                scan.select(F.input_file_name()).distinct().count()
-            )
-            metrics["staged_files_total"] = (
-                staged.select(F.input_file_name()).distinct().count()
-            )
+        if have_state and pr.probe_kbs is not None:
+            _stage_scan_metrics(keys_path, pr.probe_kbs, metrics)
 
     if not have_state:
         # first generation: full write, bucketed layout from the start
@@ -1247,21 +1317,18 @@ def components_upsert_batch(
     return affected
 
 
-# local retraction path: when the affected bucket/key partitions are
-# small ON DISK (the size gate below — actual bytes, the same signal AQE
-# plans on), the survivor re-solve runs in-process over pyarrow reads of
-# the pruned partitions. A retraction touching a mega-cluster blows the
-# byte gate (or local_merge_cap) and takes the distributed path.
-LOCAL_RETRACT_BYTES_CAP = 8 << 20
+def _part_files(d: str) -> list[str]:
+    """The data files under a (possibly partitioned) table directory."""
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(d)
+        for f in files
+        if f.startswith("part-")
+    ]
 
 
 def _dir_bytes(d: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.startswith("part-"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(os.path.getsize(f) for f in _part_files(d))
 
 
 def _read_parquet_dir(d: str, columns: list[str]) -> list[tuple]:
@@ -1322,7 +1389,7 @@ def _local_retract(
     }
     kb0 = sorted({bucket_of_combo_key(0, kv, n_key_buckets) for kv in key0.values()})
     kb0_dirs = [os.path.join(keys_path, f"{KEY_BUCKET_COL}={b}") for b in kb0]
-    if sum(_dir_bytes(d) for d in kb0_dirs) > LOCAL_RETRACT_BYTES_CAP:
+    if sum(_dir_bytes(d) for d in kb0_dirs) > LOCAL_PARTITION_BYTES_CAP:
         return False, None
     want = {(u[0], kv, u[1]) for u, kv in key0.items()}
     comps_old: set[int] = set()
@@ -1342,7 +1409,7 @@ def _local_retract(
     old_dirs = {
         b: os.path.join(serving_path, f"{BUCKET_COL}={b}") for b in buckets_old
     }
-    if sum(_dir_bytes(d) for d in old_dirs.values()) > LOCAL_RETRACT_BYTES_CAP:
+    if sum(_dir_bytes(d) for d in old_dirs.values()) > LOCAL_PARTITION_BYTES_CAP:
         return False, None
     cols = ["id", "source", "sh", "comp", "paired"]
     passthrough: list[tuple] = []
@@ -1386,7 +1453,7 @@ def _local_retract(
                 if k in seen:
                     continue
                 seen.add(k)
-                if bin(sa ^ sb).count("1") <= max_hamming:
+                if _hamming(sa, sb) <= max_hamming:
                     edges.append((ra, rb) if ra < rb else (rb, ra))
     if len(edges) > local_merge_cap:
         return False, None
@@ -1404,7 +1471,7 @@ def _local_retract(
         extra_dirs = [
             os.path.join(serving_path, f"{BUCKET_COL}={b}") for b in extra
         ]
-        if sum(_dir_bytes(d) for d in extra_dirs) > LOCAL_RETRACT_BYTES_CAP:
+        if sum(_dir_bytes(d) for d in extra_dirs) > LOCAL_PARTITION_BYTES_CAP:
             return False, None
         for d in extra_dirs:
             extra_rows.extend(_read_parquet_dir(d, cols))
@@ -1415,18 +1482,20 @@ def _local_retract(
     for (c, g, s), rep in units_s.items():
         corrected[(g, s)] = (rep, labels_map.get(rep, rep))
     touched = set(corrected) | units_del
-    kb_aff = sorted(
-        {
-            bucket_of_combo_key(j, kv, n_key_buckets)
-            for g, s in touched
+    # each touched unit's (combo_id, key_val, key bucket), hashed once
+    touched_keys = {
+        (g, s): [
+            (j, kv, bucket_of_combo_key(j, kv, n_key_buckets))
             for j, kv in block_union_key_rows(s, bits, blocks, max_hamming)
-        }
-    )
+        ]
+        for g, s in touched
+    }
+    kb_aff = sorted({kb for keys in touched_keys.values() for _j, _kv, kb in keys})
     driver_rows += len(kb_aff)
     kb_dirs = {
         b: os.path.join(keys_path, f"{KEY_BUCKET_COL}={b}") for b in kb_aff
     }
-    if sum(_dir_bytes(d) for d in kb_dirs.values()) > LOCAL_RETRACT_BYTES_CAP:
+    if sum(_dir_bytes(d) for d in kb_dirs.values()) > LOCAL_PARTITION_BYTES_CAP:
         return False, None
     gen = uuid.uuid4().hex[:8]
     keys_by_bucket: dict[int, list[tuple]] = {}
@@ -1436,10 +1505,8 @@ def _local_retract(
             if (row[0], row[3]) not in touched:
                 keys_by_bucket.setdefault(b, []).append(row)
     for (g, s), (a, c0) in corrected.items():
-        for j, kv in block_union_key_rows(s, bits, blocks, max_hamming):
-            b = bucket_of_combo_key(j, kv, n_key_buckets)
-            if b in kb_dirs:
-                keys_by_bucket.setdefault(b, []).append((g, j, kv, s, a, c0))
+        for j, kv, b in touched_keys[(g, s)]:
+            keys_by_bucket.setdefault(b, []).append((g, j, kv, s, a, c0))
     # 5. writes (all pyarrow) + the shared manifest protocol
     tmp = f"{serving_path}__gen_{gen}"
     scratch = [tmp]
@@ -1589,7 +1656,38 @@ def components_retract_batch(
             "keys and component bucket without a full scan — an id-only "
             "delete API would need an id->comp index"
         )
-    spark = batch_df.sparkSession
+    return _retract_batch(
+        _del_frame(batch_df, id_col, source_col), None, serving_path, bits,
+        max_hamming, n_buckets, n_key_buckets, metrics, local_merge_cap,
+        applied_marker,
+    )
+
+
+def _del_frame(batch_df: DataFrame, id_col: str, source_col: str) -> DataFrame:
+    """A retraction batch's (__did, __grp, __sh) frame."""
+    return batch_df.select(
+        F.col(id_col).alias("__did"),
+        F.col(source_col).alias("__grp"),
+        F.col("sh").alias("__sh"),
+    )
+
+
+def _retract_batch(
+    del_df: DataFrame,
+    rows: list[tuple] | None,
+    serving_path: str,
+    bits: int,
+    max_hamming: int,
+    n_buckets: int,
+    n_key_buckets: int,
+    metrics: dict | None,
+    local_merge_cap: int,
+    applied_marker: dict | None,
+) -> list[int] | None:
+    """``components_retract_batch`` over the batch's (__did, __grp, __sh)
+    frame; ``rows`` is that frame already collected (the CDC driver's one
+    read of a micro-batch), or None to collect it here."""
+    spark = del_df.sparkSession
     _recover_pending(serving_path)
     if not os.path.isdir(serving_path):
         return None
@@ -1610,14 +1708,7 @@ def components_retract_batch(
     # asserts the total is O(batch + buckets + journal + cap), NEVER
     # member-scale of an affected component
     driver_rows = 0
-    del_rows = [
-        (r[0], r[1], r[2])
-        for r in batch_df.select(
-            F.col(id_col).alias("__did"),
-            F.col(source_col).alias("__grp"),
-            F.col("sh").alias("__sh"),
-        ).collect()
-    ]
+    del_rows = rows if rows is not None else [tuple(r) for r in del_df.collect()]
     driver_rows += len(del_rows)
     if not del_rows:
         return []
@@ -1625,8 +1716,8 @@ def components_retract_batch(
     driver_rows += len(journal_map)
     # small-state local path (byte-gated; falls back on any cap)
     grp_type = {
-        f.name: f.dataType.simpleString() for f in batch_df.schema.fields
-    }.get(source_col, "")
+        f.name: f.dataType.simpleString() for f in del_df.schema.fields
+    }["__grp"]
     handled, res = _local_retract(
         spark, serving_path, keys_path, journal_path, del_rows, journal_map,
         bits, blocks, max_hamming, n_buckets, n_key_buckets,
@@ -1980,7 +2071,7 @@ def compact_components_stage(spark: SparkSession, serving_path: str) -> int:
             c = mp[c]
         return c
 
-    if _dir_bytes(keys_path) <= LOCAL_RETRACT_BYTES_CAP:
+    if _dir_bytes(keys_path) <= LOCAL_PARTITION_BYTES_CAP:
         # small stage: the fold is a per-row comp0 -> terminal-label map
         # (every key row of a unit carries the unit's anchor/comp0, so
         # the anchor join of the distributed path reduces to _term) —
@@ -2072,7 +2163,7 @@ def rebuild_components_stage(
     _recover_pending(serving_path)
     keys_path = serving_path + KEYS_SUFFIX
     blocks = min(bits, max(10, max_hamming + 2))
-    if _dir_bytes(serving_path) <= LOCAL_RETRACT_BYTES_CAP:
+    if _dir_bytes(serving_path) <= LOCAL_PARTITION_BYTES_CAP:
         # small serving table: derive the units and their key rows
         # in-process (pinned twins), write the stage with pyarrow —
         # same manifest, no Spark jobs
@@ -2179,7 +2270,13 @@ def components_cdc_stream(
     generation's manifest, and a replayed batch no-ops the steps the
     marker already records — the upsert append is made idempotent per
     batch id (retraction is naturally idempotent: replayed victims are
-    no longer staged). Returns the started query."""
+    no longer staged).
+
+    A micro-batch that carries ``sh`` is read ONCE — one collect bounded
+    by ``LOCAL_BATCH_DOCS_CAP`` — and split into upserts and deletes on
+    the driver; a step with no rows writes no generation. Without ``sh``,
+    or past the cap, each step reads its own filtered frame. Returns the
+    started query."""
 
     if op_col not in stream.columns:
         raise ValueError(f"CDC stream must carry an {op_col!r} column")
@@ -2187,12 +2284,30 @@ def components_cdc_stream(
     def body(bdf: DataFrame, bid: int) -> None:
         st = read_applied_marker(serving_path)
         done = list(st["steps"]) if st and st.get("batch_id") == bid else []
+        if "upsert" in done and "retract" in done:
+            return  # replayed batch: both its generations already committed
         ups = bdf.filter(
             (F.col(op_col) != "delete") | F.col(op_col).isNull()
         ).drop(op_col)
         dels = bdf.filter(F.col(op_col) == "delete").drop(op_col)
+        up_rows = del_rows = None
+        types = {f.name: f.dataType.simpleString() for f in bdf.schema.fields}
+        if types[op_col] == "string" and _local_grp_type(
+            bdf.schema, id_col, source_col
+        ):
+            # ONE bounded read of the micro-batch serves both steps; the
+            # op split runs on the driver under the same null-safe rule
+            got = (
+                bdf.select(id_col, source_col, "sh", op_col)
+                .limit(LOCAL_BATCH_DOCS_CAP + 1)
+                .collect()
+            )
+            if len(got) <= LOCAL_BATCH_DOCS_CAP:
+                up_rows = [(i, g, s) for i, g, s, op in got if op != "delete"]
+                del_rows = [(i, g, s) for i, g, s, op in got if op == "delete"]
         if "upsert" not in done:
-            if not ups.isEmpty():
+            marker = {"batch_id": bid, "steps": done + ["upsert"]}
+            if up_rows is None and not ups.isEmpty():
                 components_upsert_batch(
                     ups,
                     serving_path,
@@ -2203,23 +2318,35 @@ def components_cdc_stream(
                     n_buckets=n_buckets,
                     n_key_buckets=n_key_buckets,
                     compact_journal_above=compact_journal_above,
-                    applied_marker={
-                        "batch_id": bid, "steps": done + ["upsert"]
-                    },
+                    applied_marker=marker,
+                )
+            elif up_rows:
+                _upsert_batch(
+                    _fp_frame(ups, "text", id_col, source_col, bits), up_rows,
+                    serving_path, bits, max_hamming, n_buckets, n_key_buckets,
+                    compact_journal_above, None, marker,
                 )
             done = done + ["upsert"]
-        if "retract" not in done and not dels.isEmpty():
-            components_retract_batch(
-                dels,
-                serving_path,
-                id_col=id_col,
-                source_col=source_col,
-                bits=bits,
-                max_hamming=max_hamming,
-                n_buckets=n_buckets,
-                n_key_buckets=n_key_buckets,
-                applied_marker={"batch_id": bid, "steps": done + ["retract"]},
-            )
+        if "retract" not in done:
+            marker = {"batch_id": bid, "steps": done + ["retract"]}
+            if del_rows is None and not dels.isEmpty():
+                components_retract_batch(
+                    dels,
+                    serving_path,
+                    id_col=id_col,
+                    source_col=source_col,
+                    bits=bits,
+                    max_hamming=max_hamming,
+                    n_buckets=n_buckets,
+                    n_key_buckets=n_key_buckets,
+                    applied_marker=marker,
+                )
+            elif del_rows:
+                _retract_batch(
+                    _del_frame(dels, id_col, source_col), del_rows,
+                    serving_path, bits, max_hamming, n_buckets, n_key_buckets,
+                    None, MAX_LOCAL_MERGE_EDGES, marker,
+                )
 
     return (
         stream.writeStream.outputMode("append")

@@ -850,3 +850,185 @@ def test_distributed_upsert_matches_local_path(spark, tmp_path, monkeypatch):
         assert table(dist) == table(local)
         assert _served(spark, dist) == _full_labelling(spark, seen)
     assert len(resolved) == 1 and resolved[0] > 0
+
+
+_FEED_SCHEMA = "doc_id long, source string, sh long, op string"
+
+
+def _write_feed(spark, stage, batches):
+    """One parquet file per micro-batch of (doc_id, source, sh, op) rows
+    under ``stage`` (an empty batch is an empty file)."""
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, _FEED_SCHEMA).coalesce(1).write.parquet(
+            os.path.join(stage, f"{i:02d}")
+        )
+
+
+def _run_feed(spark, stage, serving, checkpoint):
+    """Drain the feed under ``stage`` through components_cdc_stream, one
+    file per micro-batch."""
+    stream = (
+        spark.readStream.schema(_FEED_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage + "/*")
+    )
+    CC.components_cdc_stream(stream, serving, checkpoint).awaitTermination()
+
+
+def _job_mark(spark) -> int:
+    """The id of a one-task marker job. Spark numbers jobs in submission
+    order, so the ids strictly between two marks are every job the context
+    ran in between, on any thread — what a job listener would count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job_mark_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job mark")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    (jid,) = sc.statusTracker().getJobIdsForGroup(group)
+    return jid
+
+
+def _chain_feed():
+    """Two micro-batches: a 5-doc chain (consecutive docs pair only), then
+    a chain extension, a mid-chain delete and a same-batch insert+delete."""
+    fps = [0]
+    for i in range(4):
+        fps.append(fps[-1] ^ (0b11111 << (5 * i)))
+    batch1 = [(10 + i, "s", fps[i], "upsert") for i in range(5)]
+    batch2 = [
+        (15, "s", fps[4] ^ (0b11111 << 20), "upsert"),
+        (99, "s", 0x3FFFFFFF, "upsert"),
+        (99, "s", 0x3FFFFFFF, "delete"),
+        (12, "s", fps[2], "delete"),
+    ]
+    live = [(10 + i, "s", fps[i]) for i in range(5) if i != 2] + [
+        (15, "s", fps[4] ^ (0b11111 << 20))
+    ]
+    return [batch1, batch2], live
+
+
+def test_cdc_stream_runs_one_job_per_step(spark, tmp_path):
+    """A small micro-batch is read once, with one bounded collect, and
+    every other part of its steps runs in-process: the stage probe, the
+    journal read and the serving rewrite read their partitions with
+    pyarrow. The two-batch mixed feed has three non-empty steps (batch 1's
+    upsert, batch 2's upsert and retraction), so it may run at most three
+    Spark jobs in all, counted across every thread of the context."""
+    import tempfile
+
+    batches, live = _chain_feed()
+    stage, serving = str(tmp_path / "feed"), str(tmp_path / "serving")
+    _write_feed(spark, stage, batches)
+    before = _job_mark(spark)
+    _run_feed(spark, stage, serving, tempfile.mkdtemp(prefix="cdc_ckpt_"))
+    jobs = _job_mark(spark) - before - 1
+    assert jobs <= 3, jobs
+    assert _served(spark, serving) == _full_labelling(spark, live)
+
+
+def _table_rows(spark, path, cols):
+    return sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
+
+
+def test_spark_and_in_process_branches_agree(spark, tmp_path, monkeypatch):
+    """Past LOCAL_PARTITION_BYTES_CAP the stage probe and the serving
+    rewrite run as Spark jobs (and so does the retraction). A cap of -1
+    forces them on a feed with merges, journal chains and deletes: the
+    serving rows, the union-key stage rows and the merge journal must be
+    the ones the in-process branch writes, and both labellings must equal
+    the full recompute over the net-live corpus."""
+    import tempfile
+
+    first, second, third = _bridged_family_batches()
+    batches = [
+        [r + ("upsert",) for r in first],
+        [r + ("upsert",) for r in second] + [first[0] + ("delete",)],
+        [r + ("upsert",) for r in third]
+        + [second[1] + ("delete",), third[0] + ("delete",)],
+    ]
+    gone = {first[0][0], second[1][0], third[0][0]}
+    live = [r for r in first + second + third if r[0] not in gone]
+    stage = str(tmp_path / "feed")
+    _write_feed(spark, stage, batches)
+    state = {}
+    for name, cap in (("local", CC.LOCAL_PARTITION_BYTES_CAP), ("spark", -1)):
+        serving = str(tmp_path / name / "serving")
+        with monkeypatch.context() as m:
+            m.setattr(CC, "LOCAL_PARTITION_BYTES_CAP", cap)
+            _run_feed(spark, stage, serving, tempfile.mkdtemp(prefix="cdc_ckpt_"))
+        assert _served(spark, serving) == _full_labelling(spark, live), name
+        state[name] = (
+            _table_rows(spark, serving, ["id", "source", "sh", "comp", "paired"]),
+            _table_rows(
+                spark,
+                serving + CC.KEYS_SUFFIX,
+                ["grp", "combo_id", "key_val", "sh", "anchor", "comp0", CC.KEY_BUCKET_COL],
+            ),
+            CC._read_journal(spark, serving + CC.JOURNAL_SUFFIX),
+        )
+    assert state["spark"] == state["local"]
+    assert state["local"][2]  # the feed's merges left a journal to compare
+
+
+def test_cdc_stream_empty_steps_write_no_generation(spark, tmp_path, monkeypatch):
+    """A step with no rows writes no generation: an upserts-only batch
+    commits one (its upsert), a deletes-only batch one (its retraction), an
+    empty batch none. A replay of the last committed batch (its streaming
+    commit lost) is still a no-op."""
+    import tempfile
+
+    (batch1, _), _ = _chain_feed()
+    ups_only = [(30, "s", (1 << 30) | 7, "upsert"), (31, "s", (1 << 30) | 6, "upsert")]
+    batches = [batch1, [(12, "s", batch1[2][2], "delete")], [], ups_only]
+    live = [r[:3] for r in batch1 if r[0] != 12] + [r[:3] for r in ups_only]
+    generations: list = []
+    real_write = CC._write_manifest
+
+    def spy(serving_path, man):
+        generations.append(man.get("applied_marker"))
+        real_write(serving_path, man)
+
+    monkeypatch.setattr(CC, "_write_manifest", spy)
+    stage, serving = str(tmp_path / "feed"), str(tmp_path / "serving")
+    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
+    _write_feed(spark, stage, batches)
+    _run_feed(spark, stage, serving, ckpt)
+    assert generations == [
+        {"batch_id": 0, "steps": ["upsert"]},
+        {"batch_id": 1, "steps": ["upsert", "retract"]},
+        {"batch_id": 3, "steps": ["upsert"]},
+    ]
+    assert _served(spark, serving) == _full_labelling(spark, live)
+    served = _table_rows(spark, serving, ["id", "source", "sh", "comp", "paired"])
+    # lose batch 3's streaming commit: the restarted query replays it
+    for f in ("3", ".3.crc"):
+        p = os.path.join(ckpt, "commits", f)
+        if os.path.exists(p):
+            os.remove(p)
+    del generations[:]
+    _run_feed(spark, stage, serving, ckpt)
+    assert generations == []
+    assert os.path.exists(os.path.join(ckpt, "commits", "3"))
+    assert _table_rows(
+        spark, serving, ["id", "source", "sh", "comp", "paired"]
+    ) == served
+
+
+def test_local_paths_count_hamming_in_twos_complement(spark, tmp_path):
+    """64-bit fingerprints are signed longs. The in-process paths must
+    count differing bits as Spark's ``bit_count(a ^ b)`` does, over the
+    64-bit two's complement: 0 and 0x8000000000000001 are 2 bits apart,
+    not the 63 ones of the XOR's magnitude. Checked on the batch-by-batch
+    cross of an upsert and on the survivor re-solve of a retraction."""
+    serving = str(tmp_path / "serving")
+    b = -(2**63) + 1  # 0x8000000000000001
+    _upsert(spark, serving, [(1, "s", 0), (2, "s", b)], bits=64)
+    assert _served(spark, serving) == {(1, 1), (2, 1)}
+    _upsert(spark, serving, [(3, "s", 1)], bits=64)
+    assert _served(spark, serving) == {(1, 1), (2, 1), (3, 1)}
+    _retract(spark, serving, [(3, "s", 1)], bits=64)
+    assert _served(spark, serving) == {(1, 1), (2, 1)}
