@@ -9,13 +9,17 @@ guidance when a scheme has no implementation (PathIO.scala:195-198).
 :class:`MemoryPathIO` is an in-process object-store fake (``memory://``)
 for tests; :func:`register_pathio` overrides the routing per scheme.
 
-Tables that are replaced or grown (CDC state, the resumable migrate's
-target, the export sinks, compacted tables) commit through :func:`commit`,
-the transaction-log idea of Delta Lake (Armbrust et al., VLDB 2020) without
-its dependency: immutable generation directories, and ``<root>/_live.json``,
-written last, naming the live ones relative to the root. No data directory
-is renamed, so a crash at any step leaves the old or the new generation
-live on any store; one writer per table at a time.
+Every table that is replaced or grown commits through :func:`commit`, the
+transaction-log idea of Delta Lake (Armbrust et al., VLDB 2020) without its
+dependency: data is written under new, unique names and never rewritten,
+and ``<root>/_live.json``, written last, names the live entries relative to
+the root. An entry is a generation directory (``g-<uuid>``: the CDC state,
+the resumable migrate's target, the export sinks, the validator's repair)
+or a data file below partition directories (``__bucket=3/part-….parquet``:
+the rollup, SCD2 and components serving tables, and every compacted
+table). :func:`sweep` deletes what the record does not name, so a crash at
+any step leaves the old or the new table live on any store, and no
+directory is renamed; one writer per table at a time.
 """
 
 from __future__ import annotations
@@ -51,6 +55,9 @@ class PathIO:
         raise NotImplementedError
 
     def create_directories(self, path: str) -> None:
+        raise NotImplementedError
+
+    def is_dir(self, path: str) -> bool:
         raise NotImplementedError
 
     def list_file_names(self, path: str) -> list[str]:
@@ -94,6 +101,9 @@ class LocalPathIO(PathIO):
 
     def create_directories(self, path: str) -> None:
         os.makedirs(self._to_path(path), exist_ok=True)
+
+    def is_dir(self, path: str) -> bool:
+        return os.path.isdir(self._to_path(path))
 
     def list_file_names(self, path: str) -> list[str]:
         return os.listdir(self._to_path(path))
@@ -178,6 +188,13 @@ class MemoryPathIO(PathIO):
         bucket, key = self._split(path)
         with self._lock:
             self._dirs.setdefault(bucket, set()).add(key)
+
+    def is_dir(self, path: str) -> bool:
+        bucket, key = self._split(path)
+        with self._lock:
+            if key in self._dirs.get(bucket, set()):
+                return True
+            return any(k.startswith(key + "/") for k in self._store(bucket))
 
     def list_file_names(self, path: str) -> list[str]:
         """Direct children: files and (implicit or marked) directories."""
@@ -266,6 +283,10 @@ class HadoopPathIO(PathIO):
     def create_directories(self, path: str) -> None:
         _, fs, hpath = self._fs(path)
         fs.mkdirs(hpath)
+
+    def is_dir(self, path: str) -> bool:
+        _, fs, hpath = self._fs(path)
+        return bool(fs.exists(hpath) and fs.getFileStatus(hpath).isDirectory())
 
     def list_file_names(self, path: str) -> list[str]:
         _, fs, hpath = self._fs(path)
@@ -387,34 +408,99 @@ def for_path(path: str) -> PathIO:
 LIVE_RECORD = "_live.json"
 
 
-def live_names(root: str) -> list[str] | None:
-    """The live generation names of ``root``'s record; None without one."""
+def record(root: str) -> dict | None:
+    """``root``'s commit record ``{"live": [...], "meta": {...}}``; None
+    without one."""
     io = for_path(root)
-    record = io.join(root, LIVE_RECORD)
-    if not io.exists(record):
+    path = io.join(root, LIVE_RECORD)
+    if not io.exists(path):
         return None
-    return json.loads(io.read_utf8(record))["live"]
+    rec = json.loads(io.read_utf8(path))
+    rec.setdefault("meta", {})
+    return rec
+
+
+def live_names(root: str) -> list[str] | None:
+    """The live entries of ``root``'s record; None without one."""
+    rec = record(root)
+    return None if rec is None else rec["live"]
 
 
 def live_paths(root: str) -> list[str]:
-    """The live directories of the table ``root``; ``[root]`` without a record."""
+    """The live entries of the table ``root``; ``[root]`` without a record."""
     names = live_names(root)
     io = for_path(root)
     return [root] if names is None else [io.join(root, n) for n in names]
 
 
-def commit(root: str, live: list[str]) -> None:
-    """Make the generations ``live`` (names relative to ``root``) the table:
-    write the record, then sweep every other entry not starting with ``_``.
-    A crash before the record is replaced leaves the old table, one after it
-    the new; the next commit sweeps what the record does not name."""
+def commit(root: str, live: list[str], meta: dict | None = None) -> None:
+    """Make the entries ``live`` (paths relative to ``root``) the table,
+    with the small JSON ``meta`` in the same record: write the record, then
+    :func:`sweep`. A crash before the record is replaced leaves the old
+    table, one after it the new; the next commit or sweep deletes what the
+    record does not name."""
     io = for_path(root)
     io.create_directories(root)
-    payload = json.dumps({"live": list(live)}).encode("utf-8")
-    io.write_utf8_atomically(io.join(root, LIVE_RECORD), payload)
-    for name in io.list_file_names(root):
-        if name not in live and not name.startswith("_"):
-            io.delete(io.join(root, name))
+    rec = {"live": list(live), **({"meta": meta} if meta else {})}
+    io.write_utf8_atomically(io.join(root, LIVE_RECORD), json.dumps(rec).encode("utf-8"))
+    sweep(root, live)
+
+
+def sweep(root: str, live: list[str] | None = None) -> None:
+    """Delete every entry below ``root`` that is not on a live path of its
+    record (``live``, read from the record when not given), except the
+    ``_`` files (the record, pins, ``_SUCCESS``) and the ``.<name>.crc``
+    checksums of what stays: a directory stays only if it is live or holds
+    a live entry. Only the directories that hold live entries are walked,
+    never a live one. A root without a record is left alone."""
+    if live is None:
+        live = live_names(root)
+        if live is None:
+            return
+    inner = {n.rsplit("/", k)[0] for n in live for k in range(1, n.count("/") + 1)}
+    _sweep(for_path(root), root, "", set(live), inner)
+
+
+def _sweep(io: PathIO, root: str, rel: str, live: set[str], inner: set[str]) -> None:
+    d = io.join(root, rel) if rel else root
+    names = io.list_file_names(d)
+    kept = set()
+    for name in names:
+        path = f"{rel}/{name}" if rel else name
+        if path in inner:
+            _sweep(io, root, path, live, inner)
+        if path in live or path in inner or (
+            name.startswith("_") and not io.is_dir(io.join(d, name))
+        ):
+            kept.add(name)
+    for name in names:
+        crc_of = name[1:-4] if name.startswith(".") and name.endswith(".crc") else None
+        if name not in kept and crc_of not in kept:
+            io.delete(io.join(d, name))
+
+
+def unnamed_files(root: str) -> list[str]:
+    """The data files below ``root`` that no live entry of its record names
+    or contains, relative to ``root``: none of their names is hidden (``.``,
+    or a ``_`` file name) and none is below a ``_temporary`` staging
+    directory. After a sweep these are exactly the files written since,
+    which the next commit names."""
+    io = for_path(root)
+    if not io.exists(root):
+        return []
+    live = set(live_names(root) or ())
+    base = io.normalize(root).rstrip("/") + "/"
+    out = []
+    for f in io.list_files(root):
+        rel = f[len(base) :]
+        parts = rel.split("/")
+        if (
+            not any("/".join(parts[:k]) in live for k in range(1, len(parts) + 1))
+            and not parts[-1].startswith("_")
+            and not any(p.startswith(".") or p == "_temporary" for p in parts)
+        ):
+            out.append(rel)
+    return sorted(out)
 
 
 @contextmanager

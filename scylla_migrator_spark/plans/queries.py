@@ -12940,7 +12940,7 @@ def stream_components_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documents replayed as two micro-batches; each batch's
     fingerprints join the served state for new near-dup edges, the
     fixpoint runs on the batch-sized CONTRACTED graph
-    (incremental_components_update), and the component table swaps
+    (incremental_components_update), and the component table commits
     atomically. After the replay the paired labelling must equal the
     batch dedup_components over the full corpus — the oracle is that
     full-corpus transitive closure verbatim, so the streaming maintenance
@@ -13013,8 +13013,8 @@ def components_retract_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/components_cdc.components_retract_batch for the design:
     combo-0 stage probe locates the victims' components bucket-pruned,
     survivors re-solve per component with the driver-side union-find,
-    serving buckets + key partitions + journal rewrite swap under one
-    crash manifest). The pre-delete state is staged (it EXISTS in
+    serving buckets + key partitions + journal rewrite commit in one
+    record). The pre-delete state is staged (it EXISTS in
     production) and copied to scratch, so the row measures what a
     retraction batch actually costs."""
     import shutil
@@ -13026,11 +13026,11 @@ def components_retract_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state = _cc_state_staged(spark, sf_dir)
     scratch = tempfile.mkdtemp(prefix="sgs_cc_retract_")
-    # hardlink the scratch copy: the staged parquet files are immutable
-    # (maintenance swaps whole directories, never appends in place), so
-    # the mutable working set costs O(#files) directory entries, not a
-    # byte copy — the timed body measures retraction work, not copytree.
-    # Cross-device fallback copies for real.
+    # hardlink the scratch copy: files are never rewritten in place (a
+    # generation writes new files and a new record, and the sweep only
+    # unlinks), so the mutable working set costs O(#files) directory
+    # entries, not a byte copy — the timed body measures retraction work,
+    # not copytree. Cross-device fallback copies for real.
     def _link_tree(src: str, dst: str) -> None:
         try:
             shutil.copytree(src, dst, copy_function=os.link)
@@ -13099,7 +13099,7 @@ def components_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure over the NET-LIVE corpus (doc_id % 17 != 0) — the maintained
     graph must be indistinguishable from a batch recompute over what
     remains. Per-batch I/O follows the maintenance scan contract
-    (staged-key probe, bucket-pruned swaps, one crash manifest per
+    (staged-key probe, bucket-pruned rewrites, one commit record per
     generation; at-least-once replays no-op via the batch marker)."""
     import tempfile
     import uuid

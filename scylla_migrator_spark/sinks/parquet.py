@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
+import posixpath
 import uuid
 
 from pyspark.sql import DataFrame
 
-from scylla_migrator_spark.pathio import generation, live_names, live_paths
+from scylla_migrator_spark import pathio
 
 
 def write_parquet(
@@ -39,75 +39,69 @@ def write_parquet(
     writer.parquet(path)
 
 
-def swap_generation(staged: str, path: str) -> None:
-    """Promote the written directory ``staged`` to the plain or partition
-    directory ``path`` (``compact_parquet`` only): the current generation is
-    renamed aside, ``staged`` into place, then the old one deleted (and a
-    previous crash's leftover first). Each rename is atomic, so ``path``
-    never holds a mix of generations."""
-    old = f"{path}__old_gen"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.replace(path, old)
-    os.replace(staged, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _parquet_stats(paths: list[str]) -> tuple[int, int]:
-    """(parquet file count, bytes) under the local directories ``paths``."""
-    walk = [(d, f) for p in paths for d, _, files in os.walk(p) for f in files]
-    sizes = [os.path.getsize(os.path.join(d, f)) for d, f in walk if f.endswith(".parquet")]
+    """(parquet file count, bytes) of the local files or directories ``paths``."""
+    files = [f for p in paths for f in pathio.for_path(p).list_files(p)]
+    sizes = [
+        os.path.getsize(f)
+        for f in files
+        if f.endswith(".parquet") and not os.path.basename(f).startswith((".", "_"))
+    ]
     return len(sizes), sum(sizes)
-
-
-def _compact_flat(spark, path: str, target_file_bytes: int) -> dict:
-    recorded = live_names(path) is not None
-    files_before, total = _parquet_stats(live_paths(path))
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(*live_paths(path))
-    # coalesce, not repartition: no full shuffle, only existing partitions
-    # merge (row order within files changes, the row SET does not)
-    out = df.coalesce(min(n_out, max(df.rdd.getNumPartitions(), 1)))
-    if recorded:
-        with generation(path) as gen:
-            out.write.parquet(gen)
-    else:
-        tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-        out.write.mode("overwrite").parquet(tmp)
-        swap_generation(tmp, path)
-    files_after, _ = _parquet_stats(live_paths(path))
-    return {"files_before": files_before, "files_after": files_after, "bytes": total}
 
 
 def compact_parquet(
     spark, path: str, target_file_bytes: int = 256 * 1024 * 1024
 ) -> dict:
-    """Small-files compaction: rewrite a parquet dataset into
-    ceil(total_bytes / target_file_bytes) files, atomically — a table with a
-    commit record gets one new committed generation, a plain one a
-    ``swap_generation``: readers see old or new, never a mix.
+    """Small-files compaction: rewrite each partition directory of a parquet
+    table (or the flat table) into ceil(bytes / target_file_bytes) new
+    files, and commit one record naming them for the whole table
+    (``pathio.commit``): readers see the old table or the new one, never a
+    mix, and a crash leaves unnamed files the next commit sweeps. A table
+    without a record first gets one naming its files as they are.
 
-    Hive-partitioned datasets (``col=value`` subdirectories: upsert serving
+    Hive-partitioned tables (``col=value`` subdirectories: upsert serving
     tables, token-range targets, partitionBy layouts) are compacted PER
     PARTITION DIRECTORY, so the layout readers prune on, the partition
     values and ``_``-prefixed metadata files (the upsert's bucket pin)
-    survive; a whole-table rewrite would flatten the partition column.
+    survive; a whole-table rewrite would flatten the partition column. A
+    flat table's new files replace its files directly below its root, or
+    its generation directories with a new one.
 
     Micro-batches and chunked migrations accrete small files, whose
     open + footer cost dominates scans at 100 TB. Sizing uses the on-disk
     (compressed) bytes. Returns {files_before, files_after, bytes}."""
-    part_dirs = [
-        e
-        for e in os.listdir(path)
-        if "=" in e and os.path.isdir(os.path.join(path, e))
-    ]
-    if not part_dirs:
-        return _compact_flat(spark, path, target_file_bytes)
-    totals = {"files_before": 0, "files_after": 0, "bytes": 0}
-    for entry in sorted(part_dirs):
-        sub = os.path.join(path, entry)
-        # one level of nesting handled per-branch; deeper layouts recurse
-        stats = compact_parquet(spark, sub, target_file_bytes)
-        for k in totals:
-            totals[k] += stats[k]
-    return totals
+    rec = pathio.record(path)
+    if rec is None:
+        rec = {"live": pathio.unnamed_files(path), "meta": {}}
+        pathio.commit(path, rec["live"])
+    else:
+        pathio.sweep(path)
+    groups: dict[str, list[str]] = {}
+    for name in rec["live"]:
+        groups.setdefault(posixpath.dirname(name), []).append(name)
+    stats = {"files_before": 0, "files_after": 0, "bytes": 0}
+    gens = []
+    for group, names in sorted(groups.items()):
+        # after the sweep a partition directory holds only live files
+        src = [os.path.join(path, group)] if group else [os.path.join(path, n) for n in names]
+        out = src[0] if group else path
+        if not group and any(os.path.isdir(p) for p in src):
+            # a table of generation directories gets a new one
+            gens.append(f"g-{uuid.uuid4().hex}")
+            out = os.path.join(path, gens[-1])
+        n_files, total = _parquet_stats(src)
+        stats["files_before"] += n_files
+        stats["bytes"] += total
+        df = spark.read.parquet(*src)
+        # coalesce, not repartition: no full shuffle, only existing partitions
+        # merge (row order within files changes, the row SET does not)
+        n_out = max(1, math.ceil(total / target_file_bytes))
+        df.coalesce(min(n_out, max(df.rdd.getNumPartitions(), 1))).write.mode(
+            "append"
+        ).parquet(out)
+    written = pathio.unnamed_files(path)
+    live = gens + [f for f in written if f.split("/", 1)[0] not in gens]
+    pathio.commit(path, live, rec["meta"])
+    stats["files_after"] = len(written)
+    return stats

@@ -9,7 +9,7 @@ Pattern:
         fp      = simhash fingerprints of the batch's docs
         edges   = near-dup pairs touching a batch doc (staged-key probe)
         labels' = contracted fixpoint over batch edges + touched labels
-        state'  = state rows remapped + batch rows appended (journaled swap)
+        state'  = state rows remapped + batch rows appended (one commit)
 
 Correctness invariant (checked by the oracle): after any prefix of the
 stream, the paired rows of the serving table equal the batch
@@ -18,12 +18,12 @@ new batch can only create pairs that TOUCH a batch document (old-old pairs
 were already present), which is exactly the contract the contracted merge
 requires.
 
-State layout (three sibling tables, all under the caller's serving path):
+State layout (three tables under the caller's serving path):
 
 * ``serving``             (id, source, sh, comp, paired), partitioned by a
-  COMPONENT-hash bucket (streaming/rollup.py layout); each batch swaps
+  COMPONENT-hash bucket (streaming/rollup.py layout); each batch rewrites
   ONLY the buckets whose labels moved.
-* ``serving_keys``        the persistent union-key stage: one row per
+* ``serving/_keys``       the persistent union-key stage: one row per
   (unit, probe combo) — (grp, combo_id, key_val, sh, anchor, comp0) —
   partitioned by ``pmod(xxhash64(combo_id, key_val), n_key_buckets)``.
   Union keys are a pure function of the immutable fingerprint, so this
@@ -31,21 +31,29 @@ State layout (three sibling tables, all under the caller's serving path):
   with its own (batch-sized, broadcast) key set. A micro-batch therefore
   never re-explodes or re-shuffles the full state — its stage scan is
   pruned to the partitions the batch's keys hash into.
-* ``serving_journal``     append-only component-merge log (old, new): the
+* ``serving/_journal``    append-only component-merge log (old, new): the
   stage's ``comp0`` labels go stale when components merge; resolving a
   probe's touched anchors is comp0 followed through the journal. The
   journal is merge-EVENT metadata (one row per component ever retired),
   orders smaller than the state; ``compact_components_stage`` folds it
   back into the stage when it grows.
 
-Crash safety: every generation's mutations (bucket swaps, key appends,
-journal appends) are listed in a manifest written BEFORE the first
-mutation and removed after the last; ``_recover_pending`` rolls an
-interrupted generation FORWARD on the next batch, so a crash can never
-leave a bucket directory missing or a mixed-generation labelling in use.
-Readers that race a live swap can still observe a bucket mid-replace —
-snapshot consumers should read a quiesced table (the streaming query is
-the single writer).
+The ``_`` names keep the stage and the journal out of a plain
+``spark.read.parquet(serving)``.
+
+Crash safety: the three tables are the files ONE commit record at the
+serving root names (``pathio.commit``), with the applied-batch marker in
+its meta. A generation writes its new files in place under unique names —
+no file is ever rewritten — then one record write swaps them in for the
+files of the buckets and key partitions it rewrote (and the journal, when
+it rewrites it), and the sweep deletes those. A crash leaves the previous
+generation or the new one, with its marker; each step opens with a sweep
+of the files no record names. Readers that list the directories while a
+generation is being written can see its unnamed files — snapshot
+consumers read a quiesced table or the record's files (the streaming
+query is the single writer). The maintainers read and write with
+in-process pyarrow and ``os`` calls, so the serving path must be on a
+local disk: ``file://`` URIs through HadoopPathIO are not supported.
 
 Scale notes: per batch the fixpoint runs on the CONTRACTED graph (batch
 edges + the component labels they touch), never the history; edge
@@ -66,18 +74,18 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
+import posixpath
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark import pathio
 from scylla_migrator_spark.analytics import dedup as D
 from scylla_migrator_spark.analytics.components import (
     contracted_merge,
     minlabel_union_find,
 )
-from scylla_migrator_spark.pathio import for_path
 from scylla_migrator_spark.streaming.rollup import (
     _M64,
     BUCKET_COL,
@@ -86,6 +94,8 @@ from scylla_migrator_spark.streaming.rollup import (
     _write_meta,
     bucket_of_combo_key,
     bucket_of_long,
+    commit_buckets,
+    open_table,
 )
 
 DEFAULT_COMPONENT_BUCKETS = 16  # fixture scale; thousands at 100 TB
@@ -94,8 +104,8 @@ DEFAULT_KEY_BUCKETS = 32
 # distributed fixpoint instead of the driver-side union-find (~16 B/edge
 # collected; the touching contract keeps real batches far below this)
 MAX_LOCAL_MERGE_EDGES = 5_000_000
-KEYS_SUFFIX = "_keys"
-JOURNAL_SUFFIX = "_journal"
+KEYS_SUFFIX = "/_keys"
+JOURNAL_SUFFIX = "/_journal"
 KEY_BUCKET_COL = "__kb"
 _GEOMETRY_FILE = "_geometry.json"
 
@@ -111,36 +121,59 @@ def _run_writes(*fns) -> None:
             fu.result()
 
 
-def _pending_path(serving_path: str) -> str:
-    return serving_path + "__pending.json"
-
-
-def _applied_path(serving_path: str) -> str:
-    return serving_path + "__applied.json"
-
-
 def read_applied_marker(serving_path: str) -> dict | None:
-    """The last streaming batch the maintainers COMMITTED, written with the
-    generation's manifest: ``{"batch_id": ..., "steps": ["upsert", ...]}``.
-    foreachBatch is at-least-once: a crash between the generation's commit
-    and the checkpoint's replays the batch, and ``components_upsert_batch``
-    would append its rows twice. The CDC drivers no-op steps a replayed
-    batch already applied (the manifest makes a generation atomic; the
-    marker makes it idempotent per batch id)."""
-    ap = _applied_path(serving_path)
-    return _read_json(ap) if os.path.exists(ap) else None
+    """The last streaming batch the maintainers COMMITTED, in the meta of
+    the generation's record: ``{"batch_id": ..., "steps": ["upsert",
+    ...]}``. foreachBatch is at-least-once: a crash between the
+    generation's commit and the checkpoint's replays the batch, and
+    ``components_upsert_batch`` would append its rows twice. The CDC
+    drivers no-op steps a replayed batch already applied (the record makes
+    a generation atomic; the marker makes it idempotent per batch id)."""
+    rec = pathio.record(serving_path)
+    return rec["meta"].get("applied") if rec else None
 
 
 def _read_json(path: str):
-    return json.loads(for_path(path).read_utf8(path))
+    return json.loads(pathio.for_path(path).read_utf8(path))
 
 
 def _write_json(path: str, obj) -> None:
-    for_path(path).write_utf8_atomically(path, json.dumps(obj).encode("utf-8"))
+    pathio.for_path(path).write_utf8_atomically(path, json.dumps(obj).encode("utf-8"))
 
 
 def _write_applied(serving_path: str, marker: dict) -> None:
-    _write_json(_applied_path(serving_path), marker)
+    commit_buckets(serving_path, [], {"applied": marker})
+
+
+def _commit(
+    serving_path: str,
+    dropped: list[str],
+    applied_marker: dict | None,
+) -> None:
+    """Commit one generation: ``dropped`` lists the rewritten or emptied
+    serving buckets, key partitions and the journal as directories
+    relative to the serving root; every file written since the step's
+    opening sweep enters the record."""
+    commit_buckets(
+        serving_path, dropped, {"applied": applied_marker} if applied_marker else None
+    )
+
+
+def _dirs(sub: str, col: str, buckets) -> list[str]:
+    """The relative directories ``sub/col=b`` of ``buckets`` (``sub`` empty
+    for the serving buckets)."""
+    return [posixpath.join(sub, f"{col}={b}") for b in buckets]
+
+
+def _pin_stage(
+    keys_path: str, n_key_buckets: int, bits: int, blocks: int, max_hamming: int
+) -> None:
+    """Pin a new stage's key-bucket modulus and key geometry."""
+    _write_meta(keys_path, n_key_buckets)
+    _write_json(
+        os.path.join(keys_path, _GEOMETRY_FILE),
+        {"bits": bits, "blocks": blocks, "max_hamming": max_hamming},
+    )
 
 
 def _check_geometry(
@@ -155,7 +188,7 @@ def _check_geometry(
     upsert/retract."""
     gp = os.path.join(keys_path, _GEOMETRY_FILE)
     if not os.path.exists(gp):
-        return  # pre-geometry layout: pinned by the next committed batch
+        return  # a stage created before the geometry pin
     g = _read_json(gp)
     ours = {"bits": bits, "blocks": blocks, "max_hamming": max_hamming}
     if g != ours:
@@ -166,138 +199,6 @@ def _check_geometry(
             "match nothing and mislabel. Call with the original geometry, "
             "or rebuild the stage (rebuild_components_stage)."
         )
-
-
-def _move_part_files(src_dir: str, dst_dir: str) -> list[list[str]]:
-    """Plan (src, dst) moves for every data file under a Spark-written
-    directory tree, preserving partition subdirs. Returns the move list
-    (nothing is moved here — the manifest records it first)."""
-    moves: list[list[str]] = []
-    for root, _dirs, files in os.walk(src_dir):
-        rel = os.path.relpath(root, src_dir)
-        for f in files:
-            if not f.startswith("part-"):
-                continue
-            dst = dst_dir if rel == "." else os.path.join(dst_dir, rel)
-            moves.append([os.path.join(root, f), os.path.join(dst, f)])
-    return moves
-
-
-def _execute_manifest(serving_path: str, man: dict) -> None:
-    """Apply a generation's mutations. IDEMPOTENT: every step checks
-    source existence first, so a crashed run re-applies cleanly."""
-    for src, dst in man.get("file_moves", []):
-        if os.path.exists(src):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-    if man["kind"] == "full":
-        if not os.path.isdir(serving_path) and os.path.isdir(man["src"]):
-            os.rename(man["src"], serving_path)
-        _write_meta(serving_path, man["n_buckets"])
-    elif man["kind"] == "compact":
-        kp = serving_path + KEYS_SUFFIX
-        if os.path.isdir(man["tmp"]):
-            if os.path.isdir(kp):
-                os.replace(kp, man["old"])
-            os.replace(man["tmp"], kp)
-        _write_meta(kp, man["n_key_buckets"])
-        shutil.rmtree(man["old"], ignore_errors=True)
-        # journal entries map RETIRED comps; folded comp0s are current, so
-        # re-applying a journal that outlived a crash is a no-op — safe to
-        # drop it only after the folded stage is live
-        shutil.rmtree(serving_path + JOURNAL_SUFFIX, ignore_errors=True)
-    elif man["kind"] == "swap":
-        gen = man["gen"]
-        for b in man.get("swap_buckets", []):
-            entry = f"{BUCKET_COL}={b}"
-            src = os.path.join(man["tmp"], entry)
-            dst = os.path.join(serving_path, entry)
-            old = f"{serving_path}__old_{gen}_{b}"
-            if os.path.isdir(src):
-                if os.path.isdir(dst):
-                    os.replace(dst, old)
-                os.replace(src, dst)
-            # src missing => this bucket's swap already completed
-        for b in man.get("drop_buckets", []):
-            # an affected bucket emptied by a label hop: remove, not stale
-            dst = os.path.join(serving_path, f"{BUCKET_COL}={b}")
-            if os.path.isdir(dst):
-                os.replace(dst, f"{serving_path}__old_{gen}_{b}")
-        # retractions also swap union-key stage partitions (anchor/comp0
-        # corrections + dead-unit removal) — same idempotent protocol
-        kp = serving_path + KEYS_SUFFIX
-        for b in man.get("keys_swap_buckets", []):
-            entry = f"{KEY_BUCKET_COL}={b}"
-            src = os.path.join(man["keys_tmp"], entry)
-            dst = os.path.join(kp, entry)
-            old = f"{serving_path}__old_{gen}_kb{b}"
-            if os.path.isdir(src):
-                if os.path.isdir(dst):
-                    os.replace(dst, old)
-                os.replace(src, dst)
-        for b in man.get("keys_drop_buckets", []):
-            dst = os.path.join(kp, f"{KEY_BUCKET_COL}={b}")
-            if os.path.isdir(dst):
-                os.replace(dst, f"{serving_path}__old_{gen}_kb{b}")
-        # retractions rewrite the merge journal: entries whose chain
-        # terminates in a re-solved component are dead for every
-        # surviving unit (all got direct comp0s) and DANGEROUS if their
-        # old label was resurrected as a split subset's new minimum
-        if man.get("journal_tmp") or man.get("journal_clear"):
-            jp = serving_path + JOURNAL_SUFFIX
-            jold = f"{serving_path}__old_{gen}_journal"
-            jt = man.get("journal_tmp")
-            if jt and os.path.isdir(jt):
-                if os.path.isdir(jp):
-                    os.replace(jp, jold)
-                os.replace(jt, jp)
-            elif man.get("journal_clear") and os.path.isdir(jp):
-                os.replace(jp, jold)
-    keys_path = serving_path + KEYS_SUFFIX
-    if man.get("n_key_buckets") and os.path.isdir(keys_path):
-        _write_meta(keys_path, man["n_key_buckets"])
-    # geometry pin (once, at stage creation) and the applied-batch marker
-    # commit INSIDE the manifest: a crash anywhere in this protocol rolls
-    # forward to a state where the generation AND its marker are visible
-    # together — never a committed generation a replayed batch re-applies
-    if man.get("geometry") and os.path.isdir(keys_path):
-        gp = os.path.join(keys_path, _GEOMETRY_FILE)
-        if not os.path.exists(gp):
-            _write_json(gp, man["geometry"])
-    if man.get("applied_marker"):
-        _write_applied(serving_path, man["applied_marker"])
-    # cleanup: displaced generations + scratch dirs, then the manifest
-    _sweep_generations(serving_path)
-    for scratch in man.get("scratch", []):
-        shutil.rmtree(scratch, ignore_errors=True)
-    os.remove(_pending_path(serving_path))
-
-
-def _recover_pending(serving_path: str) -> None:
-    """Roll FORWARD an interrupted generation before touching state —
-    the crash-recovery half of the manifest protocol. Also sweeps
-    scratch dirs orphaned by a crash that happened BEFORE the manifest
-    was written (those generations never started mutating state)."""
-    pp = _pending_path(serving_path)
-    if os.path.exists(pp):
-        _execute_manifest(serving_path, _read_json(pp))
-        return
-    _sweep_generations(serving_path)
-
-
-def _sweep_generations(serving_path: str) -> None:
-    """Remove the displaced (`__old_`) and scratch (`__gen_`) generation
-    dirs beside ``serving_path``."""
-    parent = os.path.dirname(serving_path) or "."
-    base = os.path.basename(serving_path)
-    if os.path.isdir(parent):
-        for e in os.listdir(parent):
-            if e.startswith(f"{base}__old_") or e.startswith(f"{base}__gen_"):
-                shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
-
-
-def _write_manifest(serving_path: str, man: dict) -> None:
-    _write_json(_pending_path(serving_path), man)
 
 
 def _read_journal(spark: SparkSession, journal_path: str) -> dict[int, int]:
@@ -394,24 +295,53 @@ def _pa_field(name: str, spark_simple: str):
     return pa.field(name, getattr(pa, _PA_TYPES[spark_simple])())
 
 
+def _serving_fields(grp_type: str) -> list:
+    return [
+        _pa_field("id", "bigint"),
+        _pa_field("source", grp_type),
+        _pa_field("sh", "bigint"),
+        _pa_field("comp", "bigint"),
+        _pa_field("paired", "boolean"),
+    ]
+
+
+def _key_fields(grp_type: str) -> list:
+    return [
+        _pa_field("grp", grp_type),
+        _pa_field("combo_id", "int"),
+        _pa_field("key_val", "bigint"),
+        _pa_field("sh", "bigint"),
+        _pa_field("anchor", "bigint"),
+        _pa_field("comp0", "bigint"),
+    ]
+
+
+def _append_buckets(rows: DataFrame, serving_path: str, n_buckets: int) -> None:
+    """Spark twin of ``_write_bucketed_parquet`` for (id, source, sh, comp,
+    paired) rows: one new file per component bucket, appended in place."""
+    rows.withColumn(BUCKET_COL, _bucket_expr(["comp"], n_buckets)).repartition(
+        F.col(BUCKET_COL)
+    ).write.mode("append").partitionBy(BUCKET_COL).parquet(serving_path)
+
+
 def _write_bucketed_parquet(
-    tmp_dir: str,
+    table_dir: str,
     bucket_col: str,
     by_bucket: dict[int, list[tuple]],
     fields: list,
     gen: str,
 ) -> None:
     """Mirror Spark's ``repartition(bucket).write.partitionBy(bucket)``
-    layout from driver-resident rows: one parquet file per bucket dir,
-    bucket column NOT in the file (partition-dir encoding), written with
-    pyarrow — no Spark job. Consumed by the same manifest/move protocol
-    as the Spark-written generations."""
+    layout from driver-resident rows: one new parquet file
+    ``part-00000-<gen>.parquet`` per bucket dir of ``table_dir``, bucket
+    column NOT in the file (partition-dir encoding), written with pyarrow
+    — no Spark job. The generation's commit names it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     schema = pa.schema(fields)
     for b, rows in by_bucket.items():
-        d = os.path.join(tmp_dir, f"{bucket_col}={b}")
+        d = os.path.join(table_dir, f"{bucket_col}={b}")
         os.makedirs(d, exist_ok=True)
         cols = list(zip(*rows)) if rows else [[] for _ in fields]
         pq.write_table(
@@ -420,6 +350,24 @@ def _write_bucketed_parquet(
             ),
             os.path.join(d, f"part-00000-{gen}.parquet"),
         )
+
+
+def _write_journal(journal_path: str, rows: list, gen: str) -> None:
+    """One new journal file of (old, new) merge events, with pyarrow: the
+    journal is driver-resident, so no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(journal_path, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "old": pa.array([r[0] for r in rows], pa.int64()),
+                "new": pa.array([r[1] for r in rows], pa.int64()),
+            }
+        ),
+        os.path.join(journal_path, f"part-00000-{gen}.parquet"),
+    )
 
 
 def _local_grp_type(schema, id_col: str, source_col: str) -> str | None:
@@ -480,7 +428,7 @@ def _local_upsert(
     cap or null guard tripped before anything was written and the caller
     must run the distributed path instead. Semantics are IDENTICAL to the
     distributed body (same edge families, same journal resolution, same
-    manifest protocol); the only difference is where the batch-sized half
+    commit); the only difference is where the batch-sized half
     of the work happens. While the touched key partitions and the
     affected serving buckets fit ``LOCAL_PARTITION_BYTES_CAP``, the stage
     probe and the serving rewrite read them with pyarrow and the
@@ -653,49 +601,6 @@ def _local_upsert(
     ]
     _mark("merge")
 
-    gen = uuid.uuid4().hex[:8]
-    file_moves: list[list[str]] = []
-    scratch: list[str] = []
-    # keys append for NEW units (comp0 = the anchor's label after this
-    # batch's fixpoint), one pyarrow file per touched key bucket
-    tmp_keys = f"{serving_path}__gen_{gen}_keys"
-    keys_by_bucket: dict[int, list[tuple]] = {}
-    for u in new_units:
-        a = anchor[u]
-        c0 = merged_map.get(a, a)
-        for j, kv, kb in unit_keys[u]:
-            keys_by_bucket.setdefault(kb, []).append((u[0], j, kv, u[1], a, c0))
-    key_fields = [
-        _pa_field("grp", grp_type),
-        _pa_field("combo_id", "int"),
-        _pa_field("key_val", "bigint"),
-        _pa_field("sh", "bigint"),
-        _pa_field("anchor", "bigint"),
-        _pa_field("comp0", "bigint"),
-    ]
-    _write_bucketed_parquet(tmp_keys, KEY_BUCKET_COL, keys_by_bucket, key_fields, gen)
-    file_moves += _move_part_files(tmp_keys, keys_path)
-    scratch.append(tmp_keys)
-    # journal append (driver-resident merge events, pyarrow — as before)
-    tmp_journal = f"{serving_path}__gen_{gen}_journal"
-    if jnew_rows:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(tmp_journal, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "old": pa.array([r[0] for r in jnew_rows], pa.int64()),
-                    "new": pa.array([r[1] for r in jnew_rows], pa.int64()),
-                }
-            ),
-            os.path.join(tmp_journal, f"part-00000-{gen}.parquet"),
-        )
-        file_moves += _move_part_files(tmp_journal, journal_path)
-        scratch.append(tmp_journal)
-    _mark("plan_writes")
-
     if metrics is not None:
         metrics["probe_kbs"] = kbs
         metrics["n_edges"] = len(edges)
@@ -704,35 +609,33 @@ def _local_upsert(
         if kbs is not None:
             _stage_scan_metrics(keys_path, kbs, metrics)
 
-    serving_fields = [
-        _pa_field("id", "bigint"),
-        _pa_field("source", grp_type),
-        _pa_field("sh", "bigint"),
-        _pa_field("comp", "bigint"),
-        _pa_field("paired", "boolean"),
-    ]
+    gen = uuid.uuid4().hex[:8]
+    # keys append for NEW units (comp0 = the anchor's label after this
+    # batch's fixpoint), one pyarrow file per touched key bucket
+    keys_by_bucket: dict[int, list[tuple]] = {}
+    for u in new_units:
+        a = anchor[u]
+        c0 = merged_map.get(a, a)
+        for j, kv, kb in unit_keys[u]:
+            keys_by_bucket.setdefault(kb, []).append((u[0], j, kv, u[1], a, c0))
+    _write_bucketed_parquet(
+        keys_path, KEY_BUCKET_COL, keys_by_bucket, _key_fields(grp_type), gen
+    )
+    if jnew_rows:
+        _write_journal(journal_path, jnew_rows, gen)
+    _mark("plan_writes")
+
     if not have_state:
         # first generation: whole table written from the driver rows
-        nxt = serving_path + f"__gen_{gen}_full"
         by_bucket: dict[int, list[tuple]] = {}
         for row in batch_rows_local:
             by_bucket.setdefault(bucket_of_long(row[3], n_buckets), []).append(row)
-        _write_bucketed_parquet(nxt, BUCKET_COL, by_bucket, serving_fields, gen)
-        scratch.append(nxt)
-        man = {
-            "kind": "full",
-            "src": nxt,
-            "n_buckets": n_buckets,
-            "n_key_buckets": n_key_buckets,
-            "file_moves": file_moves,
-            "scratch": scratch,
-            "geometry": {
-                "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-            },
-            "applied_marker": applied_marker,
-        }
-        _write_manifest(serving_path, man)
-        _execute_manifest(serving_path, man)
+        _write_bucketed_parquet(
+            serving_path, BUCKET_COL, by_bucket, _serving_fields(grp_type), gen
+        )
+        _write_meta(serving_path, n_buckets)
+        _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
+        _commit(serving_path, [], applied_marker)
         _mark("full_write")
         if metrics is not None:
             metrics["affected_buckets"] = None
@@ -747,8 +650,6 @@ def _local_upsert(
         | {merged_map.get(i, i) for i, _g, _s in rows}
     )
     affected = sorted({bucket_of_long(c, n_buckets) for c in affected_vals})
-    tmp = f"{serving_path}__gen_{gen}"
-    written: set[int] = set()
     if affected:
         aff_dirs = [
             os.path.join(serving_path, f"{BUCKET_COL}={b}") for b in affected
@@ -769,9 +670,9 @@ def _local_upsert(
                 by_bucket.setdefault(
                     bucket_of_long(row[3], n_buckets), []
                 ).append(row)
-            _write_bucketed_parquet(tmp, BUCKET_COL, by_bucket, serving_fields, gen)
-            scratch.append(tmp)
-            written = set(by_bucket)
+            _write_bucketed_parquet(
+                serving_path, BUCKET_COL, by_bucket, _serving_fields(grp_type), gen
+            )
         else:
             pruned = (
                 spark.read.parquet(serving_path)
@@ -804,32 +705,10 @@ def _local_upsert(
                 )
                 .unionByName(batch_local_df)
             )
-            rewritten.withColumn(
-                BUCKET_COL, _bucket_expr(["comp"], n_buckets)
-            ).repartition(F.col(BUCKET_COL)).write.partitionBy(BUCKET_COL).parquet(tmp)
-            scratch.append(tmp)
-            written = {
-                int(e.split("=", 1)[1])
-                for e in os.listdir(tmp)
-                if e.startswith(f"{BUCKET_COL}=")
-            }
+            _append_buckets(rewritten, serving_path, n_buckets)
     _mark("rewrite")
-    man = {
-        "kind": "swap",
-        "gen": gen,
-        "tmp": tmp,
-        "swap_buckets": sorted(written & set(affected)),
-        "drop_buckets": sorted(set(affected) - written),
-        "file_moves": file_moves,
-        "scratch": scratch,
-        "geometry": {
-            "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-        },
-        "applied_marker": applied_marker,
-    }
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
-    _mark("swap")
+    _commit(serving_path, _dirs("", BUCKET_COL, affected), applied_marker)
+    _mark("commit")
     if metrics is not None:
         metrics["affected_buckets"] = affected
         metrics["phases"] = _phases
@@ -935,7 +814,6 @@ def _upsert_batch(
         _phases[name] = round(now - _last, 3)
         _last = now
 
-    _recover_pending(serving_path)
     keys_path = serving_path + KEYS_SUFFIX
     journal_path = serving_path + JOURNAL_SUFFIX
     blocks = min(bits, max(10, max_hamming + 2))
@@ -944,7 +822,7 @@ def _upsert_batch(
             f"max_hamming={max_hamming} needs > {max_hamming} blocks but "
             f"bits={bits} admits at most {bits}"
         )
-    have_state = os.path.isdir(serving_path)
+    have_state = open_table(serving_path)
     if have_state:
         n_buckets = _table_buckets(serving_path, n_buckets)
         if not os.path.isdir(keys_path):
@@ -1076,9 +954,9 @@ def _upsert_batch(
             F.coalesce("__mc", "id").alias("comp"),
             F.coalesce("__touched", F.lit(False)).alias("paired"),
         )
-        # no materialization needed pre-swap: derives only from the
-        # checkpointed fp_b and the batch-local merged/everts frames,
-        # never from the serving files the manifest replaces
+        # no materialization needed before the commit: derives only from
+        # the checkpointed fp_b and the batch-local merged/everts frames,
+        # never from the serving files this generation replaces
     )
     # stage append for NEW units: comp0 = the anchor's label after this
     # batch's fixpoint (current at append time; the journal covers later
@@ -1097,8 +975,6 @@ def _upsert_batch(
     new_keys = D.staged_union_keys(nu, bits, blocks, max_hamming).withColumn(
         KEY_BUCKET_COL, _bucket_expr(["combo_id", "key_val"], n_key_buckets)
     )
-    gen = uuid.uuid4().hex[:8]
-    tmp_keys = f"{serving_path}__gen_{gen}_keys"
     _mark("plan_keys")
 
     def _write_keys() -> None:
@@ -1117,13 +993,11 @@ def _upsert_batch(
             # for stage FILE COUNT at listing time, and an unclustered
             # initial write from P tasks seeds P x n_key_buckets files
             nk = new_keys.repartition(F.col(KEY_BUCKET_COL))
-        nk.write.partitionBy(KEY_BUCKET_COL).parquet(tmp_keys)
+        nk.write.mode("append").partitionBy(KEY_BUCKET_COL).parquet(keys_path)
 
-    file_moves: list[list[str]] = []
-    scratch = [tmp_keys]
     # journal append: only genuine merge EVENTS (a pre-batch current comp
     # remapped) — new-vertex contractions never anchor a stale comp0
-    tmp_journal = f"{serving_path}__gen_{gen}_journal"
+    gen = uuid.uuid4().hex[:8]
     if jnew_rows is None:
         jnew = (
             merged.filter(F.col("__mid") != F.col("__mc"))
@@ -1137,29 +1011,13 @@ def _upsert_batch(
         )
         n_jnew = jnew.count()
         if n_jnew > 0:
-            jnew.coalesce(1).write.parquet(tmp_journal)
+            jnew.coalesce(1).write.mode("append").parquet(journal_path)
     else:
+        # merge events are DRIVER-resident on the local-merge path: one
+        # pyarrow write, no Spark job scheduled at micro-batch cadence
         n_jnew = len(jnew_rows)
         if n_jnew > 0:
-            # merge events are DRIVER-resident on the local-merge path:
-            # write the tiny journal delta with pyarrow — one fs write,
-            # no Spark job scheduled at micro-batch cadence
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            os.makedirs(tmp_journal, exist_ok=True)
-            pq.write_table(
-                pa.table(
-                    {
-                        "old": pa.array([r[0] for r in jnew_rows], pa.int64()),
-                        "new": pa.array([r[1] for r in jnew_rows], pa.int64()),
-                    }
-                ),
-                os.path.join(tmp_journal, f"part-00000-{gen}.parquet"),
-            )
-    if n_jnew > 0:
-        file_moves += _move_part_files(tmp_journal, journal_path)
-        scratch.append(tmp_journal)
+            _write_journal(journal_path, jnew_rows, gen)
 
     _mark("journal_write")
     if metrics is not None:
@@ -1173,32 +1031,10 @@ def _upsert_batch(
         # first generation: full write, bucketed layout from the start
         # (one-off — the keys write runs alongside it, same overlap as
         # the incremental path)
-        nxt = serving_path + f"__gen_{gen}_full"
-
-        def _write_full() -> None:
-            batch_rows.withColumn(
-                BUCKET_COL, _bucket_expr(["comp"], n_buckets)
-            ).repartition(F.col(BUCKET_COL)).write.partitionBy(
-                BUCKET_COL
-            ).parquet(nxt)
-
-        _run_writes(_write_keys, _write_full)
-        file_moves += _move_part_files(tmp_keys, keys_path)
-        scratch.append(nxt)
-        man = {
-            "kind": "full",
-            "src": nxt,
-            "n_buckets": n_buckets,
-            "n_key_buckets": n_key_buckets,
-            "file_moves": file_moves,
-            "scratch": scratch,
-            "geometry": {
-                "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-            },
-            "applied_marker": applied_marker,
-        }
-        _write_manifest(serving_path, man)
-        _execute_manifest(serving_path, man)
+        _run_writes(_write_keys, lambda: _append_buckets(batch_rows, serving_path, n_buckets))
+        _write_meta(serving_path, n_buckets)
+        _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
+        _commit(serving_path, [], applied_marker)
         for f in pr.persisted:
             f.unpersist()
         _mark("full_write")
@@ -1235,9 +1071,8 @@ def _upsert_batch(
     # its comp is remapped (comp in merged.__mid) or its paired flag
     # flips (a previously-unpaired row's comp IS its id, which the
     # contracted graph contains when it gains an edge) — both put
-    # bucket(comp) in the affected set. No materialization: the single
-    # consumer is the serving rewrite, whose write to the generation's
-    # tmp dir completes BEFORE the manifest swaps these files out.
+    # bucket(comp) in the affected set. No materialization: the read
+    # lists the live files now, and the rewrite only adds new ones.
     pruned = (
         spark.read.parquet(serving_path)
         .filter(
@@ -1262,46 +1097,15 @@ def _upsert_batch(
         .unionByName(batch_rows)
     )
     _mark("pruned_read")
-    tmp = f"{serving_path}__gen_{gen}"
-
-    def _write_serving() -> None:
-        rewritten.withColumn(
-            BUCKET_COL, _bucket_expr(["comp"], n_buckets)
-        ).repartition(F.col(BUCKET_COL)).write.partitionBy(BUCKET_COL).parquet(
-            tmp
-        )
-
     # the keys append and the serving rewrite are independent jobs on
     # independent frames: submit them CONCURRENTLY so the batch pays one
-    # write latency, not two (both must land before the manifest commits
-    # — the crash protocol is unchanged)
-    _run_writes(_write_keys, _write_serving)
-    file_moves += _move_part_files(tmp_keys, keys_path)
-    scratch.append(tmp)
+    # write latency, not two (both land before the commit)
+    _run_writes(_write_keys, lambda: _append_buckets(rewritten, serving_path, n_buckets))
     _mark("rewrite")
-    written = {
-        int(e.split("=", 1)[1])
-        for e in os.listdir(tmp)
-        if e.startswith(f"{BUCKET_COL}=")
-    }
-    man = {
-        "kind": "swap",
-        "gen": gen,
-        "tmp": tmp,
-        "swap_buckets": sorted(written & set(affected)),
-        "drop_buckets": sorted(set(affected) - written),
-        "file_moves": file_moves,
-        "scratch": scratch,
-        "geometry": {
-            "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-        },
-        "applied_marker": applied_marker,
-    }
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
+    _commit(serving_path, _dirs("", BUCKET_COL, affected), applied_marker)
     for f in pr.persisted:
         f.unpersist()
-    _mark("swap")
+    _mark("commit")
     if metrics is not None:
         metrics["affected_buckets"] = affected
         metrics["phases"] = _phases
@@ -1318,13 +1122,14 @@ def _upsert_batch(
 
 
 def _part_files(d: str) -> list[str]:
-    """The data files under a (possibly partitioned) table directory."""
-    return [
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(d)
-        for f in files
-        if f.startswith("part-")
-    ]
+    """The data files under a (possibly partitioned) table directory; as
+    for Spark, its ``_`` subdirectories (the serving root's stage and
+    journal) are not part of it."""
+    out = []
+    for root, dirs, files in os.walk(d):
+        dirs[:] = [x for x in dirs if "=" in x or not x.startswith(("_", "."))]
+        out += [os.path.join(root, f) for f in files if f.startswith("part-")]
+    return out
 
 
 def _dir_bytes(d: str) -> int:
@@ -1340,6 +1145,28 @@ def _read_parquet_dir(d: str, columns: list[str]) -> list[tuple]:
         return []
     t = pq.read_table(d, columns=columns)
     return list(zip(*(t.column(c).to_pylist() for c in columns)))
+
+
+def _rewrite_journal(
+    journal_path: str, journal_map: dict[int, int], resolved: set[int], gen: str
+) -> list[str]:
+    """A retraction's journal rewrite: entries whose chain terminates in a
+    re-solved component are dead for every surviving unit (all got direct
+    comp0s) and DANGEROUS if their old label was resurrected as a split
+    subset's new minimum. Writes the kept entries as a new file; returns
+    the journal directory for the commit to drop ([] when none is dead)."""
+
+    def term(c: int) -> int:
+        while c in journal_map:
+            c = journal_map[c]
+        return c
+
+    kept = [[x, y] for x, y in journal_map.items() if term(x) not in resolved]
+    if len(kept) == len(journal_map):
+        return []
+    if kept:
+        _write_journal(journal_path, kept, gen)
+    return [JOURNAL_SUFFIX[1:]]
 
 
 def _local_retract(
@@ -1362,7 +1189,7 @@ def _local_retract(
     """In-process retraction for small affected state: ``(handled,
     result)``; ``handled=False`` → caller runs the distributed body.
     Semantics identical to the distributed path (same probe keys, same
-    re-solve, same stage correction and manifest); every read is the
+    re-solve, same stage correction and commit); every read is the
     SAME pruned partition set, just via pyarrow instead of scheduled
     jobs. Byte gates (not row guesses) decide: affected serving buckets,
     then the touched key partitions, must each fit the cap."""
@@ -1477,7 +1304,7 @@ def _local_retract(
             extra_rows.extend(_read_parquet_dir(d, cols))
         driver_rows += len(extra_rows)
     # 4. stage correction: surviving units re-anchored to their min
-    #    member, dead units removed — only the touched key partitions swap
+    #    member, dead units removed — only the touched key partitions are rewritten
     corrected: dict[tuple, tuple[int, int]] = {}  # (grp, sh) -> (anchor, comp0)
     for (c, g, s), rep in units_s.items():
         corrected[(g, s)] = (rep, labels_map.get(rep, rep))
@@ -1507,76 +1334,25 @@ def _local_retract(
     for (g, s), (a, c0) in corrected.items():
         for j, kv, b in touched_keys[(g, s)]:
             keys_by_bucket.setdefault(b, []).append((g, j, kv, s, a, c0))
-    # 5. writes (all pyarrow) + the shared manifest protocol
-    tmp = f"{serving_path}__gen_{gen}"
-    scratch = [tmp]
+    # 5. writes (all pyarrow) + one commit
     by_bucket: dict[int, list[tuple]] = {}
     for row in relabelled:
         by_bucket.setdefault(bucket_of_long(row[3], n_buckets), []).append(row)
     for row in passthrough + extra_rows:
         by_bucket.setdefault(bucket_of_long(row[3], n_buckets), []).append(row)
-    serving_fields = [
-        _pa_field("id", "bigint"),
-        _pa_field("source", grp_type),
-        _pa_field("sh", "bigint"),
-        _pa_field("comp", "bigint"),
-        _pa_field("paired", "boolean"),
-    ]
-    _write_bucketed_parquet(tmp, BUCKET_COL, by_bucket, serving_fields, gen)
-    written = set(by_bucket)
-    tmp_keys = f"{serving_path}__gen_{gen}_keys"
-    scratch.append(tmp_keys)
-    key_fields = [
-        _pa_field("grp", grp_type),
-        _pa_field("combo_id", "int"),
-        _pa_field("key_val", "bigint"),
-        _pa_field("sh", "bigint"),
-        _pa_field("anchor", "bigint"),
-        _pa_field("comp0", "bigint"),
-    ]
-    _write_bucketed_parquet(tmp_keys, KEY_BUCKET_COL, keys_by_bucket, key_fields, gen)
-    keys_written = set(keys_by_bucket)
-    kept_journal = [
-        [x, y] for x, y in journal_map.items() if _term(x) not in comps_old
-    ]
-    man = {
-        "kind": "swap",
-        "gen": gen,
-        "tmp": tmp,
-        "swap_buckets": sorted(written & set(affected)),
-        "drop_buckets": sorted(set(affected) - written),
-        "keys_tmp": tmp_keys,
-        "keys_swap_buckets": sorted(keys_written & set(kb_aff)),
-        "keys_drop_buckets": sorted(set(kb_aff) - keys_written),
-        "file_moves": [],
-        "scratch": scratch,
-        "geometry": {
-            "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-        },
-        "applied_marker": applied_marker,
-    }
-    if len(kept_journal) != len(journal_map):
-        if kept_journal:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tmp_journal = f"{serving_path}__gen_{gen}_journal"
-            os.makedirs(tmp_journal, exist_ok=True)
-            pq.write_table(
-                pa.table(
-                    {
-                        "old": pa.array([r[0] for r in kept_journal], pa.int64()),
-                        "new": pa.array([r[1] for r in kept_journal], pa.int64()),
-                    }
-                ),
-                os.path.join(tmp_journal, f"part-00000-{gen}.parquet"),
-            )
-            scratch.append(tmp_journal)
-            man["journal_tmp"] = tmp_journal
-        else:
-            man["journal_clear"] = True
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
+    _write_bucketed_parquet(
+        serving_path, BUCKET_COL, by_bucket, _serving_fields(grp_type), gen
+    )
+    _write_bucketed_parquet(
+        keys_path, KEY_BUCKET_COL, keys_by_bucket, _key_fields(grp_type), gen
+    )
+    _commit(
+        serving_path,
+        _dirs("", BUCKET_COL, affected)
+        + _dirs(KEYS_SUFFIX[1:], KEY_BUCKET_COL, kb_aff)
+        + _rewrite_journal(journal_path, journal_map, comps_old, gen),
+        applied_marker,
+    )
     if metrics is not None:
         metrics["probe_kbs"] = kb0
         metrics["buckets_old"] = list(buckets_old)
@@ -1640,13 +1416,13 @@ def components_retract_batch(
       anchor (min surviving member — the re-solve's star target, so the
       induction "anchor is connected to every member" is preserved for
       future ingest batches) and their comp0 rewritten to the new label.
-      Only the key partitions those units hash into are swapped. Stale
+      Only the key partitions those units hash into are rewritten. Stale
       journal entries whose targets were relabelled become unreachable
       (every unit that could resolve through them just got a direct
       comp0) and are dropped by the next compaction.
 
-    Serving buckets and key partitions swap under ONE crash manifest;
-    per-batch I/O scales with the retraction batch plus the components
+    Serving buckets, key partitions and the journal rewrite commit in ONE
+    record; per-batch I/O scales with the retraction batch plus the components
     it touches. Returns the serving bucket ids rewritten (None when
     there is no state)."""
     if "sh" not in batch_df.columns:
@@ -1688,8 +1464,7 @@ def _retract_batch(
     frame; ``rows`` is that frame already collected (the CDC driver's one
     read of a micro-batch), or None to collect it here."""
     spark = del_df.sparkSession
-    _recover_pending(serving_path)
-    if not os.path.isdir(serving_path):
+    if not open_table(serving_path):
         return None
     keys_path = serving_path + KEYS_SUFFIX
     journal_path = serving_path + JOURNAL_SUFFIX
@@ -1903,20 +1678,9 @@ def _retract_batch(
     if pruned2 is not None:
         rewritten = rewritten.unionByName(pruned2)
 
-    gen = uuid.uuid4().hex[:8]
-    tmp = f"{serving_path}__gen_{gen}"
-    scratch = [tmp]
-
-    def _write_serving() -> None:
-        rewritten.withColumn(
-            BUCKET_COL, _bucket_expr(["comp"], n_buckets)
-        ).repartition(F.col(BUCKET_COL)).write.partitionBy(BUCKET_COL).parquet(
-            tmp
-        )
-
     # 4. correct the union-key stage: every unit of an affected component
     #    gets its post-delete anchor (min surviving member) and comp0;
-    #    fully-deleted units disappear. Only their key partitions swap.
+    #    fully-deleted units disappear. Only their key partitions are rewritten.
     corrected_units = (
         survivors.groupBy(
             F.col("source").alias("__grp"), F.col("sh").alias("__sh")
@@ -1970,7 +1734,6 @@ def _retract_batch(
     ).withColumn(
         KEY_BUCKET_COL, _bucket_expr(["combo_id", "key_val"], n_key_buckets)
     ).filter(F.col(KEY_BUCKET_COL).isin(kb_aff))
-    tmp_keys = f"{serving_path}__gen_{gen}_keys"
 
     def _write_keys() -> None:
         keep_keys.select(
@@ -1978,69 +1741,18 @@ def _retract_batch(
             KEY_BUCKET_COL,
         ).unionByName(new_keys).repartition(
             F.col(KEY_BUCKET_COL)
-        ).write.partitionBy(KEY_BUCKET_COL).parquet(tmp_keys)
+        ).write.mode("append").partitionBy(KEY_BUCKET_COL).parquet(keys_path)
 
     # serving rewrite and key-partition rewrite are independent frames
     # (both pinned upstream): one write latency, not two, per retraction
-    _run_writes(_write_serving, _write_keys)
-    written = {
-        int(e.split("=", 1)[1])
-        for e in os.listdir(tmp)
-        if e.startswith(f"{BUCKET_COL}=")
-    }
-    scratch.append(tmp_keys)
-    keys_written = {
-        int(e.split("=", 1)[1])
-        for e in os.listdir(tmp_keys)
-        if e.startswith(f"{KEY_BUCKET_COL}=")
-    }
-    kept_journal = [
-        [x, y] for x, y in journal_map.items() if _term(x) not in comps_old
-    ]
-    man = {
-        "kind": "swap",
-        "gen": gen,
-        "tmp": tmp,
-        "swap_buckets": sorted(written & set(affected)),
-        "drop_buckets": sorted(set(affected) - written),
-        "keys_tmp": tmp_keys,
-        "keys_swap_buckets": sorted(keys_written & set(kb_aff)),
-        "keys_drop_buckets": sorted(set(kb_aff) - keys_written),
-        "file_moves": [],
-        "scratch": scratch,
-        "geometry": {
-            "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-        },
-        "applied_marker": applied_marker,
-    }
-    if len(kept_journal) != len(journal_map):
-        if kept_journal:
-            # the journal is driver-resident (merge-event metadata):
-            # pyarrow write, no Spark job
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tmp_journal = f"{serving_path}__gen_{gen}_journal"
-            os.makedirs(tmp_journal, exist_ok=True)
-            pq.write_table(
-                pa.table(
-                    {
-                        "old": pa.array(
-                            [r[0] for r in kept_journal], pa.int64()
-                        ),
-                        "new": pa.array(
-                            [r[1] for r in kept_journal], pa.int64()
-                        ),
-                    }
-                ),
-                os.path.join(tmp_journal, f"part-00000-{gen}.parquet"),
-            )
-            scratch.append(tmp_journal)
-            man["journal_tmp"] = tmp_journal
-        else:
-            man["journal_clear"] = True
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
+    _run_writes(lambda: _append_buckets(rewritten, serving_path, n_buckets), _write_keys)
+    _commit(
+        serving_path,
+        _dirs("", BUCKET_COL, affected)
+        + _dirs(KEYS_SUFFIX[1:], KEY_BUCKET_COL, kb_aff)
+        + _rewrite_journal(journal_path, journal_map, comps_old, uuid.uuid4().hex[:8]),
+        applied_marker,
+    )
     if metrics is not None:
         metrics["probe_kbs"] = sorted(kb0)
         metrics["buckets_old"] = list(buckets_old)
@@ -2059,10 +1771,10 @@ def compact_components_stage(spark: SparkSession, serving_path: str) -> int:
     the journal). Run when the journal's size approaches the per-batch
     resolution budget; returns the number of journal entries folded.
     Full-stage rewrite — amortized maintenance, never on the batch path."""
-    _recover_pending(serving_path)
+    if not open_table(serving_path):
+        return 0
     keys_path = serving_path + KEYS_SUFFIX
-    journal_path = serving_path + JOURNAL_SUFFIX
-    mp = _read_journal(spark, journal_path)
+    mp = _read_journal(spark, serving_path + JOURNAL_SUFFIX)
     if not mp:
         return 0
 
@@ -2075,7 +1787,7 @@ def compact_components_stage(spark: SparkSession, serving_path: str) -> int:
         # small stage: the fold is a per-row comp0 -> terminal-label map
         # (every key row of a unit carries the unit's anchor/comp0, so
         # the anchor join of the distributed path reduces to _term) —
-        # rewrite the partitions with pyarrow, same manifest
+        # rewrite the partitions with pyarrow
         kcols = ["grp", "combo_id", "key_val", "sh", "anchor", "comp0"]
         by_bucket: dict[int, list[tuple]] = {}
         grp_type = None
@@ -2089,57 +1801,30 @@ def compact_components_stage(spark: SparkSession, serving_path: str) -> int:
             ]
             if rows and grp_type is None:
                 grp_type = "string" if isinstance(rows[0][0], str) else "bigint"
-        gen = uuid.uuid4().hex[:8]
-        tmp = f"{serving_path}__gen_{gen}_compact"
-        key_fields = [
-            _pa_field("grp", grp_type or "string"),
-            _pa_field("combo_id", "int"),
-            _pa_field("key_val", "bigint"),
-            _pa_field("sh", "bigint"),
-            _pa_field("anchor", "bigint"),
-            _pa_field("comp0", "bigint"),
-        ]
-        _write_bucketed_parquet(tmp, KEY_BUCKET_COL, by_bucket, key_fields, gen)
-        man = {
-            "kind": "compact",
-            "tmp": tmp,
-            "old": f"{serving_path}__old_{gen}_keys",
-            "n_key_buckets": _table_buckets(keys_path, DEFAULT_KEY_BUCKETS),
-            "scratch": [tmp],
-        }
-        _write_manifest(serving_path, man)
-        _execute_manifest(serving_path, man)
-        return len(mp)
-    staged = spark.read.parquet(keys_path)
-    resolved = _resolve_labels(
-        staged.select(F.col("anchor").alias("id"), F.col("comp0").alias("comp")),
-        spark,
-        mp,
-    )
-    folded = (
-        staged.drop("comp0")
-        .join(
+        _write_bucketed_parquet(
+            keys_path, KEY_BUCKET_COL, by_bucket, _key_fields(grp_type or "string"),
+            uuid.uuid4().hex[:8],
+        )
+    else:
+        staged = spark.read.parquet(keys_path)
+        resolved = _resolve_labels(
+            staged.select(F.col("anchor").alias("id"), F.col("comp0").alias("comp")),
+            spark,
+            mp,
+        )
+        staged.drop("comp0").join(
             resolved.select(
                 F.col("id").alias("anchor"), F.col("comp").alias("comp0")
             ).distinct(),
             "anchor",
-        )
-        .select("grp", "combo_id", "key_val", "sh", "anchor", "comp0", KEY_BUCKET_COL)
-    )
-    gen = uuid.uuid4().hex[:8]
-    tmp = f"{serving_path}__gen_{gen}_compact"
-    folded.repartition(F.col(KEY_BUCKET_COL)).write.partitionBy(
-        KEY_BUCKET_COL
-    ).parquet(tmp)
-    man = {
-        "kind": "compact",
-        "tmp": tmp,
-        "old": f"{serving_path}__old_{gen}_keys",
-        "n_key_buckets": _table_buckets(keys_path, DEFAULT_KEY_BUCKETS),
-        "scratch": [tmp],
-    }
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
+        ).select(
+            "grp", "combo_id", "key_val", "sh", "anchor", "comp0", KEY_BUCKET_COL
+        ).repartition(F.col(KEY_BUCKET_COL)).write.mode("append").partitionBy(
+            KEY_BUCKET_COL
+        ).parquet(keys_path)
+    # journal entries map RETIRED comps; the folded comp0s are current, so
+    # the journal leaves the record with the old stage
+    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
     return len(mp)
 
 
@@ -2158,15 +1843,15 @@ def rebuild_components_stage(
     induction: an anchor shares its unit's fingerprint, so it is
     connected to every member); comp0 = the unit's CURRENT component, so
     the journal starts empty. Full-state rewrite by construction — a
-    one-off migration, never on the batch path. Returns the number of
-    staged units."""
-    _recover_pending(serving_path)
+    one-off migration, never on the batch path. A serving table without a
+    record is committed as it is. Returns the number of staged units."""
+    pathio.sweep(serving_path)
     keys_path = serving_path + KEYS_SUFFIX
     blocks = min(bits, max(10, max_hamming + 2))
     if _dir_bytes(serving_path) <= LOCAL_PARTITION_BYTES_CAP:
         # small serving table: derive the units and their key rows
-        # in-process (pinned twins), write the stage with pyarrow —
-        # same manifest, no Spark jobs
+        # in-process (pinned twins), write the stage with pyarrow — no
+        # Spark jobs
         from scylla_migrator_spark.analytics.dedup import block_union_key_rows
 
         units_l: dict[tuple, tuple[int, int]] = {}
@@ -2191,57 +1876,27 @@ def rebuild_components_stage(
                 by_bucket.setdefault(
                     bucket_of_combo_key(j, kv, n_key_buckets), []
                 ).append((g, j, kv, s, a, c0))
-        gen = uuid.uuid4().hex[:8]
-        tmp = f"{serving_path}__gen_{gen}_rebuild"
-        key_fields = [
-            _pa_field("grp", grp_type or "string"),
-            _pa_field("combo_id", "int"),
-            _pa_field("key_val", "bigint"),
-            _pa_field("sh", "bigint"),
-            _pa_field("anchor", "bigint"),
-            _pa_field("comp0", "bigint"),
-        ]
-        _write_bucketed_parquet(tmp, KEY_BUCKET_COL, by_bucket, key_fields, gen)
-        man = {
-            "kind": "compact",  # same swap shape: tmp replaces the keys dir
-            "tmp": tmp,
-            "old": f"{serving_path}__old_{gen}_keys",
-            "n_key_buckets": n_key_buckets,
-            "scratch": [tmp],
-            "geometry": {
-                "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-            },
-        }
-        _write_manifest(serving_path, man)
-        _execute_manifest(serving_path, man)
-        return len(units_l)
-    units = (
-        spark.read.parquet(serving_path)
-        .groupBy(F.col("source").alias("__grp"), F.col("sh").alias("__sh"))
-        .agg(F.min("id").alias("__anchor"), F.min("comp").alias("__comp0"))
-        .localCheckpoint(eager=True)
-    )
-    keys = D.staged_union_keys(units, bits, blocks, max_hamming).withColumn(
-        KEY_BUCKET_COL, _bucket_expr(["combo_id", "key_val"], n_key_buckets)
-    )
-    gen = uuid.uuid4().hex[:8]
-    tmp = f"{serving_path}__gen_{gen}_rebuild"
-    keys.repartition(F.col(KEY_BUCKET_COL)).write.partitionBy(
-        KEY_BUCKET_COL
-    ).parquet(tmp)
-    man = {
-        "kind": "compact",  # same swap shape: tmp replaces the keys dir
-        "tmp": tmp,
-        "old": f"{serving_path}__old_{gen}_keys",
-        "n_key_buckets": n_key_buckets,
-        "scratch": [tmp],
-        "geometry": {
-            "bits": bits, "blocks": blocks, "max_hamming": max_hamming
-        },
-    }
-    _write_manifest(serving_path, man)
-    _execute_manifest(serving_path, man)
-    return units.count()
+        _write_bucketed_parquet(
+            keys_path, KEY_BUCKET_COL, by_bucket, _key_fields(grp_type or "string"),
+            uuid.uuid4().hex[:8],
+        )
+        n_units = len(units_l)
+    else:
+        units = (
+            spark.read.parquet(serving_path)
+            .groupBy(F.col("source").alias("__grp"), F.col("sh").alias("__sh"))
+            .agg(F.min("id").alias("__anchor"), F.min("comp").alias("__comp0"))
+            .localCheckpoint(eager=True)
+        )
+        D.staged_union_keys(units, bits, blocks, max_hamming).withColumn(
+            KEY_BUCKET_COL, _bucket_expr(["combo_id", "key_val"], n_key_buckets)
+        ).repartition(F.col(KEY_BUCKET_COL)).write.mode("append").partitionBy(
+            KEY_BUCKET_COL
+        ).parquet(keys_path)
+        n_units = units.count()
+    _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
+    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
+    return n_units
 
 
 def components_cdc_stream(
@@ -2267,7 +1922,7 @@ def components_cdc_stream(
     foreachBatch is at-least-once: a crash after a generation commits
     but before the streaming checkpoint commits replays the batch. Each
     step therefore commits a (batch_id, step) marker INSIDE its
-    generation's manifest, and a replayed batch no-ops the steps the
+    generation's record, and a replayed batch no-ops the steps the
     marker already records — the upsert append is made idempotent per
     batch id (retraction is naturally idempotent: replayed victims are
     no longer staged).
@@ -2375,7 +2030,7 @@ def incremental_components_stream(
     ``spark.read.parquet(serving_path)`` (filter ``paired`` for the
     pair-graph vertex convention). At-least-once replay of a committed
     batch is a no-op (batch-id marker committed inside the generation's
-    manifest — see components_cdc_stream)."""
+    record — see components_cdc_stream)."""
 
     def body(bdf: DataFrame, bid: int) -> None:
         st = read_applied_marker(serving_path)

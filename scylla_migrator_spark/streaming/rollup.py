@@ -19,8 +19,8 @@ Scale design — partition-scoped upsert:
   key-hash bucket (``__bucket=N/``, N = pmod(xxhash64(keys), n_buckets)).
   A micro-batch touches only the buckets its keys hash into: the merge
   reads existing rows for THOSE buckets only (partition pruning prunes the
-  scan to the affected directories) and atomically swaps ONLY those bucket
-  directories. Per-batch cost is O(affected buckets), not O(table) — the
+  scan to the affected directories) and replaces ONLY those buckets' files.
+  Per-batch cost is O(affected buckets), not O(table) — the
   property the reference's streaming writer has (it touches only the
   batch's items, DynamoStreamReplication.scala:42-114). Untouched bucket
   directories are never read or rewritten (byte-identical across batches,
@@ -29,12 +29,15 @@ Scale design — partition-scoped upsert:
   a few GB; a micro-batch with K distinct keys rewrites ≤K buckets. On a
   real lakehouse the foreachBatch body becomes ``MERGE INTO serving USING
   batch ON keys`` against Delta/Iceberg — same batch DataFrame, same keys.
-- crash semantics: each bucket-directory swap is an atomic ``os.replace``;
-  a crash mid-upsert leaves some buckets on the new generation and some on
-  the old. The checkpointed foreachBatch replays the micro-batch, and the
-  upsert is idempotent per bucket (last-writer-wins replace of the batch's
-  keys), so the replay reconverges every bucket — the at-least-once +
-  idempotent-upsert contract (T4).
+- crash semantics: the table is the files its commit record names
+  (``pathio.commit``). An upsert writes its buckets' new files in place
+  under unique names, then one record write swaps them in for the
+  affected buckets' old files, which the sweep deletes: a crash leaves the
+  whole previous table or the whole new one, and files no record names are
+  deleted by the next upsert's opening sweep. The checkpointed foreachBatch
+  replays the micro-batch, and the upsert is idempotent (last-writer-wins
+  replace of the batch's keys) — the at-least-once + idempotent-upsert
+  contract (T4).
 - sums use DECIMAL so merged results are bit-identical regardless of how
   the stream was chopped into batches (double sums are order-dependent).
 - state is bounded by adding a watermark on the event-time column when
@@ -45,13 +48,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scylla_migrator_spark.pathio import for_path
+from scylla_migrator_spark import pathio
 
 BUCKET_COL = "__bucket"
 DEFAULT_BUCKETS = 16  # fixture scale; thousands at 100 TB
@@ -137,25 +138,47 @@ def _table_buckets(path: str, n_buckets: int) -> int:
     different modulus (which would mis-prune)."""
     meta = os.path.join(path, _META_FILE)
     if os.path.exists(meta):
-        return int(json.loads(for_path(meta).read_utf8(meta))["n_buckets"])
+        return int(json.loads(pathio.for_path(meta).read_utf8(meta))["n_buckets"])
     return n_buckets
 
 
 def _write_meta(path: str, n_buckets: int) -> None:
+    """Pin ``n_buckets`` for the table ``path`` being created; atomic: a
+    truncated pin would kill every later _table_buckets."""
+    os.makedirs(path, exist_ok=True)
     meta = os.path.join(path, _META_FILE)
-    if not os.path.exists(meta):
-        # atomic: a truncated meta would kill every later _table_buckets
-        payload = json.dumps({"n_buckets": n_buckets}).encode("utf-8")
-        for_path(meta).write_utf8_atomically(meta, payload)
+    payload = json.dumps({"n_buckets": n_buckets}).encode("utf-8")
+    pathio.for_path(meta).write_utf8_atomically(meta, payload)
 
 
 def table_exists(path: str) -> bool:
-    """Whether ``path`` holds a bucketed serving table (a ``__bucket=`` dir
-    present). The single source of truth for the layout probe — the SCD2
-    maintainer and the upsert must agree on it."""
-    return os.path.isdir(path) and any(
-        e.startswith(f"{BUCKET_COL}=") for e in os.listdir(path)
-    )
+    """Whether ``path`` holds a bucketed serving table: whether it has a
+    commit record. The single source of truth for the layout probe — the
+    SCD2 maintainer and the upsert must agree on it."""
+    return pathio.live_names(path) is not None
+
+
+def open_table(path: str) -> bool:
+    """Start a write of the bucketed table ``path``: sweep what its record
+    does not name, so directory reads see only live files, and say whether
+    the table exists. Files without a record are no table (a first write
+    that crashed before its record): they are deleted."""
+    pathio.sweep(path)
+    if table_exists(path):
+        return True
+    pathio.for_path(path).delete(path)
+    return False
+
+
+def commit_buckets(root: str, dropped: list[str], meta: dict | None = None) -> None:
+    """Commit what was written below ``root`` since :func:`open_table`: the
+    record's files under each directory of ``dropped`` (relative to
+    ``root``: the rewritten or emptied buckets) leave it, every unnamed
+    data file enters it, and ``meta`` updates the record's meta."""
+    rec = pathio.record(root) or {"live": [], "meta": {}}
+    gone = tuple(d + "/" for d in dropped)
+    live = [n for n in rec["live"] if not n.startswith(gone)]
+    pathio.commit(root, live + pathio.unnamed_files(root), {**rec["meta"], **(meta or {})})
 
 
 def upsert_parquet(
@@ -168,21 +191,22 @@ def upsert_parquet(
 ) -> None:
     """Replace rows matching ``keys`` with the batch's rows (last-writer-wins
     upsert, K7 semantics), rewriting ONLY the key-hash bucket partitions the
-    batch touches (see module docstring). Each affected bucket's new
-    generation is fully materialized to a side directory BEFORE its atomic
-    swap, so readers never observe a partial bucket and a mid-upsert crash
-    leaves replaced-or-previous generations only (reconverged on replay).
+    batch touches (see module docstring). The affected buckets' new files
+    are written in place under new names, then one commit record swaps
+    them in, so readers of the record never observe a partial upsert and a
+    crash leaves the previous table or the new one.
 
     The anti-join is NULL-SAFE: group/dimension keys can legitimately be
     null, and a null-unsafe condition would never match an existing
     null-key row — every upsert would duplicate it instead of replacing it.
-    Callers that already read the current table pass it as ``existing``;
-    it is pruned to the affected buckets before the merge. Callers that
-    already know the batch's bucket set (e.g. the SCD2 maintainer, whose
-    output keys are exactly its input batch's keys) pass ``affected`` to
-    skip the distinct-buckets job over the batch frame."""
+    Callers that already read the current table (after ``open_table``)
+    pass it as ``existing``; it is pruned to the affected buckets before
+    the merge. Callers that already know the batch's bucket set (e.g. the
+    SCD2 maintainer, whose output keys are exactly its input batch's keys)
+    pass ``affected`` to skip the distinct-buckets job over the batch
+    frame."""
     spark = batch_df.sparkSession
-    exists = table_exists(path)
+    exists = open_table(path)
     n_buckets = _table_buckets(path, n_buckets) if exists else n_buckets
     batch_df = batch_df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets)).persist()
     try:
@@ -208,32 +232,15 @@ def upsert_parquet(
             merged = ex.join(new_keys, on=cond, how="left_anti").unionByName(batch_df)
         else:
             merged = batch_df  # first generation: no prune list needed
-        tmp = f"{path}__gen_{uuid.uuid4().hex[:8]}"
+            _write_meta(path, n_buckets)
         # cluster each bucket into one task/file: without this, every
         # shuffle partition opens a writer per bucket it touches
         # (tasks x buckets small files) and the dynamic-partition sort
         # runs per task
-        merged.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
+        merged.repartition(F.col(BUCKET_COL)).write.mode("append").partitionBy(
             BUCKET_COL
-        ).parquet(tmp)
-        os.makedirs(path, exist_ok=True)
-        _write_meta(path, n_buckets)
-        # the swap set is read off the written generation: exactly the
-        # buckets the batch touched (no extra distinct job needed)
-        for entry in os.listdir(tmp):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            src = os.path.join(tmp, entry)
-            dst = os.path.join(path, entry)
-            # stage the displaced generation OUTSIDE the table dir: a name
-            # containing '=' inside it would be listed by Spark partition
-            # discovery if a crash (or failed rmtree) left it behind
-            old = f"{path}__old_{entry.split('=', 1)[1]}_{uuid.uuid4().hex[:8]}"
-            if os.path.isdir(dst):
-                os.replace(dst, old)
-            os.replace(src, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).parquet(path)
+        commit_buckets(path, [f"{BUCKET_COL}={b}" for b in affected or ()])
     finally:
         batch_df.unpersist()
 

@@ -30,7 +30,8 @@ Scale notes:
 - the serving table is hash-bucket-partitioned (streaming/rollup.py):
   BOTH the prior-version fetch here AND the upsert rewrite touch only the
   bucket partitions the batch's keys hash into (partition pruning on the
-  read, per-directory atomic swap on the write) — per-batch cost is
+  read, the affected buckets' files swapped by one commit record on the
+  write) — per-batch cost is
   O(affected buckets), never O(table). On a lakehouse this becomes a
   ``MERGE`` with a delete-then-insert of the affected keys' partitions.
 """
@@ -44,7 +45,7 @@ from scylla_migrator_spark.operators.scd import scd2_history
 from scylla_migrator_spark.streaming.rollup import (
     BUCKET_COL,
     affected_buckets,
-    table_exists,
+    open_table,
     upsert_parquet,
 )
 
@@ -65,7 +66,7 @@ def scd2_upsert_batch(
     spark = batch_df.sparkSession
     new_rows = batch_df.select(*key_cols, *attr_cols, ts_col, tie_col)
     buckets = None
-    if table_exists(serving_path):
+    if open_table(serving_path):
         # one cheap distinct over the raw batch (not the windowed hist)
         # gives the affected bucket set for BOTH the prior-fetch prune and
         # the upsert; the first generation needs neither

@@ -124,6 +124,23 @@ def table_path(spark, tmp_path, monkeypatch, commit_mode):
 
 
 @pytest.fixture
+def data_files():
+    """``data_files(root)``: every data file below the local directory
+    ``root`` (no hidden name), relative to it — after a sweep, exactly what
+    the table's record names."""
+
+    def files(root) -> set[str]:
+        return {
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _dirs, names in os.walk(root)
+            for f in names
+            if not f.startswith(("_", "."))
+        }
+
+    return files
+
+
+@pytest.fixture
 def crash_commit():
     """``with crash_commit(root, point): <write>`` asserts that the write
     dies in its commit of the table at ``root`` at ``point`` (one of

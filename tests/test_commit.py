@@ -1,22 +1,31 @@
-"""The table commit record (``pathio.commit``): every generation of a
-replaced or grown table is a new immutable directory, and ``_live.json``,
-written last, names the live ones by name relative to the table root.
+"""The table commit record (``pathio.commit``): a replaced or grown table
+is data written under new names — generation directories, or files below
+partition directories — and ``_live.json``, written last, names the live
+ones relative to the table root.
 
 The CDC replicator, resumable-migrate and export-sink tests are collected
 here a second time, with ``commit_mode`` set to ``hadoop`` (``file://``
 URIs, the ``file`` scheme routed through HadoopPathIO) and ``norename``
 (``os.replace``/``os.rename`` raise for any directory argument); their own
-modules run them with bare local paths.
+modules run them with bare local paths. The bucketed-table suites (the
+components maintainer, the rollup/SCD2 upsert, compaction) run again in
+``norename`` mode only: they read and write with in-process pyarrow and
+``os`` calls, which need a local disk.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 
 import pytest
 
+import test_components_stage as cs
+import test_migrate as mg
+import test_round3_ops as r3
+import test_streaming_cdc as sc
 from scylla_migrator_spark import pathio
 from test_export_swap import test_crash_removing_previous_export_leaves_complete_export  # noqa: F401
 from test_savepoints import (  # noqa: F401
@@ -42,6 +51,37 @@ from test_streaming_cdc import (  # noqa: F401
     test_torn_staging_write_is_ignored,
     test_unreadable_state_raises,
 )
+
+
+
+def _norename(test):
+    """``test`` collected again with directory renames refused."""
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        return test(*args, **kwargs)
+
+    run = pytest.mark.parametrize("commit_mode", ["norename"])(run)
+    return pytest.mark.usefixtures("table_path")(run)
+
+
+for _test in (
+    cs.test_crash_in_commit_leaves_one_generation,
+    cs.test_compact_components_stage_folds_journal,
+    cs.test_retract_oversized_component_stays_distributed,
+    cs.test_replayed_batch_is_idempotent,
+    cs.test_missing_stage_raises_and_rebuilds,
+    cs.test_distributed_upsert_matches_local_path,
+    cs.test_spark_and_in_process_branches_agree,
+    sc.test_upsert_crash_in_commit_leaves_one_generation,
+    sc.test_upsert_rewrites_only_affected_buckets,
+    sc.test_upsert_replay_is_idempotent,
+    r3.test_incremental_scd2_matches_batch,
+    mg.test_compact_parquet_merges_small_files,
+    mg.test_compact_parquet_preserves_partitioned_layout,
+    mg.test_compact_bucketed_crash_in_commit_leaves_one_table,
+):
+    globals()[_test.__name__] = _norename(_test)
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scylla_migrator_spark")
 
@@ -82,6 +122,49 @@ def test_commit_sweeps_all_but_live_and_underscore_entries(table_root):
     io.delete(table_root)
     assert not io.exists(table_root)
     io.delete(table_root)  # absent: a no-op
+
+
+def test_record_names_files_below_partitions(table_root):
+    """A record may name data files below partition directories, with a
+    small ``meta``. The sweep deletes the files it does not name and every
+    directory left without a live entry (a dropped partition, a crashed
+    write's ``_temporary``), and keeps the ``_`` files at any depth."""
+    io = pathio.for_path(table_root)
+    for rel in (
+        "b=1/old.parquet",
+        "b=1/new.parquet",
+        "b=2/old.parquet",
+        "_sub/k=1/new.parquet",
+        "_sub/_pin.json",
+        "_temporary/0/part.parquet",
+        "_pin.json",
+    ):
+        path = io.join(table_root, rel)
+        io.create_directories(path.rsplit("/", 1)[0])
+        io.write_utf8_atomically(path, b"x")
+    assert pathio.unnamed_files(table_root) == [
+        "_sub/k=1/new.parquet", "b=1/new.parquet", "b=1/old.parquet", "b=2/old.parquet"
+    ]
+    live = ["b=1/new.parquet", "_sub/k=1/new.parquet"]
+    pathio.commit(table_root, live, {"applied": {"batch_id": 3}})
+    assert pathio.record(table_root) == {"live": live, "meta": {"applied": {"batch_id": 3}}}
+    base = io.normalize(table_root).rstrip("/") + "/"
+    left = sorted(f[len(base) :] for f in io.list_files(table_root))
+    assert [f for f in left if not f.rsplit("/", 1)[-1].startswith(".")] == [
+        "_live.json", "_pin.json", "_sub/_pin.json", *sorted(live)
+    ]
+    assert pathio.unnamed_files(table_root) == []
+
+
+def test_sweep_keeps_the_checksums_of_live_files(tmp_path):
+    """A Hadoop local write leaves a ``.<name>.crc`` beside each file: the
+    sweep keeps those of the files that stay and deletes the others."""
+    root = tmp_path / "t"
+    (root / "b=1").mkdir(parents=True)
+    for name in ("old.parquet", ".old.parquet.crc", "new.parquet", ".new.parquet.crc"):
+        (root / "b=1" / name).write_bytes(b"x")
+    pathio.commit(str(root), ["b=1/new.parquet"])
+    assert sorted(os.listdir(root / "b=1")) == [".new.parquet.crc", "new.parquet"]
 
 
 def test_record_names_generations_relative_to_the_root(tmp_path):
@@ -141,7 +224,11 @@ def test_migrate_resumable_file_uri_migrates_every_row(spark, tmp_path):
 
 COMMITTED_WRITERS = (
     "streaming/cdc.py",
+    "streaming/components_cdc.py",
+    "streaming/rollup.py",
+    "streaming/scd_cdc.py",
     "plans/migrate.py",
+    "sinks/parquet.py",
     "sinks/s3export.py",
     "sinks/training_manifest.py",
     "sources/parquet.py",
@@ -150,7 +237,8 @@ COMMITTED_WRITERS = (
 
 def test_committed_writers_use_no_rename_protocol():
     """The writers of committed tables go through ``pathio`` only, and the
-    staging-directory protocols are gone from the package."""
+    staging-directory and crash-manifest protocols are gone from the
+    package."""
     for rel in COMMITTED_WRITERS:
         with open(os.path.join(PKG, rel), encoding="utf-8") as f:
             src = f.read()
@@ -162,3 +250,4 @@ def test_committed_writers_use_no_rename_protocol():
                 with open(os.path.join(d, name), encoding="utf-8") as f:
                     src = f.read()
                 assert ".staging" not in src and ".inprogress" not in src, name
+                assert "__pending" not in src and "__old_" not in src, name

@@ -1,13 +1,12 @@
-"""Round-10 pins for the PERSISTENT union-key stage behind the
+"""Pins for the PERSISTENT union-key stage behind the
 incremental/streaming dedup-graph maintainers (components_cdc.py +
 dedup.simhash_staged_probe):
 
 * scan contract — a micro-batch's stage read is partition-pruned to the
   key buckets its own probe keys hash into (batch-sized, never |state|);
-* crash recovery — an interrupted generation (the ADVICE r9 scenario: a
-  bucket directory displaced to __old_* but its replacement never moved
-  in) rolls FORWARD from the manifest on the next touch, leaving the
-  exact post-batch state;
+* crash safety — a generation that dies anywhere in its commit leaves the
+  record naming the exact pre-batch or post-batch state, with the
+  matching applied-batch marker, and the next step sweeps its files;
 * journal chains — staged comp0 labels stale across several generations
   of merges resolve through the merge journal (path-compressed) and the
   labelling still equals the full recompute;
@@ -22,6 +21,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from scylla_migrator_spark import pathio
 from scylla_migrator_spark.analytics import dedup as D
 from scylla_migrator_spark.analytics.components import connected_components
 from scylla_migrator_spark.streaming import components_cdc as CC
@@ -53,7 +53,7 @@ def _upsert(spark, serving, rows, **kw):
 
 
 def test_stage_probe_scan_is_partition_pruned(spark, tmp_path):
-    """The task-#1 'Done' pin: a micro-batch's stage scan bytes scale
+    """A micro-batch's stage scan bytes scale
     with the batch (its probe keys' buckets), not |state| — asserted on
     the actual pruned read via inputFiles + the per-batch metrics."""
     serving = str(tmp_path / "serving")
@@ -81,57 +81,67 @@ def test_stage_probe_scan_is_partition_pruned(spark, tmp_path):
     )
 
 
-def test_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypatch):
-    """ADVICE r9 #2 scenario: crash between the dst->old displacement and
-    the src->dst move leaves a bucket directory MISSING; the manifest
-    protocol must roll the whole generation forward on the next touch."""
-    serving = str(tmp_path / "serving")
-    rows1 = [(1, "s", 0b1010101), (2, "s", 0b1010100), (30, "s", 1 << 30)]
-    _upsert(spark, serving, rows1)
-
-    # capture the manifest instead of executing it (crash before any
-    # mutation), then replay the worst-case partial execution by hand
-    captured: dict = {}
-
-    def crash(serving_path, man):
-        captured.update(man)
-        raise RuntimeError("simulated crash")
-
-    monkeypatch.setattr(CC, "_execute_manifest", crash)
-    rows2 = [(40, "s", 0b1010110), (50, "s", (1 << 30) ^ 3)]
-    with pytest.raises(RuntimeError):
-        _upsert(spark, serving, rows2)
-    monkeypatch.undo()
-    assert os.path.exists(CC._pending_path(serving))
-    man = json.load(open(CC._pending_path(serving)))
-    assert man == captured and man["kind"] == "swap"
-    # partial execution: all file moves done, then the FIRST affected
-    # bucket displaced but never replaced — the directory is gone
-    for src, dst in man["file_moves"]:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(src, dst)
-    b0 = man["swap_buckets"][0]
-    dst0 = os.path.join(serving, f"{CC.BUCKET_COL}={b0}")
-    if os.path.isdir(dst0):
-        os.replace(dst0, f"{serving}__old_{man['gen']}_{b0}")
-        assert not os.path.isdir(dst0)  # the ADVICE's stranded state
-
-    CC._recover_pending(serving)
-    assert not os.path.exists(CC._pending_path(serving))
-    parent, base = os.path.dirname(serving), os.path.basename(serving)
-    leftovers = [
-        e
-        for e in os.listdir(parent)
-        if e.startswith(f"{base}__old_") or e.startswith(f"{base}__gen_")
+def _record_labelling(spark, serving):
+    """The paired labelling read through the record: its serving files."""
+    files = [
+        os.path.join(serving, n)
+        for n in pathio.live_names(serving)
+        if n.startswith(f"{CC.BUCKET_COL}=")
     ]
-    assert leftovers == []
-    assert _served(spark, serving) == _full_labelling(spark, rows1 + rows2)
-    # the recovered state keeps serving further batches correctly
-    rows3 = [(60, "s", 0b1010111)]
-    _upsert(spark, serving, rows3)
-    assert _served(spark, serving) == _full_labelling(
-        spark, rows1 + rows2 + rows3
-    )
+    df = spark.read.option("basePath", serving).parquet(*files)
+    return {(r["id"], r["comp"]) for r in df.filter("paired").collect()}
+
+
+def _apply(spark, serving, bid, step, rows):
+    """One step of batch ``bid`` as components_cdc_stream runs it: a no-op
+    when the applied marker already records it."""
+    st = CC.read_applied_marker(serving)
+    done = list(st["steps"]) if st and st["batch_id"] == bid else []
+    if step not in done:
+        run = _upsert if step == "upsert" else _retract
+        run(spark, serving, rows, applied_marker={"batch_id": bid, "steps": done + [step]})
+
+
+@pytest.mark.parametrize("step", ["upsert", "retract"])
+def test_crash_in_commit_leaves_one_generation(
+    spark, tmp_path, table_path, crash_commit, data_files, step
+):
+    """A generation that dies after its data write, while writing the
+    record, or while sweeping the files it replaced leaves the record
+    naming the exact pre-batch labelling with the previous marker, or
+    (only the sweep cut) the post-batch one with its own. The next step
+    leaves no unnamed file, and replaying the crashed batch then one more
+    batch ends at the full recompute."""
+    (batch1, batch2), _ = _chain_feed()
+    rows1 = [r[:3] for r in batch1]
+    ups2 = [r[:3] for r in batch2 if r[3] == "upsert"]
+    dels2 = [r[:3] for r in batch2 if r[3] == "delete"]
+    rows3 = [(40, "s", 0b11111), (41, "s", 1 << 29)]
+    if step == "upsert":
+        crashed, before, after = ups2, rows1, rows1 + ups2
+    else:
+        gone = {r[0] for r in dels2}
+        crashed, before = dels2, rows1 + ups2
+        after = [r for r in before if r[0] not in gone]
+    want_marker = {"batch_id": 1, "steps": ["upsert", "retract"][: 1 + (step == "retract")]}
+    for point in crash_commit.points:
+        local = str(tmp_path / step / point / "serving")
+        serving = table_path(local)
+        _apply(spark, serving, 0, "upsert", rows1)
+        if step == "retract":
+            _apply(spark, serving, 1, "upsert", ups2)
+        marker = CC.read_applied_marker(serving)
+        with crash_commit(serving, point):
+            _apply(spark, serving, 1, step, crashed)
+        committed = point == "sweep"
+        want = after if committed else before
+        assert _record_labelling(spark, serving) == _full_labelling(spark, want), point
+        assert CC.read_applied_marker(serving) == (want_marker if committed else marker), point
+        _apply(spark, serving, 1, step, crashed)  # the at-least-once replay
+        _apply(spark, serving, 2, "upsert", rows3)
+        assert data_files(local) == set(pathio.live_names(serving)), point
+        assert _served(spark, serving) == _full_labelling(spark, after + rows3), point
+        assert CC.read_applied_marker(serving) == {"batch_id": 2, "steps": ["upsert"]}
 
 
 def test_journal_chain_resolution_across_generations(spark, tmp_path):
@@ -228,8 +238,8 @@ def test_minlabel_union_find_matches_fixpoint_semantics():
 def test_cc_edge_rows_hint_skips_probe(spark, monkeypatch):
     """connected_components with an over-cap edge_rows_hint must go
     straight to the distributed fixpoint — no take(cap+1) probe, no
-    driver union-find (r11 verdict 'What's wrong' #5: at corpus scale
-    the probe computed up to 1M+1 edge rows only to discard them). An
+    driver union-find (at corpus scale that probe would compute up to
+    1M+1 edge rows only to discard them). An
     at-or-under-cap hint changes nothing: the probe IS the local path's
     input collection."""
     from scylla_migrator_spark.analytics import components as C
@@ -538,7 +548,7 @@ def test_staged_probe_closure_equals_all_pairs_touching(spark):
     assert pr.persisted == []  # checkpoint mode leaves no cache pins
 
 def test_retract_oversized_component_stays_distributed(spark, tmp_path):
-    """The r10 verdict's 'Done' pin: retracting from a component LARGER
+    """Retracting from a component LARGER
     than the local-merge cap must never pull member-scale data onto the
     driver — the survivor labels stay a DataFrame (distributed fixpoint),
     survivors relabel through a join (not a broadcast dict), and the
@@ -574,7 +584,7 @@ def test_retract_oversized_component_stays_distributed(spark, tmp_path):
 
 
 def test_replayed_batch_is_idempotent(spark, tmp_path):
-    """ADVICE r10 #2: foreachBatch is at-least-once — a replay of a batch
+    """foreachBatch is at-least-once — a replay of a batch
     whose generation COMMITTED (marker present) must no-op instead of
     appending the batch rows a second time; a crash BETWEEN the upsert
     and retract steps of a mixed batch must re-run only the retract."""
@@ -634,7 +644,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
 
 
 def test_geometry_pinned_and_validated(spark, tmp_path):
-    """ADVICE r10 #4: the stage's key geometry (bits, blocks,
+    """The stage's key geometry (bits, blocks,
     max_hamming) is pinned in the keys-table meta at creation; a later
     batch probing with different geometry must RAISE, not silently match
     nothing and mislabel."""
@@ -654,7 +664,7 @@ def test_geometry_pinned_and_validated(spark, tmp_path):
 
 
 def test_missing_stage_raises_and_rebuilds(spark, tmp_path):
-    """ADVICE r10 #1: a serving table whose union-key stage is missing
+    """A serving table whose union-key stage is missing
     (pre-stage format / lost keys dir) must raise with a migration hint —
     silently probing an empty stage would mislabel every batch — and
     rebuild_components_stage must reconstruct an equivalent stage from
@@ -683,7 +693,7 @@ def test_missing_stage_raises_and_rebuilds(spark, tmp_path):
 
 
 def test_cdc_stream_null_op_ingests(spark, tmp_path):
-    """ADVICE r10 #5: rows with a NULL op must ingest ('everything else
+    """Rows with a NULL op must ingest ('everything else
     ingests'), not vanish from both branches of the op split."""
     import tempfile
 
@@ -986,13 +996,13 @@ def test_cdc_stream_empty_steps_write_no_generation(spark, tmp_path, monkeypatch
     batches = [batch1, [(12, "s", batch1[2][2], "delete")], [], ups_only]
     live = [r[:3] for r in batch1 if r[0] != 12] + [r[:3] for r in ups_only]
     generations: list = []
-    real_write = CC._write_manifest
+    real_commit = pathio.commit
 
-    def spy(serving_path, man):
-        generations.append(man.get("applied_marker"))
-        real_write(serving_path, man)
+    def spy(root, live, meta=None):
+        generations.append((meta or {}).get("applied"))
+        real_commit(root, live, meta)
 
-    monkeypatch.setattr(CC, "_write_manifest", spy)
+    monkeypatch.setattr(pathio, "commit", spy)
     stage, serving = str(tmp_path / "feed"), str(tmp_path / "serving")
     ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
     _write_feed(spark, stage, batches)

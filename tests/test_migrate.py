@@ -233,41 +233,78 @@ def test_compact_parquet_preserves_partitioned_layout(spark, tmp_path):
     """Compacting a hive-partitioned serving table must merge files WITHIN
     each partition dir, keep the directory layout + bucket-pinning meta
     intact, and leave the table upsertable (regression: a whole-table
-    rewrite would flatten the partition column and break the upsert)."""
+    rewrite would flatten the partition column and break the upsert). The
+    table is fragmented the way a plain partitioned writer leaves it:
+    several appends with no commit record, plus the bucket pin; compaction
+    gives it its first record."""
     import os
 
-    from pyspark.sql import functions as F
-
     from scylla_migrator_spark.sinks.parquet import compact_parquet
-    from scylla_migrator_spark.streaming.rollup import upsert_parquet
+    from scylla_migrator_spark.streaming.rollup import (
+        BUCKET_COL,
+        _bucket_expr,
+        _write_meta,
+        upsert_parquet,
+    )
 
     path = str(tmp_path / "serving_compact")
-    for gen in range(3):  # three upserts -> several files per bucket? (1 each)
+    for gen in range(3):  # three appends -> several files per bucket
         g = spark.createDataFrame(
             [(k, k * 10 + gen) for k in range(12)], "k int, total int"
         )
-        upsert_parquet(g, path, ["k"], n_buckets=4)
-    # fragment one bucket further with a direct append
-    some_bucket = next(e for e in os.listdir(path) if e.startswith("__bucket="))
-    frag = spark.read.parquet(os.path.join(path, some_bucket))
-    frag.repartition(4).write.mode("append").parquet(os.path.join(path, some_bucket))
+        g.withColumn(BUCKET_COL, _bucket_expr(["k"], 4)).repartition(2).write.mode(
+            "append"
+        ).partitionBy(BUCKET_COL).parquet(path)
+    _write_meta(path, 4)
 
     before_rows = {(r["k"], r["total"]) for r in spark.read.parquet(path).collect()}
     dirs_before = sorted(e for e in os.listdir(path) if e.startswith("__bucket="))
     stats = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
     assert stats["files_after"] < stats["files_before"]
+    assert stats["files_after"] == len(dirs_before)  # one file per partition
     assert os.path.exists(os.path.join(path, "_sgs_upsert_meta.json"))
     assert sorted(e for e in os.listdir(path) if e.startswith("__bucket=")) == dirs_before
-    # rows identical (the fragment append duplicated rows; compaction must
-    # preserve the multiset exactly — compare with duplicates collapsed
-    # plus counts)
     after = spark.read.parquet(path)
     assert {(r["k"], r["total"]) for r in after.collect()} == before_rows
-    # still upsertable with the pinned modulus
+    # still upsertable with the pinned modulus: every version of key 3
+    # sits in its mod-4 bucket, which the upsert must rewrite
     g = spark.createDataFrame([(3, 999)], "k int, total int")
     upsert_parquet(g, path, ["k"], n_buckets=7)  # pinned 4 wins
-    rows = {r["k"]: r["total"] for r in spark.read.parquet(path).collect() if r["k"] == 3}
-    assert rows[3] == 999
+    rows = [r["total"] for r in spark.read.parquet(path).collect() if r["k"] == 3]
+    assert rows == [999]
+
+
+def test_compact_bucketed_crash_in_commit_leaves_one_table(
+    spark, tmp_path, table_path, crash_commit, data_files
+):
+    """A compaction of a bucketed table that dies after its data write,
+    while writing the record, or while sweeping the files it replaced
+    leaves the record naming the old files, or (only the sweep cut) the
+    new ones: the same rows either way. The next compaction leaves no
+    unnamed file."""
+    from scylla_migrator_spark import pathio
+    from scylla_migrator_spark.sinks.parquet import compact_parquet
+    from scylla_migrator_spark.streaming.rollup import upsert_parquet
+
+    def record_rows(path):
+        df = spark.read.option("basePath", path).parquet(*pathio.live_paths(path))
+        return sorted(tuple(r) for r in df.select("k", "total").collect())
+
+    for point in crash_commit.points:
+        local = str(tmp_path / point)
+        path = table_path(local)
+        for gen in range(2):
+            g = spark.createDataFrame([(k, k + gen) for k in range(12)], "k int, total int")
+            upsert_parquet(g, path, ["k"], n_buckets=4)
+        rows, old = record_rows(path), set(pathio.live_names(path))
+        with crash_commit(path, point):
+            compact_parquet(spark, path)
+        live = set(pathio.live_names(path))
+        assert live.isdisjoint(old) if point == "sweep" else live == old, point
+        assert record_rows(path) == rows, point
+        compact_parquet(spark, path)
+        assert record_rows(path) == rows, point
+        assert data_files(local) == set(pathio.live_names(path)), point
 
 
 def _stamped_source(spark, path: str) -> None:

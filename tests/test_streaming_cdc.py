@@ -85,6 +85,37 @@ def test_upsert_parquet_replaces_keys(spark, tmp_path):
     assert rows == {("a", 1): 15, ("b", 1): 20, ("c", 1): 30}
 
 
+def test_upsert_crash_in_commit_leaves_one_generation(
+    spark, tmp_path, table_path, crash_commit, data_files
+):
+    """An upsert that dies after its data write, while writing the record,
+    or while sweeping the bucket files it replaced leaves the record naming
+    the previous table, or (only the sweep cut) the new one. Its replay
+    ends where one upsert ends, and leaves no unnamed file."""
+    from scylla_migrator_spark import pathio
+    from scylla_migrator_spark.streaming.rollup import upsert_parquet
+
+    g1 = [(k, k * 10) for k in range(20)]
+    g2 = [(3, 333), (21, 210)]
+    before, after = dict(g1), {**dict(g1), **dict(g2)}
+
+    def record_rows(path):
+        df = spark.read.option("basePath", path).parquet(*pathio.live_paths(path))
+        return {r["k"]: r["total"] for r in df.collect()}
+
+    for point in crash_commit.points:
+        local = str(tmp_path / point)
+        path = table_path(local)
+        upsert_parquet(spark.createDataFrame(g1, "k int, total int"), path, ["k"])
+        batch = spark.createDataFrame(g2, "k int, total int")
+        with crash_commit(path, point):
+            upsert_parquet(batch, path, ["k"])
+        assert record_rows(path) == (after if point == "sweep" else before), point
+        upsert_parquet(batch, path, ["k"])  # the at-least-once replay
+        assert record_rows(path) == after, point
+        assert data_files(local) == set(pathio.live_names(path)), point
+
+
 def test_stateful_distinct_counts_custom_key(spark, tmp_path):
     """The dedup counter must work with key/event columns of any name
     (regression: the bucketed rewrite once hardcoded user_id/event_id)."""
