@@ -83,11 +83,12 @@ def compact_parquet(
     stats = {"files_before": 0, "files_after": 0, "bytes": 0}
     gens = []
     for group, names in sorted(groups.items()):
-        # after the sweep a partition directory holds only live files
-        src = [os.path.join(path, group)] if group else [os.path.join(path, n) for n in names]
-        out = src[0] if group else path
-        if not group and any(os.path.isdir(p) for p in src):
+        # after the sweep a directory holds only live files (and metadata)
+        out = os.path.join(path, group) if group else path
+        src = [out]
+        if not group and any(os.path.isdir(os.path.join(path, n)) for n in names):
             # a table of generation directories gets a new one
+            src = [os.path.join(path, n) for n in names]
             gens.append(f"g-{uuid.uuid4().hex}")
             out = os.path.join(path, gens[-1])
         n_files, total = _parquet_stats(src)

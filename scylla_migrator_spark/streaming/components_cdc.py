@@ -141,10 +141,6 @@ def _write_json(path: str, obj) -> None:
     pathio.for_path(path).write_utf8_atomically(path, json.dumps(obj).encode("utf-8"))
 
 
-def _write_applied(serving_path: str, marker: dict) -> None:
-    commit_buckets(serving_path, [], {"applied": marker})
-
-
 def _commit(
     serving_path: str,
     dropped: list[str],

@@ -152,22 +152,22 @@ def _write_meta(path: str, n_buckets: int) -> None:
 
 
 def table_exists(path: str) -> bool:
-    """Whether ``path`` holds a bucketed serving table: whether it has a
-    commit record. The single source of truth for the layout probe — the
-    SCD2 maintainer and the upsert must agree on it."""
-    return pathio.live_names(path) is not None
+    """Whether ``path`` holds a bucketed serving table: whether its commit
+    record names any file. The single source of truth for the layout
+    probe — the SCD2 maintainer and the upsert must agree on it."""
+    return bool(pathio.live_names(path))
 
 
 def open_table(path: str) -> bool:
     """Start a write of the bucketed table ``path``: sweep what its record
     does not name, so directory reads see only live files, and say whether
-    the table exists. Files without a record are no table (a first write
-    that crashed before its record): they are deleted."""
+    the table exists. Files no record names are no table (a first write
+    that crashed before its record, or wrote no row): they are deleted."""
+    if not table_exists(path):
+        pathio.for_path(path).delete(path)
+        return False
     pathio.sweep(path)
-    if table_exists(path):
-        return True
-    pathio.for_path(path).delete(path)
-    return False
+    return True
 
 
 def commit_buckets(root: str, dropped: list[str], meta: dict | None = None) -> None:

@@ -53,7 +53,6 @@ from test_streaming_cdc import (  # noqa: F401
 )
 
 
-
 def _norename(test):
     """``test`` collected again with directory renames refused."""
 

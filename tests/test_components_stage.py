@@ -82,14 +82,15 @@ def test_stage_probe_scan_is_partition_pruned(spark, tmp_path):
 
 
 def _record_labelling(spark, serving):
-    """The paired labelling read through the record: its serving files."""
+    """The paired rows read through the record (its serving files), as a
+    sorted list: a duplicated row shows."""
     files = [
         os.path.join(serving, n)
         for n in pathio.live_names(serving)
         if n.startswith(f"{CC.BUCKET_COL}=")
     ]
     df = spark.read.option("basePath", serving).parquet(*files)
-    return {(r["id"], r["comp"]) for r in df.filter("paired").collect()}
+    return sorted((r["id"], r["comp"]) for r in df.filter("paired").collect())
 
 
 def _apply(spark, serving, bid, step, rows):
@@ -135,12 +136,14 @@ def test_crash_in_commit_leaves_one_generation(
             _apply(spark, serving, 1, step, crashed)
         committed = point == "sweep"
         want = after if committed else before
-        assert _record_labelling(spark, serving) == _full_labelling(spark, want), point
+        assert _record_labelling(spark, serving) == sorted(_full_labelling(spark, want)), point
         assert CC.read_applied_marker(serving) == (want_marker if committed else marker), point
         _apply(spark, serving, 1, step, crashed)  # the at-least-once replay
         _apply(spark, serving, 2, "upsert", rows3)
         assert data_files(local) == set(pathio.live_names(serving)), point
-        assert _served(spark, serving) == _full_labelling(spark, after + rows3), point
+        assert _record_labelling(spark, serving) == sorted(
+            _full_labelling(spark, after + rows3)
+        ), point
         assert CC.read_applied_marker(serving) == {"batch_id": 2, "steps": ["upsert"]}
 
 
@@ -632,7 +635,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     # duplicate-append check: simulate the marker MISSING the retract
     # step (crash between steps) — only retract re-runs, and the
     # labelling is unchanged because its victims are already unstaged
-    CC._write_applied(serving, {"batch_id": 1, "steps": ["upsert"]})
+    CC._commit(serving, [], {"batch_id": 1, "steps": ["upsert"]})
     dels = bdf.filter("op = 'delete'").drop("op")
     CC.components_retract_batch(
         dels, serving, id_col="doc_id",
