@@ -1842,6 +1842,11 @@ def rebuild_components_stage(
     one-off migration, never on the batch path. A serving table without a
     record is committed as it is. Returns the number of staged units."""
     pathio.sweep(serving_path)
+    # the old stage and journal leave the record, and the sweep deletes
+    # their pins, before the new pins are written: a crash before the
+    # final commit leaves no stage (the missing-stage guard), never the
+    # old keys under a new geometry or modulus
+    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
     keys_path = serving_path + KEYS_SUFFIX
     blocks = min(bits, max(10, max_hamming + 2))
     if _dir_bytes(serving_path) <= LOCAL_PARTITION_BYTES_CAP:

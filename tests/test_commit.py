@@ -70,6 +70,7 @@ for _test in (
     cs.test_retract_oversized_component_stays_distributed,
     cs.test_replayed_batch_is_idempotent,
     cs.test_missing_stage_raises_and_rebuilds,
+    cs.test_rebuild_crash_never_pins_new_geometry_on_old_keys,
     cs.test_distributed_upsert_matches_local_path,
     cs.test_spark_and_in_process_branches_agree,
     sc.test_upsert_crash_in_commit_leaves_one_generation,

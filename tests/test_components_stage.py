@@ -695,6 +695,38 @@ def test_missing_stage_raises_and_rebuilds(spark, tmp_path):
     assert _served(spark, serving) == _full_labelling(spark, live)
 
 
+@pytest.mark.parametrize("nth", [1, 2])
+def test_rebuild_crash_never_pins_new_geometry_on_old_keys(
+    spark, tmp_path, monkeypatch, nth
+):
+    """A rebuild to a new geometry that dies at its ``nth`` commit leaves
+    the old stage under its old pins or no stage: the next batch with the
+    new geometry raises instead of probing old-geometry keys, and a
+    finished rebuild then serves it. Every pair of these rows is within
+    hamming 3 or beyond 8, so both geometries give the same labelling."""
+    serving = str(tmp_path / "serving")
+    rows1 = [(1, "s", 0), (2, "s", 0b11), (9, "s", 0xFFFF0000)]
+    rows2 = [(3, "s", 0b111)]
+    _upsert(spark, serving, rows1)
+    commit, calls = pathio.commit, []
+
+    def crash_nth(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == nth:
+            raise OSError("injected crash")
+        return commit(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(pathio, "commit", crash_nth)
+        with pytest.raises(OSError, match="injected crash"):
+            CC.rebuild_components_stage(spark, serving, max_hamming=4)
+    with pytest.raises(ValueError, match="rebuild_components_stage"):
+        _upsert(spark, serving, rows2, max_hamming=4)
+    CC.rebuild_components_stage(spark, serving, max_hamming=4)
+    _upsert(spark, serving, rows2, max_hamming=4)
+    assert _served(spark, serving) == _full_labelling(spark, rows1 + rows2)
+
+
 def test_cdc_stream_null_op_ingests(spark, tmp_path):
     """Rows with a NULL op must ingest ('everything else
     ingests'), not vanish from both branches of the op split."""
