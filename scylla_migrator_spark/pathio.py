@@ -19,7 +19,11 @@ or a data file below partition directories (``__bucket=3/part-….parquet``:
 the rollup, SCD2 and components serving tables, and every compacted
 table). :func:`sweep` deletes what the record does not name, so a crash at
 any step leaves the old or the new table live on any store, and no
-directory is renamed; one writer per table at a time.
+directory is renamed; one writer per table at a time. A record's
+``dirty`` meta lists the only directories that can hold such entries:
+the bucketed writers mark the whole table dirty (:func:`begin`) before
+they write and commit with the directories they replaced, so a step lists
+and sweeps the directories it touches, not the table.
 """
 
 from __future__ import annotations
@@ -433,32 +437,81 @@ def live_paths(root: str) -> list[str]:
     return [root] if names is None else [io.join(root, n) for n in names]
 
 
+def read_live(reader, root: str):
+    """Read the parquet table ``root`` with the DataFrameReader ``reader``:
+    the entries its record names, with ``root`` as the base path, so the
+    partition directories below it stay columns (``root`` itself without a
+    record)."""
+    names = live_names(root)
+    if names is None:
+        return reader.parquet(root)
+    io = for_path(root)
+    return reader.option("basePath", root).parquet(*(io.join(root, n) for n in names))
+
+
+DIRTY = "dirty"
+
+
+def _write_record(root: str, live: list[str], meta: dict | None) -> None:
+    io = for_path(root)
+    io.create_directories(root)
+    rec = {"live": list(live), **({"meta": meta} if meta else {})}
+    io.write_utf8_atomically(io.join(root, LIVE_RECORD), json.dumps(rec).encode("utf-8"))
+
+
 def commit(root: str, live: list[str], meta: dict | None = None) -> None:
     """Make the entries ``live`` (paths relative to ``root``) the table,
     with the small JSON ``meta`` in the same record: write the record, then
     :func:`sweep`. A crash before the record is replaced leaves the old
     table, one after it the new; the next commit or sweep deletes what the
-    record does not name."""
-    io = for_path(root)
-    io.create_directories(root)
-    rec = {"live": list(live), **({"meta": meta} if meta else {})}
-    io.write_utf8_atomically(io.join(root, LIVE_RECORD), json.dumps(rec).encode("utf-8"))
-    sweep(root, live)
+    record does not name. ``meta["dirty"]``, when given, lists the
+    directories (relative to ``root``, ``""`` for all of it) that can hold
+    entries the record does not name: the sweeps walk only those."""
+    _write_record(root, live, meta)
+    sweep(root, live, (meta or {}).get(DIRTY))
 
 
-def sweep(root: str, live: list[str] | None = None) -> None:
-    """Delete every entry below ``root`` that is not on a live path of its
-    record (``live``, read from the record when not given), except the
-    ``_`` files (the record, pins, ``_SUCCESS``) and the ``.<name>.crc``
+def begin(root: str) -> dict:
+    """Start a write of the table ``root`` and return its record: sweep
+    what the last write may have left (the directories its record marks
+    dirty), then mark every directory dirty, so the sweep after a crash
+    walks the whole table. A table without a record gets one naming its
+    data files (an absent one an empty record), so what a crashed first
+    write leaves lies under a record. Writers that commit with a ``dirty``
+    list call it before they write."""
+    rec = record(root)
+    if rec is None:
+        rec = {"live": unnamed_files(root), "meta": {}}
+    else:
+        sweep(root, rec["live"], rec["meta"].get(DIRTY))
+    rec["meta"][DIRTY] = [""]
+    _write_record(root, rec["live"], rec["meta"])
+    return rec
+
+
+def sweep(root: str, live: list[str] | None = None, dirs: list[str] | None = None) -> None:
+    """Delete every entry below the directories ``dirs`` of ``root`` (all
+    of it when None) that is not on a live path of its record (``live``;
+    both read from the record when ``live`` is not given), except the ``_``
+    files (the record, pins, ``_SUCCESS``) and the ``.<name>.crc``
     checksums of what stays: a directory stays only if it is live or holds
     a live entry. Only the directories that hold live entries are walked,
     never a live one. A root without a record is left alone."""
     if live is None:
-        live = live_names(root)
-        if live is None:
+        rec = record(root)
+        if rec is None:
             return
+        live, dirs = rec["live"], rec["meta"].get(DIRTY)
     inner = {n.rsplit("/", k)[0] for n in live for k in range(1, n.count("/") + 1)}
-    _sweep(for_path(root), root, "", set(live), inner)
+    io, live = for_path(root), set(live)
+    for d in [""] if dirs is None else dirs:
+        path = io.join(root, d) if d else root
+        if d and not io.exists(path):
+            continue
+        if d == "" or d in inner:
+            _sweep(io, root, d, live, inner)
+        elif d not in live:
+            io.delete(path)
 
 
 def _sweep(io: PathIO, root: str, rel: str, live: set[str], inner: set[str]) -> None:
@@ -479,27 +532,29 @@ def _sweep(io: PathIO, root: str, rel: str, live: set[str], inner: set[str]) -> 
             io.delete(io.join(d, name))
 
 
-def unnamed_files(root: str) -> list[str]:
-    """The data files below ``root`` that no live entry of its record names
-    or contains, relative to ``root``: none of their names is hidden (``.``,
-    or a ``_`` file name) and none is below a ``_temporary`` staging
-    directory. After a sweep these are exactly the files written since,
-    which the next commit names."""
+def unnamed_files(root: str, dirs: list[str] = ("",)) -> list[str]:
+    """The data files below the directories ``dirs`` of ``root`` (``""``
+    for all of it) that no live entry of its record names or contains,
+    relative to ``root``: none of their names is hidden (``.``, or a ``_``
+    file name) and none is below a ``_temporary`` staging directory. After
+    a sweep these are exactly the files written since, which the next
+    commit names."""
     io = for_path(root)
-    if not io.exists(root):
-        return []
     live = set(live_names(root) or ())
     base = io.normalize(root).rstrip("/") + "/"
-    out = []
-    for f in io.list_files(root):
-        rel = f[len(base) :]
-        parts = rel.split("/")
-        if (
-            not any("/".join(parts[:k]) in live for k in range(1, len(parts) + 1))
-            and not parts[-1].startswith("_")
-            and not any(p.startswith(".") or p == "_temporary" for p in parts)
-        ):
-            out.append(rel)
+    out = set()
+    for d in dirs:
+        path = io.join(root, d) if d else root
+        if not io.exists(path):
+            continue
+        for f in io.list_files(path):
+            parts = f[len(base) :].split("/")
+            if (
+                not any("/".join(parts[:k]) in live for k in range(1, len(parts) + 1))
+                and not parts[-1].startswith("_")
+                and not any(p.startswith(".") or p == "_temporary" for p in parts)
+            ):
+                out.add("/".join(parts))
     return sorted(out)
 
 

@@ -18,7 +18,7 @@ from pyspark.sql.types import StructType
 from scylla_migrator_spark.config import MigratorConfig
 from scylla_migrator_spark.operators.filters import apply_where, auto_null_pk_filtering, drop_null_pk_rows
 from scylla_migrator_spark.operators.renames import apply_renames
-from scylla_migrator_spark.pathio import commit, for_path, generation, live_names, live_paths
+from scylla_migrator_spark.pathio import commit, for_path, generation, live_names, read_live
 from scylla_migrator_spark.sources.parquet import read_parquet
 from scylla_migrator_spark.sinks.parquet import write_parquet
 from scylla_migrator_spark.sinks.scylla_fixture import write_scylla_fixture
@@ -136,15 +136,15 @@ def _apply_transforms(df: DataFrame, config: MigratorConfig) -> DataFrame:
 
 def _read_written(
     reader: DataFrameReader,
-    paths: list[str],
+    path: str,
     schemas: list[StructType],
     *,
     replaced: bool,
     partition_by: list[str] | None,
     merge_schema: bool = False,
 ) -> DataFrame:
-    """The lazy re-read of the parquet target ``paths`` the caller just
-    wrote, ``schemas`` being the schema of each of its writes. When the read
+    """The lazy re-read of the parquet target ``path`` the caller just
+    wrote (through its record, if it has one), ``schemas`` being the schema of each of its writes. When the read
     sees exactly that -- the target was ``replaced``, the layout is flat, the
     schema is not merged and every write had one schema -- that schema is
     handed to the reader, so no one-task footer job runs. Otherwise (append
@@ -158,7 +158,7 @@ def _read_written(
         and not merge_schema
     ):
         reader = reader.schema(schemas[0])
-    return reader.parquet(*paths)
+    return read_live(reader, path)
 
 
 def build_plan(spark: SparkSession, config: MigratorConfig) -> DataFrame:
@@ -250,7 +250,7 @@ def migrate(spark: SparkSession, config: MigratorConfig) -> DataFrame:
         raise ValueError(f"unsupported target type {tgt.type!r}")
     return _read_written(
         spark.read,
-        [tgt.path],
+        tgt.path,
         [written],
         replaced=tgt.mode == "overwrite",
         partition_by=tgt.partition_by,
@@ -395,7 +395,7 @@ def migrate_resumable(
         final = final.option("mergeSchema", True)
     return _read_written(
         final,
-        live_paths(tgt.path),
+        tgt.path,
         written,
         replaced=replaced,
         partition_by=tgt.partition_by,

@@ -32,9 +32,10 @@ from pyspark.sql import functions as F
 from scylla_migrator_spark.config import Validation
 from scylla_migrator_spark.operators import comparators as C
 from scylla_migrator_spark.operators.content_hash import CONTENT_HASH_COL, add_content_hash
-from scylla_migrator_spark.pathio import generation, live_names, live_paths
+from scylla_migrator_spark.pathio import generation, live_names, read_live
 from scylla_migrator_spark.plans.migrate import build_plan
 from scylla_migrator_spark.schema import WRITETIME_SUFFIX, prefix_columns, resolve_columns
+from scylla_migrator_spark.sinks.parquet import write_parquet
 
 SRC = "src_"
 TGT = "tgt_"
@@ -292,14 +293,16 @@ def run_validation(spark: SparkSession, config) -> ValidationReport:
     # deliberately drops (null-PK filtering) as MISSING_TARGET_ROW and
     # mis-handle DynamoDB item frames whose renames are map-key renames
     source = build_plan(spark, config)
-    target = spark.read.parquet(*live_paths(config.target.path))
+    target = read_live(spark.read, config.target.path)
 
     def repair(missing: DataFrame) -> None:
-        live = live_names(config.target.path)
-        if live is None:
-            missing.write.mode("append").parquet(config.target.path)
-        else:  # a committed table: the repair is one more live generation
-            with generation(config.target.path, keep=live) as gen:
+        path, by = config.target.path, config.target.partition_by
+        live = live_names(path)
+        if live is None or by:
+            # in place, in the target's layout (joining its record if any)
+            write_parquet(missing, path, mode="append", partition_by=by)
+        else:  # a committed flat table: the repair is one more live generation
+            with generation(path, keep=live) as gen:
                 missing.write.parquet(gen)
 
     return validate(

@@ -36,7 +36,20 @@ def write_parquet(
     writer = df.write.mode(mode).option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
+    if mode != "append" or pathio.record(path) is None:
+        writer.parquet(path)  # an overwrite deletes a record with the table
+        return
+    # a table with a commit record (a compacted or resumable target): the
+    # appended files join it, or its readers would not see them and its
+    # next sweep would delete them
+    rec = pathio.begin(path)
     writer.parquet(path)
+    _commit_all(path, rec["live"] + pathio.unnamed_files(path), rec["meta"])
+
+
+def _commit_all(path: str, live: list[str], meta: dict) -> None:
+    """Commit ``live`` as the table ``path``, its sweep walking all of it."""
+    pathio.commit(path, live, {k: v for k, v in meta.items() if k != pathio.DIRTY})
 
 
 def _parquet_stats(paths: list[str]) -> tuple[int, int]:
@@ -71,12 +84,7 @@ def compact_parquet(
     Micro-batches and chunked migrations accrete small files, whose
     open + footer cost dominates scans at 100 TB. Sizing uses the on-disk
     (compressed) bytes. Returns {files_before, files_after, bytes}."""
-    rec = pathio.record(path)
-    if rec is None:
-        rec = {"live": pathio.unnamed_files(path), "meta": {}}
-        pathio.commit(path, rec["live"])
-    else:
-        pathio.sweep(path)
+    rec = pathio.begin(path)
     groups: dict[str, list[str]] = {}
     for name in rec["live"]:
         groups.setdefault(posixpath.dirname(name), []).append(name)
@@ -103,6 +111,6 @@ def compact_parquet(
         ).parquet(out)
     written = pathio.unnamed_files(path)
     live = gens + [f for f in written if f.split("/", 1)[0] not in gens]
-    pathio.commit(path, live, rec["meta"])
+    _commit_all(path, live, rec["meta"])
     stats["files_after"] = len(written)
     return stats

@@ -48,7 +48,11 @@ no file is ever rewritten — then one record write swaps them in for the
 files of the buckets and key partitions it rewrote (and the journal, when
 it rewrites it), and the sweep deletes those. A crash leaves the previous
 generation or the new one, with its marker; each step opens with a sweep
-of the files no record names. Readers that list the directories while a
+of the files no record names. The sweeps and the commit's listing walk
+only the directories a step reads or writes: the record's ``dirty`` list
+names what the last step replaced, and a step marks the whole table dirty
+before it writes, so the tables are walked whole only after a crash (see
+``rollup.open_table``). Readers that list the directories while a
 generation is being written can see its unnamed files — snapshot
 consumers read a quiesced table or the record's files (the streaming
 query is the single writer). The maintainers read and write with
@@ -141,18 +145,9 @@ def _write_json(path: str, obj) -> None:
     pathio.for_path(path).write_utf8_atomically(path, json.dumps(obj).encode("utf-8"))
 
 
-def _commit(
-    serving_path: str,
-    dropped: list[str],
-    applied_marker: dict | None,
-) -> None:
-    """Commit one generation: ``dropped`` lists the rewritten or emptied
-    serving buckets, key partitions and the journal as directories
-    relative to the serving root; every file written since the step's
-    opening sweep enters the record."""
-    commit_buckets(
-        serving_path, dropped, {"applied": applied_marker} if applied_marker else None
-    )
+def _marker_meta(applied_marker: dict | None) -> dict | None:
+    """The record meta a generation commits its applied-batch marker in."""
+    return {"applied": applied_marker} if applied_marker else None
 
 
 def _dirs(sub: str, col: str, buckets) -> list[str]:
@@ -605,6 +600,8 @@ def _local_upsert(
         if kbs is not None:
             _stage_scan_metrics(keys_path, kbs, metrics)
 
+    if not have_state:
+        pathio.begin(serving_path)
     gen = uuid.uuid4().hex[:8]
     # keys append for NEW units (comp0 = the anchor's label after this
     # batch's fixpoint), one pyarrow file per touched key bucket
@@ -631,7 +628,7 @@ def _local_upsert(
         )
         _write_meta(serving_path, n_buckets)
         _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
-        _commit(serving_path, [], applied_marker)
+        commit_buckets(serving_path, [], [""], _marker_meta(applied_marker))
         _mark("full_write")
         if metrics is not None:
             metrics["affected_buckets"] = None
@@ -703,7 +700,13 @@ def _local_upsert(
             )
             _append_buckets(rewritten, serving_path, n_buckets)
     _mark("rewrite")
-    _commit(serving_path, _dirs("", BUCKET_COL, affected), applied_marker)
+    commit_buckets(
+        serving_path,
+        _dirs("", BUCKET_COL, affected),
+        _dirs(KEYS_SUFFIX[1:], KEY_BUCKET_COL, keys_by_bucket)
+        + ([JOURNAL_SUFFIX[1:]] if jnew_rows else []),
+        _marker_meta(applied_marker),
+    )
     _mark("commit")
     if metrics is not None:
         metrics["affected_buckets"] = affected
@@ -857,6 +860,8 @@ def _upsert_batch(
         # an empty first batch must not create an unreadable (schema-less)
         # serving table; the next non-empty batch becomes generation 0
         return None
+    if not have_state:
+        pathio.begin(serving_path)
     pr = D.simhash_staged_probe(
         fp_b,
         staged,
@@ -1030,7 +1035,7 @@ def _upsert_batch(
         _run_writes(_write_keys, lambda: _append_buckets(batch_rows, serving_path, n_buckets))
         _write_meta(serving_path, n_buckets)
         _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
-        _commit(serving_path, [], applied_marker)
+        commit_buckets(serving_path, [], [""], _marker_meta(applied_marker))
         for f in pr.persisted:
             f.unpersist()
         _mark("full_write")
@@ -1098,7 +1103,12 @@ def _upsert_batch(
     # write latency, not two (both land before the commit)
     _run_writes(_write_keys, lambda: _append_buckets(rewritten, serving_path, n_buckets))
     _mark("rewrite")
-    _commit(serving_path, _dirs("", BUCKET_COL, affected), applied_marker)
+    commit_buckets(
+        serving_path,
+        _dirs("", BUCKET_COL, affected),
+        [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]],
+        _marker_meta(applied_marker),
+    )
     for f in pr.persisted:
         f.unpersist()
     _mark("commit")
@@ -1342,12 +1352,12 @@ def _local_retract(
     _write_bucketed_parquet(
         keys_path, KEY_BUCKET_COL, keys_by_bucket, _key_fields(grp_type), gen
     )
-    _commit(
+    commit_buckets(
         serving_path,
         _dirs("", BUCKET_COL, affected)
         + _dirs(KEYS_SUFFIX[1:], KEY_BUCKET_COL, kb_aff)
         + _rewrite_journal(journal_path, journal_map, comps_old, gen),
-        applied_marker,
+        meta=_marker_meta(applied_marker),
     )
     if metrics is not None:
         metrics["probe_kbs"] = kb0
@@ -1742,12 +1752,12 @@ def _retract_batch(
     # serving rewrite and key-partition rewrite are independent frames
     # (both pinned upstream): one write latency, not two, per retraction
     _run_writes(lambda: _append_buckets(rewritten, serving_path, n_buckets), _write_keys)
-    _commit(
+    commit_buckets(
         serving_path,
         _dirs("", BUCKET_COL, affected)
         + _dirs(KEYS_SUFFIX[1:], KEY_BUCKET_COL, kb_aff)
         + _rewrite_journal(journal_path, journal_map, comps_old, uuid.uuid4().hex[:8]),
-        applied_marker,
+        meta=_marker_meta(applied_marker),
     )
     if metrics is not None:
         metrics["probe_kbs"] = sorted(kb0)
@@ -1820,7 +1830,7 @@ def compact_components_stage(spark: SparkSession, serving_path: str) -> int:
         ).parquet(keys_path)
     # journal entries map RETIRED comps; the folded comp0s are current, so
     # the journal leaves the record with the old stage
-    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
+    commit_buckets(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]])
     return len(mp)
 
 
@@ -1840,13 +1850,15 @@ def rebuild_components_stage(
     connected to every member); comp0 = the unit's CURRENT component, so
     the journal starts empty. Full-state rewrite by construction — a
     one-off migration, never on the batch path. A serving table without a
-    record is committed as it is. Returns the number of staged units."""
-    pathio.sweep(serving_path)
+    record is adopted. Returns the number of staged units."""
+    if not open_table(serving_path):
+        raise ValueError(f"no components serving table at {serving_path}")
     # the old stage and journal leave the record, and the sweep deletes
     # their pins, before the new pins are written: a crash before the
     # final commit leaves no stage (the missing-stage guard), never the
     # old keys under a new geometry or modulus
-    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
+    commit_buckets(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]])
+    pathio.begin(serving_path)
     keys_path = serving_path + KEYS_SUFFIX
     blocks = min(bits, max(10, max_hamming + 2))
     if _dir_bytes(serving_path) <= LOCAL_PARTITION_BYTES_CAP:
@@ -1896,7 +1908,7 @@ def rebuild_components_stage(
         ).parquet(keys_path)
         n_units = units.count()
     _pin_stage(keys_path, n_key_buckets, bits, blocks, max_hamming)
-    _commit(serving_path, [KEYS_SUFFIX[1:], JOURNAL_SUFFIX[1:]], None)
+    commit_buckets(serving_path, [], [KEYS_SUFFIX[1:]])
     return n_units
 
 

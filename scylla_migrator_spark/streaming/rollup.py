@@ -34,7 +34,11 @@ Scale design — partition-scoped upsert:
   under unique names, then one record write swaps them in for the
   affected buckets' old files, which the sweep deletes: a crash leaves the
   whole previous table or the whole new one, and files no record names are
-  deleted by the next upsert's opening sweep. The checkpointed foreachBatch
+  deleted by the next upsert's opening sweep. The record's ``dirty`` list
+  keeps that listing O(affected buckets) too: an upsert marks the whole
+  table dirty before it writes, lists only the affected buckets to commit
+  and leaves only them dirty, so the table is walked whole only after a
+  crash. The checkpointed foreachBatch
   replays the micro-batch, and the upsert is idempotent (last-writer-wins
   replace of the batch's keys) — the at-least-once + idempotent-upsert
   contract (T4).
@@ -159,26 +163,36 @@ def table_exists(path: str) -> bool:
 
 
 def open_table(path: str) -> bool:
-    """Start a write of the bucketed table ``path``: sweep what its record
-    does not name, so directory reads see only live files, and say whether
-    the table exists. Files no record names are no table (a first write
-    that crashed before its record, or wrote no row): they are deleted."""
-    if not table_exists(path):
-        pathio.for_path(path).delete(path)
+    """Start a write of the bucketed table ``path`` (``pathio.begin``:
+    sweep what the last write may have left, then mark the table dirty)
+    and say whether it exists. A table written without a record (by an
+    earlier version, or a plain ``partitionBy`` write) is adopted: its
+    data files become its first record. An absent table stays absent; its
+    first writer calls ``pathio.begin``."""
+    if pathio.record(path) is None and not pathio.unnamed_files(path):
         return False
-    pathio.sweep(path)
-    return True
+    pathio.begin(path)
+    return table_exists(path)
 
 
-def commit_buckets(root: str, dropped: list[str], meta: dict | None = None) -> None:
-    """Commit what was written below ``root`` since :func:`open_table`: the
-    record's files under each directory of ``dropped`` (relative to
-    ``root``: the rewritten or emptied buckets) leave it, every unnamed
-    data file enters it, and ``meta`` updates the record's meta."""
-    rec = pathio.record(root) or {"live": [], "meta": {}}
+def commit_buckets(
+    root: str, dropped: list[str], appended: list[str] = (), meta: dict | None = None
+) -> None:
+    """Commit what was written below ``root`` since :func:`open_table` (or
+    ``pathio.begin``): the record's files under each directory of
+    ``dropped`` (relative to ``root``: the rewritten or emptied buckets)
+    leave it, the data files no record names under ``dropped`` and
+    ``appended`` (directories written without dropping, ``""`` for all of
+    ``root``) enter it, and ``meta`` updates the record's meta. Only those
+    directories are listed, and the sweep walks only ``dropped``."""
+    rec = pathio.record(root)
+    if rec is None or rec["meta"].get(pathio.DIRTY) != [""]:
+        raise RuntimeError(f"{root}: a bucketed commit without open_table or pathio.begin")
     gone = tuple(d + "/" for d in dropped)
     live = [n for n in rec["live"] if not n.startswith(gone)]
-    pathio.commit(root, live + pathio.unnamed_files(root), {**rec["meta"], **(meta or {})})
+    new = pathio.unnamed_files(root, [*dropped, *appended])
+    meta = {**rec["meta"], **(meta or {}), pathio.DIRTY: sorted(dropped)}
+    pathio.commit(root, live + new, meta)
 
 
 def upsert_parquet(
@@ -205,8 +219,21 @@ def upsert_parquet(
     SCD2 maintainer, whose output keys are exactly its input batch's keys)
     pass ``affected`` to skip the distinct-buckets job over the batch
     frame."""
+    _upsert(batch_df, path, keys, open_table(path), existing, n_buckets, affected)
+
+
+def _upsert(
+    batch_df: DataFrame,
+    path: str,
+    keys: list[str],
+    exists: bool,
+    existing: DataFrame | None,
+    n_buckets: int,
+    affected: list[int] | None,
+) -> None:
+    """:func:`upsert_parquet` into the table ``path`` its caller opened
+    (``exists``: what :func:`open_table` said)."""
     spark = batch_df.sparkSession
-    exists = open_table(path)
     n_buckets = _table_buckets(path, n_buckets) if exists else n_buckets
     batch_df = batch_df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets)).persist()
     try:
@@ -232,6 +259,7 @@ def upsert_parquet(
             merged = ex.join(new_keys, on=cond, how="left_anti").unionByName(batch_df)
         else:
             merged = batch_df  # first generation: no prune list needed
+            pathio.begin(path)
             _write_meta(path, n_buckets)
         # cluster each bucket into one task/file: without this, every
         # shuffle partition opens a writer per bucket it touches
@@ -240,7 +268,9 @@ def upsert_parquet(
         merged.repartition(F.col(BUCKET_COL)).write.mode("append").partitionBy(
             BUCKET_COL
         ).parquet(path)
-        commit_buckets(path, [f"{BUCKET_COL}={b}" for b in affected or ()])
+        commit_buckets(
+            path, [f"{BUCKET_COL}={b}" for b in affected or ()], [] if exists else [""]
+        )
     finally:
         batch_df.unpersist()
 

@@ -44,9 +44,10 @@ from pyspark.sql import functions as F
 from scylla_migrator_spark.operators.scd import scd2_history
 from scylla_migrator_spark.streaming.rollup import (
     BUCKET_COL,
+    DEFAULT_BUCKETS,
+    _upsert,
     affected_buckets,
     open_table,
-    upsert_parquet,
 )
 
 _TIE_OUT = "__tie"
@@ -66,7 +67,8 @@ def scd2_upsert_batch(
     spark = batch_df.sparkSession
     new_rows = batch_df.select(*key_cols, *attr_cols, ts_col, tie_col)
     buckets = None
-    if open_table(serving_path):
+    exists = open_table(serving_path)
+    if exists:
         # one cheap distinct over the raw batch (not the windowed hist)
         # gives the affected bucket set for BOTH the prior-fetch prune and
         # the upsert; the first generation needs neither
@@ -98,7 +100,7 @@ def scd2_upsert_batch(
     # hist's key set == the batch's key set (prior rows share the batch's
     # keys), so its bucket set is exactly the one computed for the
     # prior-fetch prune — pass it through to skip a distinct job over hist
-    upsert_parquet(hist, serving_path, key_cols, affected=buckets)
+    _upsert(hist, serving_path, key_cols, exists, None, DEFAULT_BUCKETS, buckets)
 
 
 def incremental_scd2(

@@ -7,6 +7,15 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# Tests read their own stages' metrics back from the status store, which
+# the whole session shares; past spark.ui.retainedStages (1000 by
+# default) it evicts old stages, skipped ones among the first, so the
+# test session keeps far more than one session run creates.
+os.environ["PYSPARK_SUBMIT_ARGS"] = (
+    "--conf spark.ui.retainedStages=50000 --conf spark.ui.retainedJobs=50000 "
+    + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+)
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -145,9 +154,10 @@ def crash_commit():
     """``with crash_commit(root, point): <write>`` asserts that the write
     dies in its commit of the table at ``root`` at ``point`` (one of
     ``crash_commit.points``): after its data write, before the record;
-    while writing the record (a half-written staging file is left, the
-    record is unchanged); or while sweeping a superseded generation (one
-    of its files removed)."""
+    while ``pathio.commit`` writes the record (a half-written staging file
+    is left, the record is unchanged; a record write before the data, such
+    as ``pathio.begin``'s, goes through); or while sweeping a superseded
+    generation (one of its files removed)."""
     from scylla_migrator_spark import pathio
 
     @contextmanager
@@ -173,7 +183,13 @@ def crash_commit():
             if point == "after_write":
                 m.setattr(pathio, "commit", die)
             elif point == "record_write":
-                m.setattr(io, "write_utf8_atomically", torn_record)
+                commit = pathio.commit
+
+                def torn_commit(*args, **kwargs):
+                    m.setattr(io, "write_utf8_atomically", torn_record)
+                    commit(*args, **kwargs)
+
+                m.setattr(pathio, "commit", torn_commit)
             else:
                 m.setattr(io, "delete", half_delete)
             with pytest.raises(OSError, match=f"injected crash {point}"):

@@ -635,7 +635,9 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     # duplicate-append check: simulate the marker MISSING the retract
     # step (crash between steps) — only retract re-runs, and the
     # labelling is unchanged because its victims are already unstaged
-    CC._commit(serving, [], {"batch_id": 1, "steps": ["upsert"]})
+    rec = pathio.record(serving)
+    stale = {"batch_id": 1, "steps": ["upsert"]}
+    pathio.commit(serving, rec["live"], {**rec["meta"], "applied": stale})
     dels = bdf.filter("op = 'delete'").drop("op")
     CC.components_retract_batch(
         dels, serving, id_col="doc_id",
@@ -693,6 +695,48 @@ def test_missing_stage_raises_and_rebuilds(spark, tmp_path):
     _retract(spark, serving, [(2, "s", 0b1010100)])
     live = [r for r in rows1 + rows2 if r[0] != 2]
     assert _served(spark, serving) == _full_labelling(spark, live)
+
+
+def test_unrecorded_serving_table_is_adopted_not_deleted(spark, tmp_path, data_files):
+    """A serving table written without a commit record and without a
+    union-key stage (an earlier version's layout) is adopted, not deleted,
+    by the next step: the missing-stage guard refuses the batch with its
+    migration hint, and rebuild_components_stage then serves it."""
+    import shutil
+
+    serving = str(tmp_path / "serving")
+    rows1 = [(1, "s", 0b1010101), (2, "s", 0b1010100), (9, "s", 1 << 30)]
+    _upsert(spark, serving, rows1)
+    served = _served(spark, serving)
+    shutil.rmtree(serving + CC.KEYS_SUFFIX)
+    shutil.rmtree(serving + CC.JOURNAL_SUFFIX, ignore_errors=True)
+    os.remove(os.path.join(serving, pathio.LIVE_RECORD))
+    with pytest.raises(ValueError, match="rebuild_components_stage"):
+        _upsert(spark, serving, [(3, "s", 0b1010110)])
+    with pytest.raises(ValueError, match="rebuild_components_stage"):
+        _retract(spark, serving, [(1, "s", 0b1010101)])
+    assert _served(spark, serving) == served
+    assert data_files(serving) == set(pathio.live_names(serving))
+    assert CC.rebuild_components_stage(spark, serving) == 3
+    rows2 = [(3, "s", 0b1010110)]
+    _upsert(spark, serving, rows2)
+    assert _served(spark, serving) == _full_labelling(spark, rows1 + rows2)
+
+
+def test_stage_lost_after_a_retraction_meets_the_guard(spark, tmp_path):
+    """A union-key stage lost after a retraction, whose record still marks
+    key partitions dirty, meets the missing-stage guard: the opening sweep
+    skips the dirty directories that are gone."""
+    import shutil
+
+    serving = str(tmp_path / "serving")
+    rows1 = [(1, "s", 0b1010101), (2, "s", 0b1010100), (9, "s", 1 << 30)]
+    _upsert(spark, serving, rows1)
+    _retract(spark, serving, [(2, "s", 0b1010100)])
+    assert any(d.startswith("_keys/") for d in pathio.record(serving)["meta"]["dirty"])
+    shutil.rmtree(serving + CC.KEYS_SUFFIX)
+    with pytest.raises(ValueError, match="rebuild_components_stage"):
+        _upsert(spark, serving, [(3, "s", 0b1010110)])
 
 
 @pytest.mark.parametrize("nth", [1, 2])

@@ -274,6 +274,56 @@ def test_compact_parquet_preserves_partitioned_layout(spark, tmp_path):
     assert rows == [999]
 
 
+def test_compacted_partitioned_target_reads_and_grows_through_its_record(spark, tmp_path):
+    """Compacting a partitionBy migrate target gives it a record naming
+    files below its partition directories. Validation reads it through the
+    record with its partition column, an appending migrate adds its files
+    to the record, and a repair writes in the target's layout: no row
+    becomes invisible, and the next compaction keeps them all."""
+    from scylla_migrator_spark import pathio
+    from scylla_migrator_spark.config import MigratorConfig
+    from scylla_migrator_spark.plans.migrate import migrate
+    from scylla_migrator_spark.plans.validate import run_validation
+    from scylla_migrator_spark.sinks.parquet import compact_parquet
+
+    tgt = str(tmp_path / "tgt")
+
+    def source(name, lo, hi):
+        path = str(tmp_path / name)
+        spark.range(lo, hi).selectExpr(
+            "id", "concat('g', id % 3) AS grp", "id * 2 AS v"
+        ).repartition(3).write.parquet(path)
+        return path
+
+    def cfg(src, mode="overwrite", repair=False):
+        return MigratorConfig.from_dict(
+            {
+                "source": {"type": "parquet", "path": src},
+                "target": {"type": "parquet", "path": tgt, "mode": mode, "partitionBy": ["grp"]},
+                "primaryKey": ["id"],
+                "validation": {"copyMissingRows": repair},
+            }
+        )
+
+    migrate(spark, cfg(source("first", 0, 60)))
+    compact_parquet(spark, tgt)
+    assert all(n.startswith("grp=") and n.count("/") == 1 for n in pathio.live_names(tgt))
+    assert run_validation(spark, cfg(str(tmp_path / "first"))).counts_by_kind == {}
+
+    out = migrate(spark, cfg(source("more", 60, 90), mode="append"))
+    assert out.count() == 90 and "grp" in out.columns
+    full = source("full", 0, 120)
+    report = run_validation(spark, cfg(full, repair=True))
+    assert report.counts_by_kind == {"MissingTargetRow": 30} and report.repaired_rows == 30
+    assert run_validation(spark, cfg(full)).counts_by_kind == {}
+    assert all(n.startswith("grp=") for n in pathio.live_names(tgt))
+
+    compact_parquet(spark, tgt)
+    rows = pathio.read_live(spark.read, tgt).select("id", "grp", "v").collect()
+    assert sorted(tuple(r) for r in rows) == [(i, f"g{i % 3}", i * 2) for i in range(120)]
+    assert run_validation(spark, cfg(full)).counts_by_kind == {}
+
+
 def test_compact_bucketed_crash_in_commit_leaves_one_table(
     spark, tmp_path, table_path, crash_commit, data_files
 ):
@@ -287,7 +337,7 @@ def test_compact_bucketed_crash_in_commit_leaves_one_table(
     from scylla_migrator_spark.streaming.rollup import upsert_parquet
 
     def record_rows(path):
-        df = spark.read.option("basePath", path).parquet(*pathio.live_paths(path))
+        df = pathio.read_live(spark.read, path)
         return sorted(tuple(r) for r in df.select("k", "total").collect())
 
     for point in crash_commit.points:

@@ -258,6 +258,35 @@ def test_resumable_reread_infers_outside_a_fresh_flat_run(
     assert_as_fresh_read(out, cfg.target.path, **options)
 
 
+def test_resume_into_a_compacted_partitioned_target(spark, tmp_path, table_path):
+    """A partitionBy resumable run stopped after one chunk, its target
+    compacted (which gives it a record), then resumed: the resumed chunks'
+    appends join the record, and the final read and a validation see
+    every row with its partition column."""
+    from scylla_migrator_spark.config import MigratorConfig
+    from scylla_migrator_spark.plans.migrate import migrate_resumable
+    from scylla_migrator_spark.plans.validate import run_validation
+    from scylla_migrator_spark.sinks.parquet import compact_parquet
+
+    src = str(tmp_path / "src")
+    spark.range(0, 80).selectExpr("id", "concat('g', id % 3) AS grp").repartition(4).write.parquet(src)
+    cfg = _resumable_cfg(src, tmp_path, table_path, target={"partitionBy": ["grp"]})
+    migrate_resumable(spark, cfg, files_per_chunk=2, stop_after_chunks=1)
+    compact_parquet(spark, cfg.target.path)
+    out = migrate_resumable(spark, cfg, files_per_chunk=2)
+    assert sorted(tuple(r) for r in out.select("id", "grp").collect()) == [
+        (i, f"g{i % 3}") for i in range(80)
+    ]
+    full = MigratorConfig.from_dict(
+        {
+            "source": {"type": "parquet", "path": src},
+            "target": {"type": "parquet", "path": cfg.target.path, "partitionBy": ["grp"]},
+            "primaryKey": ["id"],
+        }
+    )
+    assert run_validation(spark, full).counts_by_kind == {}
+
+
 def test_migrate_resumable_crash_in_chunk_commit_loses_nothing(
     spark, tmp_path, table_path, crash_commit
 ):

@@ -100,7 +100,7 @@ def test_upsert_crash_in_commit_leaves_one_generation(
     before, after = sorted(g1), sorted({**dict(g1), **dict(g2)}.items())
 
     def record_rows(path):
-        df = spark.read.option("basePath", path).parquet(*pathio.live_paths(path))
+        df = pathio.read_live(spark.read, path)
         return sorted((r["k"], r["total"]) for r in df.collect())
 
     for point in crash_commit.points:
@@ -193,6 +193,57 @@ def test_stream_observed_metrics_per_batch(spark, tmp_path):
     assert sum(r["n_rows"] for r in rows) == 5
     assert sum(r["sum_v"] for r in rows) == 70
     assert {r["n_rows"] for r in rows} == {3, 2}
+
+
+def test_upsert_adopts_a_table_written_without_a_record(spark, tmp_path, data_files):
+    """A bucketed table written without a commit record (an earlier
+    version's layout, or a plain partitionBy write plus the bucket pin) is
+    adopted by the next upsert, not deleted: its rows stay, the batch's
+    key is replaced under the pinned modulus."""
+    from scylla_migrator_spark import pathio
+    from scylla_migrator_spark.streaming.rollup import (
+        BUCKET_COL,
+        _bucket_expr,
+        _write_meta,
+        upsert_parquet,
+    )
+
+    path = str(tmp_path / "unrecorded")
+    g = spark.createDataFrame([(k, k * 10) for k in range(12)], "k int, total int")
+    g.withColumn(BUCKET_COL, _bucket_expr(["k"], 4)).write.partitionBy(BUCKET_COL).parquet(path)
+    _write_meta(path, 4)
+    upsert_parquet(spark.createDataFrame([(3, 999)], "k int, total int"), path, ["k"])
+    rows = pathio.read_live(spark.read, path).select("k", "total").collect()
+    want = {**{k: k * 10 for k in range(12)}, 3: 999}
+    assert sorted(tuple(r) for r in rows) == sorted(want.items())
+    assert data_files(path) == set(pathio.live_names(path))
+
+
+def test_upsert_lists_only_the_buckets_it_touches(spark, tmp_path, monkeypatch):
+    """The directory listings of a one-key upsert do not grow with the
+    table's bucket count: its opening sweep walks the bucket the last
+    upsert replaced, and its commit lists and sweeps the one it rewrites."""
+    import os
+
+    from scylla_migrator_spark.streaming.rollup import upsert_parquet
+
+    def one(k):
+        return spark.createDataFrame([(k, -k)], "k int, total int")
+
+    listings = {}
+    for n in (8, 128):
+        path = str(tmp_path / f"t{n}")
+        g = spark.createDataFrame([(k, k) for k in range(600)], "k int, total int")
+        upsert_parquet(g, path, ["k"], n_buckets=n)
+        upsert_parquet(one(1), path, ["k"])
+        calls = []
+        with monkeypatch.context() as m:
+            for name in ("listdir", "scandir"):
+                real = getattr(os, name)
+                m.setattr(os, name, lambda *a, _r=real, **kw: calls.append(a) or _r(*a, **kw))
+            upsert_parquet(one(2), path, ["k"])
+        listings[n] = len(calls)
+    assert listings[8] == listings[128] <= 8, listings
 
 
 def test_upsert_rewrites_only_affected_buckets(spark, tmp_path):
