@@ -144,7 +144,8 @@ def _read_written(
     merge_schema: bool = False,
 ) -> DataFrame:
     """The lazy re-read of the parquet target ``path`` the caller just
-    wrote (through its record, if it has one), ``schemas`` being the schema of each of its writes. When the read
+    wrote (through its record, if it has one), ``schemas`` being the
+    schema of each of its writes. When the read
     sees exactly that -- the target was ``replaced``, the layout is flat, the
     schema is not merged and every write had one schema -- that schema is
     handed to the reader, so no one-task footer job runs. Otherwise (append
